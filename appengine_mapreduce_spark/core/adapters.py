@@ -4,29 +4,42 @@ Spark plans.
 This is the performance-critical seam the reference never had: its workers
 ran interpreted Python per record over task-queue slices
 (handlers.py:534-648 _process_inputs/_process_datum). Here user generators
-run inside ``mapInPandas`` / ``applyInPandas`` — Arrow moves columns in
-batches, Python touches each row exactly once, and everything before/after
-the adapter stays JVM-side.
+run inside ``mapInPandas`` (mappers) and ``mapInArrow`` (reducers) — Arrow
+moves columns in batches, Python touches each row exactly once, and
+everything before/after the adapter stays JVM-side.
 
 Scale notes:
 - map-side combine buffers per partition with a bounded flush
   (``_COMBINE_FLUSH_KEYS``), mirroring Hadoop's combiner spill — a hot
   partition cannot OOM the worker.
-- reducers get a value *iterator* per key (the ``ReducerInput`` streaming
-  contract, java impl/MergingReader.java:89-138). ``applyInPandas``
-  materializes one group per Arrow batch; gigantic single keys should be
-  pre-chunked (operators/shuffle.group_values max_grouped_values) — noted
-  in MapReduceSpecification docs.
+- the reducer is a streaming sort-merge: ``repartition(key)`` →
+  ``sortWithinPartitions(key)`` → ``mapInArrow``. The worker walks the
+  sorted Arrow batches as one ``(key, value)`` stream and hands each run
+  of equal keys to the user generator as a lazy iterator (the
+  ``ReducerInput`` contract, java impl/MergingReader.java:89-138). A run
+  may span any number of batches, so a hot key costs one batch of memory,
+  not one group; values the reducer leaves unread are skipped. Spark's
+  sort spills to disk like the reference's merge.
+- reducer keys and values are read straight from Arrow as Python scalars,
+  so they arrive exact: null is ``None``, a bigint stays an ``int`` at any
+  size. Keys must be scalar types (string, numeric, boolean, date,
+  timestamp, binary): runs are split on Python ``==``. NaN keys form one
+  group, as in Spark's ``groupBy``.
 """
 
 from __future__ import annotations
 
+import collections
+import itertools
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import AtomicType, DoubleType, FloatType, StructType
 
 from appengine_mapreduce_spark.core import counters as C
 from appengine_mapreduce_spark.core.counters import CounterContext
@@ -156,6 +169,9 @@ def run_mapper(
     return df.mapInPandas(fn, schema=out_schema)
 
 
+_NAN = float("nan")  # the one object every NaN key is mapped to
+
+
 def run_reducer(
     kv_df: DataFrame,
     reducer: Reducer,
@@ -163,21 +179,79 @@ def run_reducer(
     acc,
     key_col: str,
     value_cols: list[str],
+    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Reduce stage: groupBy(key) → user generator with a value iterator.
+    """Reduce stage: hash-partition on the key (into ``num_partitions``
+    when given), sort each partition on it, and stream each run of equal
+    keys to the user generator as a value iterator. Per-partition
+    lifecycle (begin/end shard) as on the map side.
 
     Single value column → values iterate as scalars; multiple → as
-    namedtuples (parity with multi-property entity reducers).
+    namedtuples (parity with multi-property entity reducers); none → one
+    empty namedtuple per map output row.
     """
+    key_type = kv_df.schema[key_col].dataType
+    if not isinstance(key_type, AtomicType):
+        raise ValueError(
+            f"reducer key column {key_col!r} has type {key_type.simpleString()}; "
+            "keys must be scalar — serialize composite keys to a string"
+        )
+    shuffled = (
+        kv_df.repartition(key_col)
+        if num_partitions is None
+        else kv_df.repartition(num_partitions, key_col)
+    ).sortWithinPartitions(key_col).select(key_col, *value_cols)
+    float_key = isinstance(key_type, (FloatType, DoubleType))
+    arrow_schema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ctx = CounterContext(acc)
-        if len(value_cols) == 1:
-            values: Iterator = iter(pdf[value_cols[0]])
-        else:
-            values = pdf[value_cols].itertuples(index=False)
-        rows = [tuple(item) for item in reducer(ctx, key[0], values) or ()]
-        ctx.increment(C.REDUCER_CALLS, 1)
-        return _to_pdf(rows, out_schema)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tc = TaskContext.get()
+        ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
+        # the record type ``DataFrame.itertuples`` would give
+        record = collections.namedtuple("Pandas", value_cols, rename=True)
 
-    return kv_df.groupBy(key_col).applyInPandas(fn, schema=out_schema)
+        def stream() -> Iterator[tuple]:
+            for batch in batches:
+                keys = batch.column(0).to_pylist()
+                if float_key:
+                    # Spark's sort puts every NaN in one run and -0.0 with
+                    # 0.0; ``itertools.groupby`` compares with
+                    # ``PyObject_RichCompareBool``, which treats an object
+                    # as equal to itself, so all NaNs become ``_NAN``
+                    keys = [k if k is None else (_NAN if k != k else k + 0.0) for k in keys]
+                cols = [c.to_pylist() for c in batch.columns[1:]]
+                if len(cols) == 1:
+                    values = cols[0]
+                elif cols:
+                    values = map(record._make, zip(*cols))
+                else:
+                    values = itertools.repeat(record(), batch.num_rows)
+                yield from zip(keys, values)
+
+        def emit(rows: list[tuple]) -> pa.RecordBatch:
+            cols = list(zip(*rows, strict=True))
+            if len(cols) != len(arrow_schema):
+                raise ValueError(
+                    f"reducer yielded {len(cols)}-field rows for the "
+                    f"{len(arrow_schema)}-column output schema {out_schema.simpleString()}"
+                )
+            arrays = [pa.array(c, type=t) for c, t in zip(cols, arrow_schema.types)]
+            return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+        reducer.begin_shard(ctx)
+        buf: list[tuple] = []
+        n_calls = 0
+        value_of = itemgetter(1)
+        for key, run in itertools.groupby(stream(), itemgetter(0)):
+            n_calls += 1
+            for item in reducer(ctx, key, map(value_of, run)) or ():
+                buf.append(tuple(item))
+            if len(buf) >= _EMIT_BATCH_ROWS:
+                yield emit(buf)
+                buf = []
+        reducer.end_shard(ctx)
+        ctx.increment(C.REDUCER_CALLS, n_calls)
+        if buf:
+            yield emit(buf)
+
+    return shuffled.mapInArrow(fn, schema=out_schema)

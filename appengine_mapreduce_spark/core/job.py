@@ -84,10 +84,11 @@ class MapReduceSpecification:
 
     ``map_output_schema``'s FIRST column is the shuffle key, remaining
     columns are the value (the reference's KeyValue contract,
-    kv_pb.py:24). Huge single keys: the reducer receives an iterator,
-    but one group is materialized per Arrow batch — pre-chunk degenerate
-    keys (operators/shuffle.group_values(max_grouped_values=...)) like
-    the reference's 100k-value caps (shuffler.py:596-598).
+    kv_pb.py:24). The key must be a scalar type. The reducer receives a
+    lazy iterator streamed off the sorted shuffle, so a huge single key
+    needs no pre-chunking: its values are never held in memory at once.
+    ``num_reducers`` fixes the reduce partition count (≙ the reference's
+    shard count); None lets Spark/AQE decide.
     """
 
     job_name: str
@@ -132,7 +133,9 @@ class MapReduceJob:
         spark: SparkSession, spec: MapReduceSpecification, counters: Counters | None = None
     ) -> DataFrame:
         """Build the full map→shuffle→reduce DataFrame without running it —
-        usable for chaining / oracle checks; ``run`` adds the sink action."""
+        usable for chaining / oracle checks; ``run`` adds the sink action.
+        Every action on the returned frame re-runs the job and adds to
+        ``counters`` again."""
         counters = counters or Counters(spark.sparkContext)
         df = ensure_parallelism(spec.input.read(spark))
 
@@ -146,11 +149,10 @@ class MapReduceJob:
 
         key_col = map_schema.fields[0].name
         value_cols = [f.name for f in map_schema.fields[1:]]
-        if spec.num_reducers is not None:
-            mapped = mapped.repartition(spec.num_reducers, key_col)
         return run_reducer(
             mapped, as_reducer(spec.reducer), _ddl(spec.output_schema),
             counters.accumulator, key_col, value_cols,
+            num_partitions=spec.num_reducers,
         )
 
     @staticmethod
@@ -160,7 +162,14 @@ class MapReduceJob:
         counters = Counters(spark.sparkContext)
         job_id = status.start_job(spec.job_name)
         try:
-            reduced = MapReduceJob.plan(spark, spec, counters)
+            # Materialize the reduce output once: a sink that runs several
+            # Spark jobs (a sorted FileOutput samples its input first), or a
+            # later action on ``output_df``, reads the checkpointed blocks
+            # instead of re-running the job, so counters stay exact. The
+            # blocks live until ``output_df`` is dropped. The price: a
+            # single-job sink runs one extra (cheap) job, and a limited
+            # ``InMemoryOutput`` reduces every key before it truncates.
+            reduced = MapReduceJob.plan(spark, spec, counters).localCheckpoint(eager=True)
             result_value = spec.output.write(reduced, spec.job_name)
         except BaseException as e:
             status.fail_job(job_id, e)

@@ -621,6 +621,116 @@ def _run_skew() -> dict:
         spark.stop()
 
 
+_PURCHASE_SCHEMA = "event_id bigint, user_id bigint, value double"
+
+
+def _events(spark, sf_dir: str):
+    """The events columns the mapreduce_api_eventfilter anchor reads."""
+    from appengine_mapreduce_spark.plans.tables import load
+
+    return load(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+
+
+def _purchase_filter():
+    """Same per-row work as the mapreduce_api_eventfilter anchor, so the
+    seam probes isolate exactly that anchor's seam."""
+    from appengine_mapreduce_spark.core.worker import MapOnlyMapper
+
+    class PurchaseFilter(MapOnlyMapper):
+        def __call__(self, ctx, row):
+            if row.event_type == "purchase":
+                yield (row.event_id, row.user_id, row.value)
+
+    return PurchaseFilter()
+
+
+def _run_seam_variants(sf_dir: str, n_runs: int = 7, tile: int = 10) -> dict:
+    """Map-seam throughput decomposition (SCALING.md "Seam throughput
+    decomposition"): five map-only jobs doing the eventfilter anchor's
+    work over the events table tiled ``tile`` times, each a ``noop``
+    write, run interleaved so host drift hits all alike:
+
+        noop        mapInPandas body that never reads its input
+        itertuples  bare per-row Python loop over each batch, emits nothing
+        pandas      fully-vectorized pandas filter
+        arrow       mapInArrow filter, no pandas conversion at all
+        run_mapper  the generator adapter with the per-row mapper
+
+    Returns the median and all run times per variant, plus the md5 of
+    ``core/adapters.py`` (the fingerprint SCALING.md records)."""
+    import hashlib
+
+    import pandas as pd
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from appengine_mapreduce_spark.core.adapters import run_mapper
+    from appengine_mapreduce_spark.core.counters import Counters
+    from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
+
+    spark = get_spark(app_name="bench-seam-variants")
+    try:
+        base = _events(spark, sf_dir)
+        tiled = base.crossJoin(spark.range(tile).select(F.col("id").alias("_t")))
+        ev = ensure_parallelism(tiled.select(*base.columns).localCheckpoint(eager=True))
+        n_rows = ev.count()
+        schema = StructType.fromDDL(_PURCHASE_SCHEMA)
+        kept = [f.name for f in schema.fields]
+
+        def empty():
+            return pd.DataFrame({c: [] for c in kept})
+
+        def noop_body(batches):
+            yield empty()
+
+        def itertuples_body(batches):
+            for pdf in batches:
+                for _ in pdf.itertuples(index=False):
+                    pass
+            yield empty()
+
+        def pandas_body(batches):
+            for pdf in batches:
+                yield pdf.loc[pdf["event_type"] == "purchase", kept]
+
+        def arrow_body(batches):
+            for b in batches:
+                yield b.filter(pc.equal(b.column("event_type"), "purchase")).select(kept)
+
+        acc = Counters(spark.sparkContext).accumulator
+        variants = {
+            "noop": lambda: ev.mapInPandas(noop_body, schema=schema),
+            "itertuples": lambda: ev.mapInPandas(itertuples_body, schema=schema),
+            "pandas": lambda: ev.mapInPandas(pandas_body, schema=schema),
+            "arrow": lambda: ev.mapInArrow(arrow_body, schema=schema),
+            "run_mapper": lambda: run_mapper(ev, _purchase_filter(), schema, acc),
+        }
+        times: dict[str, list[float]] = {k: [] for k in variants}
+        for build in variants.values():  # warm every Python worker path once
+            build().write.format("noop").mode("overwrite").save()
+        for _ in range(n_runs):
+            for name, build in variants.items():
+                t0 = time.perf_counter()
+                build().write.format("noop").mode("overwrite").save()
+                times[name].append(round(time.perf_counter() - t0, 3))
+        cores = spark.sparkContext.defaultParallelism
+    finally:
+        spark.stop()
+    adapters = os.path.join(_REPO, "appengine_mapreduce_spark", "core", "adapters.py")
+    with open(adapters, "rb") as fh:
+        md5 = hashlib.md5(fh.read()).hexdigest()
+    return {
+        "rows": n_rows,
+        "cores": cores,
+        "adapters_md5": md5,
+        "median_s": {k: statistics.median(v) for k, v in times.items()},
+        "runs_s": times,
+    }
+
+
 def _run_seam_probe(
     sf_dirs: "list[tuple[str, str]]", n_runs: int = 5
 ) -> dict:
@@ -682,14 +792,6 @@ def _run_seam_probe(
     from appengine_mapreduce_spark.core.counters import Counters
     from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
     from appengine_mapreduce_spark.core.worker import MapOnlyMapper
-    from appengine_mapreduce_spark.plans.tables import load
-
-    class PurchaseFilter(MapOnlyMapper):
-        # Same per-row work as the mapreduce_api_eventfilter anchor, so
-        # the probe isolates exactly that anchor's seam.
-        def __call__(self, ctx, row):
-            if row.event_type == "purchase":
-                yield (row.event_id, row.user_id, row.value)
 
     # Resolve calibration BEFORE opening the seam context (cached from
     # the suite phase in a normal bench run; a standalone caller must
@@ -701,20 +803,14 @@ def _run_seam_probe(
     for label, d in sf_dirs:
         spark = get_spark(app_name=f"bench-seam-{label}")
         try:
-            ev = ensure_parallelism(
-                load(spark, d, "events").select(
-                    "event_id", "user_id", "event_type", "value"
-                )
-            )
+            ev = ensure_parallelism(_events(spark, d))
             n_in = ev.count()
             counters = Counters(spark.sparkContext)
-            schema = StructType.fromDDL(
-                "event_id bigint, user_id bigint, value double"
-            )
+            schema = StructType.fromDDL(_PURCHASE_SCHEMA)
 
             def plan():
                 return run_mapper(
-                    ev, PurchaseFilter(), schema, counters.accumulator
+                    ev, _purchase_filter(), schema, counters.accumulator
                 )
 
             t0 = time.perf_counter()
@@ -934,4 +1030,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--seam-variants"]:
+        # python bench.py --seam-variants SF_DIR [RUNS] [TILE]
+        print(json.dumps(_run_seam_variants(sys.argv[2], *map(int, sys.argv[3:5]))))
+    else:
+        main()

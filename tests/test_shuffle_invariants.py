@@ -39,7 +39,7 @@ ANCHORS = {
     # a window min over the part-filtered fact (opt guide §2.4), so the
     # full-lineitem (partkey,suppkey) aggregation exchange is gone —
     # re-measured 2.77 MB (was 10_146_432 at the r14 plan; the 3.7x drop
-    # IS the optimization, see OPTIMIZATION_r15.md)
+    # IS the optimization, see the round-15 q9 entry in CHANGES.md)
     "q9_profit_by_nation": 2_765_490,
     # as-of join: union + window, one user-key exchange. Round 14: the
     # orders-side de-tie pre-aggregation folded into the window ORDER BY
