@@ -6,7 +6,7 @@ compact JSON line: {"metric": ..., "value": N, "unit": "sec",
 
 The FULL payload (spread, per-query shuffle bytes, normalized times, the
 sf1 scale section, capstone exponents, the skew block) is written to
-BENCH_LOCAL_r{N}.json in-repo so the primary numbers survive any driver
+BENCH_LOCAL.json in-repo so the primary numbers survive any driver
 output-capture truncation (VERDICT r4 "What's wrong" #1); the printed
 line carries only the contract fields and is the LAST thing on stdout.
 
@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import re
 import statistics
 import sys
 import time
@@ -658,10 +657,7 @@ def _run_seam_variants(sf_dir: str, n_runs: int = 7, tile: int = 10) -> dict:
         arrow       mapInArrow filter, no pandas conversion at all
         run_mapper  the generator adapter with the per-row mapper
 
-    Returns the median and all run times per variant, plus the md5 of
-    ``core/adapters.py`` (the fingerprint SCALING.md records)."""
-    import hashlib
-
+    Returns the median and all run times per variant."""
     import pandas as pd
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
@@ -719,13 +715,9 @@ def _run_seam_variants(sf_dir: str, n_runs: int = 7, tile: int = 10) -> dict:
         cores = spark.sparkContext.defaultParallelism
     finally:
         spark.stop()
-    adapters = os.path.join(_REPO, "appengine_mapreduce_spark", "core", "adapters.py")
-    with open(adapters, "rb") as fh:
-        md5 = hashlib.md5(fh.read()).hexdigest()
     return {
         "rows": n_rows,
         "cores": cores,
-        "adapters_md5": md5,
         "median_s": {k: statistics.median(v) for k, v in times.items()},
         "runs_s": times,
     }
@@ -925,18 +917,6 @@ def _run_seam_probe(
     return out
 
 
-def _round_number() -> int:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    best = 0
-    for f in os.listdir(_REPO):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -1019,7 +999,7 @@ def main() -> None:
 
     # Durable artifact first (survives any stdout truncation), then the
     # contract line as the FINAL stdout output with nothing after it.
-    local = os.path.join(_REPO, f"BENCH_LOCAL_r{_round_number():02d}.json")
+    local = os.path.join(_REPO, "BENCH_LOCAL.json")
     with open(local, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
     print(f"# full payload written to {local}", file=sys.stderr)

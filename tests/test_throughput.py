@@ -46,51 +46,6 @@ def test_generator_path_throughput(spark):
     assert rate >= FLOOR_RECORDS_PER_SEC, f"only {rate:,.0f} rec/s"
 
 
-def test_seam_probe_drift_adjusted_floor():
-    """Mechanical BASELINE floor check on the bench artifact (VERDICT r9
-    ask #4, semantics fixed round 11 per ADVICE r10): the ≥1M rec/s
-    design cap (reference parameters.py:222 processing_rate) describes
-    the generator-DISPATCH rate, so the floor is asserted on the seam
-    probe's ``dispatch`` block (run_mapper over an in-memory 8M-row
-    frame — overhead amortized; measured 7.7M rec/s raw on a quiet
-    host). The per-SF end-to-end figures (parquet scan + exchange +
-    Arrow + collect at 1M-row inputs, ~0.5 s fixed job cost ≈ half the
-    wall) stay in the artifact as job-shape DIAGNOSTICS — they sit under
-    1M by construction and round 10's floor check against them could
-    never pass honestly (r10/r11 measured 622-722k raw there while the
-    vectorized-pandas ceiling landed within 5% of the adapter).
-    Skips when no artifact carries the dispatch block yet, or when the
-    probe self-censored — which since round 11 means ALL best-of-N
-    calibration attempts missed the spread gate (bench.py
-    CAL_MAX_ATTEMPTS), not one noisy attempt."""
-    import glob
-    import json
-    import os
-
-    import pytest
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = sorted(glob.glob(os.path.join(repo, "BENCH_LOCAL_r*.json")))
-    if not paths:
-        pytest.skip("no bench artifact")
-    with open(paths[-1]) as fh:
-        dispatch = json.load(fh).get("udf_seam_probe", {}).get("dispatch")
-    if dispatch is None:
-        pytest.skip("artifact predates the dispatch-rate seam block")
-    norm = dispatch["rows_per_sec_normalized"]
-    if norm is None:
-        pytest.skip(
-            f"probe self-censored: calibration_spread "
-            f"{dispatch.get('calibration_spread')} over the gate after "
-            f"{dispatch.get('calibration_attempts', 1)} attempt(s)"
-        )
-    assert norm >= 1_000_000, (
-        f"drift-adjusted dispatch throughput {norm:,} rec/s under the "
-        f"BASELINE 1M floor (raw {dispatch['rows_per_sec']:,}, "
-        f"drift x{dispatch['drift_factor']})"
-    )
-
-
 def test_codec_path_throughput():
     """Decode-path guardrail (VERDICT r3 ask #8): the numpy-vectorized
     JPEG IDCT + accumulator bit reader deliver ~165 64x64-img/s/core and
@@ -176,30 +131,3 @@ def test_round5_codec_throughput_floors():
     packbits_decode(enc, len(raw))
     rate = 100_000 / (time.perf_counter() - t0)
     assert rate >= 10_000_000, f"PackBits decode {rate:.0f} B/s"
-
-
-def test_seam_decomposition_current():
-    """VERDICT r11 condition on the dispatch-rate floor semantics: the
-    five-variant seam decomposition in SCALING.md proves the generator
-    adapter sits within ~5% of a fully-vectorized pandas body, and that
-    proof is only valid for the adapter it measured. SCALING.md records
-    the md5 of core/adapters.py at measurement time; if this assert
-    fires, you changed the adapter — re-run the decomposition on a quiet
-    box, update the table, and refresh the fingerprint line."""
-    import hashlib
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    adapters = os.path.join(
-        repo, "appengine_mapreduce_spark", "core", "adapters.py")
-    with open(adapters, "rb") as fh:
-        live = hashlib.md5(fh.read()).hexdigest()
-    with open(os.path.join(repo, "SCALING.md")) as fh:
-        m = re.search(r"Adapter fingerprint: `([0-9a-f]{32})`", fh.read())
-    assert m, "SCALING.md lost its adapter fingerprint line"
-    assert m.group(1) == live, (
-        "core/adapters.py changed since the seam decomposition was "
-        "measured — re-run the five-variant decomposition (SCALING.md "
-        "'Seam throughput decomposition') and update the fingerprint"
-    )

@@ -5,29 +5,16 @@ growth ratio — the number that was ~4x (quadratic) under the round-13
 single-level split and must stay ~2x (linear) under depth-adaptive
 splitting. A pure count, no wall-clock: safe to run on a noisy host.
 
-Writes ANN_DEPTH_r{N}.json.
+Writes ANN_DEPTH.json.
 """
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SFS = ("sf1", "sf2", "sf4", "sf8")
-
-
-def _round_number() -> int:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    best = 0
-    for f in os.listdir(REPO):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
 
 
 def main() -> None:
@@ -95,7 +82,7 @@ def main() -> None:
     # linear = 2.0 per doubling; the round-13 single-level split measured
     # ~4.0 here at the sf4->sf8 step
     out["linear_reference"] = 2.0
-    path = os.path.join(REPO, f"ANN_DEPTH_r{_round_number():02d}.json")
+    path = os.path.join(REPO, "ANN_DEPTH.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(json.dumps(out))

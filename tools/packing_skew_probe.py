@@ -17,12 +17,11 @@ wall-clock on a 32-thread box understates what 1000 executors would
 lose, because here the other 31 threads merely idle while at cluster
 scale 7999 cores would).
 
-Writes PACKING_SKEW_r{N}.json; run on a quiet host and read the
+Writes PACKING_SKEW.json; run on a quiet host and read the
 steal/io columns before believing a delta (same protocol as bench.py).
 """
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -51,18 +50,6 @@ def _cpu_stat():
     except Exception:
         pass
     return steal, io_us
-
-
-def _round_number() -> int:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    best = 0
-    for f in os.listdir(REPO):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
 
 
 def main() -> None:
@@ -174,7 +161,7 @@ def main() -> None:
     for k in ("sharded_k8", "sharded_k32"):
         out["modes"][k]["speedup_vs_unsharded"] = round(
             un / out["modes"][k]["median_sec"], 2)
-    path = os.path.join(REPO, f"PACKING_SKEW_r{_round_number():02d}.json")
+    path = os.path.join(REPO, "PACKING_SKEW.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(json.dumps(out))

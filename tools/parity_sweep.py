@@ -5,12 +5,12 @@ Runs tools/driver_sim.py in a FRESH subprocess per chunk (fresh
 SparkSession + fresh DuckDB each time), so executor memory pressure from
 early queries can never fail late queries environmentally — the failure
 mode that forced PARITY_r07's composition caveat. Aggregates every
-chunk's per-query lines into PARITY_r{N}.md with a single ALL-OK/FAIL
+chunk's per-query lines into PARITY.md with a single ALL-OK/FAIL
 verdict.
 
 Usage:
     python tools/parity_sweep.py [--sf DIR] [--chunks N] [--mem SIZE]
-                                 [--out PARITY_rNN.md]
+                                 [--out PARITY.md]
 """
 
 from __future__ import annotations
@@ -26,24 +26,6 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _fingerprint() -> str:
-    """Registry fingerprint for the artifact header (drift guard —
-    imported lazily so the sweep's own process stays Spark-free)."""
-    sys.path.insert(0, _REPO)
-    from appengine_mapreduce_spark.plans.registry import registry_fingerprint
-
-    return registry_fingerprint()
-
-
-def _default_round() -> int:
-    best = 0
-    for f in os.listdir(_REPO):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.path.join(_REPO, "testdata", "sf1"))
@@ -55,8 +37,7 @@ def main() -> int:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    out_path = args.out or os.path.join(
-        _REPO, f"PARITY_r{_default_round():02d}.md")
+    out_path = args.out or os.path.join(_REPO, "PARITY.md")
 
     lines_by_query: dict[str, str] = {}
     chunk_reports: list[str] = []
@@ -132,7 +113,6 @@ def main() -> int:
             f"SparkSession + DuckDB rebuilt each time), so no composition "
             f"caveat: every query ran against its oracle in a clean "
             f"session this sweep.\n\n"
-            f"Registry fingerprint: `{_fingerprint()}`.\n\n"
             f"**RESULT: {'ALL OK' if ok else 'FAIL ' + str(sorted(set(all_fails)))}** — "
             f"{n_match} MATCH, {n_rows_only} rows-only (by design), "
             f"{len(all_fails)} failures, {len(lines_by_query)} queries "

@@ -16,7 +16,7 @@ isolation is what makes the exponents attributable to the data growth.
 
 Deliberately a SEPARATE tool: bench.py's payload shape is frozen for
 round-over-round comparability, so the extra decade is additive
-evidence committed as BENCH_SF2_r{N}.json, not a change to the driver's
+evidence written to BENCH_SF2.json, not a change to the driver's
 per-round bench contract.
 
 Usage: python tools/sf2_sweep.py [sf2_dir] [sf1_dir] [sf4_dir]
@@ -405,11 +405,8 @@ def main() -> None:
     if needs_sf4 and not os.path.isdir(sf4_dir):
         raise SystemExit(f"missing sf4 fixture {sf4_dir} — run "
                          "tools/gen_sf.py --mult 40 first")
-    import bench  # for _round_number only — no session in this process
-
+    artifact = os.path.join(REPO, "BENCH_SF2.json")
     if redo:
-        artifact = os.path.join(
-            REPO, f"BENCH_SF2_r{bench._round_number()}.json")
         _redo_phases(artifact, redo[0].split(","),
                      {"sf1": sf1_dir, "sf2": sf2_dir, "sf4": sf4_dir})
         return
@@ -487,10 +484,9 @@ def main() -> None:
         "calibration_sec_sf1": sf1["calibration_sec"],
         "calibration_sec_sf2": sf2["calibration_sec"],
     }
-    dest = os.path.join(REPO, f"BENCH_SF2_r{bench._round_number()}.json")
-    with open(dest, "w") as fh:
+    with open(artifact, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
-    print(f"# written to {dest}", file=sys.stderr)
+    print(f"# written to {artifact}", file=sys.stderr)
     print(json.dumps({k: out[k] for k in (
         "sf1_total", "sf2_total", "worst_exponent",
         "worst_noop_exponent", "capstones")}))
