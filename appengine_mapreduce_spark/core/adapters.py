@@ -3,10 +3,12 @@ Spark plans.
 
 This is the performance-critical seam the reference never had: its workers
 ran interpreted Python per record over task-queue slices
-(handlers.py:534-648 _process_inputs/_process_datum). Here user generators
-run inside ``mapInPandas`` (mappers) and ``mapInArrow`` (reducers) — Arrow
-moves columns in batches, Python touches each row exactly once, and
-everything before/after the adapter stays JVM-side.
+(handlers.py:534-648 _process_inputs/_process_datum). Here both stages
+cross into Python the same way, through ``mapInArrow``: one reader turns
+each Arrow batch into rows with ``to_pylist()``, user generators run per
+row, and one emitter builds the output rows back into Arrow batches.
+Python touches each row exactly once, and everything before/after the
+adapter stays JVM-side.
 
 Scale notes:
 - map-side combine buffers per partition with a bounded flush
@@ -20,9 +22,14 @@ Scale notes:
   may span any number of batches, so a hot key costs one batch of memory,
   not one group; values the reducer leaves unread are skipped. Spark's
   sort spills to disk like the reference's merge.
-- reducer keys and values are read straight from Arrow as Python scalars,
-  so they arrive exact: null is ``None``, a bigint stays an ``int`` at any
-  size. Keys must be scalar types (string, numeric, boolean, date,
+- rows are read straight from Arrow as Python values, so mapper rows and
+  reducer keys and values arrive exact: null is ``None``, a bigint stays
+  an ``int`` at any size, NaN stays apart from null, a timestamp is a
+  tz-aware ``datetime`` in the session time zone, an array a ``list``, a
+  map a list of ``(key, value)`` pairs. Output goes straight to Arrow: a
+  NaN the user code yields stays NaN, and a value its column's type
+  cannot hold fails the task, naming the stage and column. Reducer
+  keys must be scalar types (string, numeric, boolean, date,
   timestamp, binary): runs are split on Python ``==``. NaN keys form one
   group, as in Spark's ``groupBy``.
 """
@@ -34,7 +41,6 @@ import itertools
 from collections.abc import Iterator
 from operator import itemgetter
 
-import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
@@ -61,29 +67,49 @@ except Exception:  # pragma: no cover — older pyspark without the API
 _EMIT_BATCH_ROWS = 10_000
 _COMBINE_FLUSH_KEYS = 100_000
 
-_PD_DTYPES = {
-    "string": "object",
-    "bigint": "int64",
-    "int": "int32",
-    "double": "float64",
-    "float": "float32",
-    "boolean": "bool",
-}
+
+def _record_type(names: list[str]) -> type:
+    """The namedtuple user code gets rows as (see ``Mapper``)."""
+    return collections.namedtuple("Pandas", names, rename=True)
 
 
-def _empty_pdf(schema: StructType) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            f.name: pd.Series(dtype=_PD_DTYPES.get(f.dataType.simpleString(), "object"))
-            for f in schema.fields
-        }
-    )
+def _records(columns: list[pa.Array], record: type, num_rows: int) -> Iterator[tuple]:
+    """The rows of ``columns`` as ``record`` namedtuples, each value as
+    ``to_pylist()`` reads it; an empty record per row when there are no
+    columns."""
+    if not columns:
+        return itertools.repeat(record(), num_rows)
+    return map(record._make, zip(*(c.to_pylist() for c in columns)))
 
 
-def _to_pdf(rows: list[tuple], schema: StructType) -> pd.DataFrame:
-    if not rows:
-        return _empty_pdf(schema)
-    return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+def _emitter(stage: str, out_schema: StructType):
+    """Build the function that turns a block of yielded rows into one
+    Arrow batch of ``out_schema``, rejecting rows of the wrong width and
+    values their column's type cannot hold (a NaN or a bool yielded into
+    a bigint column raises; Arrow truncates a finite float there)."""
+    arrow_schema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields])
+
+    def column(values: tuple, i: int) -> pa.Array:
+        try:
+            return pa.array(values, type=arrow_schema.types[i])
+        except (pa.ArrowException, OverflowError) as e:
+            f = out_schema.fields[i]
+            raise TypeError(
+                f"{stage} yielded a value the output column {f.name!r} "
+                f"({f.dataType.simpleString()}) cannot hold: {e}"
+            ) from e
+
+    def emit(rows: list[tuple]) -> pa.RecordBatch:
+        cols = list(zip(*rows, strict=True))
+        if len(cols) != len(arrow_schema):
+            raise ValueError(
+                f"{stage} yielded {len(cols)}-field rows for the "
+                f"{len(arrow_schema)}-column output schema {out_schema.simpleString()}"
+            )
+        arrays = [column(c, i) for i, c in enumerate(cols)]
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return emit
 
 
 def run_mapper(
@@ -116,12 +142,15 @@ def run_mapper(
     per_part_rate = None
     if rate_per_sec is not None:
         per_part_rate = max(1.0, rate_per_sec / max(1, df.rdd.getNumPartitions()))
+    columns = df.columns
+    emit = _emitter("mapper", out_schema)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import time as _time
 
         tc = TaskContext.get()
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
+        record = _record_type(columns)
         mapper.begin_shard(ctx)
         buf: list[tuple] = []
         pending: dict = {}  # key -> [values] for map-side combine
@@ -140,9 +169,9 @@ def run_mapper(
                 if ahead > 0:
                     _time.sleep(ahead)
 
-        for pdf in batches:
+        for batch in batches:
             throttle()
-            for row in pdf.itertuples(index=False):
+            for row in _records(batch.columns, record, batch.num_rows):
                 n_calls += 1
                 out = mapper(ctx, *row) if expand_parameters else mapper(ctx, row)
                 if out is None:
@@ -156,7 +185,7 @@ def run_mapper(
                 if combiner is not None and len(pending) >= _COMBINE_FLUSH_KEYS:
                     flush_combine()
                 if len(buf) >= _EMIT_BATCH_ROWS:
-                    yield _to_pdf(buf, out_schema)
+                    yield emit(buf)
                     buf = []
         if combiner is not None:
             flush_combine()
@@ -164,9 +193,9 @@ def run_mapper(
         mapper.end_shard(ctx)
         ctx.increment(C.MAPPER_CALLS, n_calls)
         if buf:
-            yield _to_pdf(buf, out_schema)
+            yield emit(buf)
 
-    return df.mapInPandas(fn, schema=out_schema)
+    return df.mapInArrow(fn, schema=out_schema)
 
 
 _NAN = float("nan")  # the one object every NaN key is mapped to
@@ -202,13 +231,12 @@ def run_reducer(
         else kv_df.repartition(num_partitions, key_col)
     ).sortWithinPartitions(key_col).select(key_col, *value_cols)
     float_key = isinstance(key_type, (FloatType, DoubleType))
-    arrow_schema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields])
+    emit = _emitter("reducer", out_schema)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tc = TaskContext.get()
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
-        # the record type ``DataFrame.itertuples`` would give
-        record = collections.namedtuple("Pandas", value_cols, rename=True)
+        record = _record_type(value_cols)
 
         def stream() -> Iterator[tuple]:
             for batch in batches:
@@ -219,24 +247,11 @@ def run_reducer(
                     # ``PyObject_RichCompareBool``, which treats an object
                     # as equal to itself, so all NaNs become ``_NAN``
                     keys = [k if k is None else (_NAN if k != k else k + 0.0) for k in keys]
-                cols = [c.to_pylist() for c in batch.columns[1:]]
-                if len(cols) == 1:
-                    values = cols[0]
-                elif cols:
-                    values = map(record._make, zip(*cols))
+                if len(value_cols) == 1:
+                    values = batch.column(1).to_pylist()
                 else:
-                    values = itertools.repeat(record(), batch.num_rows)
+                    values = _records(batch.columns[1:], record, batch.num_rows)
                 yield from zip(keys, values)
-
-        def emit(rows: list[tuple]) -> pa.RecordBatch:
-            cols = list(zip(*rows, strict=True))
-            if len(cols) != len(arrow_schema):
-                raise ValueError(
-                    f"reducer yielded {len(cols)}-field rows for the "
-                    f"{len(arrow_schema)}-column output schema {out_schema.simpleString()}"
-                )
-            arrays = [pa.array(c, type=t) for c, t in zip(cols, arrow_schema.types)]
-            return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         reducer.begin_shard(ctx)
         buf: list[tuple] = []

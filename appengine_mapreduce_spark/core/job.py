@@ -30,7 +30,7 @@ workers, counters, outputs, and job chaining (plain Python sequencing,
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -157,44 +157,54 @@ class MapReduceJob:
 
     @staticmethod
     def run(spark: SparkSession, spec: MapReduceSpecification) -> MapReduceResult:
-        from appengine_mapreduce_spark.core import status
+        """Run the job into its sink. The reduce output is materialized
+        once (``localCheckpoint``), so a sink that runs several Spark jobs,
+        or a later action on ``output_df``, reads the checkpointed blocks
+        instead of re-running the job, and counters stay exact. The blocks
+        live until ``output_df`` is dropped; a limited ``InMemoryOutput``
+        reduces every key before it truncates."""
 
-        counters = Counters(spark.sparkContext)
-        job_id = status.start_job(spec.job_name)
-        try:
-            # Materialize the reduce output once: a sink that runs several
-            # Spark jobs (a sorted FileOutput samples its input first), or a
-            # later action on ``output_df``, reads the checkpointed blocks
-            # instead of re-running the job, so counters stay exact. The
-            # blocks live until ``output_df`` is dropped. The price: a
-            # single-job sink runs one extra (cheap) job, and a limited
-            # ``InMemoryOutput`` reduces every key before it truncates.
-            reduced = MapReduceJob.plan(spark, spec, counters).localCheckpoint(eager=True)
-            result_value = spec.output.write(reduced, spec.job_name)
-        except BaseException as e:
-            status.fail_job(job_id, e)
-            raise
-        status.finish_job(job_id, counters.to_dict(), result_value)
-        return MapReduceResult(result_value, counters.to_dict(), reduced, job_id)
+        def plan(counters: Counters) -> DataFrame:
+            return MapReduceJob.plan(spark, spec, counters).localCheckpoint(eager=True)
+
+        return _run(spark, spec, plan)
 
     @staticmethod
     def run_map(spark: SparkSession, spec: MapSpecification) -> MapReduceResult:
-        from appengine_mapreduce_spark.core import status
+        """Run a map-only job into its sink. Map output is about as large
+        as its input, so it is not materialized: the sink's action runs
+        the mapper (once; a sorted ``FileOutput`` checkpoints its own
+        input), and every later action on ``output_df`` runs it again.
+        ``result.counters`` is the snapshot taken when the sink returns."""
 
-        counters = Counters(spark.sparkContext)
-        job_id = status.start_job(spec.job_name)
-        try:
+        def plan(counters: Counters) -> DataFrame:
             df = ensure_parallelism(spec.input.read(spark))
-            out_schema = _ddl(spec.output_schema)
-            mapped = run_mapper(
-                df, as_mapper(spec.mapper), out_schema, counters.accumulator
+            return run_mapper(
+                df, as_mapper(spec.mapper), _ddl(spec.output_schema), counters.accumulator
             )
-            result_value = spec.output.write(mapped, spec.job_name)
-        except BaseException as e:
-            status.fail_job(job_id, e)
-            raise
-        status.finish_job(job_id, counters.to_dict(), result_value)
-        return MapReduceResult(result_value, counters.to_dict(), mapped, job_id)
+
+        return _run(spark, spec, plan)
+
+
+def _run(
+    spark: SparkSession,
+    spec: MapSpecification | MapReduceSpecification,
+    plan: Callable[[Counters], DataFrame],
+) -> MapReduceResult:
+    """Run the job ``plan`` builds into the spec's sink, recording its
+    status and counters."""
+    from appengine_mapreduce_spark.core import status
+
+    counters = Counters(spark.sparkContext)
+    job_id = status.start_job(spec.job_name)
+    try:
+        out = plan(counters)
+        result_value = spec.output.write(out, spec.job_name)
+    except BaseException as e:
+        status.fail_job(job_id, e)
+        raise
+    status.finish_job(job_id, counters.to_dict(), result_value)
+    return MapReduceResult(result_value, counters.to_dict(), out, job_id)
 
 
 # --- Inputs (job-level wrappers over sources/) -------------------------------

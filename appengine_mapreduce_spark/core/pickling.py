@@ -2,7 +2,7 @@
 
 The driver contract puts this package on the DRIVER's sys.path only;
 executor Python workers have no install. Any module whose functions are
-referenced from a worker closure (mapInPandas/applyInPandas/foreachPartition
+referenced from a worker closure (mapInArrow/mapInPandas/foreachPartition
 bodies) must be serialized BY VALUE so the closure is self-contained.
 Modules self-register at import:
 

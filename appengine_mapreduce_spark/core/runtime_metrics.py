@@ -4,6 +4,8 @@ UI / REST status API — public monitoring surface, no listener plumbing).
 Used by bench.py to attribute shuffle bytes per query (plan regressions
 show up as metric diffs even when wall-clock noise hides them) and by the
 spill probe to prove external sort/agg carries constrained-memory runs.
+:func:`cpu_stat` reads the host-noise channels the bench and the tools
+attribute each timed phase with.
 
 Reference parity note: the reference framework exposes the same class of
 evidence through per-job counters (python/src/mapreduce/model.py
@@ -16,6 +18,28 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+
+
+def cpu_stat() -> tuple[int, int, int]:
+    """(steal jiffies, idle jiffies, PSI io full-stall µs) of the host,
+    from ``/proc/stat`` and ``/proc/pressure/io``; -1 when a channel is
+    unreadable. Diff two reads around a timed phase: steal bursts and
+    disk-writeback stalls are distinct noise modes on a shared host."""
+    try:
+        with open("/proc/stat") as fh:
+            f = fh.readline().split()
+        steal, idle = int(f[8]), int(f[4])
+    except (OSError, IndexError, ValueError):
+        steal, idle = -1, -1
+    io_us = -1
+    try:
+        with open("/proc/pressure/io") as fh:
+            for line in fh:
+                if line.startswith("full"):
+                    io_us = int(line.rsplit("total=", 1)[1])
+    except (OSError, IndexError, ValueError):
+        pass
+    return steal, idle, io_us
 
 
 def total_shuffle_write_bytes(spark: SparkSession) -> int:

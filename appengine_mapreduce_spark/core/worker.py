@@ -30,7 +30,25 @@ from appengine_mapreduce_spark.core.counters import CounterContext
 
 
 class Mapper:
-    """Emit zero or more output rows per input row (generator contract)."""
+    """Emit zero or more output rows per input row (generator contract).
+
+    ``row`` is a namedtuple of the input columns (named ``Pandas``, field
+    names that are not identifiers renamed to ``_<position>``), each value
+    exactly as Arrow's ``to_pylist()`` reads it: null is ``None``; an
+    integer is an ``int`` at any size; a float NaN stays NaN, apart from
+    null; a string is ``str``, binary ``bytes``, a decimal ``Decimal``, a
+    date ``datetime.date``, a timestamp a tz-aware ``datetime`` in the
+    session time zone (UTC in this package's session); an array is a
+    ``list``, a struct a ``dict`` and a map a list of ``(key, value)``
+    pairs. Reducer keys and values are read the same way.
+
+    Yielded values go straight to Arrow: each should already be of its output
+    column's Python type (``None`` for null). A NaN, an infinity or a
+    bool yielded into an integer column, or a number into a string
+    column, fails the task with an error naming the stage and the
+    column; a finite float in an integer column is truncated toward
+    zero. Reducer output follows the same rule.
+    """
 
     def begin_shard(self, ctx: CounterContext) -> None:  # noqa: B027
         pass

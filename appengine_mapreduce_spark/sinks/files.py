@@ -46,6 +46,11 @@ class FileOutput:
             # ExternalSorter spills/merges exactly like the reference's
             # tiered merge, no operator to build.
             cols = [F.col(c) for c in self.sort_by]
+            # Sampling the range bounds is a Spark job of its own. A lazy
+            # local checkpoint keeps the blocks it computes, so the write
+            # reads them and an upstream mapper (and its counters) runs
+            # once.
+            df = df.localCheckpoint(eager=False)
             if self.shards is not None:
                 df = df.repartitionByRange(self.shards, *cols)
             else:

@@ -50,6 +50,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
 from appengine_mapreduce_spark.plans import bench_queries
 from appengine_mapreduce_spark.session import get_spark
 
@@ -85,25 +86,6 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 # `queries_flagged` with its CPU-steal / io-stall attribution) so a skim
 # can never mistake a burst-hit figure for a regression.
 QUERY_SPREAD_GATE = float(os.environ.get("SPARK_GRAFT_QUERY_SPREAD_GATE", "0.5"))
-
-
-def _cpu_stat() -> "tuple[int, int, int]":
-    """(steal jiffies, idle jiffies, PSI io full-stall µs) — the three
-    host-noise channels tools/sf2_sweep.py attributes phases with; -1
-    when a channel is unreadable."""
-    try:
-        f = open("/proc/stat").readline().split()
-        steal, idle = int(f[8]), int(f[4])
-    except Exception:
-        steal, idle = -1, -1
-    io_us = -1
-    try:
-        for line in open("/proc/pressure/io"):
-            if line.startswith("full"):
-                io_us = int(line.rsplit("total=", 1)[1])
-    except Exception:
-        pass
-    return steal, idle, io_us
 
 
 def _pretouch(sf_dir: str) -> None:
@@ -283,12 +265,12 @@ def _measure(
         """One timed run with per-run host-noise attribution summed into
         cpu_attr[name] (VERDICT r13 ask #4: the calibration probe alone
         misses intra-run bursts; per-query steal/io deltas don't)."""
-        s0, _, io0 = _cpu_stat() if cpu_attr is not None else (-1, -1, -1)
+        s0, _, io0 = cpu_stat() if cpu_attr is not None else (-1, -1, -1)
         t0 = time.perf_counter()
         n = len(spec.fn(spark, sf_dir).collect())
         dt = time.perf_counter() - t0
         if cpu_attr is not None:
-            s1, _, io1 = _cpu_stat()
+            s1, _, io1 = cpu_stat()
             acc = cpu_attr.setdefault(
                 name, {"steal_jiffies_d": 0, "io_stall_us_d": 0})
             if s0 >= 0 and s1 >= 0:
@@ -494,11 +476,11 @@ def _run_capstones(sf_dir: str, sf1_dir: str | None) -> dict:
                 qs[name].fn(spark, d).collect()
             for _ in range(3):  # interleaved: a burst hits one round
                 for name in names:
-                    s0, _, io0 = _cpu_stat()
+                    s0, _, io0 = cpu_stat()
                     t0 = time.perf_counter()
                     n = len(qs[name].fn(spark, d).collect())
                     dt = time.perf_counter() - t0
-                    s1, _, io1 = _cpu_stat()
+                    s1, _, io1 = cpu_stat()
                     runs_of.setdefault((name, label), []).append(dt)
                     blk = out.setdefault(name, {})
                     acc = blk.setdefault(f"{label}_cpu", {
@@ -634,7 +616,7 @@ def _events(spark, sf_dir: str):
 
 def _purchase_filter():
     """Same per-row work as the mapreduce_api_eventfilter anchor, so the
-    seam probes isolate exactly that anchor's seam."""
+    seam probe isolates exactly that anchor's seam."""
     from appengine_mapreduce_spark.core.worker import MapOnlyMapper
 
     class PurchaseFilter(MapOnlyMapper):
@@ -643,84 +625,6 @@ def _purchase_filter():
                 yield (row.event_id, row.user_id, row.value)
 
     return PurchaseFilter()
-
-
-def _run_seam_variants(sf_dir: str, n_runs: int = 7, tile: int = 10) -> dict:
-    """Map-seam throughput decomposition (SCALING.md "Seam throughput
-    decomposition"): five map-only jobs doing the eventfilter anchor's
-    work over the events table tiled ``tile`` times, each a ``noop``
-    write, run interleaved so host drift hits all alike:
-
-        noop        mapInPandas body that never reads its input
-        itertuples  bare per-row Python loop over each batch, emits nothing
-        pandas      fully-vectorized pandas filter
-        arrow       mapInArrow filter, no pandas conversion at all
-        run_mapper  the generator adapter with the per-row mapper
-
-    Returns the median and all run times per variant."""
-    import pandas as pd
-    import pyarrow.compute as pc
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    from appengine_mapreduce_spark.core.adapters import run_mapper
-    from appengine_mapreduce_spark.core.counters import Counters
-    from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
-
-    spark = get_spark(app_name="bench-seam-variants")
-    try:
-        base = _events(spark, sf_dir)
-        tiled = base.crossJoin(spark.range(tile).select(F.col("id").alias("_t")))
-        ev = ensure_parallelism(tiled.select(*base.columns).localCheckpoint(eager=True))
-        n_rows = ev.count()
-        schema = StructType.fromDDL(_PURCHASE_SCHEMA)
-        kept = [f.name for f in schema.fields]
-
-        def empty():
-            return pd.DataFrame({c: [] for c in kept})
-
-        def noop_body(batches):
-            yield empty()
-
-        def itertuples_body(batches):
-            for pdf in batches:
-                for _ in pdf.itertuples(index=False):
-                    pass
-            yield empty()
-
-        def pandas_body(batches):
-            for pdf in batches:
-                yield pdf.loc[pdf["event_type"] == "purchase", kept]
-
-        def arrow_body(batches):
-            for b in batches:
-                yield b.filter(pc.equal(b.column("event_type"), "purchase")).select(kept)
-
-        acc = Counters(spark.sparkContext).accumulator
-        variants = {
-            "noop": lambda: ev.mapInPandas(noop_body, schema=schema),
-            "itertuples": lambda: ev.mapInPandas(itertuples_body, schema=schema),
-            "pandas": lambda: ev.mapInPandas(pandas_body, schema=schema),
-            "arrow": lambda: ev.mapInArrow(arrow_body, schema=schema),
-            "run_mapper": lambda: run_mapper(ev, _purchase_filter(), schema, acc),
-        }
-        times: dict[str, list[float]] = {k: [] for k in variants}
-        for build in variants.values():  # warm every Python worker path once
-            build().write.format("noop").mode("overwrite").save()
-        for _ in range(n_runs):
-            for name, build in variants.items():
-                t0 = time.perf_counter()
-                build().write.format("noop").mode("overwrite").save()
-                times[name].append(round(time.perf_counter() - t0, 3))
-        cores = spark.sparkContext.defaultParallelism
-    finally:
-        spark.stop()
-    return {
-        "rows": n_rows,
-        "cores": cores,
-        "median_s": {k: statistics.median(v) for k, v in times.items()},
-        "runs_s": times,
-    }
 
 
 def _run_seam_probe(
@@ -760,24 +664,6 @@ def _run_seam_probe(
       amortized. This carries the ≥1M rec/s floor
       (tests/test_throughput.py asserts the drift-adjusted figure)."""
 
-    def _cpu_stat() -> "tuple[int, int, int]":
-        # steal, idle (jiffies), io-stall (µs from PSI /proc/pressure/io
-        # "full total" — round-11 finding: the box accumulates whole
-        # SECONDS of full io-stall; shared-host disk writeback is the
-        # Mode B mechanism candidate, now attributable per run)
-        try:
-            f = open("/proc/stat").readline().split()
-            steal, idle = int(f[8]), int(f[4])
-        except Exception:
-            steal, idle = -1, -1
-        io_us = -1
-        try:
-            for line in open("/proc/pressure/io"):
-                if line.startswith("full"):
-                    io_us = int(line.rsplit("total=", 1)[1])
-        except Exception:
-            pass
-        return steal, idle, io_us
     from pyspark.sql.types import StructType
 
     from appengine_mapreduce_spark.core.adapters import run_mapper
@@ -810,11 +696,11 @@ def _run_seam_probe(
             cold = time.perf_counter() - t0
             warm, runs_detail = [], []
             for _ in range(n_runs):
-                s0, i0, io0 = _cpu_stat()
+                s0, i0, io0 = cpu_stat()
                 t0 = time.perf_counter()
                 plan().collect()
                 dt = time.perf_counter() - t0
-                s1, i1, io1 = _cpu_stat()
+                s1, i1, io1 = cpu_stat()
                 warm.append(dt)
                 runs_detail.append({
                     "sec": round(dt, 4),
@@ -1010,8 +896,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if sys.argv[1:2] == ["--seam-variants"]:
-        # python bench.py --seam-variants SF_DIR [RUNS] [TILE]
-        print(json.dumps(_run_seam_variants(sys.argv[2], *map(int, sys.argv[3:5]))))
-    else:
-        main()
+    main()

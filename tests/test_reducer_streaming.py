@@ -1,35 +1,38 @@
-"""Streaming sort-merge reducer and the single materialized reduce pass.
+"""Streaming sort-merge reducer, exact values on the Arrow seam, and the
+single materialized pass.
 
 The reducer sees ``(key, lazy value iterator)`` streamed off a sorted
-shuffle (≙ java ReducerInput / impl/MergingReader.java:89-138), and
-``MapReduceJob.run`` runs the reducer exactly once whatever the sink does
-— counters are exact (≙ end_to_end_test.py counter assertions).
-Each case is checked against a pure-Python replay of the same input.
+shuffle (≙ java ReducerInput / impl/MergingReader.java:89-138); mapper
+rows and reducer keys and values are read from Arrow exactly; and
+``MapReduceJob.run`` / ``run_map`` run the job exactly once whatever the
+sink does — counters are exact (≙ end_to_end_test.py counter assertions).
+Each case runs the full job and is checked against a pure-Python replay
+of the same input.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import datetime
 import math
 import re
 from collections import defaultdict
 
 import pytest
-from pyspark.sql.types import StructType
 
 from appengine_mapreduce_spark.core import job as job_mod
-from appengine_mapreduce_spark.core.adapters import run_reducer
 from appengine_mapreduce_spark.core.counters import Counters
 from appengine_mapreduce_spark.core.job import (
     DataFrameInput,
     MapReduceJob,
     MapReduceSpecification,
+    MapSpecification,
 )
-from appengine_mapreduce_spark.core.worker import Mapper, as_reducer
+from appengine_mapreduce_spark.core.worker import Mapper
 from appengine_mapreduce_spark.sinks.files import FileOutput
 from appengine_mapreduce_spark.sinks.inmemory import InMemoryOutput, NoOutput
 from tests.conftest import SF_SMOKE
-from tests.test_api import SumReducer, _wc_spec
+from tests.test_api import SumReducer, WordCountMapper, _wc_spec
 
 
 @pytest.fixture(scope="module")
@@ -69,32 +72,18 @@ class _Emit(Mapper):
 
 
 def _job(spark, rows, schema, reducer, out_schema, **kw):
-    """Run ``reducer`` over ``rows`` (already key, value...) and collect."""
+    """Run ``reducer`` over ``rows`` (already key, value... unless ``kw``
+    names another mapper and map output schema) and collect."""
+    kw = {"mapper": _Emit(), "map_output_schema": schema, **kw}
     spec = MapReduceSpecification(
         job_name="stream",
         input=DataFrameInput(spark.createDataFrame(rows, schema)),
-        mapper=_Emit(),
-        map_output_schema=schema,
         reducer=reducer,
         output_schema=out_schema,
         output=InMemoryOutput(),
         **kw,
     )
     return MapReduceJob.run(spark, spec)
-
-
-def _reduce(spark, rows, schema, reducer, out_schema):
-    """Run ``run_reducer`` alone over ``rows`` (key, value...), so the
-    reducer sees the values exactly as given: a mapper's pandas batches
-    read an integer column holding a null as float64 and turn a NaN it
-    yields into null. Returns the output rows and ``reducer-calls``."""
-    kv = spark.createDataFrame(rows, schema)
-    counters = Counters(spark.sparkContext)
-    out = run_reducer(
-        kv, as_reducer(reducer), StructType.fromDDL(out_schema),
-        counters.accumulator, kv.columns[0], kv.columns[1:],
-    ).collect()
-    return [tuple(r) for r in out], counters.get("reducer-calls")
 
 
 def _groups(rows) -> dict:
@@ -113,24 +102,52 @@ def _count_sum(ctx, key, values):
     yield (key, len(vals), sum(vals))
 
 
+def _sink(name, tmp_path):
+    return {
+        "in_memory": InMemoryOutput(),
+        "none": NoOutput(),
+        "sorted_files": FileOutput(str(tmp_path / "out"), sort_by=["word"]),
+    }[name]
+
+
 @pytest.mark.parametrize("sink", ["in_memory", "none", "sorted_files"])
 def test_counters_exact_for_every_sink(spark, docs, tmp_path, job_counters, sink):
     """One reduce pass whatever the sink runs, and a re-collect of
     ``output_df`` does not re-run the job."""
-    output = {
-        "in_memory": InMemoryOutput(),
-        "none": NoOutput(),
-        "sorted_files": FileOutput(str(tmp_path / "out"), sort_by=["word"]),
-    }[sink]
     rows = docs.collect()
     words = {w for r in rows for w in r.text.split() if w}
-    result = MapReduceJob.run(spark, dataclasses.replace(_wc_spec(docs), output=output))
+    result = MapReduceJob.run(
+        spark, dataclasses.replace(_wc_spec(docs), output=_sink(sink, tmp_path))
+    )
     assert result.counters["reducer-calls"] == len(words)
     assert result.counters["mapper-calls"] == len(rows)
     assert result.output_df.count() == len(words)
     assert len(result.output_df.collect()) == len(words)
     [counters] = job_counters
     assert counters.to_dict() == result.counters
+
+
+@pytest.mark.parametrize("sink", ["in_memory", "none", "sorted_files"])
+def test_map_only_counters_exact_for_every_sink(spark, docs, tmp_path, job_counters, sink):
+    """A map-only job also runs its mapper once whatever the sink runs.
+    Its ``output_df`` is not materialized: a re-collect runs the mapper
+    again and leaves ``result.counters`` as the sink left it."""
+    rows = docs.collect()
+    n_words = sum(1 for r in rows for w in r.text.split() if w)
+    spec = MapSpecification(
+        job_name="map-only",
+        input=DataFrameInput(docs),
+        mapper=WordCountMapper(),
+        output_schema="word string, n bigint",
+        output=_sink(sink, tmp_path),
+    )
+    result = MapReduceJob.run_map(spark, spec)
+    assert result.counters["mapper-calls"] == len(rows)
+    [counters] = job_counters
+    assert counters.to_dict() == result.counters
+    assert len(result.output_df.collect()) == n_words
+    assert counters.to_dict()["mapper-calls"] == 2 * len(rows)
+    assert result.counters["mapper-calls"] == len(rows)
 
 
 def test_hot_key_spans_batches(spark, tiny_batches):
@@ -177,11 +194,63 @@ def test_bigint_keys_past_float_precision(spark, tiny_batches):
     holds a null key."""
     keys = [None, 2**53, 2**53 + 1, 2**62, 2**62 + 1]
     rows = [(keys[i % len(keys)], i) for i in range(35)]
-    out, calls = _reduce(spark, rows, "k bigint, v bigint", _count_sum, "k bigint, n bigint, s bigint")
-    assert sorted(out, key=repr) == sorted(
+    result = _job(spark, rows, "k bigint, v bigint", _count_sum, "k bigint, n bigint, s bigint")
+    assert sorted(result.output, key=repr) == sorted(
         ((k, len(v), sum(v)) for k, v in _groups(rows).items()), key=repr
     )
-    assert calls == len(keys)
+    assert result.counters["reducer-calls"] == len(keys)
+
+
+def test_mapper_reads_bigints_with_nulls_exactly(spark, tiny_batches):
+    """A null in a bigint input column leaves the mapper's other values
+    ``int`` in the same batch, 2**53 + 1 included."""
+    vals = [None, 2**53 + 1, 2**53, 7]
+    rows = [(f"k{i % 3}", vals[i % len(vals)]) for i in range(35)]
+
+    class Typed(Mapper):
+        def __call__(self, ctx, row):
+            assert row.v is None or type(row.v) is int, repr(row.v)
+            yield (row.k, row.v)
+
+    def nulls_and_sum(ctx, key, values):
+        vals = list(values)
+        yield (key, sum(v is None for v in vals), sum(v for v in vals if v is not None))
+
+    result = _job(
+        spark, rows, "k string, v bigint", nulls_and_sum, "k string, nulls bigint, s bigint",
+        mapper=Typed(),
+    )
+    assert set(result.output) == {
+        (k, sum(x is None for x in v), sum(x for x in v if x is not None))
+        for k, v in _groups(rows).items()
+    }
+
+
+def test_mapper_yielded_nan_stays_nan(spark, tiny_batches):
+    """A NaN the mapper yields reaches the reducer as NaN, apart from the
+    nulls it yields."""
+    rows = [(f"k{i % 3}", i) for i in range(42)]
+
+    def half(v):
+        return float("nan") if v % 4 == 0 else None if v % 4 == 1 else v / 2
+
+    class Half(Mapper):
+        def __call__(self, ctx, row):
+            yield (row.k, half(row.v))
+
+    def kinds(ctx, key, values):
+        vals = list(values)
+        yield (key, sum(v is None for v in vals), sum(v is not None and v != v for v in vals))
+
+    result = _job(
+        spark, rows, "k string, v bigint", kinds, "k string, nulls bigint, nans bigint",
+        mapper=Half(), map_output_schema="k string, x double",
+    )
+    replay = _groups([(k, half(v)) for k, v in rows])
+    assert set(result.output) == {
+        (k, sum(x is None for x in v), sum(x is not None and x != x for x in v))
+        for k, v in replay.items()
+    }
 
 
 def test_integral_values_with_nulls_stay_integers(spark, tiny_batches):
@@ -212,14 +281,14 @@ def test_nan_keys_form_one_group(spark, tiny_batches):
         for _, n, s in _count_sum(ctx, key, values):
             yield (repr(key), n, s)
 
-    out, calls = _reduce(spark, rows, "k double, v bigint", named, "k string, n bigint, s bigint")
+    result = _job(spark, rows, "k double, v bigint", named, "k string, n bigint, s bigint")
     expected = {
         ("nan" if k == "NaN" else repr(k), len(v), sum(v)) for k, v in _groups(rows).items()
     }
     kv = spark.createDataFrame(rows, "k double, v bigint")
     assert kv.groupBy("k").count().count() == len(expected) == 5
-    assert sorted(out) == sorted(expected)
-    assert calls == 5
+    assert sorted(result.output) == sorted(expected)
+    assert result.counters["reducer-calls"] == 5
 
 
 def test_float_values_keep_null_apart_from_nan(spark, tiny_batches):
@@ -230,8 +299,8 @@ def test_float_values_keep_null_apart_from_nan(spark, tiny_batches):
         vals = list(values)
         yield (key, sum(v is None for v in vals), sum(v is not None and v != v for v in vals))
 
-    out, _ = _reduce(spark, rows, "k string, v double", kinds, "k string, nulls bigint, nans bigint")
-    assert set(out) == {
+    result = _job(spark, rows, "k string, v double", kinds, "k string, nulls bigint, nans bigint")
+    assert set(result.output) == {
         (k, sum(x is None for x in v), sum(x is not None and x != x for x in v))
         for k, v in _groups(rows).items()
     }
@@ -311,7 +380,8 @@ def test_reducer_lifecycle_hooks(spark, docs):
 
 def test_wordcount_plan_streams_through_one_key_exchange(spark, docs):
     plan = MapReduceJob.plan(spark, _wc_spec(docs))._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "MapInArrow" in plan
+    assert plan.count("MapInArrow") == 2
+    assert "MapInPandas" not in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Exchange hashpartitioning(word#" in plan
@@ -322,10 +392,68 @@ def test_non_scalar_key_is_rejected(spark):
         _job(spark, [([1], 1)], "k array<bigint>, v bigint", _count_sum, "k string, n bigint, s bigint")
 
 
-
 def test_reducer_row_of_wrong_width_is_rejected(spark):
     def short(ctx, key, values):
         yield (key, sum(values))
 
-    with pytest.raises(Exception, match="2-field rows for the 3-column"):
-        _reduce(spark, [("a", 1)], "k string, v bigint", short, "k string, n bigint, s bigint")
+    with pytest.raises(Exception, match="reducer yielded 2-field rows for the 3-column"):
+        _job(spark, [("a", 1)], "k string, v bigint", short, "k string, n bigint, s bigint")
+
+
+def test_mapper_row_of_wrong_width_is_rejected(spark):
+    class Wide(Mapper):
+        def __call__(self, ctx, row):
+            yield (row.k, row.v, row.v)
+
+    with pytest.raises(Exception, match="mapper yielded 3-field rows for the 2-column"):
+        _job(spark, [("a", 1)], "k string, v bigint", _count_sum, "k string, n bigint, s bigint",
+             mapper=Wide())
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), True, "7", 2**63])
+def test_mapper_value_its_column_cannot_hold_is_rejected(spark, bad):
+    """Yielded values are not cast: a NaN, an infinity, a bool, a string
+    or an out-of-range int in a bigint column fails, naming the stage and
+    the column."""
+
+    class Bad(Mapper):
+        def __call__(self, ctx, row):
+            yield (row.k, bad)
+
+    with pytest.raises(Exception, match=r"mapper yielded a value the output column 'v' \(bigint\)"):
+        _job(spark, [("a", 1)], "k string, v bigint", _count_sum, "k string, n bigint, s bigint",
+             mapper=Bad())
+
+
+def test_mapper_reads_timestamp_array_struct_and_map_values(spark):
+    """A map-only job's rows hold the documented Python types: a
+    timestamp is a tz-aware ``datetime`` in the session time zone (UTC
+    here), an array a ``list``, a struct a ``dict``, a map a list of
+    ``(key, value)`` pairs."""
+    t0 = datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=datetime.timezone.utc)
+    rows = [
+        (i, t0 + datetime.timedelta(seconds=i), [i, None], (i, f"s{i}"), {"x": i})
+        for i in range(20)
+    ]
+
+    class Describe(Mapper):
+        def __call__(self, ctx, row):
+            types = (type(row.ts), type(row.arr), type(row.st), type(row.m))
+            assert types == (datetime.datetime, list, dict, list), types
+            yield (row.i, row.ts.isoformat(), repr(row.arr), repr(row.st), repr(row.m))
+
+    spec = MapSpecification(
+        job_name="map-types",
+        input=DataFrameInput(spark.createDataFrame(
+            rows, "i bigint, ts timestamp, arr array<bigint>, st struct<a:bigint,b:string>, "
+            "m map<string,bigint>",
+        )),
+        mapper=Describe(),
+        output_schema="i bigint, ts string, arr string, st string, m string",
+        output=InMemoryOutput(),
+    )
+    result = MapReduceJob.run_map(spark, spec)
+    assert sorted(result.output) == [
+        (i, ts.isoformat(), repr(arr), repr({"a": a, "b": b}), repr(list(m.items())))
+        for i, ts, arr, (a, b), m in rows
+    ]

@@ -28,28 +28,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N_ROWS = int(os.environ.get("SPARK_GRAFT_SKEWPROBE_ROWS", str(20_000_000)))
 DOMINANT_SHARE = 0.85
 ROUNDS = int(os.environ.get("SPARK_GRAFT_SKEWPROBE_ROUNDS", "3"))
 BUDGET = 2048
-
-
-def _cpu_stat():
-    try:
-        f = open("/proc/stat").readline().split()
-        steal, idle = int(f[8]), int(f[4])
-    except Exception:
-        steal, idle = -1, -1
-    io_us = -1
-    try:
-        for line in open("/proc/pressure/io"):
-            if line.startswith("full"):
-                io_us = int(line.rsplit("total=", 1)[1])
-    except Exception:
-        pass
-    return steal, io_us
 
 
 def main() -> None:
@@ -106,9 +92,9 @@ def main() -> None:
     }
     for _ in range(ROUNDS):
         for mode, s in modes:
-            s0, io0 = _cpu_stat()
+            s0, _, io0 = cpu_stat()
             dt, n = run(s)
-            s1, io1 = _cpu_stat()
+            s1, _, io1 = cpu_stat()
             samples[mode].append(dt)
             bins[mode] = n
             if s0 >= 0:

@@ -34,6 +34,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
+
 _CHILD_CODE = """
 import sys, json
 sys.path.insert(0, {repo!r})
@@ -160,28 +162,6 @@ print("@@RESULT@@" + json.dumps(out))
 _PHASE_CPU: "dict[str, dict]" = {}
 
 
-def _cpu_stat() -> "tuple[int, int, int]":
-    # steal, idle (jiffies), io-stall (µs, PSI /proc/pressure/io "full
-    # total") — round-11: the box shows whole SECONDS of accumulated full
-    # io-stall; shared-host disk writeback stalls are a distinct burst
-    # mode from CPU steal, and in-suite sf2 wobble correlates with
-    # neither steal nor JVM GC — record all three so the artifact
-    # attributes each phase.
-    try:
-        f = open("/proc/stat").readline().split()
-        steal, idle = int(f[8]), int(f[4])
-    except Exception:
-        steal, idle = -1, -1
-    io_us = -1
-    try:
-        for line in open("/proc/pressure/io"):
-            if line.startswith("full"):
-                io_us = int(line.rsplit("total=", 1)[1])
-    except Exception:
-        pass
-    return steal, idle, io_us
-
-
 def _pretouch(sf_dir: str) -> None:
     """Stream the fixture's parquet through the page cache before a
     timed child. Round-13 sf8 finding: this host pins page cache at
@@ -220,12 +200,12 @@ def _child(code_tmpl: str, sf_dir: str, label: str,
     # — the same Mode A the seam probe instruments. Sampling /proc/stat
     # around each child makes contamination visible IN the artifact, so
     # a reader (or a re-run decision) never needs an out-of-band probe.
-    s0, i0, io0 = _cpu_stat()
+    s0, i0, io0 = cpu_stat()
     t0 = __import__("time").time()
     proc = subprocess.run(
         [sys.executable, "-c", code], stdout=subprocess.PIPE, timeout=3600)
     wall = __import__("time").time() - t0
-    s1, i1, io1 = _cpu_stat()
+    s1, i1, io1 = cpu_stat()
     _PHASE_CPU[label] = {
         "wall_sec": round(wall, 1),
         "steal_d": s1 - s0 if s0 >= 0 else -1,
