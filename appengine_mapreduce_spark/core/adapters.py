@@ -1,14 +1,21 @@
-"""Generator-UDF adapters: user Mapper/Reducer/Combiner code → Arrow-batched
-Spark plans.
+"""Generator-UDF adapters: user Mapper/Reducer/Combiner code and the
+built-in per-row operators → Arrow-batched Spark plans.
 
 This is the performance-critical seam the reference never had: its workers
 ran interpreted Python per record over task-queue slices
-(handlers.py:534-648 _process_inputs/_process_datum). Here both stages
-cross into Python the same way, through ``mapInArrow``: one reader turns
+(handlers.py:534-648 _process_inputs/_process_datum). Here every Python
+stage crosses the same way, through ``mapInArrow``: one reader turns
 each Arrow batch into rows with ``to_pylist()``, user generators run per
 row, and one emitter builds the output rows back into Arrow batches.
 Python touches each row exactly once, and everything before/after the
-adapter stays JVM-side.
+adapter stays JVM-side. The reader and emitter have three users:
+
+- ``run_mapper``: the map stage, with shard lifecycle, counters, map-side
+  combine and rate throttling;
+- ``run_reducer``: the streaming sort-merge reduce stage;
+- ``map_rows``: a plain per-row generator with none of that — the seam
+  of the built-in per-blob operators (media decoders, zip and record
+  sources, parquet footer stats).
 
 Scale notes:
 - map-side combine buffers per partition with a bounded flush
@@ -22,16 +29,16 @@ Scale notes:
   may span any number of batches, so a hot key costs one batch of memory,
   not one group; values the reducer leaves unread are skipped. Spark's
   sort spills to disk like the reference's merge.
-- rows are read straight from Arrow as Python values, so mapper rows and
-  reducer keys and values arrive exact: null is ``None``, a bigint stays
-  an ``int`` at any size, NaN stays apart from null, a timestamp is a
-  tz-aware ``datetime`` in the session time zone, an array a ``list``, a
-  map a list of ``(key, value)`` pairs. Output goes straight to Arrow: a
-  NaN the user code yields stays NaN, and a value its column's type
-  cannot hold fails the task, naming the stage and column. Reducer
-  keys must be scalar types (string, numeric, boolean, date,
-  timestamp, binary): runs are split on Python ``==``. NaN keys form one
-  group, as in Spark's ``groupBy``.
+- rows are read straight from Arrow as Python values, so mapper and
+  ``map_rows`` rows and reducer keys and values arrive exact: null is
+  ``None``, a bigint stays an ``int`` at any size, NaN stays apart from
+  null, a timestamp is a tz-aware ``datetime`` in the session time zone,
+  an array a ``list``, a map a list of ``(key, value)`` pairs. Output
+  goes straight to Arrow: a NaN the user code yields stays NaN, and a
+  value its column's type cannot hold fails the task, naming the stage
+  and column. Reducer keys must be scalar types (string, numeric,
+  boolean, date, timestamp, binary): runs are split on Python ``==``.
+  NaN keys form one group, as in Spark's ``groupBy``.
 """
 
 from __future__ import annotations
@@ -49,20 +56,13 @@ from pyspark.sql.types import AtomicType, DoubleType, FloatType, StructType
 
 from appengine_mapreduce_spark.core import counters as C
 from appengine_mapreduce_spark.core.counters import CounterContext
+from appengine_mapreduce_spark.core.pickling import register_self
 from appengine_mapreduce_spark.core.worker import Combiner, Mapper, Reducer
 
-# Executor Python workers may not have this package on their path (the
-# driver contract only puts it on the DRIVER's sys.path). Serialize the
-# small core modules by value so worker closures are self-contained.
-try:
-    from pyspark import cloudpickle as _cloudpickle
-    import appengine_mapreduce_spark.core.adapters as _self_mod  # noqa: PLW0406
-    from appengine_mapreduce_spark.core import worker as _worker_mod
-
-    for _m in (C, _worker_mod, _self_mod):
-        _cloudpickle.register_pickle_by_value(_m)
-except Exception:  # pragma: no cover — older pyspark without the API
-    pass
+# Executor workers may lack this package (see core.pickling); worker
+# closures reach into the counter and worker modules as well as this one.
+for _module in (C.__name__, Mapper.__module__, __name__):
+    register_self(_module)
 
 _EMIT_BATCH_ROWS = 10_000
 _COMBINE_FLUSH_KEYS = 100_000
@@ -110,6 +110,39 @@ def _emitter(stage: str, out_schema: StructType):
         return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return emit
+
+
+def map_rows(df: DataFrame, fn, out_schema: str | StructType) -> DataFrame:
+    """Run the generator ``fn(row)`` over each row of ``df`` and return
+    the rows it yields as a DataFrame of ``out_schema`` (a DDL string or
+    ``StructType``).
+
+    ``row`` is a namedtuple of ``df``'s columns with values as ``Mapper``
+    reads them; each yielded tuple is one output row, and a value its
+    column cannot hold fails the task, naming ``fn`` and the column. Input
+    batches are bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    and output blocks by ``_EMIT_BATCH_ROWS``, whatever one row yields.
+    """
+    if isinstance(out_schema, str):
+        out_schema = StructType.fromDDL(out_schema)
+    columns = df.columns
+    emit = _emitter(fn.__qualname__, out_schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        record = _record_type(columns)
+        buf: list[tuple] = []
+        for batch in batches:
+            for row in _records(batch.columns, record, batch.num_rows):
+                for item in fn(row):
+                    buf.append(item)
+                    if len(buf) == _EMIT_BATCH_ROWS:
+                        yield emit(buf)
+                        buf = []
+        if buf:
+            yield emit(buf)
+
+    run.__name__ = fn.__name__  # the name the plan shows for the stage
+    return df.mapInArrow(run, schema=out_schema)
 
 
 def run_mapper(

@@ -2,8 +2,9 @@
 
 The driver contract puts this package on the DRIVER's sys.path only;
 executor Python workers have no install. Any module whose functions are
-referenced from a worker closure (mapInArrow/mapInPandas/foreachPartition
-bodies) must be serialized BY VALUE so the closure is self-contained.
+referenced from a worker closure (the ``core.adapters`` mapInArrow
+bodies, foreachPartition writers, the pandas group functions) must be
+serialized BY VALUE so the closure is self-contained.
 Modules self-register at import:
 
     from appengine_mapreduce_spark.core.pickling import register_self

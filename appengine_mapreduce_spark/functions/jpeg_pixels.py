@@ -29,7 +29,7 @@ factors above 2 raise a clear error and stay behind
 ``operators/multimodal.DECODERS_AVAILABLE``. The IDCT here is
 the direct float transform: correct and portable; production swaps a
 vectorized codec without touching the Spark-side plumbing (the
-mapInPandas batch shape is identical).
+operators' ``map_rows`` row functions call the same entry points).
 
 All table constants below are published in T.81 itself (zigzag order
 §A.3.6, example Huffman tables Annex K.3) — public spec, not library code.

@@ -18,11 +18,11 @@ string columns short (the gate query does).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from appengine_mapreduce_spark.core.adapters import map_rows
 from appengine_mapreduce_spark.core.pickling import register_self
 
 register_self(__name__)
@@ -49,7 +49,8 @@ def parquet_footer_stats(
 
     The file listing happens driver-side (a manifest-sized operation —
     at production scale the table format's manifest replaces the walk);
-    footer parsing is distributed via mapInPandas over the path list.
+    footer parsing is distributed over the path list on map_rows, one
+    ``read_metadata`` per file and one row per (row group, column).
     Columns named in ``int_columns`` aggregate min/max NUMERICALLY before
     stringification (lexicographic min of stringified integers would rank
     "10" below "9"); everything else aggregates as strings.
@@ -60,62 +61,39 @@ def parquet_footer_stats(
     ).repartition(min(len(files), 32) or 1)
     wanted = columns
 
-    def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for fp in pdf["file_path"]:
-                meta = pq.read_metadata(fp)
-                for rg in range(meta.num_row_groups):
-                    group = meta.row_group(rg)
-                    for ci in range(group.num_columns):
-                        col = group.column(ci)
-                        name = col.path_in_schema
-                        if wanted is not None and name not in wanted:
-                            continue
-                        st = col.statistics
-                        mn = mx = None
-                        nulls = 0
-                        if st is not None:
-                            nulls = st.null_count or 0
-                            if st.has_min_max:
-                                mn = st.min
-                                mx = st.max
-                                if isinstance(mn, bytes):
-                                    mn = mn.decode("utf-8", "replace")
-                                if isinstance(mx, bytes):
-                                    mx = mx.decode("utf-8", "replace")
-                        rows.append(
-                            (
-                                name,
-                                group.num_rows,
-                                nulls,
-                                None if mn is None else str(mn),
-                                None if mx is None else str(mx),
-                            )
-                        )
-            yield (
-                pd.DataFrame(
-                    rows,
-                    columns=["column", "rg_rows", "rg_nulls", "rg_min", "rg_max"],
+    def read_footers(row):
+        meta = pq.read_metadata(row.file_path)
+        for rg in range(meta.num_row_groups):
+            group = meta.row_group(rg)
+            for ci in range(group.num_columns):
+                col = group.column(ci)
+                name = col.path_in_schema
+                if wanted is not None and name not in wanted:
+                    continue
+                st = col.statistics
+                mn = mx = None
+                nulls = 0
+                if st is not None:
+                    nulls = st.null_count or 0
+                    if st.has_min_max:
+                        mn = st.min
+                        mx = st.max
+                        if isinstance(mn, bytes):
+                            mn = mn.decode("utf-8", "replace")
+                        if isinstance(mx, bytes):
+                            mx = mx.decode("utf-8", "replace")
+                yield (
+                    name,
+                    group.num_rows,
+                    nulls,
+                    None if mn is None else str(mn),
+                    None if mx is None else str(mx),
                 )
-                if rows
-                else pd.DataFrame(
-                    {
-                        "column": pd.Series(dtype="object"),
-                        "rg_rows": pd.Series(dtype="int64"),
-                        "rg_nulls": pd.Series(dtype="int64"),
-                        "rg_min": pd.Series(dtype="object"),
-                        "rg_max": pd.Series(dtype="object"),
-                    }
-                )
-            )
 
-    per_rg = paths_df.mapInPandas(
+    per_rg = map_rows(
+        paths_df,
         read_footers,
-        schema="column string, rg_rows bigint, rg_nulls bigint, "
-        "rg_min string, rg_max string",
+        "column string, rg_rows bigint, rg_nulls bigint, rg_min string, rg_max string",
     )
     int_cols = list(int_columns or [])
     is_int = F.col("column").isin(int_cols) if int_cols else F.lit(False)

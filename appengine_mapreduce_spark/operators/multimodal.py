@@ -8,23 +8,23 @@ UDF signatures — is real and tested; the actual codec calls are STUBBED
 this container. Swapping a real decoder in changes exactly one function
 per operator, marked ``# STUB``.
 
-Scale notes: decode/feature steps run via ``mapInPandas`` so one Arrow
-batch of binary blobs crosses into Python at a time;
-``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory (a
-4K-frame batch at default 10k records would OOM — callers set it per
-media size). Partition widening uses ensure_parallelism, same policy as
-the text operators.
+Scale notes: decode/feature steps run per blob on
+``core.adapters.map_rows``, the Arrow seam the MapReduce API uses. One
+input batch of binary blobs crosses into Python at a time, bounded by
+``spark.sql.execution.arrow.maxRecordsPerBatch`` (a 4K-frame batch at the
+default 10k records would OOM — callers set it per media size), and output
+rows go back to Arrow in blocks of at most ``_EMIT_BATCH_ROWS``. Partition
+widening uses ensure_parallelism, same policy as the text operators.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct as _struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from appengine_mapreduce_spark.core.adapters import map_rows
 from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
 from appengine_mapreduce_spark.core.pickling import register_self
 
@@ -68,23 +68,7 @@ DECODERS_AVAILABLE = False  # flip when librosa/pyav exist in the image —
 # functions/jpeg_pixels.py implements the full T.81 baseline entropy
 # decode + dequant + IDCT + JFIF color transform), PCM audio SAMPLES
 # decode for real (audio_pcm_features — WAV needs no codec), and the
-# metadata layer of every media family is REAL, stdlib-only:
-# - PNG full decode (functions/png.py): chunk parse + inflate + unfilter.
-# - JPEG header decode (functions/jpeg.py): T.81 segment scan —
-#   dimensions/precision/components/mode.
-# - WAV metadata (functions/media.py): RIFF chunk walk —
-#   channels/sample_rate/bits/frames/duration.
-# - MP4 metadata (functions/media.py): ISO BMFF box walk to moov/mvhd —
-#   timescale/duration/track count/brand.
-PNG_DECODER_AVAILABLE = True
-JPEG_HEADER_DECODER_AVAILABLE = True
-WAV_META_DECODER_AVAILABLE = True
-MP4_META_DECODER_AVAILABLE = True
-
-MEDIA_META_SCHEMA = (
-    "media_type string, width int, height int, sample_rate int, "
-    "duration_ms bigint, codec string"
-)
+# metadata layer of every media family is REAL, stdlib-only.
 
 
 def _stub_decode_image(blob: bytes) -> tuple[int, int, bytes]:
@@ -136,38 +120,28 @@ def decode_image_features(
     df: DataFrame, id_col: str = "id", content_col: str = "content"
 ) -> DataFrame:
     """Decode blobs → (width, height, feature vector). Pipeline shape for
-    any per-item media transform: widen partitions, Arrow-batch the blobs,
-    one Python crossing per batch.
+    any per-item media transform: widen partitions, then one row function
+    per blob on map_rows (one Python crossing per Arrow batch).
 
     Feature vector: 8 floats from the pixel digest (# STUB — a real
     implementation would pool CNN activations or color histograms)."""
     out_schema = f"{id_col} bigint, width int, height int, features array<float>"
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, feats = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, digest = _stub_decode_image(bytes(blob))
-                ids.append(int(i))
-                widths.append(w)
-                heights.append(h)
-                feats.append(
-                    [x / 255.0 for x in _struct.unpack("8B", digest[:8])]
-                )
-            yield pd.DataFrame(
-                {id_col: ids, "width": widths, "height": heights, "features": feats}
-            )
+    def decode(row):
+        i, blob = row
+        w, h, digest = _stub_decode_image(blob)
+        yield i, w, h, [x / 255.0 for x in _struct.unpack("8B", digest[:8])]
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_png_images(
     df: DataFrame, id_col: str = "id", content_col: str = "content"
 ) -> DataFrame:
     """REAL PNG decode over a binary column: chunk parse + CRC verify +
-    zlib inflate + scanline unfilter (functions/png.py), Arrow-batched via
-    mapInPandas. Output per image: dimensions, format fields, and
+    zlib inflate + scanline unfilter (functions/png.py), one row per blob
+    on map_rows. Output per image: dimensions, format fields, and
     pixel_sum/n_pixels over the decoded bytes (decode-sensitive stats a
     header peek cannot fake)."""
     from appengine_mapreduce_spark.functions.png import decode_png
@@ -178,53 +152,23 @@ def decode_png_images(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                img = decode_png(bytes(blob))
-                rows.append(
-                    (
-                        int(i),
-                        img.width,
-                        img.height,
-                        img.bit_depth,
-                        img.color_type,
-                        sum(img.pixels),
-                        len(img.pixels) // img.channels,
-                    )
-                )
-            yield (
-                pd.DataFrame(
-                    rows,
-                    columns=[
-                        id_col, "width", "height", "bit_depth",
-                        "color_type", "pixel_sum", "n_pixels",
-                    ],
-                )
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "width": pd.Series(dtype="int32"),
-                        "height": pd.Series(dtype="int32"),
-                        "bit_depth": pd.Series(dtype="int32"),
-                        "color_type": pd.Series(dtype="int32"),
-                        "pixel_sum": pd.Series(dtype="int64"),
-                        "n_pixels": pd.Series(dtype="int64"),
-                    }
-                )
-            )
+    def decode(row):
+        i, blob = row
+        img = decode_png(blob)
+        yield (
+            i, img.width, img.height, img.bit_depth, img.color_type,
+            sum(img.pixels), len(img.pixels) // img.channels,
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_headers(
     df: DataFrame, id_col: str = "id", content_col: str = "content"
 ) -> DataFrame:
     """REAL JPEG header decode over a binary column: marker-segment scan to
-    the SOFn frame header (functions/jpeg.py, stdlib-only), Arrow-batched
-    via mapInPandas. Output per image: dimensions, sample precision,
+    the SOFn frame header (functions/jpeg.py, stdlib-only), one row per
+    blob on map_rows. Output per image: dimensions, sample precision,
     component count, and baseline/progressive mode — the fields a corpus
     dimension-filter reads without entropy-decoding pixels."""
     from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
@@ -235,37 +179,12 @@ def decode_jpeg_headers(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_jpeg_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.width, m.height, m.precision,
-                     m.n_components, m.progressive)
-                )
-            yield (
-                pd.DataFrame(
-                    rows,
-                    columns=[
-                        id_col, "width", "height", "precision",
-                        "n_components", "progressive",
-                    ],
-                )
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "width": pd.Series(dtype="int32"),
-                        "height": pd.Series(dtype="int32"),
-                        "precision": pd.Series(dtype="int32"),
-                        "n_components": pd.Series(dtype="int32"),
-                        "progressive": pd.Series(dtype="bool"),
-                    }
-                )
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_jpeg_meta(blob)
+        yield i, m.width, m.height, m.precision, m.n_components, m.progressive
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_audio_meta(
@@ -284,29 +203,13 @@ def decode_audio_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_wav_meta(bytes(blob))
-                rows.append((int(i), m.n_channels, m.sample_rate,
-                             m.bits_per_sample, m.n_frames, m.duration_ms))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_channels", "sample_rate", "bits_per_sample",
-                    "n_frames", "duration_ms"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "bits_per_sample": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_wav_meta(blob)
+        yield (i, m.n_channels, m.sample_rate, m.bits_per_sample, m.n_frames,
+               m.duration_ms)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_video_meta(
@@ -324,28 +227,12 @@ def decode_video_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp4_meta(bytes(blob))
-                rows.append((int(i), m.major_brand, m.timescale,
-                             m.duration_ms, m.n_tracks))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "major_brand", "timescale", "duration_ms",
-                    "n_tracks"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "major_brand": pd.Series(dtype="object"),
-                    "timescale": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "n_tracks": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_mp4_meta(blob)
+        yield i, m.major_brand, m.timescale, m.duration_ms, m.n_tracks
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def resize_images(
@@ -361,18 +248,12 @@ def resize_images(
     out_schema = f"{id_col} bigint, width int, height int, {content_col} binary"
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                digest = hashlib.md5(bytes(blob)).digest()
-                fake = digest + bytes([target_w % 256, target_h % 256])
-                rows.append((int(i), target_w, target_h, fake))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", content_col]
-            )
+    def resize(row):
+        i, blob = row
+        digest = hashlib.md5(blob).digest()
+        yield i, target_w, target_h, digest + bytes([target_w % 256, target_h % 256])
 
-    return df.mapInPandas(resize, schema=out_schema)
+    return map_rows(df, resize, out_schema)
 
 
 def sample_video_frames(
@@ -388,28 +269,12 @@ def sample_video_frames(
     out_schema = f"{id_col} bigint, frame_ts_ms bigint, frame binary"
     df = ensure_parallelism(df.select(id_col, content_col, duration_col))
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob, dur in zip(
-                pdf[id_col], pdf[content_col], pdf[duration_col]
-            ):
-                for ts in range(0, int(dur), every_ms):
-                    frame = hashlib.md5(bytes(blob) + ts.to_bytes(8, "big")).digest()
-                    rows.append((int(i), ts, frame))
-            yield (
-                pd.DataFrame(rows, columns=[id_col, "frame_ts_ms", "frame"])
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "frame_ts_ms": pd.Series(dtype="int64"),
-                        "frame": pd.Series(dtype="object"),
-                    }
-                )
-            )
+    def sample(row):
+        i, blob, dur = row
+        for ts in range(0, dur, every_ms):
+            yield i, ts, hashlib.md5(blob + ts.to_bytes(8, "big")).digest()
 
-    return df.mapInPandas(sample, schema=out_schema)
+    return map_rows(df, sample, out_schema)
 
 
 def _pcm_feature_row(samples: list) -> tuple:
@@ -442,26 +307,12 @@ def audio_pcm_features(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                _meta, samples = decode_wav_samples(bytes(blob))
-                rows.append((int(i), *_pcm_feature_row(samples)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_samples", "sum_sq", "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        _meta, samples = decode_wav_samples(blob)
+        yield i, *_pcm_feature_row(samples)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def audio_pcm_features_per_channel(
@@ -471,8 +322,8 @@ def audio_pcm_features_per_channel(
     frame stream de-interleaves by meta.n_channels and each channel gets
     its own integer-exact feature row — the shape a stereo/multi-track
     corpus screen needs (a silent or clipped channel hides inside
-    whole-clip stats). Same Arrow-batched mapInPandas seam; rows fan out
-    n_channels x, still clip-bounded."""
+    whole-clip stats). Same map_rows seam; rows fan out n_channels x,
+    still clip-bounded."""
     from appengine_mapreduce_spark.functions.media import decode_wav_samples
 
     out_schema = (
@@ -481,32 +332,13 @@ def audio_pcm_features_per_channel(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "channel", "n_samples", "sum_sq", "peak",
-                "zero_crossings"]
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, samples = decode_wav_samples(bytes(blob))
-                for ch in range(meta.n_channels):
-                    rows.append((
-                        int(i), ch,
-                        *_pcm_feature_row(samples[ch::meta.n_channels]),
-                    ))
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "channel": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        meta, samples = decode_wav_samples(blob)
+        for ch in range(meta.n_channels):
+            yield i, ch, *_pcm_feature_row(samples[ch::meta.n_channels])
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_pixel_stats(
@@ -528,27 +360,12 @@ def decode_jpeg_pixel_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, px = decode_gray_auto(bytes(blob))
-                rows.append((int(i), w, h, sum(px), min(px), max(px)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        w, h, px = decode_gray_auto(blob)
+        yield i, w, h, sum(px), min(px), max(px)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_mp3_frame_meta(
@@ -570,33 +387,13 @@ def decode_mp3_frame_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp3_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.mpeg_version, m.sample_rate, m.n_frames,
-                     m.duration_ms, m.bitrate_kbps, m.is_cbr, m.channel_mode)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "mpeg_version", "sample_rate", "n_frames",
-                    "duration_ms", "bitrate_kbps", "is_cbr", "channel_mode"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "mpeg_version": pd.Series(dtype="object"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "bitrate_kbps": pd.Series(dtype="int32"),
-                    "is_cbr": pd.Series(dtype="bool"),
-                    "channel_mode": pd.Series(dtype="object"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_mp3_meta(blob)
+        yield (i, m.mpeg_version, m.sample_rate, m.n_frames, m.duration_ms,
+               m.bitrate_kbps, m.is_cbr, m.channel_mode)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def avi_audio_pcm_features(
@@ -616,30 +413,12 @@ def avi_audio_pcm_features(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, samples = decode_avi_pcm_audio(bytes(blob))
-                rows.append(
-                    (int(i), meta.sample_rate, *_pcm_feature_row(samples))
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "sample_rate", "n_samples", "sum_sq",
-                    "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        meta, samples = decode_avi_pcm_audio(blob)
+        yield i, meta.sample_rate, *_pcm_feature_row(samples)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_tiff_pages(
@@ -658,32 +437,13 @@ def decode_tiff_pages(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_tiff_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.byte_order, m.n_pages, m.width, m.height,
-                     m.bits_per_sample, m.compression)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "byte_order", "n_pages", "width", "height",
-                    "bits_per_sample", "compression"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "byte_order": pd.Series(dtype="object"),
-                    "n_pages": pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "bits_per_sample": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_tiff_meta(blob)
+        yield (i, m.byte_order, m.n_pages, m.width, m.height,
+               m.bits_per_sample, m.compression)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_web_image_meta(
@@ -705,40 +465,17 @@ def decode_web_image_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                blob = bytes(blob)
-                if blob[:4] == b"GIF8":
-                    g = decode_gif_meta(blob)
-                    rows.append(
-                        (int(i), "gif", g.width, g.height, g.n_frames,
-                         False, g.n_frames > 1)
-                    )
-                else:
-                    m = decode_webp_meta(blob)
-                    rows.append(
-                        (int(i), "webp-" + m.format, m.width, m.height, 0,
-                         m.has_alpha, m.has_animation)
-                    )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "kind", "width", "height", "n_frames",
-                    "has_alpha", "has_animation"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "kind": pd.Series(dtype="object"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "has_alpha": pd.Series(dtype="bool"),
-                    "has_animation": pd.Series(dtype="bool"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        if blob[:4] == b"GIF8":
+            g = decode_gif_meta(blob)
+            yield i, "gif", g.width, g.height, g.n_frames, False, g.n_frames > 1
+        else:
+            m = decode_webp_meta(blob)
+            yield (i, "webp-" + m.format, m.width, m.height, 0, m.has_alpha,
+                   m.has_animation)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_video_frame_pixels(
@@ -766,45 +503,26 @@ def decode_video_frame_pixels(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, codec, frames = decode_avi_video_frames(bytes(blob))
-                total = 0
-                mn, mx = 255, 0
-                for fr in frames:
-                    if codec == "DIB":
-                        px = [v for p in fr for v in p]
-                    elif decode_jpeg_meta(fr).n_components == 3:
-                        _w, _h, rgb = decode_color_auto(fr)
-                        px = [v for p in rgb for v in p]
-                    else:
-                        _w, _h, px = decode_gray_auto(fr)
-                    total += sum(px)
-                    mn = min(mn, min(px))
-                    mx = max(mx, max(px))
-                rows.append(
-                    (int(i), meta.n_frames, meta.width, meta.height,
-                     total, mn if frames else 0, mx if frames else 0)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        meta, codec, frames = decode_avi_video_frames(blob)
+        total = 0
+        mn, mx = 255, 0
+        for fr in frames:
+            if codec == "DIB":
+                px = [v for p in fr for v in p]
+            elif decode_jpeg_meta(fr).n_components == 3:
+                _w, _h, rgb = decode_color_auto(fr)
+                px = [v for p in rgb for v in p]
+            else:
+                _w, _h, px = decode_gray_auto(fr)
+            total += sum(px)
+            mn = min(mn, min(px))
+            mx = max(mx, max(px))
+        yield (i, meta.n_frames, meta.width, meta.height, total,
+               mn if frames else 0, mx if frames else 0)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_aac_frame_meta(
@@ -825,32 +543,13 @@ def decode_aac_frame_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_aac_adts_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.profile, m.sample_rate, m.n_channels,
-                     m.n_frames, m.duration_ms, m.total_bytes)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "profile", "sample_rate", "n_channels",
-                    "n_frames", "duration_ms", "total_bytes"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "profile": pd.Series(dtype="object"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "total_bytes": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        m = decode_aac_adts_meta(blob)
+        yield (i, m.profile, m.sample_rate, m.n_channels, m.n_frames,
+               m.duration_ms, m.total_bytes)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_color_pixel_stats(
@@ -874,28 +573,13 @@ def decode_jpeg_color_pixel_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, rgb = decode_color_auto(bytes(blob))
-                flat = [v for px in rgb for v in px]
-                rows.append((int(i), w, h, sum(flat), min(flat), max(flat)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        w, h, rgb = decode_color_auto(blob)
+        flat = [v for px in rgb for v in px]
+        yield i, w, h, sum(flat), min(flat), max(flat)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def mp4_frame_stats(
@@ -918,30 +602,12 @@ def mp4_frame_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                ts = decode_mp4_track_samples(bytes(blob))
-                rows.append(
-                    (int(i), ts.n_samples, ts.total_bytes,
-                     ts.max_sample_bytes, ts.duration_units)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_samples", "total_bytes",
-                    "max_sample_bytes", "duration_units"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "total_bytes": pd.Series(dtype="int64"),
-                    "max_sample_bytes": pd.Series(dtype="int64"),
-                    "duration_units": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        ts = decode_mp4_track_samples(blob)
+        yield i, ts.n_samples, ts.total_bytes, ts.max_sample_bytes, ts.duration_units
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_gif_pixel_stats(
@@ -963,44 +629,25 @@ def decode_gif_pixel_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                _meta, frames = decode_gif_frames(bytes(blob))
-                rgb_sum = 0
-                px_min, px_max = 255, 0
-                for fr in frames:
-                    for idx in fr.pixels:
-                        r, g, b = fr.palette[idx]
-                        rgb_sum += r + g + b
-                        lo, hi = min(r, g, b), max(r, g, b)
-                        px_min = lo if lo < px_min else px_min
-                        px_max = hi if hi > px_max else px_max
-                f0 = frames[0] if frames else None
-                rows.append((
-                    int(i), len(frames),
-                    f0.width if f0 else 0, f0.height if f0 else 0,
-                    rgb_sum, px_min if frames else 0,
-                    px_max if frames else 0,
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int32"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        _meta, frames = decode_gif_frames(blob)
+        rgb_sum = 0
+        px_min, px_max = 255, 0
+        for fr in frames:
+            for idx in fr.pixels:
+                r, g, b = fr.palette[idx]
+                rgb_sum += r + g + b
+                lo, hi = min(r, g, b), max(r, g, b)
+                px_min = lo if lo < px_min else px_min
+                px_max = hi if hi > px_max else px_max
+        f0 = frames[0] if frames else None
+        yield (
+            i, len(frames), f0.width if f0 else 0, f0.height if f0 else 0,
+            rgb_sum, px_min if frames else 0, px_max if frames else 0,
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_tiff_pixel_stats(
@@ -1019,34 +666,15 @@ def decode_tiff_pixel_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                tp = decode_tiff_strips(bytes(blob))
-                rows.append((
-                    int(i), tp.width, tp.height, tp.samples_per_pixel,
-                    tp.compression, sum(tp.pixels),
-                    min(tp.pixels), max(tp.pixels),
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "samples_per_pixel",
-                    "compression", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "samples_per_pixel": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        tp = decode_tiff_strips(blob)
+        yield (
+            i, tp.width, tp.height, tp.samples_per_pixel, tp.compression,
+            sum(tp.pixels), min(tp.pixels), max(tp.pixels),
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_bmp_pixel_stats(
@@ -1064,34 +692,16 @@ def decode_bmp_pixel_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                bp = decode_bmp_pixels(bytes(blob))
-                flat = [v for p in bp.pixels for v in p]
-                rows.append((
-                    int(i), bp.width, bp.height, bp.bits_per_pixel,
-                    bp.compression, sum(flat), min(flat), max(flat),
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "bits_per_pixel",
-                    "compression", "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "bits_per_pixel": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        bp = decode_bmp_pixels(blob)
+        flat = [v for p in bp.pixels for v in p]
+        yield (
+            i, bp.width, bp.height, bp.bits_per_pixel, bp.compression,
+            sum(flat), min(flat), max(flat),
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_flac_audio_features(
@@ -1112,31 +722,12 @@ def decode_flac_audio_features(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                info, channels = decode_flac(bytes(blob))
-                n, sum_sq, peak, zc = _pcm_feature_row(channels[0])
-                rows.append((int(i), info.n_channels, info.sample_rate,
-                             n, sum_sq, peak, zc))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_channels", "sample_rate", "n_samples",
-                    "sum_sq", "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        info, channels = decode_flac(blob)
+        yield i, info.n_channels, info.sample_rate, *_pcm_feature_row(channels[0])
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_mrle_video_stats(
@@ -1160,38 +751,19 @@ def decode_mrle_video_stats(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, palette, frames = decode_avi_mrle_frames(bytes(blob))
-                rgb_sum = 0
-                mn, mx = 255, 0
-                for fr in frames:
-                    for idx in fr:
-                        r, g, b = palette[idx]
-                        rgb_sum += r + g + b
-                        lo, hi = min(r, g, b), max(r, g, b)
-                        mn = lo if lo < mn else mn
-                        mx = hi if hi > mx else mx
-                rows.append((
-                    int(i), meta.n_frames, meta.width, meta.height,
-                    rgb_sum, mn if frames else 0, mx if frames else 0,
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int32"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(row):
+        i, blob = row
+        meta, palette, frames = decode_avi_mrle_frames(blob)
+        rgb_sum = 0
+        mn, mx = 255, 0
+        for fr in frames:
+            for idx in fr:
+                r, g, b = palette[idx]
+                rgb_sum += r + g + b
+                lo, hi = min(r, g, b), max(r, g, b)
+                mn = lo if lo < mn else mn
+                mx = hi if hi > mx else mx
+        yield (i, meta.n_frames, meta.width, meta.height, rgb_sum,
+               mn if frames else 0, mx if frames else 0)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)

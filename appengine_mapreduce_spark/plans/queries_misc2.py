@@ -103,8 +103,7 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "png"),
 )
 def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.png import encode_png
     from appengine_mapreduce_spark.operators.multimodal import decode_png_images
 
@@ -114,25 +113,22 @@ def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 1 + int(did) % 16
-                h = 1 + int(nc) % 16
-                pixels = bytes(
-                    (int(did) * 7 + x * 3 + y * 5) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                blob = encode_png(
-                    w, h, pixels, color_type=0,
-                    row_filters=[y % 5 for y in range(h)],
-                )
-                rows.append((int(did), blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 1 + did % 16
+        h = 1 + nc % 16
+        pixels = bytes(
+            (did * 7 + x * 3 + y * 5) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        blob = encode_png(
+            w, h, pixels, color_type=0,
+            row_filters=[y % 5 for y in range(h)],
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_png_images(blobs, id_col="doc_id", content_col="content")
 
 
@@ -159,8 +155,7 @@ def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "jpeg"),
 )
 def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg import encode_minimal_jpeg
     from appengine_mapreduce_spark.operators.multimodal import decode_jpeg_headers
 
@@ -170,21 +165,17 @@ def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_minimal_jpeg(
-                    width=1 + did % 200,
-                    height=1 + nc % 150,
-                    n_components=3 if did % 3 == 0 else 1,
-                    progressive=did % 2 == 1,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_minimal_jpeg(
+            width=1 + did % 200,
+            height=1 + nc % 150,
+            n_components=3 if did % 3 == 0 else 1,
+            progressive=did % 2 == 1,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_jpeg_headers(blobs, id_col="doc_id", content_col="content")
 
 
@@ -212,8 +203,7 @@ def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio"),
 )
 def wav_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_wav
     from appengine_mapreduce_spark.operators.multimodal import decode_audio_meta
 
@@ -223,21 +213,17 @@ def wav_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_wav(
-                    n_channels=2 if did % 4 == 0 else 1,
-                    sample_rate=16000 if did % 2 == 0 else 44100,
-                    bits_per_sample=16,
-                    n_frames=nc * 10,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_wav(
+            n_channels=2 if did % 4 == 0 else 1,
+            sample_rate=16000 if did % 2 == 0 else 44100,
+            bits_per_sample=16,
+            n_frames=nc * 10,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_audio_meta(blobs, id_col="doc_id", content_col="content")
 
 
@@ -262,8 +248,7 @@ def wav_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video"),
 )
 def mp4_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_minimal_mp4
     from appengine_mapreduce_spark.operators.multimodal import decode_video_meta
 
@@ -273,21 +258,17 @@ def mp4_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_minimal_mp4(
-                    timescale=1000 if did % 2 == 0 else 90000,
-                    duration=nc * 100,
-                    n_tracks=1 + did % 3,
-                    version=did % 2,  # exercise both mvhd layouts
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_minimal_mp4(
+            timescale=1000 if did % 2 == 0 else 90000,
+            duration=nc * 100,
+            n_tracks=1 + did % 3,
+            version=did % 2,  # exercise both mvhd layouts
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_video_meta(blobs, id_col="doc_id", content_col="content")
 
 
@@ -409,8 +390,7 @@ def mapreduce_api_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio"),
 )
 def wav_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_wav_pcm16
     from appengine_mapreduce_spark.operators.multimodal import (
         audio_pcm_features,
@@ -422,19 +402,15 @@ def wav_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 50 + did % 50
-                samples = [
-                    ((did * 37 + i * 13) % 4001) - 2000 for i in range(n)
-                ]
-                rows.append((did, encode_wav_pcm16(samples)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 50 + did % 50
+        samples = [
+            ((did * 37 + i * 13) % 4001) - 2000 for i in range(n)
+        ]
+        yield did, encode_wav_pcm16(samples)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return audio_pcm_features(blobs, id_col="doc_id", content_col="content")
 
 
@@ -463,8 +439,7 @@ def wav_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "jpeg"),
 )
 def jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_baseline_gray,
     )
@@ -478,18 +453,14 @@ def jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                w = 8 * (1 + did % 4)
-                h = 8 * (1 + nc % 3)
-                color = (did * 7) % 256
-                rows.append((did, encode_baseline_gray([color] * (w * h), w, h)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 8 * (1 + did % 4)
+        h = 8 * (1 + nc % 3)
+        color = (did * 7) % 256
+        yield did, encode_baseline_gray([color] * (w * h), w, h)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_jpeg_pixel_stats(blobs, id_col="doc_id", content_col="content")
 
 
@@ -526,8 +497,7 @@ def jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video"),
 )
 def mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_mp4_with_samples,
     )
@@ -541,19 +511,13 @@ def mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 10 + did % 20
-                sizes = [200 + (did * 31 + i * 17) % 1000 for i in range(n)]
-                rows.append(
-                    (did, encode_mp4_with_samples(sizes, sample_delta=3000))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 10 + did % 20
+        sizes = [200 + (did * 31 + i * 17) % 1000 for i in range(n)]
+        yield did, encode_mp4_with_samples(sizes, sample_delta=3000)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return frame_stats_op(blobs, id_col="doc_id", content_col="content")
 
 
@@ -581,8 +545,7 @@ def mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "jpeg"),
 )
 def jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_progressive_gray,
     )
@@ -596,20 +559,14 @@ def jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                w = 8 * (1 + did % 3)
-                h = 8 * (1 + nc % 2)
-                color = (did * 11) % 256
-                rows.append(
-                    (did, encode_progressive_gray([color] * (w * h), w, h))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 8 * (1 + did % 3)
+        h = 8 * (1 + nc % 2)
+        color = (did * 11) % 256
+        yield did, encode_progressive_gray([color] * (w * h), w, h)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_jpeg_pixel_stats(blobs, id_col="doc_id", content_col="content")
 
 
@@ -641,8 +598,7 @@ def jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "jpeg"),
 )
 def jpeg_progressive_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_progressive_color,
     )
@@ -656,20 +612,14 @@ def jpeg_progressive_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                w = 8 * (1 + did % 3)
-                h = 8 * (1 + nc % 2)
-                v = (did * 13) % 256
-                rows.append(
-                    (did, encode_progressive_color([(v, v, v)] * (w * h), w, h))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 8 * (1 + did % 3)
+        h = 8 * (1 + nc % 2)
+        v = (did * 13) % 256
+        yield did, encode_progressive_color([(v, v, v)] * (w * h), w, h)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_jpeg_color_pixel_stats(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -720,8 +670,7 @@ def jpeg_progressive_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("multimodal", "udf", "audio", "mp3"),
 )
 def mp3_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_minimal_mp3
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_mp3_frame_meta,
@@ -733,23 +682,19 @@ def mp3_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_minimal_mp3(
-                    n_frames=5 + nc % 20,
-                    bitrate_idx=1 + did % 14,
-                    sr_idx=did % 3,
-                    mpeg1=did % 3 != 0,
-                    channel_mode=did % 4,
-                    id3_bytes=64 if did % 5 == 0 else 0,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_minimal_mp3(
+            n_frames=5 + nc % 20,
+            bitrate_idx=1 + did % 14,
+            sr_idx=did % 3,
+            mpeg1=did % 3 != 0,
+            channel_mode=did % 4,
+            id3_bytes=64 if did % 5 == 0 else 0,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_mp3_frame_meta(blobs, id_col="doc_id", content_col="content")
 
 
@@ -792,8 +737,7 @@ def mp3_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio", "aac"),
 )
 def aac_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_minimal_adts
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_aac_frame_meta,
@@ -805,23 +749,19 @@ def aac_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_minimal_adts(
-                    n_frames=4 + nc % 25,
-                    sf_idx=did % 13,
-                    channels=1 + did % 6,
-                    profile=did % 4,
-                    payload_bytes=100 + did % 100,
-                    with_crc_field=did % 7 == 0,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_minimal_adts(
+            n_frames=4 + nc % 25,
+            sf_idx=did % 13,
+            channels=1 + did % 6,
+            profile=did % 4,
+            payload_bytes=100 + did % 100,
+            with_crc_field=did % 7 == 0,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_aac_frame_meta(blobs, id_col="doc_id", content_col="content")
 
 
@@ -865,8 +805,7 @@ def aac_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video", "jpeg"),
 )
 def avi_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_baseline_gray,
     )
@@ -881,24 +820,20 @@ def avi_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                w = 16 * (1 + did % 2)
-                h = 8 * (1 + nc % 2)
-                nf = 3 + did % 5
-                frames = [
-                    encode_baseline_gray(
-                        [(did * 17 + i * 29) % 256] * (w * h), w, h
-                    )
-                    for i in range(nf)
-                ]
-                rows.append((did, encode_minimal_avi(frames, w, h, fps=25)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 16 * (1 + did % 2)
+        h = 8 * (1 + nc % 2)
+        nf = 3 + did % 5
+        frames = [
+            encode_baseline_gray(
+                [(did * 17 + i * 29) % 256] * (w * h), w, h
+            )
+            for i in range(nf)
+        ]
+        yield did, encode_minimal_avi(frames, w, h, fps=25)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_video_frame_pixels(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -947,8 +882,7 @@ def avi_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video", "audio"),
 )
 def avi_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_baseline_gray,
     )
@@ -966,25 +900,18 @@ def avi_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rates = [8000, 16000, 44100]
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, _nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = int(did)
-                n = 40 + did % 60
-                samples = [
-                    ((did * 41 + i * 17) % 3001) - 1500 for i in range(n)
-                ]
-                frame = encode_baseline_gray([did % 256] * 64, 8, 8)
-                rows.append(
-                    (did, encode_minimal_avi_with_audio(
-                        [frame], 8, 8, samples,
-                        sample_rate=rates[did % 3],
-                    ))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 40 + did % 60
+        samples = [
+            ((did * 41 + i * 17) % 3001) - 1500 for i in range(n)
+        ]
+        frame = encode_baseline_gray([did % 256] * 64, 8, 8)
+        yield did, encode_minimal_avi_with_audio(
+            [frame], 8, 8, samples, sample_rate=rates[did % 3]
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return avi_audio_pcm_features(blobs, id_col="doc_id", content_col="content")
 
 
@@ -1026,8 +953,7 @@ def avi_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "webp", "gif"),
 )
 def webp_gif_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_minimal_gif,
         encode_minimal_webp,
@@ -1042,29 +968,25 @@ def webp_gif_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                w = 16 + did % 300
-                h = 16 + nc % 200
-                variant = did % 4
-                if variant == 3:
-                    blob = encode_minimal_gif(
-                        w, h, n_frames=1 + did % 6, gce=did % 2 == 0
-                    )
-                else:
-                    blob = encode_minimal_webp(
-                        w, h,
-                        variant=["lossy", "lossless", "extended"][variant],
-                        alpha=did % 2 == 0,
-                        animation=did % 3 == 0,
-                    )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        w = 16 + did % 300
+        h = 16 + nc % 200
+        variant = did % 4
+        if variant == 3:
+            blob = encode_minimal_gif(
+                w, h, n_frames=1 + did % 6, gce=did % 2 == 0
+            )
+        else:
+            blob = encode_minimal_webp(
+                w, h,
+                variant=["lossy", "lossless", "extended"][variant],
+                alpha=did % 2 == 0,
+                animation=did % 3 == 0,
+            )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_web_image_meta(blobs, id_col="doc_id", content_col="content")
 
 
@@ -1091,8 +1013,7 @@ def webp_gif_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "tiff"),
 )
 def tiff_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_minimal_tiff
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_tiff_pages,
@@ -1105,21 +1026,17 @@ def tiff_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     compressions = [1, 4, 5, 6]
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, nc = int(did), int(nc)
-                blob = encode_minimal_tiff(
-                    width=100 + did % 2000,
-                    height=100 + nc % 1500,
-                    n_pages=1 + did % 9,
-                    compression=compressions[did % 4],
-                    bits=1 if did % 3 == 0 else 8,
-                    big_endian=did % 2 == 1,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did, nc = row
+        blob = encode_minimal_tiff(
+            width=100 + did % 2000,
+            height=100 + nc % 1500,
+            n_pages=1 + did % 9,
+            compression=compressions[did % 4],
+            bits=1 if did % 3 == 0 else 8,
+            big_endian=did % 2 == 1,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_tiff_pages(blobs, id_col="doc_id", content_col="content")

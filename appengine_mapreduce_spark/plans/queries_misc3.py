@@ -276,8 +276,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio", "g711"),
 )
 def g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_wav_companded,
     )
@@ -291,17 +290,13 @@ def g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 40 + did % 40
-                data = bytes((did * 31 + i * 7) % 256 for i in range(n))
-                rows.append((did, encode_wav_companded(data, law="mu")))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 40 + did % 40
+        data = bytes((did * 31 + i * 7) % 256 for i in range(n))
+        yield did, encode_wav_companded(data, law="mu")
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return audio_pcm_features(blobs, id_col="doc_id", content_col="content")
 
 
@@ -356,8 +351,7 @@ def g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "gif"),
 )
 def gif_frame_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_gif_pixels
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_gif_pixel_stats,
@@ -371,24 +365,20 @@ def gif_frame_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette = [((k*9) % 256, (k*5+3) % 256, (k*11+7) % 256)
                for k in range(8)]
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, nf = 8 + did % 8, 6 + did % 5, 1 + did % 3
-                frames = [
-                    [(x + y + f + did) % 8
-                     for y in range(h) for x in range(w)]
-                    for f in range(nf)
-                ]
-                blob = encode_gif_pixels(
-                    frames, w, h, palette, interlace=did % 2 == 1
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        w, h, nf = 8 + did % 8, 6 + did % 5, 1 + did % 3
+        frames = [
+            [(x + y + f + did) % 8
+             for y in range(h) for x in range(w)]
+            for f in range(nf)
+        ]
+        blob = encode_gif_pixels(
+            frames, w, h, palette, interlace=did % 2 == 1
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_gif_pixel_stats(blobs, id_col="doc_id", content_col="content")
 
 
@@ -430,8 +420,7 @@ def gif_frame_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "tiff"),
 )
 def tiff_strip_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_tiff_strips
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_tiff_pixel_stats,
@@ -443,25 +432,21 @@ def tiff_strip_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 9 + did % 12, 7 + did % 9
-                spp = 1 if did % 2 == 0 else 3
-                comp = 32773 if did % 3 == 0 else 1
-                px = bytes(
-                    (did * 13 + j * 5) % 251 for j in range(w * h * spp)
-                )
-                blob = encode_tiff_strips(
-                    px, w, h, samples_per_pixel=spp, compression=comp,
-                    rows_per_strip=4, big_endian=did % 2 == 1,
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        w, h = 9 + did % 12, 7 + did % 9
+        spp = 1 if did % 2 == 0 else 3
+        comp = 32773 if did % 3 == 0 else 1
+        px = bytes(
+            (did * 13 + j * 5) % 251 for j in range(w * h * spp)
+        )
+        blob = encode_tiff_strips(
+            px, w, h, samples_per_pixel=spp, compression=comp,
+            rows_per_strip=4, big_endian=did % 2 == 1,
+        )
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_tiff_pixel_stats(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -517,8 +502,7 @@ def tiff_strip_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "image", "bmp"),
 )
 def bmp_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import encode_bmp
     from appengine_mapreduce_spark.operators.multimodal import (
         decode_bmp_pixel_stats,
@@ -532,26 +516,22 @@ def bmp_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette = [((k * 3) % 256, (k * 5) % 256, (k * 7) % 256)
                for k in range(16)]
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 5 + did % 12, 4 + did % 9
-                if did % 2 == 0:
-                    px = [((did + x) % 256, (did + y * 3) % 256,
-                           (x * y + did) % 251)
-                          for y in range(h) for x in range(w)]
-                    blob = encode_bmp(px, w, h, bpp=24)
-                else:
-                    px = [palette[(x + y + did) % 16]
-                          for y in range(h) for x in range(w)]
-                    blob = encode_bmp(px, w, h, bpp=8,
-                                      rle=did % 4 == 3, palette=palette)
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        w, h = 5 + did % 12, 4 + did % 9
+        if did % 2 == 0:
+            px = [((did + x) % 256, (did + y * 3) % 256,
+                   (x * y + did) % 251)
+                  for y in range(h) for x in range(w)]
+            blob = encode_bmp(px, w, h, bpp=24)
+        else:
+            px = [palette[(x + y + did) % 16]
+                  for y in range(h) for x in range(w)]
+            blob = encode_bmp(px, w, h, bpp=8,
+                              rle=did % 4 == 3, palette=palette)
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_bmp_pixel_stats(blobs, id_col="doc_id", content_col="content")
 
 
@@ -596,8 +576,7 @@ def bmp_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video", "avi"),
 )
 def avi_raw_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_minimal_avi_raw,
     )
@@ -611,22 +590,18 @@ def avi_raw_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, nf = 6 + did % 6, 4 + did % 4, 1 + did % 3
-                frames = [
-                    [((did + f + x) % 256, (y * 2 + f) % 256,
-                      (x + y + did) % 256)
-                     for y in range(h) for x in range(w)]
-                    for f in range(nf)
-                ]
-                rows.append((did, encode_minimal_avi_raw(frames, w, h)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        w, h, nf = 6 + did % 6, 4 + did % 4, 1 + did % 3
+        frames = [
+            [((did + f + x) % 256, (y * 2 + f) % 256,
+              (x + y + did) % 256)
+             for y in range(h) for x in range(w)]
+            for f in range(nf)
+        ]
+        yield did, encode_minimal_avi_raw(frames, w, h)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_video_frame_pixels(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -678,8 +653,7 @@ def avi_raw_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio", "flac"),
 )
 def flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.flac import (
         CH_MID_SIDE,
         encode_flac,
@@ -694,23 +668,19 @@ def flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 300 + did % 300
-                ch0 = [((did * 37 + i * i) % 7001) - 3500 for i in range(n)]
-                if did % 2 == 0:
-                    blob = encode_flac([ch0], block_size=256)
-                else:
-                    ch1 = [v // 3 for v in ch0]
-                    blob = encode_flac([ch0, ch1], block_size=256,
-                                       stereo_mode=CH_MID_SIDE)
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 300 + did % 300
+        ch0 = [((did * 37 + i * i) % 7001) - 3500 for i in range(n)]
+        if did % 2 == 0:
+            blob = encode_flac([ch0], block_size=256)
+        else:
+            ch1 = [v // 3 for v in ch0]
+            blob = encode_flac([ch0, ch1], block_size=256,
+                               stereo_mode=CH_MID_SIDE)
+        yield did, blob
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_flac_audio_features(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -770,8 +740,7 @@ def flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "video", "mrle"),
 )
 def mrle_interframe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_minimal_avi_mrle,
     )
@@ -787,22 +756,17 @@ def mrle_interframe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette = [((k * 16) % 256, (k * 7) % 256, (k * 29) % 256)
                for k in range(16)]
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, nf = 7 + did % 7, 5 + did % 5, 2 + did % 3
-                frames = [
-                    [(x + y + did + (3 if y < f else 0)) % 16
-                     for y in range(h) for x in range(w)]
-                    for f in range(nf)
-                ]
-                rows.append(
-                    (did, encode_minimal_avi_mrle(frames, w, h, palette)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        w, h, nf = 7 + did % 7, 5 + did % 5, 2 + did % 3
+        frames = [
+            [(x + y + did + (3 if y < f else 0)) % 16
+             for y in range(h) for x in range(w)]
+            for f in range(nf)
+        ]
+        yield did, encode_minimal_avi_mrle(frames, w, h, palette)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return decode_mrle_video_stats(
         blobs, id_col="doc_id", content_col="content"
     )
@@ -1179,8 +1143,7 @@ def sketch_merge_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio", "adpcm"),
 )
 def adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_wav_adpcm_nibbles,
     )
@@ -1194,21 +1157,16 @@ def adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 33 + 2 * (did % 24)
-                nibs = [(did * 13 + i * 5 + (i * i) % 16) % 16
-                        for i in range(n - 1)]
-                pred0 = ((did * 97) % 2048) - 1024
-                idx0 = did % 89
-                rows.append(
-                    (did, encode_wav_adpcm_nibbles(nibs, pred0, idx0)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 33 + 2 * (did % 24)
+        nibs = [(did * 13 + i * 5 + (i * i) % 16) % 16
+                for i in range(n - 1)]
+        pred0 = ((did * 97) % 2048) - 1024
+        idx0 = did % 89
+        yield did, encode_wav_adpcm_nibbles(nibs, pred0, idx0)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return audio_pcm_features(blobs, id_col="doc_id", content_col="content")
 
 
@@ -1283,8 +1241,7 @@ def adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "udf", "audio", "adpcm"),
 )
 def adpcm_stereo_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from appengine_mapreduce_spark.core.adapters import map_rows
     from appengine_mapreduce_spark.functions.media import (
         encode_wav_adpcm_nibbles_multi,
     )
@@ -1298,25 +1255,19 @@ def adpcm_stereo_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 8 * (2 + did % 12)
-                nibs = [
-                    [(did * 13 + ch * 7 + i * 5 + (i * i) % 16) % 16
-                     for i in range(n)]
-                    for ch in (0, 1)
-                ]
-                preds = [((did * 97 + ch * 501) % 2048) - 1024
-                         for ch in (0, 1)]
-                idxs = [(did + 17 * ch) % 89 for ch in (0, 1)]
-                rows.append(
-                    (did,
-                     encode_wav_adpcm_nibbles_multi(nibs, preds, idxs)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def encode(row):
+        did = row.doc_id
+        n = 8 * (2 + did % 12)
+        nibs = [
+            [(did * 13 + ch * 7 + i * 5 + (i * i) % 16) % 16
+             for i in range(n)]
+            for ch in (0, 1)
+        ]
+        preds = [((did * 97 + ch * 501) % 2048) - 1024
+                 for ch in (0, 1)]
+        idxs = [(did + 17 * ch) % 89 for ch in (0, 1)]
+        yield did, encode_wav_adpcm_nibbles_multi(nibs, preds, idxs)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id bigint, content binary")
+    blobs = map_rows(docs, encode, "doc_id bigint, content binary")
     return audio_pcm_features_per_channel(
         blobs, id_col="doc_id", content_col="content")

@@ -18,9 +18,10 @@ these files are replaced by Parquet/shuffle files; the codec exists so
 byte-level fixtures written by the reference can be read (and vice versa)
 — e.g. migrating a reference deployment's intermediate data.
 
-Distributed read path: ``records_input`` splits at BLOCK boundaries (a
-record never starts mid-block), so a 100 TB record file shards exactly
-like the reference's GCS readers (input_readers.py:2544-2593).
+Distributed read path: ``records_input`` decodes each file whole, in
+one task. The format would allow splitting a file at BLOCK boundaries (a
+record never starts mid-block), as the reference's GCS readers do
+(input_readers.py:2544-2593); that split is not implemented.
 """
 
 from __future__ import annotations
@@ -190,28 +191,17 @@ def records_output(df, out_dir: str, record_col: str = "record") -> int:
 def records_input(spark, path: str):
     """Distributed scan of LevelDB record files → DataFrame[file, record].
 
-    Whole-file decode via ``binaryFile`` + ``mapInPandas``; one file per
-    task (record files from the reference are one-per-shard and modest —
-    256 KB-aligned GCS uploads)."""
-    import pandas as pd
+    Whole-file decode: ``binaryFile`` reads each file into one row and
+    ``map_rows`` yields its records in file order. A file is never split,
+    so one task decodes all of it (record files from the reference are
+    one-per-shard and modest — 256 KB-aligned GCS uploads)."""
+    from appengine_mapreduce_spark.core.adapters import map_rows
 
     bins = spark.read.format("binaryFile").load(path)
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rec in RecordReader(io.BytesIO(bytes(content))):
-                    rows.append((p, rec))
-            yield (
-                pd.DataFrame(rows, columns=["file", "record"])
-                if rows
-                else pd.DataFrame(
-                    {"file": pd.Series(dtype="object"),
-                     "record": pd.Series(dtype="object")}
-                )
-            )
+    def decode(row):
+        p, content = row
+        for rec in RecordReader(io.BytesIO(content)):
+            yield p, rec
 
-    return bins.select("path", "content").mapInPandas(
-        decode, schema="file string, record binary"
-    )
+    return map_rows(bins.select("path", "content"), decode, "file string, record binary")

@@ -5,21 +5,23 @@ members of one zip by TOC index range; ``BlobstoreZipLineInputReader``
 (:1604-1830) additionally splits members into lines keyed
 ``((file_index, offset), line)``.
 
-Spark: ``binaryFile`` scans the archives (one partition per archive —
-archives themselves are the natural split unit, matching the reference's
-TOC-range sharding), and a ``mapInPandas`` stage opens each with the
-stdlib ``zipfile``. Python is unavoidable here (no JVM zip source), but it
-runs per archive member, not per record — the line split is vectorized.
+Spark: ``binaryFile`` reads each archive whole into one row (an archive
+is never split — the natural split unit, matching the reference's
+TOC-range sharding), and ``core.adapters.map_rows`` opens it with the
+stdlib ``zipfile``, yielding one row per member. Python is unavoidable
+here (no JVM zip source). ``zip_member_lines`` splits each member with a
+per-line Python loop over ``bytes.splitlines``, so its cost grows with
+the line count.
 """
 
 from __future__ import annotations
 
 import io
 import zipfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from appengine_mapreduce_spark.core.adapters import map_rows
 from appengine_mapreduce_spark.core.pickling import register_self
 
 register_self(__name__)
@@ -35,23 +37,14 @@ def zip_members(spark: SparkSession, path: str) -> DataFrame:
     input_readers.py:1497-1510 iterates zipfile.infolist order)."""
     bins = spark.read.format("binaryFile").load(path)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                    for idx, info in enumerate(zf.infolist()):
-                        if info.is_dir():
-                            continue
-                        rows.append((p, idx, info.filename, zf.read(info)))
-            yield pd.DataFrame(
-                rows, columns=["zip_path", "member_index", "member_name", "content"]
-            ) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in
-                 ["zip_path", "member_index", "member_name", "content"]}
-            )
+    def extract(row):
+        p, content = row
+        with zipfile.ZipFile(io.BytesIO(content)) as zf:
+            for idx, info in enumerate(zf.infolist()):
+                if not info.is_dir():
+                    yield p, idx, info.filename, zf.read(info)
 
-    return bins.select("path", "content").mapInPandas(extract, schema=_MEMBER_SCHEMA)
+    return map_rows(bins.select("path", "content"), extract, _MEMBER_SCHEMA)
 
 
 def zip_member_lines(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
@@ -60,28 +53,13 @@ def zip_member_lines(spark: SparkSession, path: str, encoding: str = "utf-8") ->
     (input_readers.py:1604-1830)."""
     members = zip_members(spark, path)
 
-    def split_lines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for zp, idx, content in zip(
-                pdf["zip_path"], pdf["member_index"], pdf["content"]
-            ):
-                offset = 0
-                for raw in bytes(content).splitlines(keepends=True):
-                    line = raw.rstrip(b"\r\n")
-                    rows.append((zp, int(idx), offset, line.decode(encoding)))
-                    offset += len(raw)
-            yield pd.DataFrame(
-                rows, columns=["zip_path", "member_index", "offset", "line"]
-            ) if rows else pd.DataFrame(
-                {
-                    "zip_path": pd.Series(dtype="object"),
-                    "member_index": pd.Series(dtype="int32"),
-                    "offset": pd.Series(dtype="int64"),
-                    "line": pd.Series(dtype="object"),
-                }
-            )
+    def split_lines(row):
+        zp, idx, content = row
+        offset = 0
+        for raw in content.splitlines(keepends=True):
+            yield zp, idx, offset, raw.rstrip(b"\r\n").decode(encoding)
+            offset += len(raw)
 
-    return members.select("zip_path", "member_index", "content").mapInPandas(
-        split_lines, schema=_LINE_SCHEMA
+    return map_rows(
+        members.select("zip_path", "member_index", "content"), split_lines, _LINE_SCHEMA
     )

@@ -13,7 +13,10 @@ against the engine's plan invariants:
   ``scalar-cross`` or a crossJoin of an aggregate, the q22/q11/TF-IDF
   pattern);
 - Python stages only in queries tagged with one of ``PY_OK_TAGS`` (the
-  user-UDF seam and the binary decoders).
+  user-UDF seam and the binary decoders);
+- no pandas stage (``...InPandas``): the MapReduce API and the built-in
+  per-row operators cross into Python through ``core.adapters``'
+  ``mapInArrow`` reader and emitter only.
 """
 
 from __future__ import annotations
@@ -90,6 +93,8 @@ def _check_plan(spec, df) -> None:
         violations.append("BroadcastNestedLoopJoin without scalar-cross tag")
     if any(s in plan for s in PY_STAGES) and not set(spec.tags) & PY_OK_TAGS:
         violations.append("Python stage outside the UDF seam")
+    if "InPandas" in plan:
+        violations.append("pandas Python stage: the per-row seam is core.adapters.map_rows")
     assert not violations, f"{spec.name}: {violations}\n{plan}"
 
 

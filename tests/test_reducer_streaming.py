@@ -7,7 +7,9 @@ rows and reducer keys and values are read from Arrow exactly; and
 ``MapReduceJob.run`` / ``run_map`` run the job exactly once whatever the
 sink does — counters are exact (≙ end_to_end_test.py counter assertions).
 Each case runs the full job and is checked against a pure-Python replay
-of the same input.
+of the same input. The last block covers ``map_rows``, the same reader
+and emitter under the built-in per-row operators, including the
+operators whose row functions yield nothing.
 """
 
 from __future__ import annotations
@@ -16,11 +18,15 @@ import dataclasses
 import datetime
 import math
 import re
+import zipfile
 from collections import defaultdict
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.types import StructType
 
 from appengine_mapreduce_spark.core import job as job_mod
+from appengine_mapreduce_spark.core.adapters import _EMIT_BATCH_ROWS, map_rows
 from appengine_mapreduce_spark.core.counters import Counters
 from appengine_mapreduce_spark.core.job import (
     DataFrameInput,
@@ -457,3 +463,110 @@ def test_mapper_reads_timestamp_array_struct_and_map_values(spark):
         (i, ts.isoformat(), repr(arr), repr({"a": a, "b": b}), repr(list(m.items())))
         for i, ts, arr, (a, b), m in rows
     ]
+
+
+# --- map_rows: the built-in per-row operators' seam (same reader and emitter)
+
+
+class _Frame:
+    """Stands in for a DataFrame: ``map_rows`` hands it the per-partition
+    function, which the test then runs on Arrow batches in-process."""
+
+    def __init__(self, columns):
+        self.columns = columns
+
+    def mapInArrow(self, fn, schema):
+        return fn
+
+
+def _nan_safe(rows):
+    return sorted(
+        tuple("NaN" if isinstance(x, float) and math.isnan(x) else x for x in r) for r in rows
+    )
+
+
+def test_map_rows_reads_exact_values(spark, tiny_batches):
+    """A null in a bigint column leaves its batch-mates ``int``, 2**53 + 1
+    included, and a NaN read and yielded stays NaN, apart from null. The
+    plan names the stage after the row function."""
+    vals = [None, 2**53 + 1, 2**53, 7]
+    xs = [float("nan"), None, 2.5]
+    rows = [(i, vals[i % len(vals)], xs[i % len(xs)]) for i in range(30)]
+
+    def describe(row):
+        yield row.i, type(row.v).__name__, row.v, row.x
+
+    out = map_rows(
+        spark.createDataFrame(rows, "i bigint, v bigint, x double"),
+        describe,
+        "i bigint, t string, v bigint, x double",
+    )
+    assert _nan_safe(out.collect()) == _nan_safe(
+        (i, type(v).__name__, v, x) for i, v, x in rows
+    )
+    assert "MapInArrow describe(" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_map_rows_one_row_spans_output_blocks(spark):
+    """Output is cut into ``_EMIT_BATCH_ROWS`` blocks within one input row."""
+    n = 2 * _EMIT_BATCH_ROWS + 3
+
+    def explode(row):
+        for j in range(row.n):
+            yield row.n, j
+
+    out = map_rows(spark.createDataFrame([(n,)], "n bigint"), explode, "n bigint, j bigint")
+    assert sorted(out.collect()) == [(n, j) for j in range(n)]
+
+    run = map_rows(_Frame(["n"]), explode, "n bigint, j bigint")
+    blocks = list(run(iter([pa.record_batch([pa.array([n])], names=["n"])])))
+    assert [b.num_rows for b in blocks] == [_EMIT_BATCH_ROWS, _EMIT_BATCH_ROWS, 3]
+    assert [j for b in blocks for j in b.column("j").to_pylist()] == list(range(n))
+
+
+def test_map_rows_value_its_column_cannot_hold_is_rejected(spark):
+    def to_text(row):
+        yield row.k, "seven"
+
+    out = map_rows(spark.createDataFrame([("a",)], "k string"), to_text, "k string, v bigint")
+    with pytest.raises(Exception, match=r"to_text yielded a value the output column 'v' \(bigint\)"):
+        out.collect()
+
+
+def _empty(df, ddl):
+    """``df`` has the declared schema and no rows."""
+    assert df.schema.simpleString() == StructType.fromDDL(ddl).simpleString()
+    assert df.collect() == []
+
+
+def test_sample_video_frames_with_zero_durations_is_empty(spark):
+    from appengine_mapreduce_spark.operators.multimodal import sample_video_frames
+
+    rows = [(i, bytes([i]), 0) for i in range(5)]
+    df = spark.createDataFrame(rows, "id bigint, content binary, duration_ms bigint")
+    _empty(sample_video_frames(df), "id bigint, frame_ts_ms bigint, frame binary")
+
+
+def test_zip_of_only_a_directory_is_empty(spark, tmp_path):
+    from appengine_mapreduce_spark.sources.zipsource import zip_member_lines, zip_members
+
+    path = tmp_path / "dirs.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("only/", b"")
+    _empty(
+        zip_members(spark, str(path)),
+        "zip_path string, member_index int, member_name string, content binary",
+    )
+    _empty(
+        zip_member_lines(spark, str(path)),
+        "zip_path string, member_index int, offset bigint, line string",
+    )
+
+
+def test_empty_record_file_is_empty(spark, tmp_path):
+    from appengine_mapreduce_spark.sources.records import records_input, write_records_file
+
+    path = tmp_path / "shard-00000.rec"
+    write_records_file(str(path), [])
+    assert path.stat().st_size == 0
+    _empty(records_input(spark, str(path)), "file string, record binary")
