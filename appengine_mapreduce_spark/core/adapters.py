@@ -45,7 +45,7 @@ from __future__ import annotations
 
 import collections
 import itertools
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from operator import itemgetter
 
 import pyarrow as pa
@@ -112,6 +112,22 @@ def _emitter(stage: str, out_schema: StructType):
     return emit
 
 
+def _blocks(outputs: Iterator[Iterable[tuple]], emit) -> Iterator[pa.RecordBatch]:
+    """Cut the rows of ``outputs`` (one iterable per user call: what one
+    input row or key yielded) into ``_EMIT_BATCH_ROWS``-row Arrow batches
+    with ``emit``. The bound is checked after every row, so one call that
+    yields many rows still gives bounded blocks."""
+    buf: list[tuple] = []
+    for rows in outputs:
+        for row in rows:
+            buf.append(row)
+            if len(buf) == _EMIT_BATCH_ROWS:
+                yield emit(buf)
+                buf = []
+    if buf:
+        yield emit(buf)
+
+
 def map_rows(df: DataFrame, fn, out_schema: str | StructType) -> DataFrame:
     """Run the generator ``fn(row)`` over each row of ``df`` and return
     the rows it yields as a DataFrame of ``out_schema`` (a DDL string or
@@ -130,16 +146,8 @@ def map_rows(df: DataFrame, fn, out_schema: str | StructType) -> DataFrame:
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         record = _record_type(columns)
-        buf: list[tuple] = []
-        for batch in batches:
-            for row in _records(batch.columns, record, batch.num_rows):
-                for item in fn(row):
-                    buf.append(item)
-                    if len(buf) == _EMIT_BATCH_ROWS:
-                        yield emit(buf)
-                        buf = []
-        if buf:
-            yield emit(buf)
+        rows = (r for b in batches for r in _records(b.columns, record, b.num_rows))
+        return _blocks(map(fn, rows), emit)
 
     run.__name__ = fn.__name__  # the name the plan shows for the stage
     return df.mapInArrow(run, schema=out_schema)
@@ -184,16 +192,14 @@ def run_mapper(
         tc = TaskContext.get()
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
         record = _record_type(columns)
-        mapper.begin_shard(ctx)
-        buf: list[tuple] = []
         pending: dict = {}  # key -> [values] for map-side combine
         n_calls = 0
         t0 = _time.monotonic()
 
-        def flush_combine() -> None:
+        def flush_combine() -> Iterator[tuple]:
             for k, vals in pending.items():
                 for v in combiner(ctx, k, iter(vals)):
-                    buf.append((k, v))
+                    yield k, v
             pending.clear()
 
         def throttle() -> None:
@@ -202,31 +208,30 @@ def run_mapper(
                 if ahead > 0:
                     _time.sleep(ahead)
 
-        for batch in batches:
-            throttle()
-            for row in _records(batch.columns, record, batch.num_rows):
-                n_calls += 1
-                out = mapper(ctx, *row) if expand_parameters else mapper(ctx, row)
-                if out is None:
-                    continue
-                for item in out:
-                    if combiner is not None:
-                        k, v = item[0], item[1]
-                        pending.setdefault(k, []).append(v)
-                    else:
-                        buf.append(tuple(item))
-                if combiner is not None and len(pending) >= _COMBINE_FLUSH_KEYS:
-                    flush_combine()
-                if len(buf) >= _EMIT_BATCH_ROWS:
-                    yield emit(buf)
-                    buf = []
-        if combiner is not None:
-            flush_combine()
-        throttle()  # settle the rate budget before finishing the shard
-        mapper.end_shard(ctx)
-        ctx.increment(C.MAPPER_CALLS, n_calls)
-        if buf:
-            yield emit(buf)
+        def outputs() -> Iterator[Iterable[tuple]]:
+            nonlocal n_calls
+            mapper.begin_shard(ctx)
+            for batch in batches:
+                throttle()
+                for row in _records(batch.columns, record, batch.num_rows):
+                    n_calls += 1
+                    out = mapper(ctx, *row) if expand_parameters else mapper(ctx, row)
+                    if out is None:
+                        continue
+                    if combiner is None:
+                        yield map(tuple, out)
+                        continue
+                    for item in out:
+                        pending.setdefault(item[0], []).append(item[1])
+                    if len(pending) >= _COMBINE_FLUSH_KEYS:
+                        yield flush_combine()
+            if combiner is not None:
+                yield flush_combine()
+            throttle()  # settle the rate budget before finishing the shard
+            mapper.end_shard(ctx)
+            ctx.increment(C.MAPPER_CALLS, n_calls)
+
+        return _blocks(outputs(), emit)
 
     return df.mapInArrow(fn, schema=out_schema)
 
@@ -286,20 +291,16 @@ def run_reducer(
                     values = _records(batch.columns[1:], record, batch.num_rows)
                 yield from zip(keys, values)
 
-        reducer.begin_shard(ctx)
-        buf: list[tuple] = []
-        n_calls = 0
-        value_of = itemgetter(1)
-        for key, run in itertools.groupby(stream(), itemgetter(0)):
-            n_calls += 1
-            for item in reducer(ctx, key, map(value_of, run)) or ():
-                buf.append(tuple(item))
-            if len(buf) >= _EMIT_BATCH_ROWS:
-                yield emit(buf)
-                buf = []
-        reducer.end_shard(ctx)
-        ctx.increment(C.REDUCER_CALLS, n_calls)
-        if buf:
-            yield emit(buf)
+        def outputs() -> Iterator[Iterable[tuple]]:
+            reducer.begin_shard(ctx)
+            n_calls = 0
+            value_of = itemgetter(1)
+            for key, run in itertools.groupby(stream(), itemgetter(0)):
+                n_calls += 1
+                yield map(tuple, reducer(ctx, key, map(value_of, run)) or ())
+            reducer.end_shard(ctx)
+            ctx.increment(C.REDUCER_CALLS, n_calls)
+
+        return _blocks(outputs(), emit)
 
     return shuffled.mapInArrow(fn, schema=out_schema)

@@ -19,14 +19,20 @@ import datetime
 import math
 import re
 import zipfile
-from collections import defaultdict
+from collections import Counter, defaultdict
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pytest
 from pyspark.sql.types import StructType
 
 from appengine_mapreduce_spark.core import job as job_mod
-from appengine_mapreduce_spark.core.adapters import _EMIT_BATCH_ROWS, map_rows
+from appengine_mapreduce_spark.core.adapters import (
+    _EMIT_BATCH_ROWS,
+    map_rows,
+    run_mapper,
+    run_reducer,
+)
 from appengine_mapreduce_spark.core.counters import Counters
 from appengine_mapreduce_spark.core.job import (
     DataFrameInput,
@@ -34,7 +40,7 @@ from appengine_mapreduce_spark.core.job import (
     MapReduceSpecification,
     MapSpecification,
 )
-from appengine_mapreduce_spark.core.worker import Mapper
+from appengine_mapreduce_spark.core.worker import Mapper, Reducer
 from appengine_mapreduce_spark.sinks.files import FileOutput
 from appengine_mapreduce_spark.sinks.inmemory import InMemoryOutput, NoOutput
 from tests.conftest import SF_SMOKE
@@ -469,11 +475,18 @@ def test_mapper_reads_timestamp_array_struct_and_map_values(spark):
 
 
 class _Frame:
-    """Stands in for a DataFrame: ``map_rows`` hands it the per-partition
-    function, which the test then runs on Arrow batches in-process."""
+    """Stands in for a DataFrame: ``map_rows``, ``run_mapper`` and
+    ``run_reducer`` hand it the per-partition function, which the test
+    then runs on Arrow batches in-process."""
 
-    def __init__(self, columns):
+    def __init__(self, columns, schema=None):
         self.columns = columns
+        self.schema = schema
+
+    def repartition(self, *cols):
+        return self
+
+    sortWithinPartitions = select = repartition
 
     def mapInArrow(self, fn, schema):
         return fn
@@ -522,6 +535,41 @@ def test_map_rows_one_row_spans_output_blocks(spark):
     blocks = list(run(iter([pa.record_batch([pa.array([n])], names=["n"])])))
     assert [b.num_rows for b in blocks] == [_EMIT_BATCH_ROWS, _EMIT_BATCH_ROWS, 3]
     assert [j for b in blocks for j in b.column("j").to_pylist()] == list(range(n))
+
+
+class _Explode(Mapper):
+    def __call__(self, ctx, row):
+        for j in range(row.n):
+            yield row.n, j
+
+
+class _ExplodeKey(Reducer):
+    def __call__(self, ctx, key, values):
+        for n in values:
+            for j in range(n):
+                yield key, j
+
+
+def test_mapper_and_reducer_one_input_spans_output_blocks():
+    """Like ``map_rows``, the mapper and the reducer cut what one input
+    row or key yields into ``_EMIT_BATCH_ROWS`` blocks as it is yielded."""
+    n = 2 * _EMIT_BATCH_ROWS + 3
+    out = StructType.fromDDL("n bigint, j bigint")
+    counts: Counter = Counter()
+    acc = SimpleNamespace(add=counts.update)
+    mapper = run_mapper(_Frame(["n"]), _Explode(), out, acc)
+    reducer = run_reducer(
+        _Frame(["n", "v"], StructType.fromDDL("n bigint, v bigint")),
+        _ExplodeKey(), out, acc, key_col="n", value_cols=["v"],
+    )
+    for run, batch in (
+        (mapper, pa.record_batch([pa.array([n])], names=["n"])),
+        (reducer, pa.record_batch([pa.array([7]), pa.array([n])], names=["n", "v"])),
+    ):
+        blocks = list(run(iter([batch])))
+        assert [b.num_rows for b in blocks] == [_EMIT_BATCH_ROWS, _EMIT_BATCH_ROWS, 3]
+        assert [j for b in blocks for j in b.column("j").to_pylist()] == list(range(n))
+    assert counts == {"mapper-calls": 1, "reducer-calls": 1}
 
 
 def test_map_rows_value_its_column_cannot_hold_is_rejected(spark):

@@ -92,6 +92,29 @@ def test_zip_member_lines(spark, zip_path):
     assert got == expected
 
 
+def _split_members(rows):
+    """Lines of ``zip_members`` rows, split on the driver."""
+    for r in rows:
+        offset = 0
+        for raw in bytes(r.content).splitlines(keepends=True):
+            yield r.zip_path, r.member_index, offset, raw.rstrip(b"\r\n").decode()
+            offset += len(raw)
+
+
+def test_zip_member_lines_crosses_into_python_once(spark, zip_path, tmp_path):
+    """One Python stage opens each archive and splits its lines, and the
+    rows equal the lines of ``zip_members``' output, also for an archive
+    that holds only a directory."""
+    dirs_only = tmp_path / "dirs.zip"
+    with zipfile.ZipFile(dirs_only, "w") as zf:
+        zf.writestr("only/", b"")
+    for path in (zip_path, str(dirs_only)):
+        df = zip_member_lines(spark, path)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert sorted(df.collect()) == sorted(_split_members(zip_members(spark, path).collect()))
+
+
 def test_consecutive_longs(spark):
     df = consecutive_longs(spark, 5, 25, num_partitions=4)
     vals = sorted(r.value for r in df.collect())

@@ -2,6 +2,10 @@
 run entry() smoke + every queries() entry vs oracle_sql() in DuckDB at
 sf0.01 with order-insensitive value-hash compare.
 
+Usage: python tools/driver_sim.py [NAME | t:TAG ...]
+With arguments, only the named queries and the queries tagged TAG are
+checked, and the entry() smoke is skipped.
+
 Chunk mode (round 9, VERDICT r7 ask #2): SPARK_GRAFT_SIM_CHUNK="i/N"
 runs only the i-th of N strided slices of the query list (and skips the
 entry() smoke for i > 0). Big-SF sweeps (sf1+) need this: a single
@@ -11,12 +15,10 @@ environmentally — fresh-session re-checks of the same names MATCH (see
 PARITY_r07.md's caveat). tools/parity_sweep.py drives one fresh
 process per chunk and aggregates a single ALL-OK artifact."""
 import hashlib
-import json
+import os as _os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import os as _os
+sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +39,7 @@ spark.sparkContext.setLogLevel("ERROR")
 import duckdb
 
 import __spark_entry__ as entrymod
+from appengine_mapreduce_spark.plans import all_queries
 
 # default = the driver's gate SF; override to re-prove parity at scale
 # (e.g. SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1)
@@ -64,8 +67,8 @@ def value_hash(pdf):
 _chunk = _os.environ.get("SPARK_GRAFT_SIM_CHUNK")  # "i/N" or unset
 _ci, _cn = (int(x) for x in _chunk.split("/")) if _chunk else (0, 1)
 
-# 1. entry() smoke (once per sweep: only the first chunk)
-if _ci == 0:
+# 1. entry() smoke (once per full sweep: only the first chunk)
+if _ci == 0 and not sys.argv[1:]:
     res = entrymod.entry(spark)
     rows = res.collect()
     print(f"entry(): {len(rows)} rows, schema={[f.name for f in res.schema.fields]}")
@@ -74,7 +77,16 @@ if _ci == 0:
 # 2. queries vs oracles
 qs = entrymod.queries()
 oracles = entrymod.oracle_sql()
-names = sorted(qs)[_ci::_cn]
+wanted = []
+for arg in sys.argv[1:]:
+    if arg.startswith("t:"):
+        wanted += [n for n, spec in all_queries().items() if arg[2:] in spec.tags]
+    else:
+        wanted.append(arg)
+unknown = [n for n in wanted if n not in qs]
+if unknown:
+    sys.exit(f"unknown queries: {unknown}")
+names = (list(dict.fromkeys(wanted)) if sys.argv[1:] else sorted(qs))[_ci::_cn]
 print(f"{len(qs)} queries, {len(oracles)} oracles"
       + (f", chunk {_ci}/{_cn}: {len(names)} queries" if _chunk else ""))
 fails = []
@@ -86,7 +98,9 @@ for name, fn in ((n, qs[n]) for n in names):
             ok_rows = len(spdf) == len(dpdf)
             ok_cols = sorted(spdf.columns) == sorted(dpdf.columns)
             ok_hash = value_hash(spdf) == value_hash(dpdf)
-            status = "MATCH" if (ok_rows and ok_cols and ok_hash) else f"MISMATCH rows={ok_rows} cols={ok_cols} hash={ok_hash}"
+            status = ("MATCH" if (ok_rows and ok_cols and ok_hash)
+                      else f"MISMATCH rows={ok_rows}({len(spdf)}/{len(dpdf)}) "
+                           f"cols={ok_cols} hash={ok_hash}")
         else:
             status = f"rows-only ({len(spdf)} rows)"
         print(f"  {name}: {status}")
