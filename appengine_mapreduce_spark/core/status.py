@@ -18,6 +18,9 @@ RUNNING = "running"
 DONE = "done"
 FAILED = "failed"
 
+# Every running job plus the newest _KEEP_FINISHED finished or failed
+# ones; _JOBS keeps finished records in the order they finished.
+_KEEP_FINISHED = 100
 _JOBS: dict[str, dict[str, Any]] = {}
 
 
@@ -36,19 +39,28 @@ def start_job(name: str, num_partitions: int | None = None) -> str:
     return job_id
 
 
+def _end(job_id: str, **fields: Any) -> None:
+    """Record a job's end, move it to the newest end of ``_JOBS`` and drop
+    the oldest ended records beyond ``_KEEP_FINISHED``."""
+    job = _JOBS.pop(job_id)
+    job.update(updated_time=time.time(), **fields)
+    _JOBS[job_id] = job
+    ended = [k for k, j in _JOBS.items() if j["state"] != RUNNING]
+    for k in ended[:-_KEEP_FINISHED]:
+        del _JOBS[k]
+
+
 def finish_job(job_id: str, counters: dict[str, int], result: Any = None) -> None:
-    job = _JOBS[job_id]
-    job.update(
+    _end(
+        job_id,
         state=DONE,
-        updated_time=time.time(),
         counters=dict(counters),
         result=repr(result)[:200] if result is not None else None,
     )
 
 
 def fail_job(job_id: str, error: BaseException) -> None:
-    job = _JOBS[job_id]
-    job.update(state=FAILED, updated_time=time.time(), error=repr(error)[:500])
+    _end(job_id, state=FAILED, error=repr(error)[:500])
 
 
 def list_jobs() -> list[dict[str, Any]]:

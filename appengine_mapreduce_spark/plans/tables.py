@@ -99,11 +99,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Pins the session time zone to UTC so timestamp semantics match the
     DuckDB oracle (which reads parquet timestamps UTC-naive).
 
-    ``events.ts`` is written as TIMESTAMP(NANOS).  Depending on reader
-    path, Spark surfaces it as bigint (the nanosAsLong escape hatch) or
-    TIMESTAMP_NTZ (native nanos support, truncated to µs); normalize both
-    to a session-UTC TIMESTAMP so every query sees one type (identical to
-    DuckDB's ns→µs semantics under a UTC-naive read).
+    The sf0.001/0.01/0.1 fixtures store ``events.ts`` as a UTC-naive
+    TIMESTAMP(MICROS) (``timestamp[us]``), which Spark infers as
+    TIMESTAMP_NTZ. A TIMESTAMP(NANOS) copy of the table reads as bigint
+    nanoseconds under ``nanosAsLong`` (set here, since Spark refuses the
+    column otherwise). Both are normalized to a session-UTC TIMESTAMP so
+    every query sees one type (identical to DuckDB's ns→µs semantics
+    under a UTC-naive read).
 
     Schema inference launches one Spark job per read, and a query reads
     up to six tables (q21 reads lineitem three times), so each table's

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, or else ¾ of the host's physical memory
+    capped at 48g: a heap larger than the host can never make the JVM
+    collect or spill before the host runs out of memory."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, phys * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "appengine_mapreduce_spark",
     master: str | None = None,
@@ -40,7 +51,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         # InferFiltersFromGenerate duplicates expensive computed arrays
         # (per-position digests, shingles) into a pre-Generate filter
         # pushed below the widening exchange — measured 5.8x tax on the

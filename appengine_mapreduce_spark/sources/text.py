@@ -7,16 +7,38 @@ skip-first-partial-line rule (:1306-1344). Java
 the same with a configurable separator.
 
 Spark: Hadoop's ``TextInputFormat`` *is* that exact protocol (byte-range
-splits, first-partial-line skip), and its record key is the byte offset —
-so ``line_input(with_offsets=True)`` is bit-parity with the reference's
-``(offset, line)`` stream. ``spark.read.text`` is the fast DataFrame path
-when offsets aren't needed (it prunes/pushes down; the Hadoop-RDD path
-cannot).
+splits, first-partial-line skip, ``\\n``/``\\r\\n``/``\\r`` terminators,
+codecs), and its ``LineRecordReader`` key is the byte offset, so
+``line_input(with_offsets=True)`` is bit-parity with the reference's
+``(offset, line)`` stream. ``spark.read.text`` cannot replace it: its
+reader drops those keys, and they cannot be rebuilt from the lines alone
+(a line's terminator, ``\\n`` or ``\\r\\n``, is not kept).
+``spark.read.text`` stays the fast path when offsets aren't needed (it
+prunes/pushes down; the Hadoop-RDD path cannot).
+
+The offset path never runs Python on a row. ``PythonRDD.newAPIHadoopFile``
+reads the splits with the ``mapreduce`` (new-API) ``TextInputFormat``,
+whose ``split.maxsize`` carries ``min_partitions`` (the ``mapred`` one
+ignores it). Its pickled output is unpickled again in the JVM
+(``SerDeUtil.pythonToJava`` → ``SerDeUtil.toJavaArray``) and turned into
+rows of a declared schema (``SparkSession.applySchemaToPythonRDD``): the
+route ``SparkSession.createDataFrame`` takes for an RDD, minus its Python
+``map``. With the schema declared, nothing is inferred, so an empty input
+gives an empty frame. Building the frame launches one small ``take`` job,
+``newAPIHadoopFile``'s picklability check on the first record.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+_OFFSET_LINE = StructType(
+    [StructField("offset", LongType()), StructField("line", StringType())]
+)
 
 
 def line_input(
@@ -30,7 +52,14 @@ def line_input(
 
     with_offsets=False → DataFrame[line: string]        (fast path)
     with_offsets=True  → DataFrame[offset: bigint, line: string]
-                         (reference parity: input_readers.py:1327-1344)
+                         (reference parity: input_readers.py:1327-1344),
+                         read by Hadoop's TextInputFormat and converted
+                         to rows in the JVM (see the module docstring);
+                         an empty input gives 0 rows of that schema
+    min_partitions     → offsets path only: cap each split at total
+                         bytes / min_partitions (default
+                         sc.defaultMinPartitions), so one file gives at
+                         least that many byte ranges
     line_sep           → custom record separator (≙ Java
                          GoogleCloudStorageLineInput's configurable
                          separator, GoogleCloudStorageLineInput.java:21);
@@ -44,25 +73,23 @@ def line_input(
         if line_sep is not None:
             reader = reader.option("lineSep", line_sep)
         return reader.text(path).withColumnRenamed("value", "line")
-    conf = {}
-    if min_partitions:
-        # hint Hadoop toward that many byte-range splits
-        import os
-
-        total = sum(
-            os.path.getsize(p) for p in __import__("glob").glob(path) if os.path.isfile(p)
-        ) or 1
-        conf["mapreduce.input.fileinputformat.split.maxsize"] = str(
-            max(1, total // min_partitions)
-        )
-    rdd = spark.sparkContext.hadoopFile(
+    sc = spark.sparkContext
+    # Split at total / min_partitions bytes, the goal size sc.textFile
+    # uses (same default); a path whose size cannot be read locally keeps
+    # Hadoop's block-sized splits.
+    total = sum(os.path.getsize(p) for p in glob.glob(path) if os.path.isfile(p))
+    split = max(1, total // (min_partitions or sc.defaultMinPartitions))
+    pickled = sc.newAPIHadoopFile(
         path,
-        "org.apache.hadoop.mapred.TextInputFormat",
+        "org.apache.hadoop.mapreduce.lib.input.TextInputFormat",
         "org.apache.hadoop.io.LongWritable",
         "org.apache.hadoop.io.Text",
-        conf=conf or None,
-    )
-    return rdd.toDF(["offset", "line"])
+        conf={"mapreduce.input.fileinputformat.split.maxsize": str(split)} if total else None,
+    )._jrdd
+    serde = sc._jvm.SerDeUtil
+    rows = serde.toJavaArray(serde.pythonToJava(pickled, True))
+    jdf = spark._jsparkSession.applySchemaToPythonRDD(rows.rdd(), _OFFSET_LINE.json())
+    return DataFrame(jdf, spark)
 
 
 def multi_file_line_input(

@@ -130,6 +130,22 @@ def test_job_status_failure(spark):
     assert failed and failed[0]["state"] == "failed"
 
 
+def test_job_status_registry_is_bounded():
+    """After more ended runs than the registry keeps, it holds every running
+    job plus the newest ``_KEEP_FINISHED`` ended ones."""
+    running = status.start_job("still-running")
+    ids = [status.start_job(f"bounded-{i}") for i in range(status._KEEP_FINISHED + 25)]
+    for i, job_id in enumerate(ids):
+        status.finish_job(job_id, {"mapper-calls": i})
+    status.fail_job(status.start_job("bounded-failed"), RuntimeError("boom"))
+    assert len(status.list_jobs()) <= status._KEEP_FINISHED + 1
+    assert status.get_job_detail(running)["state"] == status.RUNNING
+    assert status.get_job_detail(ids[-1])["counters"] == {"mapper-calls": len(ids) - 1}
+    assert ids[0] not in {j["job_id"] for j in status.list_jobs()}
+    status.finish_job(running, {})
+    assert status.get_job_detail(running)["state"] == status.DONE
+
+
 # --- property tests ---------------------------------------------------------
 
 

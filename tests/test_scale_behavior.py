@@ -81,3 +81,22 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_driver_heap_default_is_bounded_by_host_memory(monkeypatch):
+    """The driver heap defaults to ¾ of physical memory, capped at 48g, so
+    the heap bound binds before the host runs out; the env var overrides."""
+    import os
+
+    from appengine_mapreduce_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = 4096
+    for phys_gib, expected in ((16, "12288m"), (15.5, "11904m"), (128, "49152m")):
+        pages = int(phys_gib * 2**30) // page
+        monkeypatch.setattr(
+            os, "sysconf", {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": page}.__getitem__
+        )
+        assert session._driver_memory() == expected
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert session._driver_memory() == "1g"

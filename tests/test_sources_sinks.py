@@ -46,6 +46,162 @@ def test_line_input_offsets(spark, text_dir):
     assert got == expected
 
 
+def _hadoop_lines(data: bytes) -> list[tuple[int, str]]:
+    """Replay of Hadoop's ``LineReader`` over a whole stream: one
+    ``(byte offset, line)`` per record; ``\n``, ``\r\n`` and ``\r`` end a
+    line, and a last line with no terminator is still a record."""
+    out, start, i = [], 0, 0
+    while i < len(data):
+        if data[i] in b"\r\n":
+            out.append((start, data[start:i].decode("utf-8")))
+            i += 2 if data[i : i + 2] == b"\r\n" else 1
+            start = i
+        else:
+            i += 1
+    if start < len(data):
+        out.append((start, data[start:].decode("utf-8")))
+    return out
+
+
+def _hadoop_splits(size: int, min_partitions: int) -> list[tuple[int, int]]:
+    """``FileInputFormat.getSplits`` for one file when ``split.maxsize`` is
+    ``size // min_partitions``: ``(start, end)`` byte ranges of that size,
+    the tail merged into the last one while it is at most 1.1× the size."""
+    step, out, rest = max(1, size // min_partitions), [], size
+    while rest / step > 1.1:
+        out.append((size - rest, size - rest + step))
+        rest -= step
+    if rest:
+        out.append((size - rest, size))
+    return out
+
+
+def _replay_partitions(data: bytes, min_partitions: int) -> list[list[tuple[int, str]]]:
+    """Replay of ``LineRecordReader`` per split: a split ``(s, e]`` skips
+    the partial line at ``s`` and reads on while its position is ≤ ``e``,
+    so it owns the lines that start in ``(s, e]`` (the first split also
+    owns offset 0)."""
+    lines = _hadoop_lines(data)
+    return [
+        [(o, line) for o, line in lines if (s < o or o == s == 0) and o <= e]
+        for s, e in _hadoop_splits(len(data), min_partitions)
+    ]
+
+
+def _by_partition(df) -> list[list[tuple[int, str]]]:
+    rows = df.select(F.spark_partition_id().alias("pid"), "offset", "line").collect()
+    parts = [[] for _ in range(df.rdd.getNumPartitions())]
+    for r in rows:
+        parts[r.pid].append((r.offset, r.line))
+    return [sorted(p) for p in parts]
+
+
+def test_line_input_offsets_split_boundaries(spark, tmp_path):
+    """One file in ≥3 byte ranges, every boundary inside a line: each
+    partition holds exactly the lines Hadoop's reader assigns to it."""
+    data = "".join(f"line {i:03d} " + "x" * (i * 7 % 23) + "\n" for i in range(240)).encode()
+    path = tmp_path / "split.txt"
+    path.write_bytes(data)
+    splits = _hadoop_splits(len(data), 3)
+    starts = {o for o, _ in _hadoop_lines(data)}
+    assert len(splits) >= 3 and all(s not in starts for s, _ in splits[1:])
+    df = line_input(spark, str(path), with_offsets=True, min_partitions=3)
+    assert df.rdd.getNumPartitions() == len(splits)
+    assert _by_partition(df) == _replay_partitions(data, 3)
+
+
+@pytest.mark.parametrize(
+    "data",
+    [
+        b"alpha\r\nbeta\n\n\r\ngamma\r\n\r\ndelta\nno terminator",
+        "ünïcödé\r\n日本語の行\n\n𝄞 clef 😀\r\nkey=värde\n末尾".encode(),
+    ],
+    ids=["crlf-blank-unterminated", "utf8-multibyte-non-bmp"],
+)
+@pytest.mark.parametrize("min_partitions", [1, 3, 7])
+def test_line_input_offsets_terminators_and_utf8(spark, tmp_path, data, min_partitions):
+    """Mixed ``\n``/``\r\n`` terminators, blank lines, an unterminated last
+    line and multi-byte/non-BMP UTF-8, with split boundaries falling inside
+    CRLF pairs and multi-byte characters."""
+    path = tmp_path / "mixed.txt"
+    path.write_bytes(data)
+    df = line_input(spark, str(path), with_offsets=True, min_partitions=min_partitions)
+    assert _by_partition(df) == _replay_partitions(data, min_partitions)
+
+
+def test_line_input_offsets_gzip_and_glob(spark, tmp_path):
+    """A ``.gz`` file is one unsplit range whose offsets count decompressed
+    bytes; a glob reads every matching file with per-file offsets."""
+    import gzip
+    from collections import Counter
+
+    data = "".join(f"gz {i} " + "y" * (i % 9) + "\r\n" * (i % 2) + "\n" for i in range(300)).encode()
+    (tmp_path / "z.txt.gz").write_bytes(gzip.compress(data))
+    df = line_input(spark, str(tmp_path / "z.txt.gz"), with_offsets=True, min_partitions=4)
+    assert _by_partition(df) == [sorted(_hadoop_lines(data))]
+
+    files = {f"g{i}.txt": f"file {i}\n".encode() * (i + 1) + b"tail %d" % i for i in range(4)}
+    for name, body in files.items():
+        (tmp_path / name).write_bytes(body)
+    got = Counter(tuple(r) for r in line_input(spark, str(tmp_path / "g*.txt"), with_offsets=True).collect())
+    assert got == Counter(rec for body in files.values() for rec in _hadoop_lines(body))
+
+
+def test_line_input_offsets_empty(spark, tmp_path):
+    """An empty file, and a glob matching only empty files, give 0 rows of
+    the declared schema; a job over one finishes with no mapper calls."""
+    from appengine_mapreduce_spark.core import status
+    from appengine_mapreduce_spark.core.job import (
+        MapReduceJob,
+        MapReduceSpecification,
+        TextLinesInput,
+    )
+    from appengine_mapreduce_spark.sinks.inmemory import InMemoryOutput
+
+    for name in ("e1.txt", "e2.txt"):
+        (tmp_path / name).write_bytes(b"")
+    for path in (tmp_path / "e1.txt", tmp_path / "e*.txt"):
+        df = line_input(spark, str(path), with_offsets=True)
+        assert df.schema.simpleString() == "struct<offset:bigint,line:string>"
+        assert df.collect() == []
+
+    def mapper(ctx, row):
+        yield (row.line, row.offset)
+
+    def reducer(ctx, key, offsets):
+        yield (key, min(offsets))
+
+    spec = (
+        MapReduceSpecification.builder()
+        .set_job_name("empty-text")
+        .set_input(TextLinesInput(str(tmp_path / "e*.txt")))
+        .set_mapper(mapper)
+        .set_map_output_schema("line string, offset bigint")
+        .set_reducer(reducer)
+        .set_output_schema("line string, first bigint")
+        .set_output(InMemoryOutput())
+        .build()
+    )
+    result = MapReduceJob.run(spark, spec)
+    assert result.output == []
+    assert result.counters.get("mapper-calls", 0) == 0
+    assert status.get_job_detail(result.job_id)["state"] == status.DONE
+
+
+def test_line_input_offsets_stay_in_jvm(spark, text_dir):
+    """The offset scan has no Python stage, and building it launches at
+    most one Spark job (the picklability ``take``); nothing is inferred."""
+    sc = spark.sparkContext
+    group = "line-input-build"
+    sc.setJobGroup(group, "build line_input(with_offsets=True)")
+    try:
+        df = line_input(spark, f"{text_dir}/*.txt", with_offsets=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert "PythonRDD[" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
 def test_line_input_plain(spark, text_dir):
     df = line_input(spark, f"{text_dir}/a.txt")
     assert sorted(r.line for r in df.collect()) == sorted(LINES_A)
