@@ -1,23 +1,34 @@
-"""Runtime metric taps over Spark's AppStatusStore (the store behind the
-UI / REST status API — public monitoring surface, no listener plumbing).
+"""One scoped measurement tap: :func:`profile` times a block of driver
+code and reads what its Spark jobs did from Spark's AppStatusStore (the
+store behind the UI and the REST status API; no listener plumbing).
 
-Used by bench.py to attribute shuffle bytes per query (plan regressions
-show up as metric diffs even when wall-clock noise hides them) and by the
-spill probe to prove external sort/agg carries constrained-memory runs.
-:func:`cpu_stat` reads the host-noise channels the bench and the tools
-attribute each timed phase with.
+The block's jobs run in a job group of their own, so the record counts
+those jobs alone: a query profiled after another reports its own shuffle
+bytes, spill and peak execution memory, not a running total. bench.py,
+the spill and packing-skew probes and the shuffle-byte tests all read
+this one record. ``perfbench/tap.SparkTap`` reads the same store the
+same way, and ``tests/test_runtime_metrics.py`` checks that the two
+agree.
 
-Reference parity note: the reference framework exposes the same class of
-evidence through per-job counters (python/src/mapreduce/model.py
-CounterMap, io-* counters); here the engine already meters every stage,
-so the tap is read-only.
+Reference parity note: the reference rolls its per-job counters up from
+per-shard state (python/src/mapreduce/model.py CounterMap, io-*
+counters); here Spark already meters every stage, so the tap is
+read-only. :func:`cpu_stat` adds the host-noise channels (steal,
+io stall) each record is attributed with.
 """
 
 from __future__ import annotations
 
+import time
+import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Iterator
 
 from pyspark.sql import SparkSession
+
+# Local properties a job group sets (SparkContext.setJobGroup).
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 def cpu_stat() -> tuple[int, int, int]:
@@ -42,44 +53,100 @@ def cpu_stat() -> tuple[int, int, int]:
     return steal, idle, io_us
 
 
-def total_shuffle_write_bytes(spark: SparkSession) -> int:
-    """Monotonic total of shuffle bytes written across all executors
-    since context start. Executor summaries are never evicted (unlike
-    retained stages), so before/after diffs are exact per-query shuffle
-    attribution even in long bench runs."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    lst = store.executorList(True)
-    return sum(lst.apply(i).totalShuffleWrite() for i in range(lst.size()))
-
-
 @dataclass(frozen=True)
-class StageTotals:
-    n_stages: int
-    shuffle_write_bytes: int
+class Profile:
+    """What one profiled block cost. Stage metrics sum every attempt of
+    every stage the block's jobs ran; a skipped stage (its shuffle output
+    reused) never ran and adds nothing. Host deltas are -1 when the
+    channel is unreadable."""
+
+    wall_s: float
+    jobs: int
     shuffle_read_bytes: int
-    memory_spill_bytes: int
-    disk_spill_bytes: int
-    peak_execution_memory: int
+    shuffle_write_bytes: int
+    spill_memory_bytes: int
+    spill_disk_bytes: int
+    peak_execution_memory_bytes: int  # max over the block's stages
+    executor_run_s: float
+    executor_cpu_s: float
+    steal_jiffies: int
+    io_stall_us: int
 
 
-def stage_totals(spark: SparkSession) -> StageTotals:
-    """Sum stage-level metrics across all RETAINED stages (default
-    retention 1000 — fine for one probe run; prefer
-    :func:`total_shuffle_write_bytes` for long-lived diffs)."""
+class ProfileScope:
+    """What :func:`profile` yields: the block's job-group id, and the
+    block's :class:`Profile` in ``record`` once the block has exited
+    normally."""
+
+    def __init__(self, group_id: str):
+        self.group_id = group_id
+        self.record: Profile | None = None
+
+
+@contextmanager
+def profile(spark: SparkSession, label: str) -> Iterator[ProfileScope]:
+    """Run the block's Spark jobs in a fresh job group and, on exit,
+    set ``scope.record``. The caller's job group is restored on exit,
+    also when the block raises (then no record is made)."""
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
+    saved = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
+    scope = ProfileScope(f"profile-{label}-{uuid.uuid4().hex[:12]}")
+    sc.setJobGroup(scope.group_id, label)
+    s0, _, io0 = cpu_stat()
+    t0 = time.perf_counter()
+    try:
+        yield scope
+        wall = time.perf_counter() - t0
+        s1, _, io1 = cpu_stat()
+    finally:
+        for k, v in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(k, v)
+    steal = s1 - s0 if s0 >= 0 and s1 >= 0 else -1
+    io = io1 - io0 if io0 >= 0 and io1 >= 0 else -1
+    scope.record = _group_totals(spark, scope.group_id, wall, steal, io)
+
+
+def _group_totals(spark: SparkSession, gid: str, wall: float, steal: int, io: int) -> Profile:
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # stage metrics arrive through the listener bus after the action returns
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
     jvm = sc._jvm
-    sl = store.stageList(
-        jvm.java.util.ArrayList(), False, False,
-        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(gid)
+    rd = wr = mem = disk = peak = 0
+    run_ms = cpu_ns = 0
+    seen: set[int] = set()
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            if sid in seen:
+                continue
+            seen.add(sid)
+            try:
+                attempts = store.stageData(
+                    sid, False, jvm.java.util.ArrayList(), False,
+                    sc._gateway.new_array(jvm.double, 0),
+                )
+            except Py4JJavaError:  # a skipped stage never ran
+                continue
+            for i in range(attempts.size()):
+                s = attempts.apply(i)
+                rd += s.shuffleReadBytes()
+                wr += s.shuffleWriteBytes()
+                mem += s.memoryBytesSpilled()
+                disk += s.diskBytesSpilled()
+                peak = max(peak, s.peakExecutionMemory())
+                run_ms += s.executorRunTime()
+                cpu_ns += s.executorCpuTime()
+    return Profile(
+        wall_s=wall, jobs=len(jobs),
+        shuffle_read_bytes=rd, shuffle_write_bytes=wr,
+        spill_memory_bytes=mem, spill_disk_bytes=disk,
+        peak_execution_memory_bytes=peak,
+        executor_run_s=run_ms / 1e3, executor_cpu_s=cpu_ns / 1e9,
+        steal_jiffies=steal, io_stall_us=io,
     )
-    sw = sr = ms = ds = pm = 0
-    n = sl.size()
-    for i in range(n):
-        s = sl.apply(i)
-        sw += s.shuffleWriteBytes()
-        sr += s.shuffleReadBytes()
-        ms += s.memoryBytesSpilled()
-        ds += s.diskBytesSpilled()
-        pm = max(pm, s.peakExecutionMemory())
-    return StageTotals(n, sw, sr, ms, ds, pm)

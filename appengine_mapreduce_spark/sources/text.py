@@ -30,9 +30,6 @@ gives an empty frame. Building the frame launches one small ``take`` job,
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -75,9 +72,8 @@ def line_input(
         return reader.text(path).withColumnRenamed("value", "line")
     sc = spark.sparkContext
     # Split at total / min_partitions bytes, the goal size sc.textFile
-    # uses (same default); a path whose size cannot be read locally keeps
-    # Hadoop's block-sized splits.
-    total = sum(os.path.getsize(p) for p in glob.glob(path) if os.path.isfile(p))
+    # uses (same default).
+    total = _input_bytes(sc, path)
     split = max(1, total // (min_partitions or sc.defaultMinPartitions))
     pickled = sc.newAPIHadoopFile(
         path,
@@ -90,6 +86,25 @@ def line_input(
     rows = serde.toJavaArray(serde.pythonToJava(pickled, True))
     jdf = spark._jsparkSession.applySchemaToPythonRDD(rows.rdd(), _OFFSET_LINE.json())
     return DataFrame(jdf, spark)
+
+
+def _input_bytes(sc, path: str) -> int:
+    """Bytes of the files Hadoop's ``FileInputFormat`` reads for ``path``
+    (a file, a glob, or a directory, whose non-hidden files it reads;
+    any scheme Hadoop knows), summed through Hadoop's ``FileSystem``;
+    0 when nothing matches, which Hadoop itself then reports."""
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+
+    def visible(st) -> bool:  # FileInputFormat's hidden-file filter
+        return not st.getPath().getName().startswith(("_", "."))
+
+    total = 0
+    for st in filter(visible, fs.globStatus(hpath) or ()):
+        for f in fs.listStatus(st.getPath()) if st.isDirectory() else (st,):
+            if f.isFile() and visible(f):
+                total += f.getLen()
+    return total
 
 
 def multi_file_line_input(

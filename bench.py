@@ -1,103 +1,57 @@
 #!/usr/bin/env python3
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-compact JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {...}, "runs": N, "sf": ..., "calibration_sec": ...}.
-
-The FULL payload (spread, per-query shuffle bytes, normalized times, the
-sf1 scale section, capstone exponents, the skew block) is written to
-BENCH_LOCAL.json in-repo so the primary numbers survive any driver
-output-capture truncation (VERDICT r4 "What's wrong" #1); the printed
-line carries only the contract fields and is the LAST thing on stdout.
-
-Methodology:
-- Interleaved rounds (VERDICT round-1 ask #9): after a warmup pass (JIT +
-  parquet footer reads), every query runs once per measurement ROUND and
-  rounds repeat, so a transient noisy-neighbor spike hits one round of
-  many queries instead of all runs of one query. Reported per-query time
-  is the MEDIAN across rounds; "spread" records (max-min)/median.
-- Calibration probe v2 (VERDICT r8 "what's wrong" #4 — the v1 ~0.8 s
-  JVM-only probe had a ±60% round-to-round error bar, worthless as a
-  normalizer): a ~6 s MIXED workload (JVM codegen + a real 500k-key
-  exchange + an Arrow/Python mapInPandas pass — the three cost centers
-  the suite actually exercises), median-of-5 with its SPREAD reported,
-  run in its OWN SparkContext so the Python part never leaves workers
-  resident in the JVM-only phase. Raw totals remain the primary
-  number; normalized totals must only be compared across rounds when
-  both probes' spreads are small (the spread is in the artifact).
-- Seam probe (VERDICT r7 ask #1 / r8 #2): rows/sec through run_mapper
-  ALONE (map-only, no shuffle, fresh context) at sf0.1 and sf1, cold
-  first run vs warm median — attributes the mapreduce_api_* wobble to
-  Python-worker/Arrow startup vs steady-state seam throughput.
-- Shuffle-byte attribution (VERDICT r4 ask #7): per-query shuffle bytes
-  written, diffed from the executor-summary monotonic counter around the
-  first measurement run. Plan regressions show up as byte diffs even
-  when wall-clock noise would hide them (invariants pinned in
-  tests/test_shuffle_invariants.py).
-- Process isolation for UDF queries (VERDICT round-2 ask #2): queries
-  that spawn Python UDF workers run in a SEPARATE SparkContext, so the
-  JVM-only phase measures plans, not resident-worker drag.
+"""Benchmark harness: time the 25 headline queries (``bench=True`` in the
+registry) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS]. After a warm-up pass every query runs once per
+round for N_ROUNDS interleaved rounds, so a host burst hits one round of
+many queries rather than every run of one; sub-second queries are topped
+up to SUBSEC_SAMPLES runs. Queries tagged ``udf`` start Python workers, so
+they run in a second SparkContext and the JVM-only timings are taken with
+no worker resident. Each timed run is one ``runtime_metrics.profile``
+record: a query's time is the median of its runs' ``wall_s``, and its
+``layers`` entry is the record of its median run (jobs, shuffle bytes,
+spill, peak execution memory, executor time, host steal and io stall).
+At sf0.1 the suite runs again at sf1 ($SPARK_GRAFT_SF1_DIR, generated by
+tools/gen_sf.py when absent) and each query gets a scaling exponent. The
+full payload goes to BENCH_LOCAL.json; stdout is ONE JSON line (metric,
+value, unit, queries, runs, sf, sf1_total, sf1_worst_exponent,
+detail_file), the last thing printed, with all progress on stderr.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
 import statistics
 import sys
-import time
+import traceback
+from dataclasses import asdict
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
+from appengine_mapreduce_spark.core.runtime_metrics import Profile, profile
 from appengine_mapreduce_spark.plans import bench_queries
 from appengine_mapreduce_spark.session import get_spark
 
-N_ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
-
-# Median of the v2 MIXED calibration probe on the round-9 build box,
-# pinned so future rounds report drift relative to a fixed anchor (the
-# reference framework pins its envelope in config constants for the same
-# reason — wall-clock is not comparable across environments:
-# parameters.py:222). v2 resets the normalization baseline: normalized
-# totals are NOT comparable to rounds <= 8 (which used the 0.65 s
-# JVM-only v1 probe).
-CALIBRATION_REF = float(os.environ.get("SPARK_GRAFT_CALIBRATION_REF", "5.2"))
-CALIBRATION_VERSION = 2
-
-# Normalized figures are SUPPRESSED (emitted as null + reason) when the
-# calibration probe's own spread exceeds this: a probe that can't
-# reproduce itself within ~20% cannot normalize anything, and a numeric
-# normalized_total next to a "compare only when spreads are small"
-# caveat still reads as a number on a skim (VERDICT r9 "what's wrong"
-# #2 — round 9's spread hit 0.93 and the 13.8s-vs-35.1s normalized pair
-# looked like a 2x improvement).
-CAL_SPREAD_GATE = float(os.environ.get("SPARK_GRAFT_CAL_SPREAD_GATE", "0.2"))
-
 _REPO = os.path.dirname(os.path.abspath(__file__))
+DETAIL_PATH = os.path.join(_REPO, "BENCH_LOCAL.json")
 
-# Per-query self-censor gate (VERDICT r13 ask #4): the r13 artifact
-# reported a 24% sf0.1 raw-total swing and a 16.7s capstone figure that
-# every quiet-window sweep times at ~6s — pure host noise the ~6s
-# calibration probe demonstrably missed (drift stayed 0.985 through the
-# burst). Any per-query median whose run spread exceeds this gate is
-# reported FLAGGED (kept in `queries` for the contract, named in
-# `queries_flagged` with its CPU-steal / io-stall attribution) so a skim
-# can never mistake a burst-hit figure for a regression.
-QUERY_SPREAD_GATE = float(os.environ.get("SPARK_GRAFT_QUERY_SPREAD_GATE", "0.5"))
+N_ROUNDS = 3
+SF1_ROUNDS = 2
+# A query whose median lands under SUBSEC_MEDIAN_SEC is topped up to
+# SUBSEC_SAMPLES runs: with 3 samples one host burst can move a 0.4 s
+# median by more than 2x, and extra runs of sub-second queries cost little.
+SUBSEC_MEDIAN_SEC = 1.0
+SUBSEC_SAMPLES = 5
 
 
 def _pretouch(sf_dir: str) -> None:
-    """Stream the fixture parquet through the page cache before a timed
-    phase (ported from tools/sf2_sweep.py, VERDICT r13 ask #4). This
-    host pins page cache at ~4 GB, so a fresh process's first pass pays
-    partially-cold reads; the warmup round does not fully absorb it
-    (shuffle/JVM churn evicts). Timings should measure compute, not
-    cold disk — warm the files and let io_stall_us_d show any residual."""
-    import glob as _glob
-
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
+    """Read the fixture's parquet files through the page cache before a
+    timed phase, so timings measure compute rather than cold reads (the
+    warm-up pass alone does not absorb them: shuffle and JVM churn evict
+    pages). What is left shows as each record's ``io_stall_us``."""
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         try:
             with open(p, "rb") as fh:
                 while fh.read(1 << 24):
@@ -106,321 +60,72 @@ def _pretouch(sf_dir: str) -> None:
             pass
 
 
-def _calibration_workload(spark) -> "dict[str, float]":
-    """One ~5-6 s pass over the three cost centers the suite exercises,
-    returning per-part seconds (the per-part medians in the artifact say
-    WHICH cost center drifted, not just that something did).
-    Deterministic results (asserted) so a wrong answer — not just a slow
-    one — fails loudly."""
-    from pyspark.sql import functions as F
+def _measure(spark, ordered, sf_dir: str, n_rounds: int,
+             runs: dict[str, list[Profile]], rows: dict[str, int]) -> None:
+    def timed(name, spec):
+        with profile(spark, name) as scope:
+            rows[name] = len(spec.fn(spark, sf_dir).collect())
+        runs[name].append(scope.record)
 
-    parts: dict[str, float] = {}
-    # (a) JVM codegen: hash agg + global sort, zero I/O.
-    t0 = time.perf_counter()
-    rows = (
-        spark.range(0, 900_000_000)
-        .selectExpr("id % 100000 AS k", "id AS v")
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("s"), F.asc("k"))
-        .limit(1)
-        .collect()
-    )
-    assert rows[0]["c"] == 9000 and rows[0]["k"] == 99999, rows
-    parts["jvm"] = time.perf_counter() - t0
-    # (b) a real exchange: 500k-key groupBy with padded payload rows.
-    t0 = time.perf_counter()
-    agg = (
-        spark.range(0, 110_000_000, 1, 32)
-        .select(
-            (F.col("id") % 500_000).alias("k"),
-            F.repeat(F.lit("x"), 32).alias("pad"),
-        )
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum("c").alias("n"), F.count(F.lit(1)).alias("d"))
-        .collect()
-    )
-    assert agg[0]["n"] == 110_000_000 and agg[0]["d"] == 500_000, agg
-    parts["shuffle"] = time.perf_counter() - t0
-    # (c) the Arrow/Python seam, SUMMARY-RETURNING: full Arrow input +
-    # Python compute, but each worker emits one partial-sum row instead
-    # of streaming 100M rows back. The full-return path is excluded ON
-    # PURPOSE: it exhibits intermittent multi-second idle-wait stalls
-    # (measured round 9 — see the seam probe and SCALING.md), which
-    # would make the CALIBRATION itself unstable; the seam probe
-    # measures that path separately, with attribution counters.
-    t0 = time.perf_counter()
-
-    def _seam(batches):
-        import pandas as pd
-
-        s = 0
-        for pdf in batches:
-            s += int((pdf["id"] * 2).sum())
-        yield pd.DataFrame({"s": [s]})
-
-    got = (
-        spark.range(0, 150_000_000, 1, 32)
-        .mapInPandas(_seam, schema="s long")
-        .agg(F.sum("s").alias("s"))
-        .collect()
-    )
-    assert got[0]["s"] == 149_999_999 * 150_000_000, got
-    parts["seam"] = time.perf_counter() - t0
-    return parts
-
-
-_CAL_CACHE: "tuple[float, float, dict, int] | None" = None
-
-# When the probe's spread misses the gate, RETRY with a fresh context up
-# to this many total attempts and keep the lowest-spread one (VERDICT
-# r10 ask #2: two consecutive rounds self-censored on one noisy attempt,
-# silently converting the ≥1M rec/s floor check into a skip — a burst
-# that poisons one ~40 s attempt rarely spans three).
-CAL_MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_CAL_ATTEMPTS", "3"))
-
-
-def _calibrate_once(n_runs: int) -> "tuple[float, float, dict]":
-    spark = get_spark(app_name="bench-calibrate")
-    try:
-        times: list[float] = []
-        part_samples: dict[str, list[float]] = {}
-        for i in range(n_runs + 2):
-            parts = _calibration_workload(spark)
-            if i >= 2:
-                times.append(sum(parts.values()))
-                for k, v in parts.items():
-                    part_samples.setdefault(k, []).append(v)
-    finally:
-        spark.stop()
-    med = statistics.median(times)
-    spread = (max(times) - min(times)) / med if med > 0 else 0.0
-    part_medians = {
-        k: round(statistics.median(v), 4) for k, v in part_samples.items()
-    }
-    return med, spread, part_medians
-
-
-def _calibrate(n_runs: int = 5) -> "tuple[float, float, dict, int]":
-    """Median + spread of ``n_runs`` mixed-workload passes in a DEDICATED
-    SparkContext (the seam part spawns Python workers; the JVM-only
-    measurement phase must never inherit them). TWO warmup passes — at
-    this workload size codegen JIT + GC ramp measurably outlast a single
-    pass. Gate-miss attempts retry with a fresh context (best-of-
-    ``CAL_MAX_ATTEMPTS``, lowest spread kept) so one host burst can't
-    self-censor the round's normalized figures. Cached per process: one
-    bench invocation is one environment sample — the sf0.1 and sf1
-    suites share it. Returns (median, spread, part_medians, attempts)."""
-    global _CAL_CACHE
-    if _CAL_CACHE is not None:
-        return _CAL_CACHE
-    best: "tuple[float, float, dict] | None" = None
-    attempts = 0
-    for attempt in range(1, CAL_MAX_ATTEMPTS + 1):
-        attempts = attempt
-        med, spread, parts = _calibrate_once(n_runs)
-        if best is None or spread < best[1]:
-            best = (med, spread, parts)
-        if spread <= CAL_SPREAD_GATE:
-            break
-        print(
-            f"# calibration attempt {attempt}/{CAL_MAX_ATTEMPTS}: spread "
-            f"{spread:.3f} > gate {CAL_SPREAD_GATE:g}"
-            + (", retrying with a fresh context"
-               if attempt < CAL_MAX_ATTEMPTS else " — keeping best attempt"),
-            file=sys.stderr,
-        )
-    _CAL_CACHE = (*best, attempts)
-    return _CAL_CACHE
-
-
-def _shuffle_written(spark) -> int:
-    try:
-        from appengine_mapreduce_spark.core.runtime_metrics import (
-            total_shuffle_write_bytes,
-        )
-
-        return total_shuffle_write_bytes(spark)
-    except Exception:  # metric tap must never fail the bench
-        return -1
-
-
-# Queries whose median lands under this get topped up to SUBSEC_SAMPLES
-# total runs: a single host burst shifts a 0.4 s median by >2x with only
-# 3 samples (wordcount +138% in BENCH_r10 at per-query spread 1.18 —
-# pure noise), and extra runs of sub-second queries are nearly free
-# (VERDICT r10 ask #6).
-SUBSEC_MEDIAN_SEC = 1.0
-SUBSEC_SAMPLES = int(os.environ.get("SPARK_GRAFT_SUBSEC_SAMPLES", "5"))
-
-
-def _measure(
-    spark, ordered, sf_dir: str,
-    samples: dict[str, list[float]], rows: dict[str, int],
-    shuffle_bytes: dict[str, int],
-    cpu_attr: "dict[str, dict[str, int]] | None" = None,
-) -> None:
-    def _attributed_run(name, spec):
-        """One timed run with per-run host-noise attribution summed into
-        cpu_attr[name] (VERDICT r13 ask #4: the calibration probe alone
-        misses intra-run bursts; per-query steal/io deltas don't)."""
-        s0, _, io0 = cpu_stat() if cpu_attr is not None else (-1, -1, -1)
-        t0 = time.perf_counter()
-        n = len(spec.fn(spark, sf_dir).collect())
-        dt = time.perf_counter() - t0
-        if cpu_attr is not None:
-            s1, _, io1 = cpu_stat()
-            acc = cpu_attr.setdefault(
-                name, {"steal_jiffies_d": 0, "io_stall_us_d": 0})
-            if s0 >= 0 and s1 >= 0:
-                acc["steal_jiffies_d"] += s1 - s0
-            if io0 >= 0 and io1 >= 0:
-                acc["io_stall_us_d"] += io1 - io0
-        return n, dt
-
-    # Warmup: whole-stage-codegen JIT, parquet footers, broadcast warm paths.
-    for name, spec in ordered:
+    # Warm-up: whole-stage-codegen JIT, parquet footers, broadcast paths.
+    for _, spec in ordered:
         spec.fn(spark, sf_dir).collect()
-    for rnd in range(N_ROUNDS):
+    for _ in range(n_rounds):
         for name, spec in ordered:
-            sw0 = _shuffle_written(spark) if rnd == 0 else 0
-            rows[name], dt = _attributed_run(name, spec)
-            samples[name].append(dt)
-            if rnd == 0:
-                sw1 = _shuffle_written(spark)
-                shuffle_bytes[name] = (
-                    sw1 - sw0 if sw0 >= 0 and sw1 >= 0 else -1
-                )
-    # Sub-second anchors: top up to SUBSEC_SAMPLES total runs (still
-    # interleaved across queries so a burst hits one extra round, not
-    # all extra runs of one query).
-    subsec = [
-        (n, s) for n, s in ordered
-        if statistics.median(samples[n]) < SUBSEC_MEDIAN_SEC
-    ]
-    for _ in range(max(0, SUBSEC_SAMPLES - N_ROUNDS)):
+            timed(name, spec)
+    subsec = [(n, s) for n, s in ordered
+              if statistics.median(r.wall_s for r in runs[n]) < SUBSEC_MEDIAN_SEC]
+    for _ in range(SUBSEC_SAMPLES - n_rounds):  # still interleaved
         for name, spec in subsec:
-            _, dt = _attributed_run(name, spec)
-            samples[name].append(dt)
+            timed(name, spec)
 
 
 def _run_suite(sf_dir: str, n_rounds: int, label: str) -> dict:
-    """Measure the full headliner suite at ``sf_dir``; returns the result
-    block (queries/spread/shuffle_bytes/calibration/value). JVM-only and
-    UDF queries run in separate SparkContexts (see module docstring)."""
-    global N_ROUNDS
+    """Measure the headline suite at ``sf_dir``: JVM-only queries in one
+    SparkContext, then ``udf`` queries in a fresh one."""
     specs = bench_queries()
-    jvm_only = sorted(
-        ((n, s) for n, s in specs.items() if "udf" not in s.tags),
-        key=lambda kv: kv[0],
-    )
-    udf = sorted(
-        ((n, s) for n, s in specs.items() if "udf" in s.tags),
-        key=lambda kv: kv[0],
-    )
-
-    samples: dict[str, list[float]] = {n: [] for n in specs}
+    by_name = sorted(specs.items(), key=lambda kv: kv[0])
+    phases = [
+        ("jvm", [(n, s) for n, s in by_name if "udf" not in s.tags]),
+        ("udf", [(n, s) for n, s in by_name if "udf" in s.tags]),
+    ]
+    runs: dict[str, list[Profile]] = {n: [] for n in specs}
     rows: dict[str, int] = {}
-    shuffle_bytes: dict[str, int] = {}
-    cpu_attr: dict[str, dict[str, int]] = {}
-
-    saved_rounds, N_ROUNDS = N_ROUNDS, n_rounds
-    try:
-        calibration, cal_spread, cal_parts, cal_attempts = _calibrate()
-        print(f"# [{label}] calibration probe v{CALIBRATION_VERSION}: "
-              f"median {calibration:.3f}s spread {cal_spread:.3f} "
-              f"attempts {cal_attempts} parts {cal_parts} "
-              f"(ref {CALIBRATION_REF}s, drift x{calibration/CALIBRATION_REF:.2f})",
-              file=sys.stderr)
-        _pretouch(sf_dir)
-        spark = get_spark(app_name=f"bench-jvm-{label}")
-        _measure(spark, jvm_only, sf_dir, samples, rows, shuffle_bytes,
-                 cpu_attr)
-        if udf:
-            # Fresh context for the UDF phase: the JVM-only numbers above
-            # were taken with zero Python workers resident.
+    _pretouch(sf_dir)
+    for phase, ordered in phases:
+        if not ordered:
+            continue
+        spark = get_spark(app_name=f"bench-{phase}-{label}")
+        try:
+            _measure(spark, ordered, sf_dir, n_rounds, runs, rows)
+        finally:
             spark.stop()
-            spark = get_spark(app_name=f"bench-udf-{label}")
-            _measure(spark, udf, sf_dir, samples, rows, shuffle_bytes,
-                     cpu_attr)
-        spark.stop()
-    finally:
-        N_ROUNDS = saved_rounds
 
-    timings: dict[str, float] = {}
+    queries: dict[str, float] = {}
     spread: dict[str, float] = {}
-    flagged: dict[str, dict] = {}
+    layers: dict[str, dict] = {}
     total = 0.0
-    for name, _ in jvm_only + udf:
-        runs = samples[name]
-        med = statistics.median(runs)
-        timings[name] = round(med, 4)
-        spread[name] = round((max(runs) - min(runs)) / med, 3) if med > 0 else 0.0
-        total += med
-        attr = cpu_attr.get(name, {})
-        if spread[name] > QUERY_SPREAD_GATE:
-            flagged[name] = {
-                "spread": spread[name],
-                "runs": [round(r, 4) for r in runs],
-                **attr,
-                "reason": (
-                    f"run spread {spread[name]:.3f} > gate "
-                    f"{QUERY_SPREAD_GATE:g}: median unreliable this "
-                    f"window — read steal/io attribution before "
-                    f"believing a delta"
-                ),
-            }
-        print(
-            f"# [{label}] {name}: median {med:.3f}s over {len(runs)} runs "
-            f"(min {min(runs):.3f} max {max(runs):.3f}, {rows[name]} rows, "
-            f"shuffle {shuffle_bytes.get(name, -1)} B, "
-            f"steal_d {attr.get('steal_jiffies_d', -1)} "
-            f"io_stall_d {attr.get('io_stall_us_d', -1)}us"
-            f"{' FLAGGED' if name in flagged else ''})",
-            file=sys.stderr,
-        )
-    drift = calibration / CALIBRATION_REF if CALIBRATION_REF > 0 else 1.0
-    cal_ok = cal_spread <= CAL_SPREAD_GATE
-    if cal_ok:
-        normalized = {n: round(t / drift, 4) for n, t in timings.items()}
-        normalized_total = round(total / drift, 4)
-        suppressed = None
-        print(
-            f"# [{label}] RAW total {total:.3f}s | normalized "
-            f"{total / drift:.3f}s (drift x{drift:.2f}, probe spread "
-            f"{cal_spread:.3f}) — raw is primary; compare normalized "
-            f"across rounds only when both probes' spreads are small",
-            file=sys.stderr,
-        )
-    else:
-        # Auto-gate (VERDICT r9 #3): don't emit numbers a skim could
-        # misread — the probe's own spread says the normalizer is noise.
-        normalized, normalized_total = None, None
-        suppressed = (
-            f"calibration_spread {cal_spread:.3f} > gate "
-            f"{CAL_SPREAD_GATE:g} after {cal_attempts} attempts: "
-            f"the probe cannot normalize this round"
-        )
-        print(
-            f"# [{label}] RAW total {total:.3f}s | normalized n/a "
-            f"({suppressed})",
-            file=sys.stderr,
-        )
+    for _, ordered in phases:
+        for name, _ in ordered:
+            recs = sorted(runs[name], key=lambda r: r.wall_s)
+            walls = [r.wall_s for r in recs]
+            med = statistics.median(walls)
+            rec = recs[len(recs) // 2]
+            queries[name] = round(med, 4)
+            spread[name] = round((walls[-1] - walls[0]) / med, 3) if med > 0 else 0.0
+            layers[name] = asdict(rec)
+            total += med
+            print(
+                f"# [{label}] {name}: median {med:.3f}s over {len(walls)} runs "
+                f"(min {walls[0]:.3f} max {walls[-1]:.3f}, {rows[name]} rows, "
+                f"{rec.jobs} jobs, shuffle {rec.shuffle_write_bytes} B, "
+                f"steal {rec.steal_jiffies} io_stall {rec.io_stall_us}us)",
+                file=sys.stderr,
+            )
+    print(f"# [{label}] total {total:.3f}s", file=sys.stderr)
     return {
-        "value": round(total, 4), "queries": timings, "spread": spread,
-        "queries_flagged": flagged,
-        "query_cpu_attr": cpu_attr,
-        "runs": n_rounds, "calibration_sec": round(calibration, 4),
-        "calibration_spread": round(cal_spread, 4),
-        "calibration_attempts": cal_attempts,
-        "calibration_parts": cal_parts,
-        "calibration_version": CALIBRATION_VERSION,
-        "drift_factor": round(drift, 4),
-        "queries_normalized": normalized,
-        "normalized_total": normalized_total,
-        "normalized_suppressed_reason": suppressed,
-        "shuffle_bytes": shuffle_bytes,
+        "value": round(total, 4), "queries": queries, "spread": spread,
+        "runs": n_rounds, "layers": layers,
     }
 
 
@@ -447,371 +152,12 @@ def _ensure_sf1(sf1_dir: str) -> bool:
         return False
 
 
-def _run_capstones(sf_dir: str, sf1_dir: str | None) -> dict:
-    """Integration capstones (VERDICT r4 ask #5): the two whole-pipeline
-    plans measured at sf0.1 and sf1 with their scaling exponents — the
-    exponent of the INTEGRATED 12-shuffle plan matters more at 100 TB
-    than any single stage's.
-
-    Hardened round 14 (VERDICT r13 ask #4: the r13 artifact carried a
-    burst-hit 16.7 s semantic_dedup sf1 figure vs ~6 s in every
-    quiet-window sweep, from a SINGLE timed run): fixtures pre-touch
-    before each SF, each capstone is the median of 3 interleaved runs
-    with spread + steal/io attribution recorded, and the exponent
-    self-censors (null + reason) when either SF's spread exceeds the
-    query gate."""
-    from appengine_mapreduce_spark.plans.registry import all_queries
-
-    names = ("corpus_build_pipeline", "semantic_dedup_keepers")
-    qs = all_queries()
-    out: dict[str, dict] = {}
-    runs_of: dict[tuple[str, str], list[float]] = {}
-    spark = get_spark(app_name="bench-capstones")
-    try:
-        for label, d in (("sf0.1", sf_dir), ("sf1", sf1_dir)):
-            if d is None:
-                continue
-            _pretouch(d)
-            for name in names:  # warmup pass
-                qs[name].fn(spark, d).collect()
-            for _ in range(3):  # interleaved: a burst hits one round
-                for name in names:
-                    s0, _, io0 = cpu_stat()
-                    t0 = time.perf_counter()
-                    n = len(qs[name].fn(spark, d).collect())
-                    dt = time.perf_counter() - t0
-                    s1, _, io1 = cpu_stat()
-                    runs_of.setdefault((name, label), []).append(dt)
-                    blk = out.setdefault(name, {})
-                    acc = blk.setdefault(f"{label}_cpu", {
-                        "steal_jiffies_d": 0, "io_stall_us_d": 0})
-                    if s0 >= 0 and s1 >= 0:
-                        acc["steal_jiffies_d"] += s1 - s0
-                    if io0 >= 0 and io1 >= 0:
-                        acc["io_stall_us_d"] += io1 - io0
-                    print(f"# [capstone {label}] {name}: {dt:.3f}s "
-                          f"({n} rows, steal_d {acc['steal_jiffies_d']} "
-                          f"io_stall_d {acc['io_stall_us_d']}us)",
-                          file=sys.stderr)
-    finally:
-        spark.stop()
-    for name, block in out.items():
-        spreads = {}
-        for label in ("sf0.1", "sf1"):
-            runs = runs_of.get((name, label))
-            if not runs:
-                continue
-            med = statistics.median(runs)
-            block[label] = round(med, 4)
-            block[f"{label}_runs"] = [round(r, 4) for r in runs]
-            spreads[label] = round((max(runs) - min(runs)) / med, 3)
-            block[f"{label}_spread"] = spreads[label]
-        if "sf0.1" in block and "sf1" in block:
-            noisy = [lb for lb, s in spreads.items()
-                     if s > QUERY_SPREAD_GATE]
-            if noisy:
-                block["scaling_exponent"] = None
-                block["exponent_suppressed_reason"] = (
-                    f"spread > {QUERY_SPREAD_GATE:g} at {noisy}: medians "
-                    f"burst-hit this window — re-measure quietly "
-                    f"(tools/sf2_sweep.py) before reading an exponent"
-                )
-            else:
-                block["scaling_exponent"] = round(
-                    math.log10(max(block["sf1"], 1e-4)
-                               / max(block["sf0.1"], 1e-4)), 2)
-    return out
-
-
-def _timed(df) -> float:
-    t0 = time.perf_counter()
-    df.collect()
-    return time.perf_counter() - t0
-
-
-def _run_skew() -> dict:
-    """Measured skew evidence (VERDICT r4 ask #6): a zipf-keyed join
-    (half of all fact rows share ONE key — the hot-key shape that stalls
-    a 1000-executor cluster on one task), timed in both downstream
-    shapes, because they have different remedies:
-
-    - join feeding a GLOBAL aggregate: AQE's skew-split applies (the
-      split doesn't break any downstream partitioning requirement) —
-      OFF vs ON is the wall-clock value of the runtime re-plan.
-    - join feeding a SAME-KEY aggregate: AQE must NOT split (the
-      aggregation needs hash partitioning on the join key; splitting
-      would require re-shuffling), so OFF==ON there — this is the shape
-      where `salted_join` earns its place: the salt balances the JOIN
-      tasks and only the (already partially-aggregated) result
-      re-shuffles for the final agg."""
-    from pyspark.sql import functions as F
-
-    from appengine_mapreduce_spark.operators.joins import salted_join
-
-    n, hot_share = 24_000_000, 2  # id%2==0 -> key 0: 50% of rows
-    spark = get_spark(app_name="bench-skew")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "8MB")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-
-        def fixture():
-            big = spark.range(0, n).select(
-                F.when(F.col("id") % hot_share == 0, 0)
-                .otherwise(F.col("id") % 1000).alias("k"),
-                F.col("id").alias("v"),
-                F.repeat(F.lit("x"), 64).alias("pad"),
-            )
-            dim = spark.range(0, 1000).select(
-                F.col("id").alias("dk"), (F.col("id") * 10).alias("dv"))
-            return big, dim
-
-        def global_agg_join():
-            big, dim = fixture()
-            return big.join(dim, big.k == dim.dk).select(
-                F.sum(F.col("v") + F.col("dv")).alias("s"))
-
-        def keyed_agg_join():
-            big, dim = fixture()
-            return big.join(dim, big.k == dim.dk).groupBy("k").agg(
-                F.sum(F.col("v") + F.col("dv")).alias("s"))
-
-        results: dict[str, float] = {}
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        global_agg_join().collect()  # warmup (codegen, range JIT)
-        results["global_agg_skew_off_sec"] = round(_timed(global_agg_join()), 3)
-        results["keyed_agg_skew_off_sec"] = round(_timed(keyed_agg_join()), 3)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        results["global_agg_skew_on_sec"] = round(_timed(global_agg_join()), 3)
-        results["keyed_agg_skew_on_sec"] = round(_timed(keyed_agg_join()), 3)
-
-        big, dim = fixture()
-        salted = salted_join(big, dim, key="k", build_key="dk").groupBy(
-            "k").agg(F.sum(F.col("v") + F.col("dv")).alias("s"))
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        results["keyed_agg_salted_join_sec"] = round(_timed(salted), 3)
-        results["rows"] = n
-        results["hot_key_share"] = 1.0 / hot_share
-        for k, v in results.items():
-            print(f"# [skew] {k}: {v}", file=sys.stderr)
-        return results
-    finally:
-        spark.stop()
-
-
-_PURCHASE_SCHEMA = "event_id bigint, user_id bigint, value double"
-
-
-def _events(spark, sf_dir: str):
-    """The events columns the mapreduce_api_eventfilter anchor reads."""
-    from appengine_mapreduce_spark.plans.tables import load
-
-    return load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-
-
-def _purchase_filter():
-    """Same per-row work as the mapreduce_api_eventfilter anchor, so the
-    seam probe isolates exactly that anchor's seam."""
-    from appengine_mapreduce_spark.core.worker import MapOnlyMapper
-
-    class PurchaseFilter(MapOnlyMapper):
-        def __call__(self, ctx, row):
-            if row.event_type == "purchase":
-                yield (row.event_id, row.user_id, row.value)
-
-    return PurchaseFilter()
-
-
-def _run_seam_probe(
-    sf_dirs: "list[tuple[str, str]]", n_runs: int = 5
-) -> dict:
-    """Isolated generator-UDF seam probe (VERDICT r7 ask #1 / r8 #2):
-    rows/sec through ``run_mapper`` ALONE — map-only, no shuffle, no
-    reduce — in a fresh SparkContext per SF, separating the COLD first
-    collect (Python worker spawn + Arrow init) from WARM steady-state
-    runs with their own spread. If warm throughput is stable while cold
-    wobbles, the mapreduce_api_* anchors' round-to-round variance is
-    worker-startup noise, not a seam throughput change.
-
-    Each run also records the host-CPU-steal and idle deltas from
-    /proc/stat: round-9 diagnosis found the seam's intermittent
-    multi-second stalls come in exactly two measured modes — (A) host
-    CPU steal bursts (this box is a shared-host VM; steal_d spikes with
-    wall time at near-zero idle) and (B) idle-wait stalls in the Arrow
-    RETURN path (all 32 workers blocked simultaneously, idle_d huge,
-    steal ~0, JVM GC ~0, no worker respawn). Both are environmental /
-    runtime-level, not plan-level: the same run's shuffle bytes and row
-    counts are byte-identical across spikes. The per-run counters make
-    every future wobble attributable from the artifact alone.
-
-    The probe reports TWO figures (round-11 decomposition, SCALING.md
-    "seam throughput decomposition"):
-    - per-SF ``warm_rows_per_sec``: END-TO-END job rate — parquet scan
-      (string column), widening exchange, Arrow feed, generator, collect.
-      At 1M-row inputs the ~0.4-0.7 s fixed job cost is ~half the wall,
-      so this figure sits under 1M rows/s BY CONSTRUCTION and measures
-      job shape, not the seam (measured: a fully-vectorized pandas or
-      mapInArrow body lands within 5% of the generator adapter — the
-      adapter adds nothing; the wall is scan + exchange + Arrow).
-    - ``dispatch``: the generator-DISPATCH rate the BASELINE design cap
-      (reference parameters.py:222 processing_rate) actually describes —
-      the run_mapper path over an in-memory 8M-row frame, overhead
-      amortized. This carries the ≥1M rec/s floor
-      (tests/test_throughput.py asserts the drift-adjusted figure)."""
-
-    from pyspark.sql.types import StructType
-
-    from appengine_mapreduce_spark.core.adapters import run_mapper
-    from appengine_mapreduce_spark.core.counters import Counters
-    from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
-    from appengine_mapreduce_spark.core.worker import MapOnlyMapper
-
-    # Resolve calibration BEFORE opening the seam context (cached from
-    # the suite phase in a normal bench run; a standalone caller must
-    # not end up with two live SparkContexts in one process).
-    cal_med, cal_spread, _, cal_attempts = _calibrate()
-    drift = cal_med / CALIBRATION_REF if CALIBRATION_REF > 0 else 1.0
-
-    out: dict[str, dict] = {}
-    for label, d in sf_dirs:
-        spark = get_spark(app_name=f"bench-seam-{label}")
-        try:
-            ev = ensure_parallelism(_events(spark, d))
-            n_in = ev.count()
-            counters = Counters(spark.sparkContext)
-            schema = StructType.fromDDL(_PURCHASE_SCHEMA)
-
-            def plan():
-                return run_mapper(
-                    ev, _purchase_filter(), schema, counters.accumulator
-                )
-
-            t0 = time.perf_counter()
-            plan().collect()
-            cold = time.perf_counter() - t0
-            warm, runs_detail = [], []
-            for _ in range(n_runs):
-                s0, i0, io0 = cpu_stat()
-                t0 = time.perf_counter()
-                plan().collect()
-                dt = time.perf_counter() - t0
-                s1, i1, io1 = cpu_stat()
-                warm.append(dt)
-                runs_detail.append({
-                    "sec": round(dt, 4),
-                    "steal_d": s1 - s0 if s0 >= 0 else -1,
-                    "idle_d": i1 - i0 if i0 >= 0 else -1,
-                    "io_stall_us_d": io1 - io0 if io0 >= 0 else -1,
-                })
-            med = statistics.median(warm)
-            # Drift-adjusted throughput (VERDICT r9 #4): the BASELINE.md
-            # ≥1M rec/s design floor is stated for the reference box, so
-            # the mechanical check is raw × drift_factor — but only when
-            # the calibration probe's own spread passes the gate (a noisy
-            # probe can't adjust anything; the raw figure stays primary
-            # either way).
-            raw_rps = int(n_in / med) if med > 0 else -1
-            norm_rps = (
-                int(raw_rps * drift)
-                if raw_rps > 0 and cal_spread <= CAL_SPREAD_GATE
-                else None
-            )
-            out[label] = {
-                "rows_in": n_in,
-                "cold_sec": round(cold, 4),
-                "warm_median_sec": round(med, 4),
-                "warm_spread": round((max(warm) - min(warm)) / med, 3),
-                "warm_rows_per_sec": raw_rps,
-                "warm_rows_per_sec_normalized": norm_rps,
-                "drift_factor": round(drift, 4),
-                "calibration_spread": round(cal_spread, 4),
-                "calibration_attempts": cal_attempts,
-                "cold_minus_warm_sec": round(cold - med, 4),
-                "runs": n_runs,
-                "runs_detail": runs_detail,
-            }
-            print(
-                f"# [seam {label}] {n_in} rows: cold {cold:.3f}s, warm "
-                f"median {med:.3f}s over {n_runs} "
-                f"(min {min(warm):.3f} max {max(warm):.3f}) -> "
-                f"{out[label]['warm_rows_per_sec']} rows/s warm "
-                f"(drift-adjusted {norm_rps if norm_rps else 'n/a'})",
-                file=sys.stderr,
-            )
-        finally:
-            spark.stop()
-
-    # Dispatch-rate block: the BASELINE-floor figure (see docstring).
-    from pyspark.sql import functions as F
-
-    n_disp = 8_000_000
-    spark = get_spark(app_name="bench-seam-dispatch")
-    try:
-        df = spark.range(0, n_disp, 1, 32).select(
-            F.col("id"), (F.col("id") % 1000).alias("v")
-        )
-        d_schema = StructType.fromDDL("id bigint, v2 bigint")
-        d_counters = Counters(spark.sparkContext)
-
-        class _PassThrough(MapOnlyMapper):
-            def __call__(self, ctx, row):
-                if row.v % 10 != 0:
-                    yield (row.id, row.v * 2)
-
-        def d_plan():
-            return run_mapper(
-                df, _PassThrough(), d_schema, d_counters.accumulator
-            )
-
-        d_plan().count()
-        d_warm = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            d_plan().count()
-            d_warm.append(time.perf_counter() - t0)
-        d_med = statistics.median(d_warm)
-        d_raw = int(n_disp / d_med) if d_med > 0 else -1
-        d_norm = (
-            int(d_raw * drift)
-            if d_raw > 0 and cal_spread <= CAL_SPREAD_GATE
-            else None
-        )
-        out["dispatch"] = {
-            "rows_in": n_disp,
-            "warm_median_sec": round(d_med, 4),
-            "warm_spread": round((max(d_warm) - min(d_warm)) / d_med, 3),
-            "rows_per_sec": d_raw,
-            "rows_per_sec_normalized": d_norm,
-            "drift_factor": round(drift, 4),
-            "calibration_spread": round(cal_spread, 4),
-            "calibration_attempts": cal_attempts,
-            "runs": n_runs,
-        }
-        print(
-            f"# [seam dispatch] {n_disp} rows in-memory: median "
-            f"{d_med:.3f}s -> {d_raw} rows/s "
-            f"(drift-adjusted {d_norm if d_norm else 'n/a'})",
-            file=sys.stderr,
-        )
-    finally:
-        spark.stop()
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     out = _run_suite(sf_dir, N_ROUNDS, f"sf{sf:g}")
     detail: dict = {"sf": sf, **out}
-
-    # Compact contract line: the driver's capture window is finite, so
-    # everything beyond the contract fields lives in the detail file.
     result = {
         "metric": "headline_queries_total",
         "value": out["value"],
@@ -819,77 +165,32 @@ def main() -> None:
         "queries": out["queries"],
         "runs": out["runs"],
         "sf": sf,
-        "calibration_sec": out["calibration_sec"],
-        "calibration_spread": out["calibration_spread"],
-        "calibration_version": out["calibration_version"],
-        "drift_factor": out["drift_factor"],
-        "normalized_total": out["normalized_total"],
     }
-    if out.get("normalized_suppressed_reason"):
-        result["normalized_suppressed_reason"] = (
-            out["normalized_suppressed_reason"]
-        )
-    if out.get("queries_flagged"):
-        # headline figures with spread > gate are never reported
-        # un-flagged (VERDICT r13 ask #4) — names on the contract line,
-        # full attribution in the detail file
-        result["queries_flagged"] = sorted(out["queries_flagged"])
 
-    # Scale section (VERDICT r3 ask #1): one measured order of magnitude
-    # above the primary SF, same frozen headliner set, warmup + 2 rounds;
-    # failures never cost the primary numbers.
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", os.path.join(_REPO, "testdata", "sf1"))
-    have_sf1 = False
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and sf == 0.1:
+    # One order of magnitude above the primary SF, same headline set;
+    # a failure here never costs the primary numbers.
+    if sf == 0.1:
+        sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(_REPO, "testdata", "sf1"))
         try:
             if _ensure_sf1(sf1_dir):
-                have_sf1 = True
-                sf1_rounds = int(os.environ.get("SPARK_GRAFT_SF1_ROUNDS", "2"))
-                sf1 = _run_suite(sf1_dir, sf1_rounds, "sf1")
+                sf1 = _run_suite(sf1_dir, SF1_ROUNDS, "sf1")
                 exponents = {
-                    n: round(
-                        math.log10(
-                            max(sf1["queries"][n], 1e-4)
-                            / max(out["queries"][n], 1e-4)), 2)
-                    for n in out["queries"]
+                    n: round(math.log10(max(sf1["queries"][n], 1e-4) / max(t, 1e-4)), 2)
+                    for n, t in out["queries"].items()
                 }
-                detail["sf1"] = {**sf1,
-                                 "scaling_exponent_vs_sf0.1": exponents}
+                detail["sf1"] = {**sf1, "scaling_exponent_vs_sf0.1": exponents}
                 result["sf1_total"] = sf1["value"]
                 result["sf1_worst_exponent"] = max(exponents.values())
-        except Exception as exc:
-            print(f"# sf1 phase failed: {exc}", file=sys.stderr)
+        except Exception:
+            print("# sf1 phase failed:", file=sys.stderr)
+            traceback.print_exc()
 
-    if os.environ.get("SPARK_GRAFT_CAPSTONES", "1") != "0" and sf == 0.1:
-        try:
-            detail["capstones"] = _run_capstones(
-                sf_dir, sf1_dir if have_sf1 else None)
-        except Exception as exc:
-            print(f"# capstone phase failed: {exc}", file=sys.stderr)
-
-    if os.environ.get("SPARK_GRAFT_SKEW", "1") != "0" and sf == 0.1:
-        try:
-            detail["skew"] = _run_skew()
-        except Exception as exc:
-            print(f"# skew phase failed: {exc}", file=sys.stderr)
-
-    if os.environ.get("SPARK_GRAFT_SEAM", "1") != "0" and sf == 0.1:
-        try:
-            dirs = [("sf0.1", sf_dir)]
-            if have_sf1:
-                dirs.append(("sf1", sf1_dir))
-            detail["udf_seam_probe"] = _run_seam_probe(dirs)
-        except Exception as exc:
-            print(f"# seam probe failed: {exc}", file=sys.stderr)
-
-    # Durable artifact first (survives any stdout truncation), then the
-    # contract line as the FINAL stdout output with nothing after it.
-    local = os.path.join(_REPO, "BENCH_LOCAL.json")
-    with open(local, "w") as fh:
+    # Durable artifact first, then the contract line as the FINAL stdout
+    # output with nothing after it.
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
-    print(f"# full payload written to {local}", file=sys.stderr)
-    result["detail_file"] = os.path.basename(local)
+    print(f"# full payload written to {DETAIL_PATH}", file=sys.stderr)
+    result["detail_file"] = os.path.basename(DETAIL_PATH)
     sys.stderr.flush()
     print(json.dumps(result))
     sys.stdout.flush()

@@ -493,8 +493,9 @@ def test_skew_split_respects_downstream_partitioning(spark):
     output feeds a GLOBAL aggregate (no partitioning requirement
     downstream) and must NOT fire when the output feeds a SAME-KEY
     aggregate — splitting there would break the aggregation's reuse of
-    the join's hash partitioning. Wall-clock consequences are measured
-    in bench.py's skew block; this pins the plan-level behavior."""
+    the join's hash partitioning. This pins the plan-level behavior (the
+    wall-clock side was measured once, SCALING.md "Measured skew
+    evidence")."""
     import contextlib
     import io
 

@@ -5,8 +5,8 @@ broadcast, a dropped partial aggregation, or a join reorder shows up
 here as an order-of-magnitude jump long before it is visible over bench
 noise.
 
-Expected values are the executor-summary shuffle-write diff around one
-collect (``runtime_metrics.total_shuffle_write_bytes``); bounds are wide
+Expected values are the shuffle bytes written by one collect's own Spark
+jobs (``runtime_metrics.profile``, scoped by job group); bounds are wide
 (0.4x-2.5x) because codec ratios and partition counts wobble the exact
 byte count, while the failure modes we guard against change it by 10x or
 more.
@@ -16,9 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from appengine_mapreduce_spark.core.runtime_metrics import (
-    total_shuffle_write_bytes,
-)
+from appengine_mapreduce_spark.core.runtime_metrics import profile
 from appengine_mapreduce_spark.plans.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -62,9 +60,9 @@ LO, HI = 0.4, 2.5
 @pytest.mark.parametrize("name", sorted(ANCHORS))
 def test_shuffle_bytes_pinned(spark, name):
     qs = all_queries()
-    before = total_shuffle_write_bytes(spark)
-    qs[name].fn(spark, SF_DIR).collect()
-    moved = total_shuffle_write_bytes(spark) - before
+    with profile(spark, name) as scope:
+        qs[name].fn(spark, SF_DIR).collect()
+    moved = scope.record.shuffle_write_bytes
     exp = ANCHORS[name]
     assert exp * LO <= moved <= exp * HI, (
         f"{name}: shuffled {moved} bytes, expected ~{exp} "

@@ -110,6 +110,21 @@ def test_line_input_offsets_split_boundaries(spark, tmp_path):
     assert _by_partition(df) == _replay_partitions(data, 3)
 
 
+def test_line_input_offsets_min_partitions_for_dir_and_uri(spark, tmp_path):
+    """``min_partitions`` splits a directory path and a ``file:`` URI as it
+    splits the plain path: the split cap comes from the bytes Hadoop
+    lists, not from a local glob of the path string."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.txt").write_bytes(b"".join(b"row %06d\n" % i for i in range(20_000)))
+    (d / "_SUCCESS").write_bytes(b"")
+    want = sorted(line_input(spark, str(d / "a.txt"), with_offsets=True, min_partitions=3).collect())
+    for path in (str(d), (d / "a.txt").as_uri()):
+        df = line_input(spark, path, with_offsets=True, min_partitions=3)
+        assert df.rdd.getNumPartitions() >= 3, path
+        assert sorted(df.collect()) == want, path
+
+
 @pytest.mark.parametrize(
     "data",
     [

@@ -24,17 +24,16 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
+from appengine_mapreduce_spark.core.runtime_metrics import profile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-N_ROWS = int(os.environ.get("SPARK_GRAFT_SKEWPROBE_ROWS", str(20_000_000)))
+N_ROWS = 20_000_000
 DOMINANT_SHARE = 0.85
-ROUNDS = int(os.environ.get("SPARK_GRAFT_SKEWPROBE_ROUNDS", "3"))
+ROUNDS = 3
 BUDGET = 2048
 
 
@@ -68,22 +67,16 @@ def main() -> None:
     )
     docs.count()  # materialize so every mode reads the same cached input
 
-    def run(shards):
+    def rollup(shards):
         packed = pack_by_token_budget(
             docs, tokens_col="n_tokens", budget=BUDGET,
             order_col="row_key", partition_col="lang", shards=shards,
         )
-        t0 = time.perf_counter()
-        n = (
-            packed.groupBy("lang", "bin")
-            .agg(F.sum("n_tokens").alias("fill"))
-            .count()
-        )
-        return time.perf_counter() - t0, n
+        return packed.groupBy("lang", "bin").agg(F.sum("n_tokens").alias("fill"))
 
     modes = [("unsharded", None), ("sharded_k8", 8), ("sharded_k32", 32)]
     for _, s in modes:  # warmup: JIT + cache
-        run(s)
+        rollup(s).count()
 
     samples: dict[str, list[float]] = {m: [] for m, _ in modes}
     bins: dict[str, int] = {}
@@ -92,16 +85,16 @@ def main() -> None:
     }
     for _ in range(ROUNDS):
         for mode, s in modes:
-            s0, _, io0 = cpu_stat()
-            dt, n = run(s)
-            s1, _, io1 = cpu_stat()
-            samples[mode].append(dt)
-            bins[mode] = n
-            if s0 >= 0:
-                attr[mode]["steal_jiffies_d"] += s1 - s0
-            if io0 >= 0:
-                attr[mode]["io_stall_us_d"] += io1 - io0
-            print(f"# {mode}: {dt:.3f}s ({n} bins)", file=sys.stderr)
+            df = rollup(s)
+            with profile(spark, mode) as scope:
+                bins[mode] = df.count()
+            rec = scope.record
+            samples[mode].append(rec.wall_s)
+            attr[mode]["steal_jiffies_d"] += rec.steal_jiffies
+            attr[mode]["io_stall_us_d"] += rec.io_stall_us
+            print(f"# {mode}: {rec.wall_s:.3f}s ({bins[mode]} bins, "
+                  f"shuffle {rec.shuffle_write_bytes} B, spill "
+                  f"{rec.spill_disk_bytes} B)", file=sys.stderr)
 
     # The skew number itself: rows landing in the biggest window
     # partition under each mode (what ONE task must sort sequentially).

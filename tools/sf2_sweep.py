@@ -35,6 +35,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat
+from bench import _pretouch
 
 _CHILD_CODE = """
 import sys, json
@@ -132,8 +133,8 @@ print("@@RESULT@@" + json.dumps(out))
 
 # Capstone anchor (VERDICT r9 ask #6): the two whole-pipeline plans at
 # sf2, closing the sf0.1 -> sf1 -> sf2 exponent series. collect()-timed
-# like bench._run_capstones (results are per-doc/per-vec summaries, not
-# SF-scaled blobs); own subprocess per SF like the suites.
+# (results are per-doc/per-vec summaries, not SF-scaled blobs); own
+# subprocess per SF like the suites.
 # data_recipe_pack_stats joined round 14: the recipe capstone's packing
 # window went SHARDED (VERDICT r13 ask #3), so its doubling exponents are
 # the standing evidence that the sharded plan scales.
@@ -162,24 +163,6 @@ print("@@RESULT@@" + json.dumps(out))
 _PHASE_CPU: "dict[str, dict]" = {}
 
 
-def _pretouch(sf_dir: str) -> None:
-    """Stream the fixture's parquet through the page cache before a
-    timed child. Round-13 sf8 finding: this host pins page cache at
-    ~4 GB, so a fresh child's first pass pays partially-cold reads at
-    whatever the SF's byte size is — at 2-6 s query runtimes that IO
-    term swamped the doubling signal (>50% swing between identical
-    children). The warmup round inside the child does NOT fully absorb
-    it (shuffle/JVM churn evicts). Exponents should measure compute,
-    not cold disk — so warm the files, and let the artifact's
-    io_stall_us_d show any residual."""
-    import glob as _glob
-
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        with open(p, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
-
-
 def _child(code_tmpl: str, sf_dir: str, label: str,
            queries: "tuple | None" = None) -> dict:
     if queries is not None and not queries:
@@ -197,7 +180,7 @@ def _child(code_tmpl: str, sf_dir: str, label: str,
     # Per-phase host-CPU attribution (round 10): the round-10 first sweep
     # attempt was silently wrecked by a host steal burst during the sf1
     # suite window (q6 9.2s vs 0.76s clean, NEGATIVE sf1->sf2 exponents)
-    # — the same Mode A the seam probe instruments. Sampling /proc/stat
+    # — host steal, SCALING.md's "Mode A". Sampling /proc/stat
     # around each child makes contamination visible IN the artifact, so
     # a reader (or a re-run decision) never needs an out-of-band probe.
     s0, i0, io0 = cpu_stat()
@@ -321,7 +304,6 @@ def _redo_phases(artifact: str, phases: "list[str]",
             out[f"{key}_total"] = res["value"]
             out[f"{key}_queries"] = res["queries"]
             out[f"{key}_spread"] = res["spread"]
-            out[f"calibration_sec_{key}"] = res["calibration_sec"]
             out["scaling_exponent_sf1_to_sf2_log2"] = {
                 n: round(math.log2(
                     max(out["sf2_queries"][n], 1e-4)
@@ -461,8 +443,6 @@ def main() -> None:
         "worst_noop_exponent_sf2_to_sf4": max(noop_exponents_sf4.values()),
         "capstones": capstones,
         "phase_cpu": _PHASE_CPU,
-        "calibration_sec_sf1": sf1["calibration_sec"],
-        "calibration_sec_sf2": sf2["calibration_sec"],
     }
     with open(artifact, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)

@@ -2,12 +2,12 @@
 """Memory-pressure (spill) probe — VERDICT r4 ask #4.
 
 Runs the frozen bench headliner set at sf1 inside a deliberately SMALL
-JVM (default --driver-memory 2g, local[8]) and records per-query spill
-bytes and peak execution memory from the engine's status store. A green
-run proves that external sort/aggregation — not RAM — carries the
-shuffles: the 128 GiB-sandbox stand-in for the 100 TB claim (reference
-analog: the sort worker's fixed RAM budget, java SortWorker.java:54 —
-everything beyond it goes to disk there too).
+JVM (default --driver-memory 2g, local[8]) and records each query's own
+spill bytes and peak execution memory (one ``runtime_metrics.profile``
+record per query). A green run proves that external sort/aggregation —
+not RAM — carries the shuffles: the 128 GiB-sandbox stand-in for the
+100 TB claim (reference analog: the sort worker's fixed RAM budget, java
+SortWorker.java:54 — everything beyond it goes to disk there too).
 
 Plans are materialized through the noop sink (full execution, zero
 driver-side collect) so the evidence is about EXECUTION memory, which is
@@ -25,7 +25,7 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from dataclasses import asdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -69,48 +69,34 @@ def _wide_probes(spark, sf_dir: str) -> "dict[str, object]":
 
 
 def _child(sf_dir: str) -> dict:
-    from appengine_mapreduce_spark.core.runtime_metrics import stage_totals
-    from appengine_mapreduce_spark.plans import bench_queries
+    from appengine_mapreduce_spark.core.runtime_metrics import profile
+    from appengine_mapreduce_spark.plans.registry import all_queries
     from appengine_mapreduce_spark.session import get_spark
 
     spark = get_spark(app_name="spill-probe")
     heap = spark.sparkContext._conf.get("spark.driver.memory")
     results: dict[str, dict] = {}
-    before = stage_totals(spark)
-    bench_fns = {n: s.fn for n, s in bench_queries().items()}
+    # comma-separated substrings, matched against every registered query
+    # and the wide probes; unset runs the headline set and the wide probes
+    only = [s for s in os.environ.get("SPILL_PROBE_ONLY", "").split(",") if s]
+    queries = {n: s.fn for n, s in all_queries().items() if only or s.bench}
     wide = {n: (lambda sp, sd, df=df: df)
             for n, df in _wide_probes(spark, sf_dir).items()}
-    todo = {**bench_fns, **wide}
-    only = os.environ.get("SPILL_PROBE_ONLY")  # comma-sep substring filter
+    todo = {**queries, **wide}
     if only:
-        subs = [s for s in only.split(",") if s]
-        todo = {n: f for n, f in todo.items()
-                if any(s in n for s in subs)}
+        todo = {n: f for n, f in todo.items() if any(s in n for s in only)}
     for name, spec in sorted(todo.items()):
-        t0 = time.perf_counter()
         err = None
-        try:
-            spec(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-        except Exception as exc:  # record, keep probing
-            err = f"{type(exc).__name__}: {exc}"[:200]
-        dt = time.perf_counter() - t0
-        after = stage_totals(spark)
-        results[name] = {
-            "sec": round(dt, 3),
-            "shuffle_write_bytes":
-                after.shuffle_write_bytes - before.shuffle_write_bytes,
-            "memory_spill_bytes":
-                after.memory_spill_bytes - before.memory_spill_bytes,
-            "disk_spill_bytes":
-                after.disk_spill_bytes - before.disk_spill_bytes,
-            "peak_execution_memory": after.peak_execution_memory,
-            "err": err,
-        }
-        print(f"# {name}: {dt:.2f}s spill(disk)="
-              f"{results[name]['disk_spill_bytes']} err={err}",
-              file=sys.stderr)
-        before = after
+        with profile(spark, name) as scope:
+            try:
+                spec(spark, sf_dir).write.format("noop").mode(
+                    "overwrite").save()
+            except Exception as exc:  # record, keep probing
+                err = f"{type(exc).__name__}: {exc}"[:200]
+        rec = scope.record
+        results[name] = {**asdict(rec), "err": err}
+        print(f"# {name}: {rec.wall_s:.2f}s spill(disk)={rec.spill_disk_bytes} "
+              f"peak={rec.peak_execution_memory_bytes} err={err}", file=sys.stderr)
     spark.stop()
     n_err = sum(1 for r in results.values() if r["err"])
     return {
@@ -118,7 +104,7 @@ def _child(sf_dir: str) -> dict:
         "cores": os.environ.get("SPARK_GRAFT_CPUS"),
         "queries": results, "n_queries": len(results), "n_err": n_err,
         "total_disk_spill_bytes": sum(
-            r["disk_spill_bytes"] for r in results.values()),
+            r["spill_disk_bytes"] for r in results.values()),
     }
 
 
