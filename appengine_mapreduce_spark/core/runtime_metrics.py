@@ -31,26 +31,27 @@ from pyspark.sql import SparkSession
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
-def cpu_stat() -> tuple[int, int, int]:
-    """(steal jiffies, idle jiffies, PSI io full-stall µs) of the host,
-    from ``/proc/stat`` and ``/proc/pressure/io``; -1 when a channel is
-    unreadable. Diff two reads around a timed phase: steal bursts and
-    disk-writeback stalls are distinct noise modes on a shared host."""
+def cpu_stat() -> tuple[int, int]:
+    """(steal jiffies, PSI io some-stall µs) of the host, from
+    ``/proc/stat`` and ``/proc/pressure/io``; -1 when a channel is
+    unreadable. The io channel is the ``some`` total, the stall
+    ``perfbench/tap.host_counters`` reads. Diff two reads around a timed
+    phase: steal bursts and disk-writeback stalls are distinct noise
+    modes on a shared host."""
     try:
         with open("/proc/stat") as fh:
-            f = fh.readline().split()
-        steal, idle = int(f[8]), int(f[4])
+            steal = int(fh.readline().split()[8])
     except (OSError, IndexError, ValueError):
-        steal, idle = -1, -1
+        steal = -1
     io_us = -1
     try:
         with open("/proc/pressure/io") as fh:
             for line in fh:
-                if line.startswith("full"):
+                if line.startswith("some"):
                     io_us = int(line.rsplit("total=", 1)[1])
     except (OSError, IndexError, ValueError):
         pass
-    return steal, idle, io_us
+    return steal, io_us
 
 
 @dataclass(frozen=True)
@@ -92,12 +93,12 @@ def profile(spark: SparkSession, label: str) -> Iterator[ProfileScope]:
     saved = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
     scope = ProfileScope(f"profile-{label}-{uuid.uuid4().hex[:12]}")
     sc.setJobGroup(scope.group_id, label)
-    s0, _, io0 = cpu_stat()
+    s0, io0 = cpu_stat()
     t0 = time.perf_counter()
     try:
         yield scope
         wall = time.perf_counter() - t0
-        s1, _, io1 = cpu_stat()
+        s1, io1 = cpu_stat()
     finally:
         for k, v in zip(_GROUP_PROPS, saved):
             sc.setLocalProperty(k, v)

@@ -640,12 +640,12 @@ def encode_wav_adpcm_multi(
     samples_per_block: int = 505,
 ) -> bytes:
     """Compress N channels of linear int16 samples into an interleaved
-    multi-channel IMA ADPCM WAV (round-7 stereo upgrade; mono stays on
-    encode_wav_adpcm). Block layout per the registered WAVE format:
-    one 4-byte header per channel (first sample verbatim + running step
-    index), then the channels' closed-loop nibble streams interleaved
-    in 4-byte words. samples_per_block must be ≡ 1 (mod 8) so every
-    channel's samples_per_block-1 nibbles fill whole words; a short
+    multi-channel IMA ADPCM WAV (mono stays on encode_wav_adpcm). Block
+    layout per the registered WAVE format: one 4-byte header per channel
+    (first sample verbatim + running step index), then the channels'
+    closed-loop nibble streams interleaved in 4-byte words.
+    samples_per_block must be ≡ 1 (mod 8) so every channel's
+    samples_per_block-1 nibbles fill whole words; a short
     final block zero-pads its nibbles and the fact chunk records the
     true per-channel frame count so decode drops the padding."""
     if not channels or not channels[0]:

@@ -7,8 +7,7 @@ Supports bit depth 8, color types 0 (gray), 2 (RGB) and 6 (RGBA),
 non-interlaced — the subset a training-data pipeline normally needs for
 dimension/pixel-stat extraction. Everything here uses only ``struct`` and
 ``zlib`` from the stdlib, so the decode path in
-``operators/multimodal.py`` is REAL, not a stub (closes VERDICT.md
-"What's missing" #6).
+``operators/multimodal.py`` is REAL, not a stub.
 """
 
 from __future__ import annotations

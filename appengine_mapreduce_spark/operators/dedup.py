@@ -137,8 +137,7 @@ def bloom_incremental_dedup(
     guarantee holds even when ``id_col`` is NOT unique in the batch:
     hits are keyed on (id, content digest) and counted as DISTINCT
     probe indices, so duplicated ids (same or different text) cannot
-    inflate a row's hit count past k and mask a true duplicate
-    (VERDICT r8 "what's wrong" #2).
+    inflate a row's hit count past k and mask a true duplicate.
 
     Plan: one BroadcastHashJoin against the bit set (explode k bits per
     row -> inner join -> count hits per row id), one digest join for
@@ -700,7 +699,7 @@ def _strip_spans(
     the build side — correct when spans fit the broadcast budget (docs
     WITH spans × a few small structs each; the benchmark corpora are
     orders of magnitude inside it). It is a HARD FAILURE mode at the
-    extreme (ADVICE r10): a corpus where boilerplate touches ~100M+
+    extreme: a corpus where boilerplate touches ~100M+
     docs can push the span table past Spark's 8 GB broadcast cap /
     driver memory and kill the job rather than degrade. Pass
     ``broadcast_spans=False`` there: the join becomes a plain doc-keyed
@@ -717,8 +716,8 @@ def _strip_spans(
     )
     # Broadcast (when within budget): without the hint a mid-sized span
     # table would silently shuffle the corpus, invalidating the
-    # documented plan shape (ADVICE r9); the caller-visible escape hatch
-    # above covers the opposite extreme (ADVICE r10).
+    # documented plan shape; the caller-visible escape hatch above
+    # covers the opposite extreme.
     build = F.broadcast(per_doc) if broadcast_spans else per_doc
     joined = toked.join(build, id_col, "left").withColumn(
         "_spans", F.coalesce(F.col("_spans"), F.array())

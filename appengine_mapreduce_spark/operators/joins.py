@@ -46,8 +46,8 @@ def as_of_join(
     replaces the caller-side pre-aggregation idiom
     (``right.groupBy(key, ts).agg(max(...))``), which paid a whole
     extra exchange + aggregation of the right side just to de-tie
-    (round 14, opt guide §2.4: the window's one key exchange was always
-    going to re-shuffle those rows anyway — measured 0.54 → 0.35 s noop
+    (the window's one key exchange re-shuffles those rows anyway —
+    measured 0.54 → 0.35 s noop
     median at sf0.1 on the asof_join_latest_order shape, bit-identical
     output). Without it, ties must be pre-deduplicated by the caller if
     deterministic payloads are required.

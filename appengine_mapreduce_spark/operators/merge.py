@@ -65,13 +65,13 @@ def scd2_upsert(
 
     One shuffle, ONE pass: the full-outer join of current rows with
     updates on the key; each joined row emits its output rows (kept, or
-    closed+opened, or inserted) as an exploded array of structs. The
-    former three-branch union-of-filters evaluated the SAME join three
-    times — with exchange reuse that still meant three shuffle-read
-    passes and three probe evaluations over identical data (round 14,
-    opt guide §2.4; measured 0.81 → 0.66 s noop median at sf0.1 with
-    bit-identical output, and at scale it cuts the join's shuffle-read
-    volume 3×). History rows pass through untouched.
+    closed+opened, or inserted) as an exploded array of structs. A
+    three-branch union-of-filters would evaluate the SAME join three
+    times — with exchange reuse that still means three shuffle-read
+    passes and three probe evaluations over identical data (measured
+    0.81 → 0.66 s noop median at sf0.1 against that form, bit-identical
+    output; at scale the one pass reads the join's shuffle once, not
+    3×). History rows pass through untouched.
     """
     cur = dim.filter(F.col(is_current))
     hist = dim.filter(~F.col(is_current))

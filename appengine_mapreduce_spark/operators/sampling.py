@@ -106,7 +106,7 @@ def pack_by_token_budget(
     shuffle on the partition key; bins may overshoot by at most one
     document (documented, not first-fit bin packing).
 
-    Scale note (VERDICT r13): a plain ``partition_col`` is NOT enough at
+    Scale note: a plain ``partition_col`` is NOT enough at
     corpus scale. Omitting it makes the window GLOBAL (single-partition
     sort — dimension-sized inputs only), and a low-cardinality/skewed
     column like language funnels the dominant stratum (often 60-90% of a
@@ -233,7 +233,7 @@ def mix_to_target(
 
 
 def _validate_alpha(alpha: float) -> None:
-    """Reject non-portable alphas EAGERLY (ADVICE r12): dispatch is on
+    """Reject non-portable alphas EAGERLY: dispatch is on
     exact float equality, so a computed 0.75000000001 or a numpy
     float32(0.5) must fail at the ``temperature_sample`` /
     ``temperature_rates`` call site, not lazily from ``_alpha_weight``
@@ -404,7 +404,7 @@ def epoch_repeat(
     # Full epochs via INTEGER division (`DIV`), structurally identical
     # to the DuckDB oracle's `tp // 10000` — the double-divide-then-
     # truncate form was numerically equivalent for every realistic
-    # permyriad but only by argument-range analysis (ADVICE r12); DIV
+    # permyriad but only by argument-range analysis; DIV
     # makes the two engines the same function by construction, like
     # mix_to_target's cut. The staged column name must not clobber a
     # caller's column (the pre-DIV implementation added none).

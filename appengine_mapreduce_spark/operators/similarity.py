@@ -109,10 +109,10 @@ def adaptive_sign_bucket(
     every depth refines the previous one; the ``+2^(base+k)`` offset
     keeps all depth ranges disjoint.
 
-    Why depth-adaptive and not one fixed extra level (round 14): the
-    round-13 single-level split sent EVERY hot bucket to the same
-    ``base+extra`` depth, so once the corpus grows enough that the
-    extended buckets themselves exceed ``max_bucket_size`` there is
+    Why depth-adaptive and not one fixed extra level: a single-level
+    split sends EVERY hot bucket to the same ``base+extra`` depth, so
+    once the corpus grows enough that the extended buckets themselves
+    exceed ``max_bucket_size`` there is
     nowhere left to split and pair generation goes quadratic again —
     measured at sf8: all 2^10 extended buckets occupied, max occupancy
     334 vs the 64 cap, candidate pairs ~4x per corpus doubling
@@ -173,9 +173,9 @@ def two_sided_adaptive_bucket(
     (same base bucket → same depth → same refined id; the +2^(base+k)
     offset keeps every depth's id range disjoint).
 
-    This is the fix for the fixed-bucket quadratic round 5 measured on
-    semantic dedup (exponent 1.45) — and, since round 14, for the
-    SINGLE-LEVEL split's own saturation: one fixed extra depth re-goes
+    This is the fix for the fixed-bucket quadratic measured on semantic
+    dedup (exponent 1.45 at sf1) — and for the SINGLE-LEVEL split's own
+    saturation: one fixed extra depth re-goes
     quadratic once the corpus is large enough that every extended
     bucket is itself hot (measured on the one-sided twin at sf8:
     candidate pairs ~4x per doubling). Depth-adaptive splitting keeps
@@ -238,7 +238,7 @@ def _bucket_both_sides(
     ``max_bucket_size`` are given, fixed sign buckets when NEITHER is.
     A half-specified pair raises — silently falling back to fixed
     buckets would reintroduce the corpus-scale quadratic the adaptive
-    parameters exist to prevent (round-12 review finding)."""
+    parameters exist to prevent."""
     adaptive = extra_bits > 0 and max_bucket_size is not None
     if (extra_bits > 0) != (max_bucket_size is not None):
         raise ValueError(
@@ -292,20 +292,20 @@ def sign_lsh_batch_topk(
 
     Adaptive hot-bucket sub-splitting via
     :func:`two_sided_adaptive_bucket` (corpus-driven hot set applied to
-    both sides) is the DEFAULT (``extra_bits=4, max_bucket_size=64`` —
-    VERDICT r12: the fixed-bucket default silently handed new callers
-    the corpus-scale quadratic that round 5 measured at exponent 1.45).
+    both sides) is the DEFAULT (``extra_bits=4, max_bucket_size=64``: a
+    fixed-bucket default would silently hand new callers the
+    corpus-scale quadratic, measured at exponent 1.45 on semantic dedup).
     Fixed buckets grow linearly with the corpus, so per-bucket blocks
     grow quadratically when the query side scales too; opting out
     requires saying so explicitly — pass ``extra_bits=0,
     max_bucket_size=None`` together (a half-specified pair raises).
 
-    .. note:: BREAKING result change for default-arg callers (round 13,
-       flagged by ADVICE r13): the adaptive default changes the RETURNED
+    .. note:: Result change against the fixed-bucket plan: the adaptive
+       default changes the RETURNED
        top-k, not just the cost — sub-splitting shrinks hot candidate
        buckets, so neighbors that the fixed-bucket plan surfaced can
        drop out (recall shifts toward the sub-split buckets' locality).
-       Callers pinning the pre-r13 result set must pass
+       Callers pinning the fixed-bucket result set must pass
        ``extra_bits=0, max_bucket_size=None`` explicitly.
     """
     from pyspark.sql import Window
@@ -356,20 +356,19 @@ def hard_negative_topk(
 
     Hot buckets sub-split via :func:`two_sided_adaptive_bucket`
     (corpus-driven hot set on BOTH sides) BY DEFAULT (``extra_bits=4,
-    max_bucket_size=64`` — VERDICT r12 flipped the fixed-bucket
-    default): when mining negatives for every training example
+    max_bucket_size=64``): when mining negatives for every training example
     (queries ≈ corpus), fixed buckets grow linearly with the corpus,
-    so per-bucket blocks grow quadratically — the exact shape round 5
-    measured superlinear (exponent 1.45) on semantic dedup before
-    adaptive splitting. Opting out requires the explicit pair
+    so per-bucket blocks grow quadratically — the shape measured
+    superlinear (exponent 1.45) on semantic dedup without adaptive
+    splitting. Opting out requires the explicit pair
     ``extra_bits=0, max_bucket_size=None`` (half-specified raises).
 
-    .. note:: BREAKING result change for default-arg callers (round 13,
-       flagged by ADVICE r13): the adaptive default changes WHICH
+    .. note:: Result change against the fixed-bucket plan: the adaptive
+       default changes WHICH
        negatives are returned, not just the cost — sub-splitting
        shrinks hot candidate buckets, so negatives the fixed-bucket
        plan surfaced can drop out of the top-k. Callers pinning the
-       pre-r13 result set must pass ``extra_bits=0,
+       fixed-bucket result set must pass ``extra_bits=0,
        max_bucket_size=None`` explicitly."""
     from pyspark.sql import Window
 

@@ -214,10 +214,9 @@ def repetition_signals(
     - top_bigram_fraction: tokens covered by the most frequent bigram
                            (2 × its count / total tokens)
 
-    ZERO-shuffle since round 14 (opt guide §2.4 "remove shuffles
-    outright"): every metric is a function of ONE document, so instead of
-    explode + groupBy — which exchanged every (doc, token) and (doc,
-    bigram) pair, ~2x the corpus bytes, just to count within the doc —
+    ZERO-shuffle: every metric is a function of ONE document, so instead
+    of explode + groupBy — which would exchange every (doc, token) and
+    (doc, bigram) pair, ~2x the corpus bytes, just to count within the doc —
     the counts fold ROW-LOCALLY over the sorted token/bigram arrays
     (max frequency of a value == longest run in the sorted array). A
     100k-token document costs O(tokens·log tokens) inside the scan
@@ -397,10 +396,10 @@ def ngram_contamination(
     contaminated docs only.
 
     Scale shape: distinct (doc, gram) dedup is PER-DOCUMENT, so the train
-    side dedups ROW-LOCALLY (``array_distinct`` before the explode —
-    round 14, opt guide §2.4: the former ``.distinct()`` over the
-    exploded pairs exchanged every (doc, gram) in the corpus to remove
-    duplicates that only ever exist within one document). The eval side
+    side dedups ROW-LOCALLY (``array_distinct`` before the explode: a
+    ``.distinct()`` over the exploded pairs would exchange every (doc,
+    gram) in the corpus to remove duplicates that only ever exist within
+    one document). The eval side
     is a fixed benchmark suite (constant size regardless of corpus SF),
     so at 100 TB its distinct-gram set broadcasts; after the join only
     contamination HITS reach the per-doc count exchange. The join
@@ -446,11 +445,11 @@ def eval_contamination_report(
     integers — bit-identical across engines, no rounding needed.
 
     Scale shape: distinct (doc, gram) dedup is PER-DOCUMENT on both
-    sides, so it runs ROW-LOCALLY (``array_distinct`` before the explode
-    — round 14, opt guide §2.4: the former train-side ``.distinct()``
-    exchanged every (doc, gram) in the corpus to remove duplicates that
-    only exist within one document); the eval side is benchmark-sized,
-    so its gram set broadcasts and the corpus never shuffles.
+    sides, so it runs ROW-LOCALLY (``array_distinct`` before the explode:
+    a train-side ``.distinct()`` would exchange every (doc, gram) in the
+    corpus to remove duplicates that only exist within one document); the
+    eval side is benchmark-sized, so its gram set broadcasts and the
+    corpus never shuffles.
     """
     eval_grams = (
         eval_set.select(
@@ -623,7 +622,7 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     alpha: float = 1.0,
 ) -> DataFrame:
-    """Per-document language-model quality score (round 7): train an
+    """Per-document language-model quality score: train an
     add-alpha-smoothed BIGRAM model on the corpus and score every
     document by its mean token log-probability — the classic
     perplexity-proxy quality filter (a document whose word transitions

@@ -88,7 +88,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Join strategy is left to AQE's size guard: customer and orders scale "
     "with SF, so a hard broadcast hint would OOM executors at 100 TB; at "
     "small SF Spark still picks broadcast from measured sizes. "
-    "Round 14 (opt guide §2.3/§3): customer exists only to FILTER orders "
+    "Customer exists only to FILTER orders "
     "(c_custkey is unique; no customer column reaches the output), so it "
     "joins orders as LEFT SEMI *before* lineitem attaches — Spark does "
     "not reorder inner joins, and the old li⨝orders⨝cust order made the "

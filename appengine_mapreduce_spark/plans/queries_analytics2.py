@@ -31,13 +31,13 @@ def _dec(col: str):
     """,
     description="As-of join: latest order at-or-before each event, per user. "
     "Implemented single-pass (tag → union → window last ignorenulls), one "
-    "shuffle on the key — not a quadratic range join. Round 14 (opt guide "
-    "§2.4): the (o_custkey, o_orderdate) de-tie pre-aggregation is gone — "
+    "shuffle on the key — not a quadratic range join. There is no "
+    "(o_custkey, o_orderdate) de-tie pre-aggregation: "
     "its max(o_orderkey) folds into the window ORDER BY as a tiebreak "
-    "(tied rows sort ascending, last() picks the max), deleting the "
-    "orders-side exchange + aggregation that existed only to de-tie; "
-    "the window's key exchange re-shuffled those rows anyway. Measured "
-    "sf0.1: 0.54 -> 0.35 s noop median, bit-identical. Oracle: DuckDB's "
+    "(tied rows sort ascending, last() picks the max), so no "
+    "orders-side exchange + aggregation runs only to de-tie; the "
+    "window's key exchange would re-shuffle those rows anyway. Oracle: "
+    "DuckDB's "
     "native ASOF JOIN over the pre-aggregated form — the equivalence "
     "(dedup-by-max == tiebreak-ordered last) is oracle-checked.",
     bench=True,
@@ -485,7 +485,7 @@ def incident_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON c.user_id = e.user_id
          AND c.click_ts >= e.t0 AND c.click_ts < e.t1
     """,
-    description="incident_click_attribution with the round-7 ADAPTIVE "
+    description="incident_click_attribution with the ADAPTIVE "
     "bucket default: interval_join derives bucket_seconds from the "
     "median observed interval length (one scalar agg over the intervals "
     "side) instead of a caller constant, and clamps interval fan-out to "

@@ -324,7 +324,7 @@ _BLOOM_BITS = ", ".join(_BLOOM_BIT.format(off=1 + 8 * i) for i in range(4))
                CAST(SUM(dup * (1 - cand)) AS BIGINT) AS n_false_negatives
         FROM probe
     """,
-    description="Bloom-filter incremental dedup (round 7): probe a "
+    description="Bloom-filter incremental dedup: probe a "
     "re-crawl batch (new docs + every 7th history doc re-tagged) "
     "against a BROADCAST 4096-bit/4-hash Bloom bitmap of the history's "
     "digests — the bloom-then-verify pipeline that dedups a daily crawl "
@@ -424,7 +424,7 @@ def _sig_pipeline_sql(src: str, p: str) -> str:
              JOIN okb o
                ON o.band = h.band AND o.band_sig = h.band_sig
     """,
-    description="Cross-corpus NEAR-dup candidates (round 7): a re-crawl "
+    description="Cross-corpus NEAR-dup candidates: a re-crawl "
     "batch (new docs + every 11th history doc with one appended token — "
     "a changed-footer near-duplicate, NOT byte-identical) is banded and "
     "equi-joined against the HISTORY corpus's banded MinHash signatures "
@@ -508,7 +508,7 @@ def crosscorpus_neardup_candidates(
              JOIN hsize hs ON hs.doc_id = i.hist_id
         WHERE i.i / (ns.s + hs.s - i.i) >= 0.5
     """,
-    description="Cross-corpus near-dup VERIFICATION (round 7) — the "
+    description="Cross-corpus near-dup VERIFICATION — the "
     "verify half of crosscorpus_neardup_candidates' bloom-then-verify "
     "shape: exact n-gram Jaccard computed ONLY for candidate pairs "
     "(the shingle join is candidate-driven, so verification cost "

@@ -104,8 +104,8 @@ _DOT = (
               / (x.nrm * y.nrm) >= 0.8
     """,
     description=f"Embedding-cosine near-dup pairs: {_SEM_BITS}-bit sign-LSH "
-    "buckets with DEPTH-ADAPTIVE hot-bucket sub-splitting (round 14: "
-    "fixed buckets generate ~n²/2^bits pairs — measured exactly 4x per "
+    "buckets with DEPTH-ADAPTIVE hot-bucket sub-splitting (fixed "
+    "buckets generate ~n²/2^bits pairs — measured exactly 4x per "
     "corpus doubling, 51M candidate pairs at sf8; depth-adaptive "
     "splitting keeps occupancy ~the cap at any corpus size), exact "
     "cosine ≥ 0.8 within buckets — the semantic-dedup channel for "
@@ -203,10 +203,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (8 extra-bit headroom since round 14, was 4 single-level: the sf8
-# probe showed the single-level split saturating — all 2^10 extended
-# buckets occupied, max 334 rows vs the 64 cap, candidate pairs ~4x per
-# doubling. 6+8 = 14 bits ≤ the 64-dim embedding. Constants + depth
+# (8 extra-bit headroom: at sf8 a single-level 4-bit split saturated —
+# all 2^10 extended buckets occupied, max 334 rows vs the 64 cap,
+# candidate pairs ~4x per doubling. 6+8 = 14 bits ≤ the 64-dim embedding.
+# Constants + depth
 # CASE helpers shared with embedding_near_dup_pairs at the top of this
 # module.)
 _SEM_BUCKET = _sem_bucket_sql(_SEM_BITS)
@@ -254,7 +254,7 @@ _SEM_THRESH = 0.30
     f"— to the smallest k ≤ {_SEM_EXTRA_BITS} extra sign bits that "
     f"restores the occupancy cap — so pair generation stays ~LINEAR at "
     "ANY corpus size: fixed bits went superlinear at sf1 (exponent "
-    "1.45), and round 14 measured the single-level split saturating at "
+    "1.45), and a single-level split saturated at "
     "sf8 (pairs ~4x per doubling once every extended bucket was hot)) "
     "→ large-star/small-star connected components → per-cluster keeper "
     "(min id) with every member labeled keep/drop — the full "
@@ -348,9 +348,9 @@ _SUB_K = 8  # substring window length (tokens); min_docs = 2
                CAST(MAX(pos) - MIN(pos) + {_SUB_K} AS INT) AS span_tokens
         FROM sp GROUP BY doc_id, span_id
     """,
-    description="EXACT substring-level dedup (round 9, VERDICT r7/r8 ask "
-    "#1): maximal token spans repeated VERBATIM across >=2 distinct "
-    "documents — mid-document boilerplate/license removal, the dedup "
+    description="EXACT substring-level dedup: maximal token spans "
+    "repeated VERBATIM across >=2 distinct documents — mid-document "
+    "boilerplate/license removal, the dedup "
     "mode exact-doc/near-dup/incremental channels miss "
     "(operators/dedup.repeated_substring_spans). One digest per token "
     "position (md5-replayable k-gram digests, the Bloom-bits pattern), "
@@ -413,10 +413,10 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(MAX(pos) - MIN(pos) + {_SUB_K} AS INT) AS span_tokens
         FROM sp GROUP BY doc_id, span_id
     """,
-    description="INCREMENTAL substring-level dedup (round 10, VERDICT r9 "
-    "ask #2 — completes the dedup matrix exact/near/substring × "
-    "batch/incremental): maximal token spans of a NEW batch (doc_id ≥ "
-    "300) repeated VERBATIM in the HISTORY (doc_id < 300), where the "
+    description="INCREMENTAL substring-level dedup (completes the dedup "
+    "matrix exact/near/substring × batch/incremental): maximal token "
+    "spans of a NEW batch (doc_id ≥ 300) repeated VERBATIM in the HISTORY "
+    "(doc_id < 300), where the "
     "history is only its persisted k-gram digest store "
     "(operators/dedup.substring_digest_store — 8 bytes per distinct "
     "k-gram; documents never re-read). The probe is a LEFT SEMI join on "

@@ -1,8 +1,7 @@
 """Driver-gate oracle queries for the file-based sources.
 
-These close the round-1 gate-coverage gap (VERDICT.md "What's missing" #1):
 ``line_input`` offsets, zip members/lines, multi-file glob and the LevelDB
-record roundtrip were pytest-only; here each gets a full oracle row.
+record roundtrip each get a full oracle row here, not only pytest cases.
 
 The trick: fixtures are generated *driver-side with pyarrow* (not Spark, so
 no partition-order nondeterminism) from ``documents.parquet``, as pure

@@ -1,4 +1,4 @@
-"""MERGE / SCD2 gate queries (VERDICT.md next-round #8).
+"""MERGE / SCD2 gate queries.
 
 The reference's mutation story is ``op.db.Put`` yielded from user maps
 (operation/db.py:29-72); these queries express the same intent as set

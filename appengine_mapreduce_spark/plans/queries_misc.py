@@ -292,7 +292,7 @@ def bucketed_embeddings_path(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "ivf_bucketed_probe_topk",
     oracle=_IVF_PROBE_ORACLE,
-    description="Stored-ANN partition pruning witness (VERDICT r10 ask #4): "
+    description="Stored-ANN partition pruning witness: "
     "the embeddings corpus is WRITTEN partitioned by its inverted-list id "
     "(label), read back, and probed with ivf_probe_topk — the probe's "
     "label filter now resolves at PLANNING time (PartitionFilters on the "

@@ -98,8 +98,8 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fully decode — chunk parse, CRC32 verify, zlib inflate, scanline "
     "unfilter (functions/png.py, stdlib-only) — and emit decode-sensitive "
     "pixel stats the oracle recomputes from the generating formula. "
-    "Upgrades multimodal decode from stub/rows-only to a full value-hash "
-    "gate row (VERDICT.md missing #6).",
+    "Multimodal decode gets a full value-hash gate row, not a stub or "
+    "a rows-only check.",
     tags=("multimodal", "udf", "png"),
 )
 def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,8 +150,8 @@ def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "marker segments to the SOFn frame header (functions/jpeg.py, "
     "stdlib-only T.81 segment layer) and emit the decoded fields, which "
     "the oracle recomputes from the generating formula. Together with "
-    "png_decode_meta this narrows DECODERS_AVAILABLE to audio/video only "
-    "(VERDICT.md round-2 ask #5).",
+    "png_decode_meta this narrows DECODERS_AVAILABLE to audio/video "
+    "only.",
     tags=("multimodal", "udf", "jpeg"),
 )
 def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

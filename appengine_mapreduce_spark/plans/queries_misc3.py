@@ -1224,8 +1224,8 @@ def adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS zero_crossings
         FROM lagged GROUP BY doc_id, ch
     """,
-    description="STEREO IMA ADPCM sample decode (round-7 upgrade "
-    "closing the round-6 mono-only gap): the WAV 0x11 multi-channel "
+    description="STEREO IMA ADPCM sample decode (the mono decoder "
+    "alone would refuse these files): the WAV 0x11 multi-channel "
     "layout — per-channel block headers + 4-byte nibble words "
     "interleaved per channel. Per-channel pinned nibble streams and "
     "initial (predictor, step-index) states come from the stereo "

@@ -302,9 +302,9 @@ def union_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     "input_readers.py:1834-1926): count × fixed-length seeded random "
     "strings. The generator is counter-based (char j of string i derives "
     "from md5(seed:i) — sources/generators.py:42), NOT engine RNG, so it "
-    "replays exactly in DuckDB: upgraded round 6 from a rows-only check "
-    "to a FULL value-hash oracle that regenerates the identical 10k "
-    "strings from the same md5 recurrence and pins content (lexicographic "
+    "replays exactly in DuckDB: a FULL value-hash oracle that "
+    "regenerates the identical 10k strings from the same md5 recurrence and "
+    "pins content (lexicographic "
     "min/max) as well as counts.",
     tags=("mr-parity", "generator"),
 )
@@ -356,11 +356,11 @@ def random_strings_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources tied at max n give total >= 2n, failing the filter), so the "
     "window-total formulation collapses to sum/max/max_by per phrase. The "
     "SQL oracle deliberately keeps the window formulation — two "
-    "independent derivations must hash-match. Round 14 (opt guide §2.4 "
-    "'share one exchange'): both aggregations now sit above a single "
+    "independent derivations must hash-match. Both aggregations sit "
+    "above a single "
     "repartition(phrase) — HashPartitioning(phrase) satisfies the "
     "(phrase, source) clustering too, so the per-pair count and the "
-    "per-phrase rollup share ONE exchange where the old plan paid two "
+    "per-phrase rollup share ONE exchange instead of two "
     "phrase-scale exchanges back to back. Map-side combining bought "
     "nothing here by measurement (255,704 exploded rows vs 253,530 "
     "distinct (phrase, source) pairs at sf0.1 — 4-gram phrases are "

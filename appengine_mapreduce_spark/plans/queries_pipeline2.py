@@ -1,4 +1,4 @@
-"""Training-corpus construction queries, round 3: stratified data mixing,
+"""Training-corpus construction queries: stratified data mixing,
 token-budget sequence chunking, and benchmark decontamination.
 
 These are the remaining ops a 100 TB pretraining pipeline runs between
@@ -104,8 +104,8 @@ def _pack_shard_sql(key_expr: str) -> str:
                CAST(sum(n_tokens) AS BIGINT) AS total_tokens
         FROM binned GROUP BY lang, bin
     """,
-    description="Token-budget sequence chunking, SHARDED (VERDICT r13 "
-    "ask #3): per (language, md5-shard-of-doc_id) stream, documents in "
+    description="Token-budget sequence chunking, SHARDED: per "
+    "(language, md5-shard-of-doc_id) stream, documents in "
     "deterministic doc_id order chunk into ≈512-token bins via one "
     "window cumsum; bin ids are the composite shard*2^40 + local_bin — "
     "the streaming-friendly form of context-window packing "
@@ -424,7 +424,7 @@ _BUILD_ORACLE = f"""
     "generation is bucket-bounded, components are O(log^2 n) rounds on "
     "the (small) edge list, decontamination broadcasts the benchmark-"
     "sized eval grams; the corpus itself is never joined all-pairs. "
-    "Round 14 (opt guide §1.2/§5): the scrub verdict (kept_ids, 8 "
+    "The scrub verdict (kept_ids, 8 "
     "bytes/doc) is localCheckpoint-ed once per invocation — Spark does "
     "not dedupe common DataFrame subtrees, so without it the tokenize-"
     "heavy scrub+repetition pass re-ran THREE times per run (once under "
@@ -572,7 +572,7 @@ register(
     "stratum aggregate + broadcast rate join + row-local md5 acceptance — "
     "the corpus never shuffles. Registered via the same factory/oracle "
     "pair as the alpha-25/75 variants so the three parameterizations "
-    "cannot drift apart (round-12 review finding).",
+    "cannot drift apart.",
     tags=("sampling", "training-data", "pipeline", "scalar-cross"),
 )(_temperature_query(0.5, 2500, "temp"))
 
@@ -740,7 +740,7 @@ _RECIPE_TEMP_HASH = (
                max(cut) AS cut_permyriad
         FROM binned GROUP BY lang, epoch
     """,
-    description="END-TO-END DATA RECIPE capstone (VERDICT r12 ask #4): "
+    description="END-TO-END DATA RECIPE capstone: "
     "the full mixture stack composed the way a pretraining pipeline runs "
     "it — epoch_repeat (fr 2.5 epochs, zh 0.5, de dropped) establishes "
     "(doc_id, epoch) as the new row identity; a zero-padded row_key "
@@ -749,9 +749,9 @@ _RECIPE_TEMP_HASH = (
     "temperature_sample (alpha=0.5, weight=tokens, 60% budget) derives "
     "per-language cuts from the POST-repetition token mass; "
     "pack_by_token_budget chunks survivors into 2048-token bins per "
-    "(language, md5-shard-of-row_key) stream — SHARDED since round 14 "
-    "(VERDICT r13 ask #3): 8 independent window partitions per language "
-    "with composite shard*2^40+local_bin ids, so a dominant language "
+    "(language, md5-shard-of-row_key) stream — SHARDED: 8 independent "
+    "window partitions per language with composite shard*2^40+local_bin ids, "
+    "so a dominant language "
     "can no longer funnel the corpus through one sequential sort task. "
     "Reported per (lang, epoch): doc/token counts, bins spanned, and "
     "the applied cut — every stage shifts the numbers, so drift in ANY "

@@ -208,8 +208,7 @@ _BATCH_BUCKET = "(" + " + ".join(
     for i in range(_BBITS)
 ) + ")"
 
-# DEPTH-ADAPTIVE two-sided bucketing (round 12, VERDICT r11 ask #3;
-# depth-adaptive since round 14): a base bucket of c corpus rows
+# DEPTH-ADAPTIVE two-sided bucketing: a base bucket of c corpus rows
 # sub-splits to the smallest depth k with c <= _MAXB * 2^k (capped at
 # _XTRA); BOTH sides apply the corpus-derived (count -> depth) map,
 # mirroring operators/similarity.two_sided_adaptive_bucket. _MAXB = 10
@@ -276,8 +275,8 @@ _ADAPT_TAGGED_CTES = f"""eb AS (
     "replaces the corpus × queries cross product with per-bucket blocks, "
     "then one per-query ranking window "
     "(operators/similarity.sign_lsh_batch_topk). Hot buckets sub-split "
-    "DEPTH-adaptively (round 14: to the smallest extra depth restoring "
-    "the occupancy cap) with the corpus-driven count map applied to BOTH "
+    "DEPTH-adaptively (to the smallest extra depth restoring the "
+    "occupancy cap) with the corpus-driven count map applied to BOTH "
     "sides (two_sided_adaptive_bucket), so per-bucket blocks stay bounded "
     "when the query side scales with the corpus — fixed buckets would "
     "grow candidate pairs quadratically. The query side is "
@@ -334,10 +333,11 @@ def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-3 most-similar corpus vectors that are NOT its positives "
     "(positives = every same-label vector — the labeled-dataset shape). "
     "Batch-ANN bucket equi-join (never |C|x|Q|) with DEPTH-ADAPTIVE "
-    "hot-bucket sub-splitting (round 14) — the corpus count map applied to both sides "
+    "hot-bucket sub-splitting — the corpus count map applied to both sides "
     "(two_sided_adaptive_bucket), so mining negatives for EVERY training "
     "example (queries ≈ corpus) stays linear instead of replaying the "
-    "fixed-bucket quadratic round 5 measured. Positives removed by a "
+    "fixed-bucket quadratic (exponent 1.45 measured at sf1). Positives "
+    "removed by a "
     "broadcast LEFT ANTI join BEFORE the ranking window so a positive "
     "never eats a negative slot. At 100 TB the positive-pair table is "
     "training-label-sized and broadcasts; the corpus joins per bucket.",
@@ -369,8 +369,8 @@ def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_oracle_sql(
     m: int = 4, ks: int = 16, dim: int = 64, n_iter: int = 2, k: int = 10
 ) -> str:
-    """Full-oracle upgrade (round 7; was rows-only through round 6):
-    replay the ENTIRE PQ pipeline in DuckDB — training, encode, and ADC
+    """Full oracle: replay the ENTIRE PQ pipeline in DuckDB — training,
+    encode, and ADC
     scoring — with one compound-key unrolled Lloyd's chain. pq_train
     runs the in-repo kmeans once per subspace over vector slices; since
     every subspace shares the same init rule (k smallest vec_ids) and
@@ -469,8 +469,8 @@ def _pq_oracle_sql(
     "the canonical billion-scale method. At 100 TB: the stored index is "
     "code-sized, the model is Ks*D doubles on the driver, the per-query "
     "table inlines as literals, and the scan is TakeOrderedAndProject "
-    "(k rows per partition to the driver, no shuffle). FULL ORACLE "
-    "since round 7: training + encode + ADC replayed end-to-end in "
+    "(k rows per partition to the driver, no shuffle). FULL ORACLE: "
+    "training + encode + ADC replayed end-to-end in "
     "DuckDB via one compound-key (sub, cluster) unrolled Lloyd's chain.",
     tags=("similarity", "embedding", "ann", "pq"),
 )
@@ -499,7 +499,7 @@ def _ivfadc_oracle_sql(
     n_probes: int = 2,
     k: int = 10,
 ) -> str:
-    """Full end-to-end replay of the IVFADC index (round 7): coarse
+    """Full end-to-end replay of the IVFADC index: coarse
     k-means chain (k-prefixed CTEs), final list assignment, residual
     computation, the compound-key PQ chain over RESIDUALS (p-prefixed),
     encode, probe ranking, per-probed-list query-residual lookup
@@ -662,7 +662,7 @@ def _ivfadc_oracle_sql(
 @register(
     "ivfadc_topk",
     oracle=_ivfadc_oracle_sql(),
-    description="IVFADC ANN (round 7 — Jégou et al.'s IVF + "
+    description="IVFADC ANN (Jégou et al.'s IVF + "
     "PQ-on-RESIDUALS, the canonical billion-scale index, FAISS "
     "IVFx,PQy): a coarse 8-list k-means quantizer routes vectors to "
     "inverted lists, a product quantizer trained on residuals stores "

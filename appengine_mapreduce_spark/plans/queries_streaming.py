@@ -4,9 +4,8 @@ streaming/jobs.py builder under test → memory sink, availableNow-style
 finite replay with processAllAvailable) and returns the materialized
 result, which the driver then checks against a batch SQL oracle.
 
-This closes VERDICT r3 "What's missing" #5: the streaming jobs were
-previously exercised only by pytest; here the same code paths produce
-CORRECTNESS rows. The replay is finite, so results are deterministic —
+Beyond the pytest cases, the same streaming code paths produce
+CORRECTNESS rows here. The replay is finite, so results are deterministic —
 the streaming/batch equivalence these oracles prove is exactly the
 guarantee an operator needs before running unbounded.
 """
@@ -259,8 +258,8 @@ _SCRUB_K = 8  # matches the batch substring-dedup channel (_SUB_K)
         FROM toks t LEFT JOIN cleaned c USING (doc_id)
         WHERE t.doc_id >= 300
     """,
-    description="CONTINUOUS ingest scrub through the driver gate (round "
-    "11 — the streaming twin of the round-10 flagship): documents replay "
+    description="CONTINUOUS ingest scrub through the driver gate (the "
+    "streaming twin of substring_dedup_incremental): documents replay "
     "as two micro-batches (doc_id < 300, then >= 300) through a real "
     "readStream + foreachBatch pipeline "
     "(streaming/sinks.substring_scrub_sink). Batch 0 scrubs against an "

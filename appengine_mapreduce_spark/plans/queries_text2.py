@@ -196,8 +196,7 @@ def cc_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_ivf_oracle_sql(k: int = 8, dim: int = 64, n_iter: int = 3) -> str:
-    """Full-oracle upgrade (round 7; was rows-only through round 6):
-    reuse the unrolled Lloyd's CTE chain proven by
+    """Full oracle: reuse the unrolled Lloyd's CTE chain proven by
     ``kmeans_centroids_oracled`` and append the FINAL assignment pass —
     distance of every vector to the converged centroids, argmin with
     ties to the lowest cluster (row_number ORDER BY dist, cluster ==
@@ -239,7 +238,7 @@ def _kmeans_ivf_oracle_sql(k: int = 8, dim: int = 64, n_iter: int = 3) -> str:
     "embeddings table: statically-unrolled JVM distance expressions for "
     "assignment, posexplode+avg for the update, model on the driver — the "
     "real IVF list builder. Returns per-cluster sizes and mean squared "
-    "distance. FULL ORACLE since round 7: the unrolled chained-CTE "
+    "distance. FULL ORACLE: the unrolled chained-CTE "
     "Lloyd's replay (shared with kmeans_centroids_oracled) plus a final "
     "assignment stage reproduces sizes and mean dist_sq exactly in "
     "DuckDB.",

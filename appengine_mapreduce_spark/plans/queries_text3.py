@@ -1,4 +1,4 @@
-"""Text analysis, round 3: BPE-style token accounting and winnowing
+"""Text analysis: BPE-style token accounting and winnowing
 (rolling-hash) document fingerprints — the two remaining brief items in
 the text family ("token counting (whitespace + a BPE-ish regex)",
 "document fingerprinting (rolling hash)")."""
@@ -94,8 +94,7 @@ def winnow_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_oracle_sql(
     n_merges: int = 6, min_pair_count: int = 2, doc_filter: str = "doc_id < 300"
 ) -> str:
-    """Full-oracle upgrade (round 7; was rows-only through round 6):
-    replay greedy BPE training merge-by-merge in DuckDB with an
+    """Full oracle: replay greedy BPE training merge-by-merge in DuckDB with an
     unrolled CTE chain (the kmeans/pagerank fixed-N technique). The
     counts are integers so there is no FP pinning to do; the one
     nontrivial step is APPLYING a merge, which Spark does as a greedy
@@ -107,8 +106,8 @@ def _bpe_oracle_sql(
     exactly greedy BPE, and the per-symbol wrapping keeps adjacent
     matches from consuming each other's boundary.
 
-    Early stop replays STRUCTURALLY (round 9, VERDICT r8 "what's
-    wrong" #3): each stage's best-pair row ``b{t}`` is itself
+    Early stop replays STRUCTURALLY: each stage's best-pair row ``b{t}`` is
+    itself
     thresholded (``n >= min_pair_count``) and LEFT JOINed, with a CASE
     fallback keeping ``w{t} = w{t-1}`` when it is absent — so a dry or
     sub-threshold stage is a no-op exactly as in the early-stopped
@@ -202,7 +201,7 @@ def _bpe_token_freq_oracle_sql(
     "model parameter) + a JVM array-fold rewrite — N merges never re-read "
     "the corpus. Deterministic tie-breaking makes training reproducible; "
     "the classic {hug,pug,pun,bun,hugs} example is verified merge-by-"
-    "merge in pytest. FULL ORACLE since round 7: the greedy training "
+    "merge in pytest. FULL ORACLE: the greedy training "
     "loop replays merge-by-merge in DuckDB (unrolled CTEs; merge "
     "application via delimiter-wrapped string replace).",
     tags=("text", "tokenizer", "training-data", "iterative"),
@@ -223,7 +222,7 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bpe_encode_segments",
     oracle=_bpe_token_freq_oracle_sql(),
-    description="BPE tokenizer APPLICATION (round 7): train 6 merges, "
+    description="BPE tokenizer APPLICATION: train 6 merges, "
     "then ENCODE the corpus with the frozen merge list "
     "(operators/tokenizer.bpe_apply_merges — the greedy fold stacked "
     "as 6 expression layers in one plan over the vocab-sized table, no "
@@ -231,8 +230,8 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frequencies with a total (freq desc, token) tie-break — the "
     "vocabulary statistics a training-data pipeline ships to its "
     "tokenizer. FULL ORACLE: the unrolled training replay extended "
-    "with the exploded final symbol table. Early convergence is safe "
-    "since round 9: each unrolled stage LEFT JOINs its best pair and "
+    "with the exploded final symbol table. Early convergence is safe: "
+    "each unrolled stage LEFT JOINs its best pair and "
     "coalesces to the previous stage's symbols when the pair table "
     "runs dry (regression-pinned on an early-converging fixture).",
     tags=("text", "tokenizer", "training-data", "iterative"),
@@ -319,8 +318,8 @@ def document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
              JOIN c1 ON c1.w1 = b.w1, v
         GROUP BY b.doc_id
     """,
-    description="Per-document bigram LANGUAGE-MODEL quality score "
-    "(round 7): an add-one-smoothed bigram model trained on the corpus "
+    description="Per-document bigram LANGUAGE-MODEL quality score: "
+    "an add-one-smoothed bigram model trained on the corpus "
     "scores each document by mean token log-probability — the "
     "perplexity-proxy filter that catches boilerplate/gibberish/"
     "mis-extracted markup, upgrading the heuristic rarity profile to a "

@@ -75,7 +75,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Both correlations reduce to per-order distinct-supplier COUNTS "
     "(EXISTS other supplier ⇔ n_suppliers ≥ 2; NOT EXISTS other late "
     "supplier ⇔ n_late_suppliers = 1, since the row's own supplier is "
-    "late). Round 14 (opt guide §2.4): SINGLE-PASS form — one lineitem ⨝ "
+    "late). SINGLE-PASS form — one lineitem ⨝ "
     "F-orders join, one (orderkey, suppkey) aggregation carrying the "
     "per-pair late-row count, and per-order counts as WINDOWS over the "
     "pair rows. Restricting the distinct-supplier count to F orders is "
@@ -83,12 +83,10 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "surviving order, and only F orders reach the result). The join's "
     "orderkey partitioning satisfies both the pair-agg and the window "
     "clustering, so under shuffle join the plan has ONE lineitem-scale "
-    "exchange where the old shape had three (full-lineitem distinct "
-    "pairs, late pairs, and the late join) and THREE lineitem scans "
-    "became one. Measured sf0.1: shuffle bytes 11.9 MB -> 5.1 MB; noop "
-    "medians 2.83 -> 2.29 s pooled over alternating old/new process "
-    "blocks under residual host steal (per-block steal_d in "
-    "OPTIMIZATION_r14.md).",
+    "exchange and ONE lineitem scan, where a three-pass form "
+    "(full-lineitem distinct pairs, late pairs, and the late join) needs "
+    "three of each. Measured sf0.1: shuffle bytes 11.9 MB -> 5.1 MB "
+    "against that form (tests/test_shuffle_invariants.py pins the bytes).",
     bench=True,
     tags=("analytics", "semi-join", "anti-join"),
 )

@@ -77,9 +77,9 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     "subquery over the in-region supply options of each part, expressed as "
     "a partition window min (one shuffle on ps_partkey) instead of a "
     "re-scan self-join; dims broadcast. partsupp derived from lineitem "
-    "(see module docstring). Round 14 (opt guide §2.3/§3.2): the "
-    "p_size/p_type filter keeps 0.3% of parts and the correlated min is "
-    "per ps_partkey — a group key — so a LEFT SEMI join of lineitem "
+    "(see module docstring). The p_size/p_type filter keeps 0.3% of "
+    "parts and the correlated min is per ps_partkey — a group key — so a "
+    "LEFT SEMI join of lineitem "
     "against the filtered part keys BEFORE the partsupp aggregation is "
     "exact and shrinks the (partkey,suppkey) agg exchange, the supplier "
     "join and the window input by ~300x. The semi's own exchange (when "
@@ -151,11 +151,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="TPC-H Q9 product-type profit: five-way join (fact × derived "
     "partsupp × dims) rolled up by nation and order year. "
     "Nation broadcast (constant-size); part/supplier left to AQE's "
-    "size guard; orders co-keyed on orderkey. Round 14 (opt guide §2.3): "
-    "the %widget% filter keeps 12.5% of parts, and Spark does not reorder "
-    "inner joins, so the part join runs FIRST — every later exchange "
+    "size guard; orders co-keyed on orderkey. The %widget% filter keeps "
+    "12.5% of parts, and Spark does not reorder inner joins, so the part "
+    "join runs FIRST — every later exchange "
     "(supplier, orders) then carries 12.5% of lineitem instead of 100%. "
-    "Round 15 (opt guide §2.4): the separate partsupp derivation is GONE. "
+    "There is no separate partsupp derivation. "
     "ps_supplycost aggregates per (l_partkey, l_suppkey) — and the "
     "%widget% predicate depends only on l_partkey, a group key, so every "
     "row of a surviving pair survives the part join and min over the "
@@ -404,9 +404,9 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fraction of that pair's 1996 shipped quantity — compiled to ONE hash "
     "aggregation on (partkey, suppkey), a broadcast-semi part filter, and "
     "a final semi join into supplier. No per-row subquery execution "
-    "anywhere. Round 15 (opt guide §2.4): the former second pair-keyed "
-    "aggregation (1996 quantity) and the pair join that recombined it "
-    "with partsupp are folded into the SAME aggregation as conditional "
+    "anywhere. The 1996 quantity needs no second pair-keyed "
+    "aggregation and no pair join to recombine it with partsupp: it "
+    "is folded into the SAME aggregation as conditional "
     "sums — availqty = count(*), qty_1996 = sum(CASE WHEN shipdate in "
     "1996 THEN quantity END); a pair with no 1996 rows gets NULL, and "
     "NULL > x is false, which is exactly the old inner join's drop. The "

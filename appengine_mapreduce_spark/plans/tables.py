@@ -20,7 +20,7 @@ _INFER_FILTERS_RULE = (
 
 def _exclude_infer_filters_from_generate(spark: SparkSession) -> None:
     """Disable Catalyst's InferFiltersFromGenerate for this session
-    (round-9 measured finding): the rule adds ``size(e) > 0 AND
+    (a measured cost): the rule adds ``size(e) > 0 AND
     isnotnull(e)`` below every inner explode, and when ``e`` is an
     expensive computed array (per-position k-gram digests, shingle
     arrays) the filter re-materializes the ENTIRE expression per doc —

@@ -5,7 +5,7 @@ Mirrors the reference's pipeline jobs
 (java/.../bigqueryjobs/BigQueryLoadGoogleCloudStorageFilesJob.java:89-135
 bundling, BigQueryLoadFileSetJob.java submit, BigQueryLoadPollJob.java:44-99
 poll-with-backoff, RetryLoadOrCleanupJob.java:50-77 fatal-retry /
-non-fatal-log / delete-files) — the one SURVEY §2.9 row round 1 deferred.
+non-fatal-log / delete-files), SURVEY §2.9.
 
 The orchestration logic is real and fully tested; the BigQuery service
 itself is injected behind ``LoadJobService`` (the cloud API client is not

@@ -1,4 +1,4 @@
-"""Hypothesis property tests for the round-5 byte codecs: arbitrary
+"""Hypothesis property tests for the byte codecs: arbitrary
 inputs must roundtrip exactly (the SURVEY §5 test-strategy parity —
 the reference's codec tests are fixed fixtures; property testing covers
 the input space)."""
@@ -96,7 +96,7 @@ def test_g711_quantization_bounds(x):
     idx=st.integers(min_value=0, max_value=88),
 )
 def test_adpcm_pinned_nibble_wav_roundtrip_any_stream(nibbles, pred, idx):
-    """Round-6 codec: ANY nibble stream + initial state survives the
+    """IMA ADPCM: ANY nibble stream + initial state survives the
     WAV container round trip exactly (fact chunk drops padding), and
     every decoded sample is a legal int16."""
     from appengine_mapreduce_spark.functions.media import (

@@ -95,8 +95,8 @@ def test_ngram_jaccard_doc_freq_cap(spark):
     Jaccard self-join: with the stop-shingle cut (max_doc_freq) the
     boilerplate shingles are dropped before pairing, so the pair count
     stays near zero; without it every one of the C(120,2) pairs
-    materializes through the join (the quadratic fan-out VERDICT.md
-    flagged)."""
+    materializes through the join (the quadratic fan-out the cut
+    exists to stop)."""
     rng = random.Random(7)
     boiler = "copyright notice all rights reserved by the company"
     rows = [(i, boiler + " " + _doc(rng)) for i in range(120)]
@@ -150,7 +150,7 @@ def test_ngram_jaccard_cap_keeps_true_jaccard_semantics(spark):
 
 
 # ---------------------------------------------------------------------------
-# Exact substring-level dedup (round 9): planted-boilerplate recall.
+# Exact substring-level dedup: planted-boilerplate recall.
 
 
 _LICENSE = (
@@ -183,7 +183,7 @@ def test_substring_spans_planted_recall(spark, boilerplate_docs):
     no span may land in docs 10-19 (unique text only)."""
     from appengine_mapreduce_spark.operators import dedup
 
-    # spans per doc collected as LISTS (ADVICE r9: a dict comprehension
+    # spans per doc collected as LISTS (a dict comprehension
     # keyed by doc_id silently keeps only the last span if a chance
     # vocab repeat ever yields a second one) — assert on the span that
     # actually covers the planted license.
@@ -253,7 +253,7 @@ def test_strip_repeated_substrings(spark, boilerplate_docs):
 
 
 def test_strip_spans_shuffle_fallback_same_answer(spark, boilerplate_docs):
-    """broadcast_spans=False (ADVICE r10: the escape hatch for span
+    """broadcast_spans=False (the escape hatch for span
     tables past the 8 GB broadcast cap) must produce the identical
     answer with NO broadcast of the span side — the join degrades to a
     doc-keyed shuffle instead of failing outright at the extreme."""
@@ -312,7 +312,7 @@ def test_substring_spans_edge_cases(spark):
 
 
 # ---------------------------------------------------------------------------
-# Incremental substring dedup (round 10): new-batch spans vs a persisted
+# Incremental substring dedup: new-batch spans vs a persisted
 # history k-gram digest store.
 
 
@@ -402,9 +402,9 @@ def _brute_strip(texts: dict, k: int, min_docs: int) -> dict:
 
 
 def test_strip_repeated_substrings_property(spark):
-    """Randomized equivalence vs the brute-force reference (VERDICT r9
-    ask #5): tiny vocab + short docs force chance k-gram repeats —
-    overlapping spans, spans at document edges, adjacent-window merges —
+    """Randomized equivalence vs the brute-force reference: tiny vocab +
+    short docs force chance k-gram repeats — overlapping spans, spans at
+    document edges, adjacent-window merges —
     and the Spark span-merge arithmetic must reproduce the naive
     cover-and-drop exactly (cleaned text AND both token counts)."""
     from hypothesis import HealthCheck, given, settings

@@ -1513,7 +1513,7 @@ def test_ima_adpcm_wav_roundtrip_and_blocks():
 
 
 def test_ima_adpcm_stereo_roundtrip_channel_equivalence():
-    """Round-7 stereo upgrade. The WAV 0x11 stereo layout interleaves
+    """The WAV 0x11 stereo layout interleaves
     per-channel 4-byte nibble words after per-channel block headers;
     each channel's codec state is INDEPENDENT, so de-interleaving a
     stereo decode must reproduce exactly the mono encode/decode of each
@@ -1615,7 +1615,7 @@ def test_ima_adpcm_malformed_contract():
 
 
 def test_wav_fact_chunk_edge_cases():
-    """Code-review round-6 findings: (a) fact-less ADPCM meta estimates
+    """WAV fact-chunk edge cases: (a) fact-less ADPCM meta estimates
     frames from blocks x samples_per_block (not raw block count);
     (b) a fact chunk AFTER the data chunk is still honored by
     decode_wav_samples (RIFF mandates no order); (c) a G.711 WAV with a
@@ -1669,8 +1669,9 @@ def test_wav_fact_chunk_edge_cases():
 
 
 def test_wav_fact_partial_block_and_overstated_fact():
-    """Advice round-7 findings: (a) a fact-less ADPCM file whose data
-    chunk ends mid-block still has meta.n_frames == len(samples) — the
+    """Partial blocks and overstated facts: (a) a fact-less ADPCM file
+    whose data chunk ends mid-block still has meta.n_frames == len(samples) —
+    the
     estimate now counts the trailing partial block the decoder decodes
     (header -> 1 frame, then 2 frames per nibble byte); (b) a fact
     chunk that OVERSTATES the sample count is capped at the decodable

@@ -490,7 +490,7 @@ def test_bloom_incremental_dedup_no_false_negatives(spark):
 
 
 def test_bloom_incremental_dedup_duplicate_ids(spark):
-    """Regression (VERDICT r8 "what's wrong" #2): a duplicated id in the
+    """Regression: a duplicated id in the
     new batch must NOT break the no-false-negatives guarantee. Hits are
     keyed on (id, digest) and counted as distinct probe indices, so a
     true duplicate whose id appears twice (same text, or alongside a
@@ -910,7 +910,7 @@ def test_bpe_oracle_early_stop_filter_equivalence(spark):
 
 
 def test_bpe_encode_oracle_survives_early_convergence(spark):
-    """Regression (VERDICT r8 "what's wrong" #3): when the pair table
+    """Regression: when the pair table
     runs DRY before n_merges (every word fully merged), the unrolled
     encode oracle used to cross-join an empty best-pair row and collapse
     every later stage — returning an empty symbol table while Spark
@@ -978,7 +978,7 @@ def test_global_shuffle_duplicate_and_null_keys(spark):
 
 
 def test_adaptive_sign_bucket_splits_hot_buckets_keeps_neardups(spark):
-    """DEPTH-ADAPTIVE hot-bucket sub-splitting (round 14): a bucket of
+    """DEPTH-ADAPTIVE hot-bucket sub-splitting: a bucket of
     c rows moves to the smallest depth k with c <= cap * 2^k — so a
     mildly-hot bucket splits one level while a very hot one goes
     deeper, id ranges per depth are disjoint, cold buckets keep the
@@ -1428,7 +1428,7 @@ def test_interval_join_empty_points_side(spark):
 
 
 def test_interval_join_clamp_edge_cases(spark):
-    """Property coverage of the clamp path (VERDICT r7 ask #7): the
+    """Property coverage of the clamp path: the
     scalar-collect clamp (operators/joins.py pmin/pmax) must survive
     every degenerate input shape without error or blow-up."""
     from appengine_mapreduce_spark.operators.joins import interval_join

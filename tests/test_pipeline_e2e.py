@@ -1,4 +1,4 @@
-"""End-to-end training-corpus preparation: the round-3 operators chained
+"""End-to-end training-corpus preparation: the corpus operators chained
 the way a real pipeline runs them — scrub → dedup → stratified mix →
 token-budget packing → bucketed write — with invariants asserted at every
 stage. One coherent flow, not isolated unit checks."""

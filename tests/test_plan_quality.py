@@ -144,8 +144,8 @@ def test_q22_anti_join(spark):
 
 def test_asof_join_single_shuffle(spark):
     """The as-of join must shuffle each side once (union + window), never
-    a nested-loop/range join. Round 14 (opt guide §2.4): the orders-side
-    de-tie pre-aggregation is folded into the window ORDER BY as a
+    a nested-loop/range join. The orders-side de-tie pre-aggregation is
+    folded into the window ORDER BY as a
     tiebreak, so the plan has exactly ONE exchange (the key partitioning
     below the window) and no aggregation at all."""
     plan = plan_of(spark, "asof_join_latest_order")
@@ -168,10 +168,10 @@ def test_q11_reuses_perpart_exchange(spark):
 
 
 def test_q9_single_lineitem_scan_and_free_window(spark):
-    """Round 15 (opt guide §2.4): the separate partsupp derivation is a
-    window min over the part-filtered fact, so q9 must (a) scan lineitem
-    exactly ONCE, and (b) under shuffle join pay NO exchange for that
-    window — the part SMJ's HashPartitioning(l_partkey) satisfies the
+    """q9 derives partsupp as a window min over the part-filtered fact,
+    so q9 must (a) scan lineitem exactly ONCE, and (b) under shuffle join
+    pay NO exchange for that window — the part SMJ's
+    HashPartitioning(l_partkey) satisfies the
     window's (l_partkey, l_suppkey) clustering, leaving only a
     sort-within-partition between the join and the Window node."""
     with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
@@ -224,7 +224,7 @@ def test_partitioned_layout_prunes_partitions(spark):
 
 
 def test_ivf_bucketed_probe_prunes_partitions(spark):
-    """Stored-ANN pruning witness (VERDICT r10 ask #4): with the corpus
+    """Stored-ANN pruning witness: with the corpus
     written partitionBy(label), the IVF probe's list filter must resolve
     at PLANNING time — the probed scan carries a PartitionFilters entry
     on label, so a 1-of-n_lists probe opens 1/n_lists of the directories
@@ -423,7 +423,7 @@ except ImportError:  # pragma: no cover
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
-    """Skew evidence at runtime, not just design (VERDICT r3 ask #6): on
+    """Skew evidence at runtime, not just design: on
     a zipf-keyed fixture (half of all rows share ONE key) AQE's skew-join
     handling must actually split the hot partition — asserted via the
     ``skew=true`` annotation in the final adaptive plan — and the
@@ -488,14 +488,13 @@ def test_aqe_splits_skewed_join_partitions(spark):
 
 
 def test_skew_split_respects_downstream_partitioning(spark):
-    """The two-shape skew finding (SCALING.md round-5): on the same
+    """The two-shape skew finding (SCALING.md "Skew"): on the same
     zipf-keyed sort-merge join, AQE's skew-split fires when the join
     output feeds a GLOBAL aggregate (no partitioning requirement
     downstream) and must NOT fire when the output feeds a SAME-KEY
     aggregate — splitting there would break the aggregation's reuse of
     the join's hash partitioning. This pins the plan-level behavior (the
-    wall-clock side was measured once, SCALING.md "Measured skew
-    evidence")."""
+    wall-clock side is in the same SCALING.md section)."""
     import contextlib
     import io
 
@@ -553,8 +552,8 @@ def test_no_fact_table_broadcast_at_sf1(spark, name):
     """At sf1 (6M lineitem) the fact tables are far over the 10MB default
     broadcast threshold, so under the DEFAULT threshold any
     BroadcastHashJoin whose build side scans lineitem or orders can only
-    come from a forced hint — the OOM-at-scale pattern round 2 removed.
-    This re-asserts that removal at real sizes (VERDICT r3 ask #1)."""
+    come from a forced hint — a hint that would OOM executors at scale.
+    This asserts no such hint at real sizes."""
     import contextlib
     import io
 
@@ -576,7 +575,7 @@ def test_no_fact_table_broadcast_at_sf1(spark, name):
     "substring_dedup_spans", "minhash_lsh_pairs", "simhash_fingerprints",
 ])
 def test_no_inferred_generate_filter_duplication(spark, name):
-    """Regression (round 9): Catalyst's InferFiltersFromGenerate used to
+    """Regression: Catalyst's InferFiltersFromGenerate used to
     duplicate the expensive computed-array generator input (per-position
     digests / shingles) into a pre-Generate filter pushed below the
     widening exchange — measured 5.8x on the substring explode at sf0.1
@@ -598,7 +597,7 @@ def test_no_inferred_generate_filter_duplication(spark, name):
     "packing_efficiency_stats",
 ])
 def test_packing_window_is_sharded(spark, name):
-    """VERDICT r13 weak flag: a packing window partitioned by `lang`
+    """A packing window partitioned by `lang`
     alone funnels a dominant language (60-90% of a pretraining corpus)
     through ONE sequential window task at 100 TB. The sharded mode must
     be visible in the plan: the window's exchange hash-partitions on
@@ -617,10 +616,10 @@ def test_packing_window_is_sharded(spark, name):
 
 
 def test_repetition_signals_is_shuffle_free(spark):
-    """Round-14 optimization (opt guide §2.4): every repetition metric is
-    a function of ONE document, so the operator folds over the sorted
-    token/bigram arrays inside the scan stage — the old explode +
-    groupBy formulation exchanged every (doc, token) and (doc, bigram)
+    """Every repetition metric is a function of ONE document, so the
+    operator folds over the sorted token/bigram arrays inside the scan stage
+    — an explode + groupBy
+    formulation would exchange every (doc, token) and (doc, bigram)
     pair (~2x corpus bytes; its FIRST aggregation had no map-side
     collapse because distinct pairs stay pairs). The executed plan must
     contain no hash/range exchange and no Generate at all — the only
@@ -635,9 +634,9 @@ def test_repetition_signals_is_shuffle_free(spark):
 
 
 def test_q2_partsupp_aggregates_only_filtered_partkeys(spark):
-    """Round-14 optimization (opt guide §2.3/§3.2): q2's correlated min
-    is per ps_partkey — a group key — so the 0.3%-selective part filter
-    semi-joins into lineitem BELOW the partsupp aggregation. The
+    """q2's correlated min is per ps_partkey — a group key — so the
+    0.3%-selective part filter semi-joins into lineitem BELOW the partsupp
+    aggregation. The
     executed plan must show a LeftSemi join feeding the (l_partkey,
     l_suppkey) aggregate, i.e. the semi sits under the pair-agg
     exchange, not above it."""
@@ -655,7 +654,7 @@ def test_q2_partsupp_aggregates_only_filtered_partkeys(spark):
 
 
 def test_q20_single_lineitem_scan_semi_below_pair_agg(spark):
-    """Round 15 (opt guide §2.4): q20's two pair-keyed aggregations are
+    """q20's two pair-keyed aggregations are
     folded into ONE conditional aggregation, so lineitem is scanned exactly
     once, and the 'small%' part semi-filter sits below that aggregation:
     the LeftSemi join is the direct child of the partial (l_partkey,
@@ -672,7 +671,7 @@ def test_q20_single_lineitem_scan_semi_below_pair_agg(spark):
 
 
 def test_substring_incremental_probe_stays_semi_broadcast(spark):
-    """Plan regression (round 10): the incremental substring probe must
+    """Plan regression: the incremental substring probe must
     be a LeftSemi hash join with the digest store on the build side
     (broadcast at this store size) — NOT a sort-merge join shuffling the
     batch's position-digest explode, and with no distinct-doc-count
@@ -688,7 +687,7 @@ def test_substring_incremental_probe_stays_semi_broadcast(spark):
 
 def test_substring_digest_store_bucketed_probe_no_history_exchange(spark):
     """The dedup.py:substring_digest_store 100 TB claim, plan-checked
-    (round 11, same move as the stored-ANN witness): when the history
+    (same move as the stored-ANN witness): when the history
     digest store is PERSISTED bucketed by ``dig`` and the store is too
     big to broadcast (simulated via autoBroadcastJoinThreshold=-1 — at
     real scale the size does this), the incremental probe's semi join
@@ -739,24 +738,23 @@ def test_substring_digest_store_bucketed_probe_no_history_exchange(spark):
 
 
 def test_phrases_demo_single_exchange(spark):
-    """Round-14 optimization (opt guide §2.4 "share one exchange"): both
-    of phrases_demo's aggregations — the (phrase, source) count and the
-    per-phrase sum/max/max_by rollup — must sit above ONE
+    """Both of phrases_demo's aggregations — the (phrase, source) count
+    and the per-phrase sum/max/max_by rollup — must sit above ONE
     hashpartitioning(phrase) exchange: the explicit repartition(phrase)
     satisfies both clusterings, and map-side combining bought nothing
     (4-gram phrases are near-unique: 255,704 exploded rows vs 253,530
-    distinct pairs at sf0.1), so the old plan's second phrase-scale
-    exchange was pure re-shipment."""
+    distinct pairs at sf0.1), so a second phrase-scale exchange would
+    be pure re-shipment."""
     plan = plan_of(spark, "phrases_demo")
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     assert re.search(r"hashpartitioning\(phrase#\d+", plan), plan
 
 
 def test_scd2_upsert_single_join_pass(spark):
-    """Round-14 optimization (opt guide §2.4): scd2_upsert's kept /
-    closed / opened branches must come from ONE evaluation of the
-    full-outer join — a per-row explode of output structs — not the old
-    union-of-three-filters, which evaluated the same join three times
+    """scd2_upsert's kept / closed / opened branches must come from ONE
+    evaluation of the
+    full-outer join — a per-row explode of output structs — not a
+    union-of-three-filters, which evaluates the same join three times
     (three shuffle-read passes over identical data at scale). The plan
     must contain exactly one join and one Generate."""
     plan = plan_of(spark, "scd2_upsert")

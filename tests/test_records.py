@@ -107,7 +107,7 @@ def test_records_distributed_roundtrip(spark, tmp_path):
     assert got == {f"record-{i}" for i in range(500)}
 
 
-# --- Golden byte fixtures (VERDICT.md "What's missing" #2) ----------------
+# --- Golden byte fixtures -------------------------------------------------
 # An INDEPENDENT encoder, written from the public spec with a different
 # CRC implementation (bit-at-a-time, no table) and different framing code,
 # so the bytes below are NOT produced by sources/records.RecordWriter.
@@ -184,8 +184,8 @@ def test_reference_emitted_fixture_roundtrip():
     """tests/fixtures/ref_records_big.rec was emitted by the REFERENCE's
     own writer (python/src/mapreduce/records.py:15-121 RecordsWriter,
     executed from /root/reference under a Py2-literal shim; never this
-    repo's code). Closes the last inch of the byte-compat claim
-    (VERDICT.md round-2 ask #9): our reader decodes a file produced
+    repo's code). This is the byte-compat claim checked against the
+    reference itself: our reader decodes a file produced
     outside this repo, and our writer reproduces it byte-for-byte.
     The reference's reader was also verified to decode our writer's
     bytes at fixture-generation time."""

@@ -4,6 +4,8 @@ oracle-checked query, and ``queries()`` leads with the bench anchors."""
 
 from __future__ import annotations
 
+import re
+
 from appengine_mapreduce_spark.plans import all_queries
 
 # tag → must be carried by at least one oracle-checked query
@@ -48,3 +50,12 @@ def test_bench_anchors_lead_the_order():
     anchors = [n for n, s in qs.items() if s.bench]
     assert len(anchors) == 25, anchors
     assert list(qs)[:25] == anchors
+
+
+def test_descriptions_give_reasons_not_round_citations():
+    """A description says what a query does and why; a pointer to a
+    deleted review file or a past work round tells a reader nothing."""
+    citation = re.compile(
+        r"VERDICT|ADVICE|OPTIMIZATION_r|PROGRESS\.jsonl|plans/r1\d|\b[Rr]ound[- ]\d+")
+    cited = sorted(n for n, s in all_queries().items() if citation.search(s.description))
+    assert not cited, cited

@@ -7,6 +7,8 @@
   every stage the context has kept.
 - It leaves the caller's job group as it found it, also when the block
   raises.
+- Its host channels read the same counters as perfbench's
+  ``host_counters``, so a stall has one meaning in both.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ import sys
 
 import pytest
 
-from appengine_mapreduce_spark.core.runtime_metrics import profile
+from appengine_mapreduce_spark.core.runtime_metrics import cpu_stat, profile
 from appengine_mapreduce_spark.plans.registry import all_queries
 from conftest import SF_CORRECT
 
@@ -73,3 +75,17 @@ def test_profile_restores_caller_job_group(spark):
     finally:
         for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
+
+
+def test_cpu_stat_reads_the_counters_perfbench_reads():
+    try:
+        with open("/proc/pressure/io") as fh:
+            fh.read()
+    except OSError:
+        pytest.skip("/proc/pressure/io is unreadable")
+    host_counters = _perfbench_tap().host_counters
+    before = host_counters()
+    steal, io_stall = cpu_stat()
+    after = host_counters()
+    assert before["steal_jiffies"] <= steal <= after["steal_jiffies"]
+    assert before["io_stall_us"] <= io_stall <= after["io_stall_us"]

@@ -96,7 +96,7 @@ def test_pack_by_token_budget_bins(spark):
 
 
 def test_pack_by_token_budget_sharded_semantics(spark):
-    """Sharded packing (VERDICT r13 ask #3): rows route to
+    """Sharded packing: rows route to
     pmod(md5-hash('pack:' || order_key), K) shards, each (grp, shard)
     stream packs independently in order_col order, and the composite
     bin id decomposes as shard * 2^40 + local_bin. Verified against an
@@ -362,8 +362,8 @@ def test_temperature_cut_bit_identical_to_duckdb_on_random_weights(spark):
     the sf-level oracle MATCH relies on, checked here across far more
     weight profiles than the fixtures contain. Cuts are read from
     temperature_rates (the rates side), so EVERY stratum is compared —
-    including strata whose single row the sample excludes (the gap the
-    round-11 version had: only kept strata were asserted)."""
+    including strata whose single row the sample excludes (asserting
+    only kept strata would miss those)."""
     import random
 
     import duckdb
@@ -555,7 +555,7 @@ def test_epoch_repeat_counts_bit_identical_to_duckdb_on_random_recipes(spark):
 
 
 def test_temperature_alpha_validated_eagerly():
-    """Non-portable alphas must fail AT THE CALL SITE (ADVICE r12):
+    """Non-portable alphas must fail AT THE CALL SITE:
     dispatch is exact-float, so a computed 0.75000000001 — or any
     non-float type that merely compares equal, like numpy float32(0.5)
     — raises from temperature_sample/temperature_rates directly, not

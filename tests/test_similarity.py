@@ -195,7 +195,7 @@ def test_hard_negative_topk_excludes_positives_and_matches_bruteforce(emb):
 
 
 def test_two_sided_adaptive_bucket_bounds_hot_buckets(spark):
-    """Planted-hot-bucket test (VERDICT r11 ask #3): a base bucket holding
+    """Planted-hot-bucket test: a base bucket holding
     200 corpus rows (max_bucket_size=20) must sub-split into extended
     buckets of bounded size; a cold bucket must keep its base id; and the
     corpus-driven hot set must apply identically to the QUERY side, so a
@@ -263,8 +263,8 @@ def test_two_sided_adaptive_bucket_bounds_hot_buckets(spark):
     assert {h.vec_id for h in twin_hits} == {500, 501}
     assert twin_hits[0].cosine == pytest.approx(1.0, abs=1e-4)
 
-    # DEFAULT path (VERDICT r12 ask #3: adaptive is now the default —
-    # extra_bits=4, max_bucket_size=64): the 202-row hot bucket exceeds
+    # DEFAULT path (adaptive is the default — extra_bits=4,
+    # max_bucket_size=64): the 202-row hot bucket exceeds
     # the default bound too, so calling with NO bucketing args must
     # sub-split (bounded buckets) AND still find the planted twins.
     cb_d, qb_d = two_sided_adaptive_bucket(
@@ -283,7 +283,7 @@ def test_two_sided_adaptive_bucket_bounds_hot_buckets(spark):
 
 
 def test_two_sided_adaptive_bucket_cohabitation_property(spark):
-    """Formal contract on random data (depth-adaptive since round 14):
+    """Formal contract on random data (depth-adaptive splitting):
     for ANY (corpus row, query) pair, same bucket ⟺ (same base bits AND
     same first base+k(c) bits), where k(c) is the smallest depth with
     the base bucket's corpus count c <= max_bucket_size * 2^k (capped
@@ -362,7 +362,7 @@ def test_bucket_both_sides_rejects_half_specified_adaptive(spark):
         [(0, [1.0, 1.0]), (1, [1.0, 0.9])],
         "vec_id long, embedding array<double>")
     q = df.select(F.col("vec_id").alias("query_id"), "embedding")
-    # defaults are ADAPTIVE (r12 flip); overriding only half the pair
+    # defaults are ADAPTIVE; overriding only half the pair
     # toward fixed must raise, both directions
     with pytest.raises(ValueError, match="extra_bits"):
         sign_lsh_batch_topk(df, q, extra_bits=0)

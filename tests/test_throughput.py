@@ -47,7 +47,7 @@ def test_generator_path_throughput(spark):
 
 
 def test_codec_path_throughput():
-    """Decode-path guardrail (VERDICT r3 ask #8): the numpy-vectorized
+    """Decode-path guardrail: the numpy-vectorized
     JPEG IDCT + accumulator bit reader deliver ~165 64x64-img/s/core and
     the PNG inflate+unfilter ~550/s/core on this VM; floors are ~4x under
     measurement so CPU steal can't flake them, but a silently
@@ -83,7 +83,8 @@ def test_codec_path_throughput():
 
 
 def test_round5_codec_throughput_floors():
-    """Conservative single-core floors for the round-5 codecs so a
+    """Conservative single-core floors for the FLAC/GIF/mu-law/PackBits
+    codecs so a
     reintroduced quadratic loop fails loudly. Measured on the build box:
     FLAC ~690k samples/s, GIF LZW ~5-70M px/s (data-dependent), mu-law
     ~6M samples/s, PackBits ~280 MB/s — floors set 5-10x under."""

@@ -1,9 +1,9 @@
-"""Standing evidence for depth-adaptive sign-LSH splitting (round 14):
-counts the candidate-pair mass Σ_b C(n_b, 2) of semantic dedup's bucket
-self-join across the doubling fixtures and reports the per-doubling
-growth ratio — the number that was ~4x (quadratic) under the round-13
-single-level split and must stay ~2x (linear) under depth-adaptive
-splitting. A pure count, no wall-clock: safe to run on a noisy host.
+"""Evidence for depth-adaptive sign-LSH splitting: counts the
+candidate-pair mass Σ_b C(n_b, 2) of semantic dedup's bucket self-join
+across the doubling fixtures and reports the per-doubling growth ratio —
+the number that reads ~4x (quadratic) under a single-level split and
+must stay ~2x (linear) under depth-adaptive splitting. A pure count, no
+wall-clock: safe to run on a noisy host.
 
 Writes ANN_DEPTH.json.
 """
@@ -79,8 +79,8 @@ def main() -> None:
               for b in out["sfs"].values()
               if b.get("pair_growth_vs_prev_doubling")]
     out["worst_pair_growth"] = max(growth) if growth else None
-    # linear = 2.0 per doubling; the round-13 single-level split measured
-    # ~4.0 here at the sf4->sf8 step
+    # linear = 2.0 per doubling; a single-level split measured ~4.0 here
+    # at the sf4->sf8 step
     out["linear_reference"] = 2.0
     path = os.path.join(REPO, "ANN_DEPTH.json")
     with open(path, "w") as fh:

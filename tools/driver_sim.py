@@ -6,13 +6,12 @@ Usage: python tools/driver_sim.py [NAME | t:TAG ...]
 With arguments, only the named queries and the queries tagged TAG are
 checked, and the entry() smoke is skipped.
 
-Chunk mode (round 9, VERDICT r7 ask #2): SPARK_GRAFT_SIM_CHUNK="i/N"
-runs only the i-th of N strided slices of the query list (and skips the
-entry() smoke for i > 0). Big-SF sweeps (sf1+) need this: a single
-long-lived session over all ~177 queries at sf1 degrades partway
-(executor memory pressure accumulates), failing late queries
-environmentally — fresh-session re-checks of the same names MATCH (see
-PARITY_r07.md's caveat). tools/parity_sweep.py drives one fresh
+Chunk mode: SPARK_GRAFT_SIM_CHUNK="i/N" runs only the i-th of N strided
+slices of the query list (and skips the entry() smoke for i > 0).
+Big-SF sweeps (sf1+) need this: a single long-lived session over all
+queries at sf1 degrades partway (executor memory pressure accumulates),
+failing late queries environmentally — fresh-session re-checks of the
+same names MATCH. tools/parity_sweep.py drives one fresh
 process per chunk and aggregates a single ALL-OK artifact."""
 import hashlib
 import os as _os

@@ -1,13 +1,13 @@
-"""Measured evidence for the round-14 packing-shard fix (VERDICT r13
-"what's wrong" #2): a window partitioned by a skewed low-cardinality
-column (language) funnels the dominant stratum through ONE sequential
-sort task; the sharded mode splits it across K independent streams.
+"""Measured evidence for sharded packing: a window partitioned by a
+skewed low-cardinality column (language) funnels the dominant stratum
+through ONE sequential sort task; the sharded mode splits it across K
+independent streams.
 
 Builds a synthetic corpus shaped like a pretraining mix (dominant
-language holds ~85% of rows — the verdict's 60-90% scenario), then
-times pack_by_token_budget + a per-bin rollup:
+language holds ~85% of rows, inside a pretraining mix's usual 60-90%),
+then times pack_by_token_budget + a per-bin rollup:
 
-  - unsharded (partition_col only — the pre-r14 plan)
+  - unsharded (partition_col only)
   - sharded with K in {8, 32}
 
 on the SAME session and data, interleaved over multiple rounds so a

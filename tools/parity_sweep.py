@@ -1,10 +1,8 @@
-"""Full-registry oracle-parity sweep at a big SF as ONE artifact
-(round 9, VERDICT r7 ask #2 / r8 ask #4).
+"""Full-registry oracle-parity sweep at a big SF as ONE artifact.
 
 Runs tools/driver_sim.py in a FRESH subprocess per chunk (fresh
 SparkSession + fresh DuckDB each time), so executor memory pressure from
-early queries can never fail late queries environmentally — the failure
-mode that forced PARITY_r07's composition caveat. Aggregates every
+early queries can never fail late queries environmentally. Aggregates every
 chunk's per-query lines into PARITY.md with a single ALL-OK/FAIL
 verdict.
 
@@ -82,7 +80,7 @@ def main() -> int:
         print(f"# chunk {i}/{args.chunks}: {n_q} queries, {dt:.0f}s, "
               f"{verdict}", file=sys.stderr)
         if proc.returncode != 0:
-            # ANY non-zero exit is a failure (ADVICE r9: a chunk that
+            # ANY non-zero exit is a failure (a chunk that
             # printed all its per-query lines and THEN died — abnormal
             # teardown, OOM-kill after the last line — must not let the
             # sweep report ALL OK), with stderr surfaced when the chunk

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Memory-pressure (spill) probe — VERDICT r4 ask #4.
+"""Memory-pressure (spill) probe.
 
 Runs the frozen bench headliner set at sf1 inside a deliberately SMALL
 JVM (default --driver-memory 2g, local[8]) and records each query's own
@@ -34,7 +34,7 @@ DEFAULT_SF1 = os.path.join(REPO, "testdata", "sf1")
 
 
 def _wide_probes(spark, sf_dir: str) -> "dict[str, object]":
-    """Deliberately memory-wide plans (VERDICT r5 ask #3): each one's
+    """Deliberately memory-wide plans: each one's
     working set at sf1 exceeds a small heap's execution-memory share, so
     a green run REQUIRES the external (spilling) code path — evidence
     that more than one operator class survives memory pressure:
