@@ -7,8 +7,8 @@ dimensions. This is a HEADER decoder — dimensions, sample precision,
 component count, and baseline/progressive mode — not an entropy decoder:
 a training-data pipeline filters and routes on exactly these fields
 without inflating pixel data (the same cheap path as
-``functions/png.py:decode_ihdr``). Full pixel decode for JPEG remains
-behind ``operators/multimodal.DECODERS_AVAILABLE``.
+``functions/png.py:decode_ihdr``). Pixel decode reads the same segment
+walk (``functions/jpeg_pixels.py``).
 
 Also provides ``encode_minimal_jpeg`` — a structurally valid baseline or
 progressive JPEG stream (SOI + JFIF APP0 + DQT + SOFn + DHT + SOS + EOI)
@@ -44,11 +44,33 @@ class JpegMeta:
     progressive: bool
 
 
+def _entropy_end(blob: bytes, pos: int) -> int:
+    """Index of the marker that ends the entropy-coded data starting at
+    ``pos``: the first 0xFF that is neither a stuffed 0xFF00 nor a restart
+    marker RSTn (fill bytes may precede either marker, T.81 §B.1.1.2)."""
+    n = len(blob)
+    while True:
+        pos = blob.find(b"\xff", pos)
+        if pos < 0:
+            return n
+        nxt = pos + 1
+        while nxt < n and blob[nxt] == 0xFF:  # fill bytes
+            nxt += 1
+        if nxt < n and (blob[nxt] == 0x00 or 0xD0 <= blob[nxt] <= 0xD7):
+            pos = nxt + 1
+        else:
+            return pos
+
+
 def iter_segments(blob: bytes):
-    """Yield (marker, data) for each marker segment up to and including
-    SOS; validates SOI, marker framing, and segment lengths. Fill bytes
-    (repeated 0xFF) and standalone markers (TEM, RSTn) are handled per
-    T.81 §B.1.1.2."""
+    """Yield (marker, data) for each marker segment up to EOI; validates
+    SOI, marker framing, and segment lengths. Fill bytes (repeated 0xFF)
+    and standalone markers (TEM, RSTn) are handled per T.81 §B.1.1.2.
+
+    An SOS segment's ``data`` is its scan header followed by the scan's
+    entropy-coded bytes (restart markers included), so a progressive
+    stream yields one SOS per scan. A stream that ends inside a scan,
+    without EOI, ends the walk after that scan."""
     if blob[:2] != JPEG_SOI:
         raise JpegFormatError("bad JPEG SOI")
     pos = 2
@@ -70,16 +92,21 @@ def iter_segments(blob: bytes):
         (length,) = struct.unpack(">H", blob[pos : pos + 2])
         if length < 2 or pos + length > len(blob):
             raise JpegFormatError(f"bad segment length {length} at byte {pos}")
-        yield marker, blob[pos + 2 : pos + length]
-        pos += length
-        if marker == 0xDA:  # SOS: entropy-coded data follows, stop scanning
-            return
+        end = pos + length
+        if marker == 0xDA:  # SOS: entropy-coded data follows the header
+            end = _entropy_end(blob, end)
+        yield marker, blob[pos + 2 : end]
+        pos = end
+        if marker == 0xDA and pos >= len(blob):
+            return  # the last scan ran to the end: no EOI
     raise JpegFormatError("missing SOS/EOI")
 
 
 def decode_jpeg_meta(blob: bytes) -> JpegMeta:
     """Scan to the SOFn frame header and return dimensions + mode."""
     for marker, data in iter_segments(blob):
+        if marker == 0xDA:
+            break
         if marker in _SOF_MARKERS:
             if len(data) < 6:
                 raise JpegFormatError("truncated SOF header")

@@ -1,35 +1,35 @@
-"""Dependency-free baseline JPEG PIXEL codec.
+"""Dependency-free JPEG PIXEL codec.
 
-Implements the public ITU-T T.81 / ISO 10918-1 baseline sequential process
-for 8-bit images: entropy decode (canonical Huffman, byte-stuffed
-bitstream), dequantization, inverse zigzag, 2-D 8×8 IDCT, level shift —
-and the matching encoders used for fixtures (forward DCT + quantize +
-Huffman with the Annex K example tables). Two profiles:
+Implements the public ITU-T T.81 / ISO 10918-1 processes for 8-bit
+images: entropy decode (canonical Huffman, byte-stuffed bitstream),
+dequantization, inverse zigzag, 2-D 8×8 IDCT, level shift — and the
+matching encoders used for fixtures (forward DCT + quantization + Huffman
+with the Annex K example tables).
 
-- GRAYSCALE (single component) — the document-scan profile:
-  ``encode_baseline_gray`` / ``decode_baseline_gray``.
-- COLOR (three components, interleaved Y Cb Cr MCUs, JFIF color
-  transform) at 4:4:4, 4:2:2 and 4:2:0 sampling —
-  ``decode_baseline_color`` handles any 1-or-2 factor per axis;
-  ``encode_baseline_color`` (4:4:4) and ``encode_baseline_420`` build
-  fixtures for both ends of the range.
+ONE decoder reads every supported stream. ``functions/jpeg.iter_segments``
+walks the markers (DQT, DHT, DRI, SOF0/1/2, SOS, fill bytes, standalone
+markers), and each scan is entropy-decoded into per-component coefficient
+blocks, for 1 or 3 components at sampling factors 1–2 per axis:
 
-- PROGRESSIVE grayscale (SOF2, full T.81 Annex G scan script: DC
-  first/refinement, spectral-selection AC first scans with EOB runs,
-  successive-approximation AC refinement): ``encode_progressive_gray`` /
-  ``decode_progressive_gray`` — decodes bit-identical to the baseline
-  stream of the same source.
+- a sequential stream (SOF0 baseline / SOF1) is one scan that carries
+  every coefficient of every block;
+- a progressive stream (SOF2) is the T.81 Annex G scan script: DC
+  first/refinement, spectral-selection AC first scans with EOB runs, and
+  successive-approximation AC refinement.
 
-Restart markers (DRI/RSTn — camera/libjpeg-style streams) are supported
-in both baseline profiles: predictors reset and the bitstream re-aligns
-at each marker (encoders take ``restart_interval`` for fixtures).
+Restart intervals (DRI/RSTn) work in both: predictors and EOB runs reset
+and the bitstream re-aligns at each marker. The blocks are dequantized
+and inverse-transformed once. ``decode_gray`` returns the one
+component's plane; ``decode_color`` upsamples Y/Cb/Cr (4:4:4, 4:2:2,
+4:2:0) and applies the JFIF colour transform.
 
-Progressive COLOR, restart markers inside progressive scans, and sampling
-factors above 2 raise a clear error and stay behind
-``operators/multimodal.DECODERS_AVAILABLE``. The IDCT here is
-the direct float transform: correct and portable; production swaps a
-vectorized codec without touching the Spark-side plumbing (the
-operators' ``map_rows`` row functions call the same entry points).
+Not supported, each raising ``JpegFormatError``: sampling factors above
+2, 12-bit samples and 16-bit quantization tables, and the lossless,
+hierarchical and arithmetic-coded processes. Each needs its own decode
+path and none is produced by the fixture encoders.
+
+The five public encoders are thin calls into one component-generic
+writer, ``_encode``.
 
 All table constants below are published in T.81 itself (zigzag order
 §A.3.6, example Huffman tables Annex K.3) — public spec, not library code.
@@ -39,13 +39,16 @@ from __future__ import annotations
 
 import math
 import struct
+from functools import partial
 
 import numpy as np
 
 from appengine_mapreduce_spark.functions.jpeg import (
+    _SOF_MARKERS,
     JPEG_SOI,
     JpegFormatError,
     _segment,
+    iter_segments,
 )
 
 # zigzag scan order (T.81 §A.3.6): index i of the scan -> (row, col)
@@ -95,6 +98,19 @@ AC_SYMBOLS = [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+# Progressive AC scans need EOBn symbols (r<<4 for r=1..14), which the
+# baseline Annex K table does not define. Fixtures use this flat 9-bit
+# table instead: every needed symbol at code length 9 — canonical,
+# prefix-free, deliberately simple (compression is irrelevant for
+# fixtures; the DECODER reads whatever DHT the stream carries).
+PROG_AC_SYMBOLS = (
+    [r << 4 for r in range(15)]
+    + [0xF0]
+    + [(r << 4) | s for r in range(16) for s in range(1, 9)]
+)
+PROG_AC_COUNTS = [0] * 16
+PROG_AC_COUNTS[8] = len(PROG_AC_SYMBOLS)  # all codes 9 bits
+
 _COS = [
     [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
     for x in range(8)
@@ -102,15 +118,16 @@ _COS = [
 _C = [1 / math.sqrt(2)] + [1.0] * 7
 
 # DCT basis as a matrix: _M[u, x] = C[u] * cos((2x+1)uπ/16). The 2-D
-# transforms become two 8×8 matmuls (IDCT: 0.25·Mᵀ·F·M, fDCT:
-# 0.25·M·f·Mᵀ) — numpy BLAS instead of 64×64-term Python loops, which
-# profiling showed was 76% of decode wall time.
+# transforms become 8×8 matmuls over a stack of blocks (IDCT:
+# 0.25·Mᵀ·F·M, fDCT: 0.25·M·f·Mᵀ) — numpy BLAS instead of 64×64-term
+# Python loops.
 _M = np.array([[_C[u] * _COS[x][u] for x in range(8)] for u in range(8)])
 _ZIGZAG_NP = np.array(ZIGZAG)
 
 
 def _canonical_codes(counts: list[int], symbols: list[int]):
-    """T.81 §C.2: assign consecutive codes per length."""
+    """T.81 §C.2: assign consecutive codes per length -> {symbol: (length,
+    code)}."""
     codes = {}
     code = 0
     k = 0
@@ -121,6 +138,10 @@ def _canonical_codes(counts: list[int], symbols: list[int]):
             k += 1
         code <<= 1
     return codes
+
+
+def _ceil_div(a: int, b: int) -> int:
+    return -(-a // b)
 
 
 class _BitWriter:
@@ -150,18 +171,6 @@ class _BitWriter:
             self.acc = 0
             self.nbits = 0
         return bytes(self.out)
-
-    def restart(self, n: int) -> None:
-        """Byte-align (1-padded) and emit RSTn (T.81 §B.2.1, n in 0..7)."""
-        if self.nbits:
-            self.acc <<= 8 - self.nbits
-            self.acc |= (1 << (8 - self.nbits)) - 1
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.nbits = 0
-        self.out += bytes((0xFF, 0xD0 + (n & 7)))
 
 
 class _BitReader:
@@ -208,41 +217,31 @@ class _BitReader:
         return (self.acc >> self.nbits) & ((1 << n) - 1)
 
     def restart(self) -> None:
-        """Discard padding bits and consume an RSTn marker (any D0-D7)."""
+        """Discard padding bits and consume an RSTn marker (any D0-D7)
+        and the fill bytes before it."""
         self.nbits = 0
         self.acc = 0
-        if (
-            self.pos + 2 > len(self.data)
-            or self.data[self.pos] != 0xFF
-            or not (0xD0 <= self.data[self.pos + 1] <= 0xD7)
-        ):
+        data, pos = self.data, self.pos
+        while data[pos : pos + 2] == b"\xff\xff":
+            pos += 1
+        marker = data[pos : pos + 2]
+        if len(marker) < 2 or marker[0] != 0xFF or not 0xD0 <= marker[1] <= 0xD7:
             raise JpegFormatError("expected restart marker")
-        self.pos += 2
+        self.pos = pos + 2
 
 
 def _category(v: int) -> int:
     return v.bit_length() if v >= 0 else (-v).bit_length()
 
 
-_FAST_KEY = "perlength"  # cache slot inside a decoder LUT dict
-
-
-def _read_symbol(reader: "_BitReader", lut: dict) -> int:
+def _read_symbol(reader: "_BitReader", table: list[dict]) -> int:
     """Walk the canonical code one bit at a time (T.81 §F.2.2.3), probing
-    a per-length int-keyed dict (built lazily per table) instead of
-    allocating+hashing a (length, code) tuple per bit."""
-    fast = lut.get(_FAST_KEY)
-    if fast is None:
-        fast = [None] + [dict() for _ in range(16)]
-        for key, sym in lut.items():
-            if isinstance(key, tuple):
-                fast[key[0]][key[1]] = sym
-        lut[_FAST_KEY] = fast
+    the table's per-length {code: symbol} dicts."""
     code = 0
     bit = reader.bit
     for length in range(1, 17):
         code = (code << 1) | bit()
-        sym = fast[length].get(code)
+        sym = table[length].get(code)
         if sym is not None:
             return sym
     raise JpegFormatError("invalid Huffman code")
@@ -253,13 +252,86 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+def _trunc_div2(v: int) -> int:
+    """AC point transform for Al=1: divide by 2 rounding toward zero."""
+    return -((-v) >> 1) if v < 0 else v >> 1
+
+
+# --- frame geometry, shared by the writer and the decoder ------------------
+
+class _Frame:
+    """Block layout of one frame (T.81 A.2): for each component
+    ``(cid, h, v, tq)`` in SOF order, its zigzag coefficient blocks on the
+    padded MCU grid (``mcus_x·h`` × ``mcus_y·v`` blocks), in raster
+    order."""
+
+    def __init__(self, width: int, height: int, comps: list, progressive: bool):
+        if width == 0 or height == 0:
+            raise JpegFormatError("zero dimension in SOF")
+        for _cid, h, v, _tq in comps:
+            if not (1 <= h <= 2 and 1 <= v <= 2):
+                raise JpegFormatError(f"sampling factor {h}x{v} unsupported")
+        self.width, self.height = width, height
+        self.comps, self.progressive = comps, progressive
+        self.hmax = max(h for _, h, _, _ in comps)
+        self.vmax = max(v for _, _, v, _ in comps)
+        self.mcus_x = _ceil_div(width, 8 * self.hmax)
+        self.mcus_y = _ceil_div(height, 8 * self.vmax)
+        self.factors = {cid: (h, v) for cid, h, v, _ in comps}
+        self.coefs = {
+            cid: [[0] * 64 for _ in range(self.mcus_x * h * self.mcus_y * v)]
+            for cid, h, v, _ in comps
+        }
+
+    def mcus(self, cids: list[int]) -> list[list[tuple[int, list[int]]]]:
+        """A scan's MCUs in coding order, each a list of (cid, block). A
+        one-component scan is non-interleaved: one block per MCU over the
+        component's own sample area (A.2.2). Otherwise each MCU holds
+        h×v blocks of each component in turn (A.2.3)."""
+        if len(cids) == 1:
+            (cid,) = cids
+            h, v = self.factors[cid]
+            nbx = _ceil_div(_ceil_div(self.width * h, self.hmax), 8)
+            nby = _ceil_div(_ceil_div(self.height * v, self.vmax), 8)
+            pbx, blocks = self.mcus_x * h, self.coefs[cid]
+            return [
+                [(cid, blocks[by * pbx + bx])]
+                for by in range(nby)
+                for bx in range(nbx)
+            ]
+        out = []
+        for my in range(self.mcus_y):
+            for mx in range(self.mcus_x):
+                mcu = []
+                for cid in cids:
+                    h, v = self.factors[cid]
+                    pbx, blocks = self.mcus_x * h, self.coefs[cid]
+                    for vb in range(v):
+                        row = (my * v + vb) * pbx + mx * h
+                        mcu += [(cid, blocks[row + hb]) for hb in range(h)]
+                out.append(mcu)
+        return out
+
+
+def _intervals(mcus: list, restart_interval: int) -> list[list]:
+    """Split a scan's MCUs at its restart markers, each interval's blocks
+    flattened to (cid, block) pairs in coding order. DC predictors and
+    EOB runs start afresh in every interval."""
+    step = restart_interval or len(mcus)
+    return [
+        [blk for mcu in mcus[i : i + step] for blk in mcu]
+        for i in range(0, len(mcus), step)
+    ]
+
+
+# --- scan encoders: each writes ONE restart interval of one scan ----------
+
 def _write_coef_block(
     w: "_BitWriter", zz: list[int], dc_codes: dict, ac_codes: dict,
     prev_dc: int,
 ) -> int:
-    """Entropy-encode one baseline block (DC diff + AC run/size with ZRL
-    and EOB); returns the block's DC for the caller's predictor. The ONE
-    copy of this logic — gray, 4:4:4 and 4:2:0 encoders all call it."""
+    """Entropy-encode one sequential block (DC diff + AC run/size with ZRL
+    and EOB); returns the block's DC for the caller's predictor."""
     diff = zz[0] - prev_dc
     t = _category(diff)
     length, code = dc_codes[t]
@@ -291,584 +363,16 @@ def _write_coef_block(
     return zz[0]
 
 
-def _read_coef_block(
-    reader: "_BitReader", dc_tbl: dict, ac_tbl: dict, prev_dc: int
-) -> tuple[list[int], int]:
-    """Entropy-decode one baseline block; returns (zigzag coefficients,
-    new DC predictor). Shared by the gray and color decoders."""
-    zz = [0] * 64
-    t = _read_symbol(reader, dc_tbl)
-    diff = _extend(reader.bits(t), t) if t else 0
-    dc = prev_dc + diff
-    zz[0] = dc
-    i = 1
-    while i < 64:
-        sym = _read_symbol(reader, ac_tbl)
-        if sym == 0x00:  # EOB
-            break
-        if sym == 0xF0:  # ZRL
-            i += 16
-            continue
-        run, size = sym >> 4, sym & 0x0F
-        i += run
-        if i > 63:
-            raise JpegFormatError("AC run overflow")
-        zz[i] = _extend(reader.bits(size), size)
-        i += 1
-    return zz, dc
-
-
-def _fdct_quant(block: list[int], qt_zz: list[int]) -> list[int]:
-    """Level-shifted 8x8 spatial block -> quantized zigzag coefficients."""
-    spatial = np.asarray(block, dtype=np.float64).reshape(8, 8)
-    coef = 0.25 * (_M @ spatial @ _M.T)
-    zz = coef.ravel()[_ZIGZAG_NP] / np.asarray(qt_zz, dtype=np.float64)
-    # np.rint rounds half-to-even, same as the round() this replaced.
-    return np.rint(zz).astype(np.int64).tolist()
-
-
-def _dequant_idct(zz_coefs: list[int], qt_zz: list[int]) -> list[int]:
-    """Quantized zigzag coefficients -> spatial 8x8 block (pre level
-    shift)."""
-    F = np.zeros(64)
-    F[_ZIGZAG_NP] = np.asarray(zz_coefs, dtype=np.float64) * np.asarray(
-        qt_zz, dtype=np.float64
-    )
-    spatial = 0.25 * (_M.T @ F.reshape(8, 8) @ _M)
-    return np.rint(spatial).astype(np.int64).ravel().tolist()
-
-
-def encode_baseline_gray(
-    pixels: list[int],
-    width: int,
-    height: int,
-    qt_zz: list[int] | None = None,
-    restart_interval: int = 0,
+def _enc_sequential(
+    seq: list[tuple[int, list[int]]], dc_codes: dict, ac_codes: dict
 ) -> bytes:
-    """Encode an 8-bit grayscale image (row-major ``pixels``) as a REAL
-    baseline sequential JPEG: fDCT + quantization + Annex K Huffman
-    entropy coding. Edge-replication pads to 8x8 blocks.
-    ``restart_interval`` > 0 emits a DRI segment and RSTn markers every N
-    MCUs (camera/libjpeg-style streams)."""
-    qt = list(qt_zz or STD_QT_ZZ)
-    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _canonical_codes(AC_COUNTS, AC_SYMBOLS)
-    bw = 8 * ((width + 7) // 8)
-    bh = 8 * ((height + 7) // 8)
+    """Sequential scan: every coefficient of each block, one DC predictor
+    per component."""
     w = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    rst = 0
-    for by in range(0, bh, 8):
-        for bx in range(0, bw, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc = 0
-            block = []
-            for y in range(8):
-                sy = min(by + y, height - 1)
-                for x in range(8):
-                    sx = min(bx + x, width - 1)
-                    block.append(pixels[sy * width + sx] - 128)
-            prev_dc = _write_coef_block(
-                w, _fdct_quant(block, qt), dc_codes, ac_codes, prev_dc
-            )
-            mcu += 1
-    scan = w.flush()
-
-    dqt = bytes((0x00,)) + bytes(qt)
-    sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0x00))
-    dht_dc = bytes((0x00, *DC_COUNTS)) + bytes(DC_SYMBOLS)
-    dht_ac = bytes((0x10, *AC_COUNTS)) + bytes(AC_SYMBOLS)
-    sos = bytes((1, 1, 0x00, 0, 63, 0))
-    dri = (
-        _segment(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        JPEG_SOI
-        + _segment(0xDB, dqt)
-        + dri
-        + _segment(0xC0, sof)
-        + _segment(0xC4, dht_dc)
-        + _segment(0xC4, dht_ac)
-        + _segment(0xDA, sos)
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-def _parse_dht(data: bytes, tables: dict) -> None:
-    pos = 0
-    while pos < len(data):
-        tc_th = data[pos]
-        counts = list(data[pos + 1 : pos + 17])
-        n = sum(counts)
-        symbols = list(data[pos + 17 : pos + 17 + n])
-        # decoder lookup: (length, code) -> symbol
-        lut = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                lut[(length, code)] = symbols[k]
-                code += 1
-                k += 1
-            code <<= 1
-        tables[tc_th] = lut
-        pos += 17 + n
-
-
-def decode_baseline_gray(blob: bytes) -> tuple[int, int, list[int]]:
-    """Decode a baseline sequential GRAYSCALE JPEG to (width, height,
-    row-major 8-bit pixels). Multi-component or progressive streams raise
-    JpegFormatError (that subset stays behind DECODERS_AVAILABLE)."""
-    if blob[:2] != JPEG_SOI:
-        raise JpegFormatError("bad JPEG SOI")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[int, dict] = {}
-    width = height = None
-    scan_start = None
-    dc_tbl = ac_tbl = None
-    comp_qt = 0
-    restart_interval = 0
-    while pos + 4 <= len(blob):
-        if blob[pos] != 0xFF:
-            raise JpegFormatError(f"expected marker at {pos}")
-        marker = blob[pos + 1]
-        (length,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
-        data = blob[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:
-            p = 0
-            while p < len(data):
-                pq_tq = data[p]
-                if pq_tq >> 4:
-                    raise JpegFormatError("16-bit quant tables unsupported")
-                qtables[pq_tq & 0x0F] = list(data[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC0 or marker == 0xC1:
-            precision, height, width, n_comp = struct.unpack(">BHHB", data[:6])
-            if precision != 8 or n_comp != 1:
-                raise JpegFormatError(
-                    "only 8-bit grayscale baseline supported"
-                )
-            comp_qt = data[8]
-        elif marker in (0xC2, 0xC6, 0xCA, 0xCE):
-            raise JpegFormatError("progressive JPEG unsupported")
-        elif marker == 0xC4:
-            _parse_dht(data, htables)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", data[:2])
-        elif marker == 0xDA:
-            dc_tbl = htables.get(data[2] >> 4)
-            ac_tbl = htables.get(0x10 | (data[2] & 0x0F))
-            scan_start = pos + 2 + length
-            break
-        pos += 2 + length
-    if width is None or scan_start is None:
-        raise JpegFormatError("missing SOF/SOS")
-    if dc_tbl is None or ac_tbl is None:
-        raise JpegFormatError("missing Huffman tables")
-    qt = qtables.get(comp_qt)
-    if qt is None:
-        raise JpegFormatError("missing quant table")
-
-    end = blob.rfind(b"\xff\xd9")
-    reader = _BitReader(blob[scan_start : end if end > 0 else len(blob)])
-
-    bw = 8 * ((width + 7) // 8)
-    bh = 8 * ((height + 7) // 8)
-    pixels = [0] * (width * height)
-    prev_dc = 0
-    mcu = 0
-    for by in range(0, bh, 8):
-        for bx in range(0, bw, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                reader.restart()
-                prev_dc = 0
-            mcu += 1
-            zz, prev_dc = _read_coef_block(reader, dc_tbl, ac_tbl, prev_dc)
-            block = _dequant_idct(zz, qt)
-            for y in range(8):
-                sy = by + y
-                if sy >= height:
-                    break
-                for x in range(8):
-                    sx = bx + x
-                    if sx >= width:
-                        continue
-                    v = block[y * 8 + x] + 128
-                    pixels[sy * width + sx] = 0 if v < 0 else (255 if v > 255 else v)
-    return width, height, pixels
-
-
-# --- baseline color (4:4:4 YCbCr) -------------------------------------------
-
-def _rgb_to_ycbcr(r: int, g: int, b: int) -> tuple[int, int, int]:
-    """JFIF color transform (floats, rounded, clamped)."""
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
-
-    def clamp(v: float) -> int:
-        i = int(round(v))
-        return 0 if i < 0 else (255 if i > 255 else i)
-
-    return clamp(y), clamp(cb), clamp(cr)
-
-
-def _planes_to_rgb(
-    planes: dict,
-    plane_w: dict,
-    factors: dict,
-    ordered: list[int],
-    width: int,
-    height: int,
-    hmax: int,
-    vmax: int,
-) -> list[tuple[int, int, int]]:
-    """Upsample the Y/Cb/Cr component planes to full resolution (nearest
-    sample, the x*h//hmax index map) and apply the inverse JFIF transform
-    — vectorized. np.rint rounds half-to-even exactly like the scalar
-    ``int(round())`` in :func:`_ycbcr_to_rgb`, and the per-element float
-    expressions are identical, so this is bit-equal to the former
-    per-pixel loop."""
-    full = []
-    for cid in ordered:
-        h_i, v_i = factors[cid]
-        pw = plane_w[cid]
-        arr = np.asarray(planes[cid], dtype=np.float64)
-        xs = (np.arange(width) * h_i) // hmax
-        ys = (np.arange(height) * v_i) // vmax
-        full.append(arr[ys[:, None] * pw + xs[None, :]])
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128)
-    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-    b = y + 1.772 * (cb - 128)
-    out = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255)
-    return [tuple(px) for px in out.astype(np.int64).reshape(-1, 3).tolist()]
-
-
-def _ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
-    r = y + 1.402 * (cr - 128)
-    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-    b = y + 1.772 * (cb - 128)
-
-    def clamp(v: float) -> int:
-        i = int(round(v))
-        return 0 if i < 0 else (255 if i > 255 else i)
-
-    return clamp(r), clamp(g), clamp(b)
-
-
-def encode_baseline_color(
-    rgb: list[tuple[int, int, int]],
-    width: int,
-    height: int,
-    qt_zz: list[int] | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode an RGB image as baseline 4:4:4 YCbCr JPEG (one 8×8 block per
-    component per MCU, interleaved Y Cb Cr; the luminance example tables
-    serve all three components — legal and simplest)."""
-    qt = list(qt_zz or STD_QT_ZZ)
-    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _canonical_codes(AC_COUNTS, AC_SYMBOLS)
-    planes = [[], [], []]
-    for (r, g, b) in rgb:
-        y, cb, cr = _rgb_to_ycbcr(r, g, b)
-        planes[0].append(y)
-        planes[1].append(cb)
-        planes[2].append(cr)
-    bw = 8 * ((width + 7) // 8)
-    bh = 8 * ((height + 7) // 8)
-    w = _BitWriter()
-    prev_dc = [0, 0, 0]
-
-    def encode_block(plane: list[int], bx: int, by: int, comp: int) -> None:
-        block = []
-        for yy in range(8):
-            sy = min(by + yy, height - 1)
-            for xx in range(8):
-                sx = min(bx + xx, width - 1)
-                block.append(plane[sy * width + sx] - 128)
-        prev_dc[comp] = _write_coef_block(
-            w, _fdct_quant(block, qt), dc_codes, ac_codes, prev_dc[comp]
-        )
-
-    mcu = 0
-    rst = 0
-    for by in range(0, bh, 8):
-        for bx in range(0, bw, 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart(rst)
-                rst = (rst + 1) % 8
-                prev_dc[0] = prev_dc[1] = prev_dc[2] = 0
-            mcu += 1
-            for comp in range(3):
-                encode_block(planes[comp], bx, by, comp)
-    scan = w.flush()
-
-    dqt = bytes((0x00,)) + bytes(qt)
-    sof = struct.pack(">BHHB", 8, height, width, 3)
-    for cid in (1, 2, 3):
-        sof += bytes((cid, 0x11, 0x00))  # 4:4:4, shared quant table
-    dht_dc = bytes((0x00, *DC_COUNTS)) + bytes(DC_SYMBOLS)
-    dht_ac = bytes((0x10, *AC_COUNTS)) + bytes(AC_SYMBOLS)
-    sos = bytes((3,)) + bytes((1, 0x00, 2, 0x00, 3, 0x00)) + bytes((0, 63, 0))
-    dri = (
-        _segment(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        JPEG_SOI
-        + _segment(0xDB, dqt)
-        + dri
-        + _segment(0xC0, sof)
-        + _segment(0xC4, dht_dc)
-        + _segment(0xC4, dht_ac)
-        + _segment(0xDA, sos)
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-def decode_baseline_color(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
-    """Decode a baseline YCbCr JPEG to (width, height, RGB tuples).
-
-    Handles sampling factors 1 or 2 per axis — i.e. 4:4:4, 4:2:2 and
-    4:2:0 (the overwhelmingly common web layout: Y at 2×2, chroma at
-    1×1 per 16×16 MCU, upsampled here by replication). Larger factors
-    and progressive streams raise JpegFormatError — those stay behind
-    DECODERS_AVAILABLE."""
-    if blob[:2] != JPEG_SOI:
-        raise JpegFormatError("bad JPEG SOI")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[int, dict] = {}
-    width = height = None
-    comps = []  # (comp_id, qt_id)
-    scan_sel: dict[int, tuple[int, int]] = {}
-    scan_order: list[int] = []
-    scan_start = None
-    restart_interval = 0
-    while pos + 4 <= len(blob):
-        if blob[pos] != 0xFF:
-            raise JpegFormatError(f"expected marker at {pos}")
-        marker = blob[pos + 1]
-        (length,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
-        data = blob[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:
-            p = 0
-            while p < len(data):
-                pq_tq = data[p]
-                if pq_tq >> 4:
-                    raise JpegFormatError("16-bit quant tables unsupported")
-                qtables[pq_tq & 0x0F] = list(data[p + 1 : p + 65])
-                p += 65
-        elif marker in (0xC0, 0xC1):
-            precision, height, width, n_comp = struct.unpack(">BHHB", data[:6])
-            if precision != 8 or n_comp != 3:
-                raise JpegFormatError("decode_baseline_color needs 3 components")
-            for c in range(3):
-                cid, hv, tq = data[6 + 3 * c : 9 + 3 * c]
-                h_i, v_i = hv >> 4, hv & 0x0F
-                if not (1 <= h_i <= 2 and 1 <= v_i <= 2):
-                    raise JpegFormatError(
-                        f"sampling factor {h_i}x{v_i} unsupported"
-                    )
-                comps.append((cid, tq, h_i, v_i))
-        elif marker in (0xC2, 0xC6, 0xCA, 0xCE):
-            raise JpegFormatError("progressive JPEG unsupported")
-        elif marker == 0xC4:
-            _parse_dht(data, htables)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", data[:2])
-        elif marker == 0xDA:
-            ns = data[0]
-            for c in range(ns):
-                cid, tsel = data[1 + 2 * c : 3 + 2 * c]
-                scan_sel[cid] = (tsel >> 4, tsel & 0x0F)
-                scan_order.append(cid)
-            scan_start = pos + 2 + length
-            break
-        pos += 2 + length
-    if width is None or scan_start is None or len(comps) != 3:
-        raise JpegFormatError("missing SOF/SOS")
-
-    end = blob.rfind(b"\xff\xd9")
-    reader = _BitReader(blob[scan_start : end if end > 0 else len(blob)])
-
-    hmax = max(h for _, _, h, _ in comps)
-    vmax = max(v for _, _, _, v in comps)
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    # per-component padded plane (full MCU grid at that component's
-    # resolution); sampled with clamp when converting to RGB
-    plane_w = {cid: mcus_x * 8 * h for cid, _, h, _ in comps}
-    plane_h = {cid: mcus_y * 8 * v for cid, _, _, v in comps}
-    planes = {cid: [0] * (plane_w[cid] * plane_h[cid]) for cid, *_ in comps}
-    prev_dc = {cid: 0 for cid, *_ in comps}
-    qt_of = {cid: qtables[tq] for cid, tq, _, _ in comps}
-    factors = {cid: (h, v) for cid, _, h, v in comps}
-    mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                reader.restart()
-                for cid in prev_dc:
-                    prev_dc[cid] = 0
-            mcu += 1
-            for cid in scan_order:
-                h_i, v_i = factors[cid]
-                dc_tbl = htables.get(scan_sel[cid][0])
-                ac_tbl = htables.get(0x10 | scan_sel[cid][1])
-                if dc_tbl is None or ac_tbl is None:
-                    raise JpegFormatError("missing Huffman tables")
-                for v_blk in range(v_i):
-                    for h_blk in range(h_i):
-                        zz, prev_dc[cid] = _read_coef_block(
-                            reader, dc_tbl, ac_tbl, prev_dc[cid]
-                        )
-                        block = _dequant_idct(zz, qt_of[cid])
-                        plane = planes[cid]
-                        pw = plane_w[cid]
-                        ox = (mx * h_i + h_blk) * 8
-                        oy = (my * v_i + v_blk) * 8
-                        for yy in range(8):
-                            row = (oy + yy) * pw + ox
-                            for xx in range(8):
-                                v = block[yy * 8 + xx] + 128
-                                plane[row + xx] = (
-                                    0 if v < 0 else (255 if v > 255 else v)
-                                )
-    ordered = [cid for cid, *_ in comps]
-    rgb = _planes_to_rgb(
-        planes, plane_w, factors, ordered, width, height, hmax, vmax
-    )
-    return width, height, rgb
-
-
-def encode_baseline_420(
-    rgb: list[tuple[int, int, int]],
-    width: int,
-    height: int,
-    qt_zz: list[int] | None = None,
-) -> bytes:
-    """Encode RGB as baseline 4:2:0 YCbCr JPEG — Y at full resolution
-    (2×2 blocks per MCU), chroma downsampled 2× per axis by 2×2 mean
-    (1 block per MCU each). This is the common web/camera layout; the
-    matching decoder path is decode_baseline_color's sampling-factor MCU
-    loop."""
-    qt = list(qt_zz or STD_QT_ZZ)
-    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _canonical_codes(AC_COUNTS, AC_SYMBOLS)
-
-    yp, cbp, crp = [], [], []
-    for (r, g, b) in rgb:
-        y, cb, cr = _rgb_to_ycbcr(r, g, b)
-        yp.append(y)
-        cbp.append(cb)
-        crp.append(cr)
-    cw = (width + 1) // 2
-    ch = (height + 1) // 2
-    cb_half = [0] * (cw * ch)
-    cr_half = [0] * (cw * ch)
-    for cy in range(ch):
-        for cx in range(cw):
-            acc_b = acc_r = n = 0
-            for dy in range(2):
-                sy = 2 * cy + dy
-                if sy >= height:
-                    continue
-                for dx in range(2):
-                    sx = 2 * cx + dx
-                    if sx >= width:
-                        continue
-                    acc_b += cbp[sy * width + sx]
-                    acc_r += crp[sy * width + sx]
-                    n += 1
-            cb_half[cy * cw + cx] = int(round(acc_b / n))
-            cr_half[cy * cw + cx] = int(round(acc_r / n))
-
-    w = _BitWriter()
-    prev_dc = [0, 0, 0]
-
-    def encode_block(plane, pw, ph, bx, by, comp):
-        block = []
-        for yy in range(8):
-            sy = min(by + yy, ph - 1)
-            for xx in range(8):
-                sx = min(bx + xx, pw - 1)
-                block.append(plane[sy * pw + sx] - 128)
-        prev_dc[comp] = _write_coef_block(
-            w, _fdct_quant(block, qt), dc_codes, ac_codes, prev_dc[comp]
-        )
-
-    mcus_x = (width + 15) // 16
-    mcus_y = (height + 15) // 16
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for v_blk in range(2):
-                for h_blk in range(2):
-                    encode_block(
-                        yp, width, height,
-                        (mx * 2 + h_blk) * 8, (my * 2 + v_blk) * 8, 0,
-                    )
-            encode_block(cb_half, cw, ch, mx * 8, my * 8, 1)
-            encode_block(cr_half, cw, ch, mx * 8, my * 8, 2)
-    scan = w.flush()
-
-    dqt = bytes((0x00,)) + bytes(qt)
-    sof = struct.pack(">BHHB", 8, height, width, 3)
-    sof += bytes((1, 0x22, 0x00))  # Y 2x2
-    sof += bytes((2, 0x11, 0x00))  # Cb 1x1
-    sof += bytes((3, 0x11, 0x00))  # Cr 1x1
-    dht_dc = bytes((0x00, *DC_COUNTS)) + bytes(DC_SYMBOLS)
-    dht_ac = bytes((0x10, *AC_COUNTS)) + bytes(AC_SYMBOLS)
-    sos = bytes((3,)) + bytes((1, 0x00, 2, 0x00, 3, 0x00)) + bytes((0, 63, 0))
-    return (
-        JPEG_SOI
-        + _segment(0xDB, dqt)
-        + _segment(0xC0, sof)
-        + _segment(0xC4, dht_dc)
-        + _segment(0xC4, dht_ac)
-        + _segment(0xDA, sos)
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-# --- progressive (SOF2) grayscale ------------------------------------------
-#
-# T.81 Annex G: DC/AC spectral-selection scans with successive
-# approximation. DC uses an arithmetic shift point transform; AC truncates
-# toward zero. AC first scans carry EOB runs (EOBRUN); AC refinement
-# scans interleave newly-nonzero symbols with correction bits for
-# coefficients that already have history.
-
-
-def _trunc_div2(v: int) -> int:
-    """AC point transform for Al=1: divide by 2 rounding toward zero."""
-    return -((-v) >> 1) if v < 0 else v >> 1
-
-
-# Progressive AC scans need EOBn symbols (r<<4 for r=1..14), which the
-# baseline Annex K table does not define. Fixtures use this flat 9-bit
-# table instead: every needed symbol at code length 9 — canonical,
-# prefix-free, deliberately simple (compression is irrelevant for
-# fixtures; the DECODER reads whatever DHT the stream carries).
-PROG_AC_SYMBOLS = (
-    [r << 4 for r in range(15)]
-    + [0xF0]
-    + [(r << 4) | s for r in range(16) for s in range(1, 9)]
-)
-PROG_AC_COUNTS = [0] * 16
-PROG_AC_COUNTS[8] = len(PROG_AC_SYMBOLS)  # all codes 9 bits
+    prev: dict[int, int] = {}
+    for ci, zz in seq:
+        prev[ci] = _write_coef_block(w, zz, dc_codes, ac_codes, prev.get(ci, 0))
+    return w.flush()
 
 
 def _enc_dc_first(
@@ -898,7 +402,7 @@ def _enc_dc_refine(seq: list[tuple[int, list[int]]], al: int) -> bytes:
 
 
 def _enc_ac_first(
-    blocks: list[list[int]], ac_codes: dict, ss: int, se: int, al: int
+    seq: list[tuple[int, list[int]]], ac_codes: dict, ss: int, se: int, al: int
 ) -> bytes:
     """AC first scan for ONE component's blocks with EOB runs (G.1.2.2)."""
     w = _BitWriter()
@@ -916,7 +420,7 @@ def _enc_ac_first(
                 w.put(take - (1 << r), r)
             eobrun -= take
 
-    for zz in blocks:
+    for _ci, zz in seq:
         band = [_trunc_div2(zz[k]) if al else zz[k] for k in range(ss, se + 1)]
         last_nz = -1
         for i, v in enumerate(band):
@@ -948,7 +452,7 @@ def _enc_ac_first(
 
 
 def _enc_ac_refine(
-    blocks: list[list[int]], ac_codes: dict, ss: int, se: int, al: int
+    seq: list[tuple[int, list[int]]], ac_codes: dict, ss: int, se: int, al: int
 ) -> bytes:
     """AC refinement scan for ONE component (correction bits +
     newly-nonzero insertion, G.1.2.3). ``al`` is the NEW point transform;
@@ -972,7 +476,7 @@ def _enc_ac_refine(
             pending = []
             eobrun -= take
 
-    for zz in blocks:
+    for _ci, zz in seq:
         hist = [_trunc_div2(zz[k]) for k in range(ss, se + 1)]
         full = [zz[k] for k in range(ss, se + 1)]
         newly = [i for i, (h, f) in enumerate(zip(hist, full)) if h == 0 and f != 0]
@@ -1031,69 +535,234 @@ def _enc_ac_refine(
     return w.flush()
 
 
+# --- the one writer --------------------------------------------------------
+
+def _fdct_blocks(
+    plane: np.ndarray, pbx: int, pby: int, qt_zz: list[int]
+) -> list[list[int]]:
+    """Edge-replicate one component's samples to its pbx×pby block grid
+    and return every block's quantized zigzag coefficients, in raster
+    order."""
+    ph, pw = plane.shape
+    padded = np.pad(plane, ((0, 8 * pby - ph), (0, 8 * pbx - pw)), mode="edge")
+    blocks = (padded.astype(np.float64) - 128).reshape(pby, 8, pbx, 8)
+    blocks = blocks.swapaxes(1, 2).reshape(-1, 8, 8)
+    coef = 0.25 * (_M @ blocks @ _M.T)
+    zz = coef.reshape(-1, 64)[:, _ZIGZAG_NP] / np.asarray(qt_zz, dtype=np.float64)
+    # np.rint rounds half-to-even, like Python's round().
+    return np.rint(zz).astype(np.int64).tolist()
+
+
+def _encode(
+    planes: list[np.ndarray],
+    factors: list[int],
+    qt_zz: list[int] | None,
+    ac_bands: tuple[tuple[int, int], ...] | None = None,
+    restart_interval: int = 0,
+) -> bytes:
+    """Write a JPEG stream. ``planes`` holds each component's samples at
+    its own resolution, the first at full resolution; ``factors`` gives
+    each component's SOF sampling byte (H<<4 | V). All components share
+    quantization table 0 and Huffman tables 0.
+
+    ``ac_bands`` None writes a baseline stream (SOF0): one interleaved
+    sequential scan. Otherwise a progressive stream (SOF2): interleaved
+    DC first (Al=1) and DC refinement scans, then an AC first scan
+    (Al=1) per band and component, then the same AC refinement scans
+    (Al=0). ``restart_interval`` > 0 adds DRI and an RSTn marker every
+    that many MCUs of each scan."""
+    qt = list(qt_zz or STD_QT_ZZ)
+    height, width = planes[0].shape
+    comps = [(i + 1, hv >> 4, hv & 0x0F, 0) for i, hv in enumerate(factors)]
+    frame = _Frame(width, height, comps, ac_bands is not None)
+    for (cid, h, v, _tq), plane in zip(comps, planes):
+        frame.coefs[cid] = _fdct_blocks(plane, frame.mcus_x * h, frame.mcus_y * v, qt)
+
+    cids = [c[0] for c in comps]
+    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
+    if ac_bands is None:
+        ac_counts, ac_symbols = AC_COUNTS, AC_SYMBOLS
+        ac_codes = _canonical_codes(ac_counts, ac_symbols)
+        script = [(cids, 0, 63, 0, 0, partial(
+            _enc_sequential, dc_codes=dc_codes, ac_codes=ac_codes))]
+    else:
+        ac_counts, ac_symbols = PROG_AC_COUNTS, PROG_AC_SYMBOLS
+        ac_codes = _canonical_codes(ac_counts, ac_symbols)
+        script = [
+            (cids, 0, 0, 0, 1, partial(_enc_dc_first, dc_codes=dc_codes, al=1)),
+            (cids, 0, 0, 1, 0, partial(_enc_dc_refine, al=0)),
+        ]
+        for ah, al, enc in ((0, 1, _enc_ac_first), (1, 0, _enc_ac_refine)):
+            for ss, se in ac_bands:
+                script += [
+                    ([cid], ss, se, ah, al,
+                     partial(enc, ac_codes=ac_codes, ss=ss, se=se, al=al))
+                    for cid in cids
+                ]
+
+    sof = struct.pack(">BHHB", 8, height, width, len(comps)) + bytes(
+        b for cid, h, v, tq in comps for b in (cid, (h << 4) | v, tq)
+    )
+    out = [JPEG_SOI, _segment(0xDB, bytes((0x00, *qt)))]
+    if restart_interval:
+        out.append(_segment(0xDD, struct.pack(">H", restart_interval)))
+    out += [
+        _segment(0xC2 if frame.progressive else 0xC0, sof),
+        _segment(0xC4, bytes((0x00, *DC_COUNTS, *DC_SYMBOLS))),
+        _segment(0xC4, bytes((0x10, *ac_counts, *ac_symbols))),
+    ]
+    for scan_cids, ss, se, ah, al, enc in script:
+        sel = bytes(b for cid in scan_cids for b in (cid, 0x00))
+        out.append(_segment(
+            0xDA, bytes((len(scan_cids), *sel, ss, se, (ah << 4) | al))
+        ))
+        for k, seq in enumerate(_intervals(frame.mcus(scan_cids), restart_interval)):
+            if k:
+                out.append(bytes((0xFF, 0xD0 + (k - 1) % 8)))
+            out.append(enc(seq))
+    out.append(b"\xff\xd9")
+    return b"".join(out)
+
+
+def _to_ycbcr(
+    rgb: list[tuple[int, int, int]], width: int, height: int
+) -> list[np.ndarray]:
+    """JFIF forward colour transform, rounded half-to-even and clamped:
+    the Y, Cb, Cr planes."""
+    pixels = np.asarray(rgb, dtype=np.float64).reshape(height, width, 3)
+    r, g, b = pixels.transpose(2, 0, 1)
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
+    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
+    return list(np.clip(np.rint(np.stack([y, cb, cr])), 0, 255).astype(np.int64))
+
+
+def _halve(plane: np.ndarray) -> np.ndarray:
+    """2× downsample per axis: the rounded mean of each 2×2 cell's
+    in-image samples."""
+    ph, pw = plane.shape
+    pad = ((0, ph % 2), (0, pw % 2))
+
+    def cell_sums(a: np.ndarray) -> np.ndarray:
+        a = np.pad(a, pad)
+        return a.reshape(a.shape[0] // 2, 2, a.shape[1] // 2, 2).sum(axis=(1, 3))
+
+    return np.rint(cell_sums(plane) / cell_sums(np.ones_like(plane))).astype(np.int64)
+
+
+def encode_baseline_gray(
+    pixels: list[int],
+    width: int,
+    height: int,
+    qt_zz: list[int] | None = None,
+    restart_interval: int = 0,
+) -> bytes:
+    """Encode an 8-bit grayscale image (row-major ``pixels``) as a REAL
+    baseline sequential JPEG: fDCT + quantization + Annex K Huffman
+    entropy coding. Edge-replication pads to 8x8 blocks.
+    ``restart_interval`` > 0 emits a DRI segment and RSTn markers every N
+    MCUs (camera/libjpeg-style streams)."""
+    plane = np.asarray(pixels, dtype=np.int64).reshape(height, width)
+    return _encode([plane], [0x11], qt_zz, restart_interval=restart_interval)
+
+
+def encode_baseline_color(
+    rgb: list[tuple[int, int, int]],
+    width: int,
+    height: int,
+    qt_zz: list[int] | None = None,
+    restart_interval: int = 0,
+) -> bytes:
+    """Encode an RGB image as baseline 4:4:4 YCbCr JPEG (one 8×8 block per
+    component per MCU, interleaved Y Cb Cr; the luminance example tables
+    serve all three components — legal and simplest)."""
+    return _encode(
+        _to_ycbcr(rgb, width, height), [0x11] * 3, qt_zz,
+        restart_interval=restart_interval,
+    )
+
+
+def encode_baseline_420(
+    rgb: list[tuple[int, int, int]],
+    width: int,
+    height: int,
+    qt_zz: list[int] | None = None,
+) -> bytes:
+    """Encode RGB as baseline 4:2:0 YCbCr JPEG — Y at full resolution
+    (2×2 blocks per MCU), chroma downsampled 2× per axis by 2×2 mean
+    (1 block per MCU each). This is the common web/camera layout."""
+    y, cb, cr = _to_ycbcr(rgb, width, height)
+    return _encode([y, _halve(cb), _halve(cr)], [0x22, 0x11, 0x11], qt_zz)
+
+
 def encode_progressive_gray(
     pixels: list[int], width: int, height: int, qt_zz: list[int] | None = None
 ) -> bytes:
     """Encode a REAL progressive (SOF2) grayscale JPEG exercising every
     scan type the standard defines: DC first (Al=1), DC refinement, AC
-    first with successive approximation (Al=1, EOB runs across blocks),
-    and AC refinement (correction bits + newly-nonzero insertion).
-    Fixture twin of :func:`decode_progressive_gray`."""
-    qt = list(qt_zz or STD_QT_ZZ)
-    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _canonical_codes(PROG_AC_COUNTS, PROG_AC_SYMBOLS)
-    bw = 8 * ((width + 7) // 8)
-    bh = 8 * ((height + 7) // 8)
-    blocks = []
-    for by in range(0, bh, 8):
-        for bx in range(0, bw, 8):
-            block = []
-            for y in range(8):
-                sy = min(by + y, height - 1)
-                for x in range(8):
-                    sx = min(bx + x, width - 1)
-                    block.append(pixels[sy * width + sx] - 128)
-            blocks.append(_fdct_quant(block, qt))
+    first with successive approximation (Al=1, EOB runs across blocks,
+    bands 1-5 and 6-63), and AC refinement (correction bits +
+    newly-nonzero insertion)."""
+    plane = np.asarray(pixels, dtype=np.int64).reshape(height, width)
+    return _encode([plane], [0x11], qt_zz, ac_bands=((1, 5), (6, 63)))
 
-    seq = [(0, zz) for zz in blocks]
 
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return _segment(0xDA, bytes((1, 1, 0x00, ss, se, (ah << 4) | al)))
-
-    dqt = bytes((0x00,)) + bytes(qt)
-    sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0x00))
-    dht_dc = bytes((0x00, *DC_COUNTS)) + bytes(DC_SYMBOLS)
-    dht_ac = bytes((0x10, *PROG_AC_COUNTS)) + bytes(PROG_AC_SYMBOLS)
-    return (
-        JPEG_SOI
-        + _segment(0xDB, dqt)
-        + _segment(0xC2, sof)
-        + _segment(0xC4, dht_dc)
-        + _segment(0xC4, dht_ac)
-        + sos(0, 0, 0, 1) + _enc_dc_first(seq, dc_codes, 1)
-        + sos(0, 0, 1, 0) + _enc_dc_refine(seq, 0)
-        + sos(1, 5, 0, 1) + _enc_ac_first(blocks, ac_codes, 1, 5, 1)
-        + sos(6, 63, 0, 1) + _enc_ac_first(blocks, ac_codes, 6, 63, 1)
-        + sos(1, 5, 1, 0) + _enc_ac_refine(blocks, ac_codes, 1, 5, 0)
-        + sos(6, 63, 1, 0) + _enc_ac_refine(blocks, ac_codes, 6, 63, 0)
-        + b"\xff\xd9"
+def encode_progressive_color(
+    rgb: list[tuple[int, int, int]],
+    width: int,
+    height: int,
+    qt_zz: list[int] | None = None,
+) -> bytes:
+    """Encode RGB as a progressive (SOF2) 4:4:4 YCbCr JPEG: interleaved DC
+    first + refinement scans (all three components in MCU order with
+    per-component predictors), then per-component AC first and AC
+    refinement scans — AC progressive scans are single-component by
+    T.81 G.1.1.1.1."""
+    return _encode(
+        _to_ycbcr(rgb, width, height), [0x11] * 3, qt_zz, ac_bands=((1, 63),)
     )
 
 
-# --- progressive scan application (T.81 Annex G), shared by the gray and
-# --- color decoders. Each helper applies ONE scan's entropy data to the
-# --- accumulated coefficient blocks.
+# --- scan decoders: each reads ONE restart interval of one scan into the
+# --- frame's coefficient blocks.
+
+def _read_sequential(
+    reader: "_BitReader", seq: list[tuple[int, list[int]]],
+    dc_of: dict, ac_of: dict,
+) -> None:
+    """Sequential scan: each block's DC difference, then its AC run/size
+    symbols up to EOB (T.81 F.2.2); one DC predictor per component."""
+    prev: dict[int, int] = {}
+    for ci, zz in seq:
+        t = _read_symbol(reader, dc_of[ci])
+        prev[ci] = zz[0] = prev.get(ci, 0) + (_extend(reader.bits(t), t) if t else 0)
+        ac_tbl = ac_of[ci]
+        i = 1
+        while i < 64:
+            sym = _read_symbol(reader, ac_tbl)
+            if sym == 0x00:  # EOB
+                break
+            if sym == 0xF0:  # ZRL
+                i += 16
+                continue
+            i += sym >> 4
+            if i > 63:
+                raise JpegFormatError("AC run overflow")
+            size = sym & 0x0F
+            zz[i] = _extend(reader.bits(size), size)
+            i += 1
+
 
 def _prog_dc_first(
     reader: "_BitReader", seq: list[tuple[int, list[int]]],
-    dc_tbl_of: dict, al: int,
+    dc_of: dict, al: int,
 ) -> None:
     """DC first scan over ``seq`` = [(comp_idx, zz_block)] in scan order
     (MCU-interleaved for multi-component scans); one DC predictor and one
-    Huffman table (``dc_tbl_of[comp_idx]``) per component."""
+    Huffman table (``dc_of[comp_idx]``) per component."""
     prev: dict[int, int] = {}
     for ci, zz in seq:
-        t = _read_symbol(reader, dc_tbl_of[ci])
+        t = _read_symbol(reader, dc_of[ci])
         diff = _extend(reader.bits(t), t) if t else 0
         prev[ci] = prev.get(ci, 0) + diff
         zz[0] = prev[ci] << al
@@ -1108,12 +777,12 @@ def _prog_dc_refine(
 
 
 def _prog_ac_first(
-    reader: "_BitReader", blocks: list[list[int]], ac_tbl: dict,
+    reader: "_BitReader", seq: list[tuple[int, list[int]]], ac_tbl: list,
     ss: int, se: int, al: int,
 ) -> None:
     """AC first scan (always single-component per T.81 G.1.1.1.1)."""
     eobrun = 0
-    for zz in blocks:
+    for _ci, zz in seq:
         if eobrun > 0:
             eobrun -= 1
             continue
@@ -1137,7 +806,7 @@ def _prog_ac_first(
 
 
 def _prog_ac_refine(
-    reader: "_BitReader", blocks: list[list[int]], ac_tbl: dict,
+    reader: "_BitReader", seq: list[tuple[int, list[int]]], ac_tbl: list,
     ss: int, se: int, al: int,
 ) -> None:
     p1, m1 = 1 << al, -1 << al
@@ -1150,7 +819,7 @@ def _prog_ac_refine(
             elif zz[k] < 0 and not (zz[k] & p1):
                 zz[k] += m1
 
-    for zz in blocks:
+    for _ci, zz in seq:
         k = ss
         if eobrun > 0:
             # whole block in EOB run: corrections only
@@ -1200,412 +869,147 @@ def _prog_ac_refine(
             k += 1
 
 
-def decode_progressive_gray(blob: bytes) -> tuple[int, int, list[int]]:
-    """Decode a progressive (SOF2) GRAYSCALE JPEG: accumulate DCT
-    coefficients across all scans — DC first/refinement (arithmetic-shift
-    point transform), AC first scans with EOB runs, AC refinement scans
-    (correction bits + newly-nonzero insertion, T.81 Annex G) — then
-    dequantize + IDCT once at the end. Multi-component progressive stays
-    behind DECODERS_AVAILABLE."""
-    if blob[:2] != JPEG_SOI:
-        raise JpegFormatError("bad JPEG SOI")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[int, dict] = {}
-    width = height = None
-    comp_qt = 0
-    coefs: list[list[int]] | None = None
-    n_blocks = 0
+# --- the one decoder -------------------------------------------------------
 
-    def read_scan(data: bytes, scan_bytes: bytes) -> int:
-        """Apply one scan; returns bytes of entropy data consumed."""
-        ss, se, ahal = data[-3], data[-2], data[-1]
-        ah, al = ahal >> 4, ahal & 0x0F
-        dc_tbl = htables.get(data[2] >> 4)
-        ac_tbl = htables.get(0x10 | (data[2] & 0x0F))
-        reader = _BitReader(scan_bytes)
-        assert coefs is not None
-        if ss == 0:  # DC scan (se must be 0)
-            if ah == 0:
-                if dc_tbl is None:
-                    raise JpegFormatError("missing DC Huffman table")
-                _prog_dc_first(
-                    reader, [(0, zz) for zz in coefs], {0: dc_tbl}, al
-                )
-            else:
-                _prog_dc_refine(reader, [(0, zz) for zz in coefs], al)
+def _parse_dht(data: bytes, tables: dict) -> None:
+    """DHT segment -> ``tables[Tc<<4 | Th]`` = 17 per-length {code:
+    symbol} dicts (index = code length)."""
+    pos = 0
+    while pos < len(data):
+        counts = list(data[pos + 1 : pos + 17])
+        n = sum(counts)
+        table: list[dict] = [{} for _ in range(17)]
+        symbols = list(data[pos + 17 : pos + 17 + n])
+        for sym, (length, code) in _canonical_codes(counts, symbols).items():
+            table[length][code] = sym
+        tables[data[pos]] = table
+        pos += 17 + n
+
+
+def _decode_scan(
+    frame: _Frame, data: bytes, htables: dict, restart_interval: int
+) -> None:
+    """Apply one SOS segment (scan header + entropy-coded data) to the
+    frame's coefficient blocks."""
+    ns = data[0]
+    sel = {data[1 + 2 * i]: data[2 + 2 * i] for i in range(ns)}  # cid -> Td|Ta
+    ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
+    ah, al = ahal >> 4, ahal & 0x0F
+    if any(cid not in frame.factors for cid in sel):
+        raise JpegFormatError("scan names a component the frame lacks")
+
+    def tables(ac: bool) -> dict:
+        out = {}
+        for cid, tdta in sel.items():
+            out[cid] = htables.get(0x10 | (tdta & 0x0F) if ac else tdta >> 4)
+            if out[cid] is None:
+                raise JpegFormatError(f"missing {'AC' if ac else 'DC'} Huffman table")
+        return out
+
+    if not frame.progressive:
+        read = partial(_read_sequential, dc_of=tables(False), ac_of=tables(True))
+    elif ss == 0:
+        if se != 0:
+            raise JpegFormatError("progressive DC scan carries AC coefficients")
+        if ah:
+            read = partial(_prog_dc_refine, al=al)
         else:
-            if ac_tbl is None:
-                raise JpegFormatError("missing AC Huffman table")
-            if ah == 0:
-                _prog_ac_first(reader, coefs, ac_tbl, ss, se, al)
-            else:
-                _prog_ac_refine(reader, coefs, ac_tbl, ss, se, al)
-        # consumed bytes: reader.pos covers full bytes started
-        return reader.pos
-
-    while pos + 4 <= len(blob):
-        if blob[pos] != 0xFF:
-            raise JpegFormatError(f"expected marker at {pos}")
-        marker = blob[pos + 1]
-        if marker == 0xD9:
-            break
-        (length,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
-        data = blob[pos + 4 : pos + 2 + length]
-        if marker == 0xDB:
-            p = 0
-            while p < len(data):
-                pq_tq = data[p]
-                if pq_tq >> 4:
-                    raise JpegFormatError("16-bit quant tables unsupported")
-                qtables[pq_tq & 0x0F] = list(data[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC2:
-            precision, height, width, n_comp = struct.unpack(">BHHB", data[:6])
-            if precision != 8 or n_comp != 1:
-                raise JpegFormatError("only 8-bit grayscale progressive supported")
-            comp_qt = data[8]
-            n_blocks = ((width + 7) // 8) * ((height + 7) // 8)
-            coefs = [[0] * 64 for _ in range(n_blocks)]
-        elif marker in (0xC0, 0xC1):
-            raise JpegFormatError("baseline stream: use decode_baseline_gray")
-        elif marker == 0xC4:
-            _parse_dht(data, htables)
-        elif marker == 0xDA:
-            if coefs is None:
-                raise JpegFormatError("SOS before SOF2")
-            scan_start = pos + 2 + length
-            # entropy data runs until the next marker that is not a
-            # stuffed byte (FF00) or fill
-            end = scan_start
-            while end + 1 < len(blob):
-                if blob[end] == 0xFF and blob[end + 1] not in (0x00,):
-                    if 0xD0 <= blob[end + 1] <= 0xD7:
-                        # T.81 allows RSTn inside progressive scans but we
-                        # do not decode them — fail loudly instead of
-                        # misparsing the marker as a segment header
-                        raise JpegFormatError(
-                            "restart markers inside progressive scans "
-                            "unsupported"
-                        )
-                    break
-                end += 1
-            read_scan(data, blob[scan_start:end])
-            pos = end
-            continue
-        pos += 2 + length
-    if coefs is None or width is None:
-        raise JpegFormatError("missing SOF2/SOS")
-    qt = qtables.get(comp_qt)
-    if qt is None:
-        raise JpegFormatError("missing quant table")
-
-    bw = 8 * ((width + 7) // 8)
-    pixels = [0] * (width * height)
-    bi = 0
-    for by in range(0, 8 * ((height + 7) // 8), 8):
-        for bx in range(0, bw, 8):
-            block = _dequant_idct(coefs[bi], qt)
-            bi += 1
-            for y in range(8):
-                sy = by + y
-                if sy >= height:
-                    break
-                for x in range(8):
-                    sx = bx + x
-                    if sx >= width:
-                        continue
-                    v = block[y * 8 + x] + 128
-                    pixels[sy * width + sx] = 0 if v < 0 else (255 if v > 255 else v)
-    return width, height, pixels
-
-
-def encode_progressive_color(
-    rgb: list[tuple[int, int, int]],
-    width: int,
-    height: int,
-    qt_zz: list[int] | None = None,
-) -> bytes:
-    """Encode RGB as a progressive (SOF2) 4:4:4 YCbCr JPEG: interleaved DC
-    first + refinement scans (all three components in MCU order with
-    per-component predictors), then per-component AC first and AC
-    refinement scans — AC progressive scans are single-component by
-    T.81 G.1.1.1.1. Fixture twin of :func:`decode_progressive_color`."""
-    qt = list(qt_zz or STD_QT_ZZ)
-    dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _canonical_codes(PROG_AC_COUNTS, PROG_AC_SYMBOLS)
-
-    planes: list[list[int]] = [[], [], []]
-    for (r, g, b) in rgb:
-        y, cb, cr = _rgb_to_ycbcr(r, g, b)
-        planes[0].append(y)
-        planes[1].append(cb)
-        planes[2].append(cr)
-
-    bw = 8 * ((width + 7) // 8)
-    bh = 8 * ((height + 7) // 8)
-    comp_blocks: list[list[list[int]]] = []
-    for plane in planes:
-        blocks = []
-        for by in range(0, bh, 8):
-            for bx in range(0, bw, 8):
-                block = []
-                for y in range(8):
-                    sy = min(by + y, height - 1)
-                    for x in range(8):
-                        sx = min(bx + x, width - 1)
-                        block.append(plane[sy * width + sx] - 128)
-                blocks.append(_fdct_quant(block, qt))
-        comp_blocks.append(blocks)
-
-    # 4:4:4 interleaved MCU order: one block per component per MCU.
-    seq = [
-        (c, comp_blocks[c][i])
-        for i in range(len(comp_blocks[0]))
-        for c in range(3)
-    ]
-
-    def sos(comp_ids: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        body = bytes((len(comp_ids),))
-        for cid in comp_ids:
-            body += bytes((cid, 0x00))  # DC table 0, AC table 0
-        body += bytes((ss, se, (ah << 4) | al))
-        return _segment(0xDA, body)
-
-    dqt = bytes((0x00,)) + bytes(qt)
-    sof = struct.pack(">BHHB", 8, height, width, 3) + b"".join(
-        bytes((cid, 0x11, 0x00)) for cid in (1, 2, 3)
-    )
-    dht_dc = bytes((0x00, *DC_COUNTS)) + bytes(DC_SYMBOLS)
-    dht_ac = bytes((0x10, *PROG_AC_COUNTS)) + bytes(PROG_AC_SYMBOLS)
-    out = (
-        JPEG_SOI
-        + _segment(0xDB, dqt)
-        + _segment(0xC2, sof)
-        + _segment(0xC4, dht_dc)
-        + _segment(0xC4, dht_ac)
-        + sos([1, 2, 3], 0, 0, 0, 1) + _enc_dc_first(seq, dc_codes, 1)
-        + sos([1, 2, 3], 0, 0, 1, 0) + _enc_dc_refine(seq, 0)
-    )
-    for c, cid in enumerate((1, 2, 3)):
-        out += sos([cid], 1, 63, 0, 1) + _enc_ac_first(
-            comp_blocks[c], ac_codes, 1, 63, 1
-        )
-    for c, cid in enumerate((1, 2, 3)):
-        out += sos([cid], 1, 63, 1, 0) + _enc_ac_refine(
-            comp_blocks[c], ac_codes, 1, 63, 0
-        )
-    return out + b"\xff\xd9"
-
-
-def decode_progressive_color(
-    blob: bytes,
-) -> tuple[int, int, list[tuple[int, int, int]]]:
-    """Decode a progressive (SOF2) 3-component YCbCr JPEG to (width,
-    height, row-major RGB): accumulate coefficients across interleaved DC
-    scans (MCU order, per-component predictors) and single-component AC
-    scans, then dequantize + IDCT once and color-convert with
-    clamp-sampled chroma upsampling. Sampling factors 1-2 per axis, like
-    the baseline color decoder."""
-    if blob[:2] != JPEG_SOI:
-        raise JpegFormatError("bad JPEG SOI")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[int, dict] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []  # (cid, tq, h, v)
-    coefs: dict[int, list[list[int]]] = {}  # cid -> padded-grid blocks
-    grid: dict[int, tuple[int, int]] = {}  # cid -> (padded bx, padded by)
-    ni_grid: dict[int, tuple[int, int]] = {}  # cid -> non-interleaved dims
-    mcus = (0, 0)
-
-    def apply_scan(data: bytes, scan_bytes: bytes) -> None:
-        ns = data[0]
-        scan_comps = []  # (cid, dc_tbl_id, ac_tbl_id)
-        for c in range(ns):
-            cid, tsel = data[1 + 2 * c : 3 + 2 * c]
-            scan_comps.append((cid, tsel >> 4, tsel & 0x0F))
-        ss, se, ahal = data[-3], data[-2], data[-1]
-        ah, al = ahal >> 4, ahal & 0x0F
-        reader = _BitReader(scan_bytes)
-        factors = {cid: (h, v) for cid, _, h, v in comps}
-
-        if ss == 0:  # DC scan
-            if ns > 1:  # interleaved: MCU order, h×v blocks per comp
-                seq = []
-                mcus_x, mcus_y = mcus
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        for cid, _td, _ta in scan_comps:
-                            h_i, v_i = factors[cid]
-                            pbx = grid[cid][0]
-                            for v_blk in range(v_i):
-                                for h_blk in range(h_i):
-                                    idx = (my * v_i + v_blk) * pbx + (
-                                        mx * h_i + h_blk
-                                    )
-                                    seq.append((cid, coefs[cid][idx]))
-            else:
-                cid = scan_comps[0][0]
-                nbx, nby = ni_grid[cid]
-                pbx = grid[cid][0]
-                seq = [
-                    (cid, coefs[cid][by * pbx + bx])
-                    for by in range(nby)
-                    for bx in range(nbx)
-                ]
-            if ah == 0:
-                dc_tbl_of = {}
-                for cid, td, _ta in scan_comps:
-                    tbl = htables.get(td)
-                    if tbl is None:
-                        raise JpegFormatError("missing DC Huffman table")
-                    dc_tbl_of[cid] = tbl
-                _prog_dc_first(reader, seq, dc_tbl_of, al)
-            else:
-                _prog_dc_refine(reader, seq, al)
-            return
-
-        # AC scans are single-component (T.81 G.1.1.1.1); blocks iterate
-        # the component's own (non-interleaved) grid inside the padded
-        # MCU-grid storage.
+            read = partial(_prog_dc_first, dc_of=tables(False), al=al)
+    else:
         if ns != 1:
             raise JpegFormatError("progressive AC scan must be single-component")
-        cid, _td, ta = scan_comps[0]
-        ac_tbl = htables.get(0x10 | ta)
-        if ac_tbl is None:
-            raise JpegFormatError("missing AC Huffman table")
-        nbx, nby = ni_grid[cid]
-        pbx = grid[cid][0]
-        blocks = [
-            coefs[cid][by * pbx + bx]
-            for by in range(nby)
-            for bx in range(nbx)
-        ]
-        if ah == 0:
-            _prog_ac_first(reader, blocks, ac_tbl, ss, se, al)
-        else:
-            _prog_ac_refine(reader, blocks, ac_tbl, ss, se, al)
+        (ac_tbl,) = tables(True).values()
+        read = partial(
+            _prog_ac_refine if ah else _prog_ac_first,
+            ac_tbl=ac_tbl, ss=ss, se=se, al=al,
+        )
+    reader = _BitReader(data[4 + 2 * ns :])
+    for k, seq in enumerate(_intervals(frame.mcus(list(sel)), restart_interval)):
+        if k:
+            reader.restart()
+        read(reader, seq)
 
-    while pos + 4 <= len(blob):
-        if blob[pos] != 0xFF:
-            raise JpegFormatError(f"expected marker at {pos}")
-        marker = blob[pos + 1]
-        if marker == 0xD9:
-            break
-        (length,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
-        data = blob[pos + 4 : pos + 2 + length]
+
+def _decode(blob: bytes, n_components: int) -> tuple[int, int, list[np.ndarray]]:
+    """Decode every scan of ``blob`` into coefficient blocks, then
+    dequantize + IDCT each component once -> (width, height, one
+    full-resolution int plane per component, upsampled by nearest sample:
+    the x*h//hmax index map)."""
+    qtables: dict[int, list[int]] = {}
+    htables: dict[int, list[dict]] = {}
+    restart_interval = 0
+    frame = None
+    scanned = False
+    for marker, data in iter_segments(blob):
         if marker == 0xDB:
-            p = 0
-            while p < len(data):
-                pq_tq = data[p]
-                if pq_tq >> 4:
+            for p in range(0, len(data), 65):
+                if data[p] >> 4:
                     raise JpegFormatError("16-bit quant tables unsupported")
-                qtables[pq_tq & 0x0F] = list(data[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC2:
-            precision, height, width, n_comp = struct.unpack(">BHHB", data[:6])
-            if precision != 8 or n_comp != 3:
-                raise JpegFormatError(
-                    "decode_progressive_color needs 3 components"
-                )
-            for c in range(3):
-                cid, hv, tq = data[6 + 3 * c : 9 + 3 * c]
-                h_i, v_i = hv >> 4, hv & 0x0F
-                if not (1 <= h_i <= 2 and 1 <= v_i <= 2):
-                    raise JpegFormatError(
-                        f"sampling factor {h_i}x{v_i} unsupported"
-                    )
-                comps.append((cid, tq, h_i, v_i))
-            hmax = max(h for _, _, h, _ in comps)
-            vmax = max(v for _, _, _, v in comps)
-            mcus = (
-                (width + 8 * hmax - 1) // (8 * hmax),
-                (height + 8 * vmax - 1) // (8 * vmax),
-            )
-            for cid, _tq, h_i, v_i in comps:
-                pbx, pby = mcus[0] * h_i, mcus[1] * v_i
-                grid[cid] = (pbx, pby)
-                # non-interleaved dims: ceil over the component's actual
-                # sample area (T.81 A.1.1), NOT the padded MCU grid
-                cw = (width * h_i + hmax - 1) // hmax
-                chh = (height * v_i + vmax - 1) // vmax
-                ni_grid[cid] = ((cw + 7) // 8, (chh + 7) // 8)
-                coefs[cid] = [[0] * 64 for _ in range(pbx * pby)]
-        elif marker in (0xC0, 0xC1):
-            raise JpegFormatError("baseline stream: use decode_baseline_color")
+                qtables[data[p] & 0x0F] = list(data[p + 1 : p + 65])
         elif marker == 0xC4:
             _parse_dht(data, htables)
+        elif marker == 0xDD:
+            (restart_interval,) = struct.unpack(">H", data[:2])
+        elif marker in (0xC0, 0xC1, 0xC2):
+            precision, height, width, n = struct.unpack(">BHHB", data[:6])
+            if precision != 8:
+                raise JpegFormatError(f"{precision}-bit samples unsupported")
+            if n != n_components:
+                raise JpegFormatError(
+                    f"{n}-component stream, expected {n_components}"
+                )
+            comps = [
+                (data[6 + 3 * c], data[7 + 3 * c] >> 4, data[7 + 3 * c] & 0x0F,
+                 data[8 + 3 * c])
+                for c in range(n)
+            ]
+            frame = _Frame(width, height, comps, marker == 0xC2)
+        elif marker in _SOF_MARKERS:
+            raise JpegFormatError(
+                f"JPEG process of SOF marker FF{marker:02X} unsupported"
+            )
         elif marker == 0xDA:
-            if not coefs:
-                raise JpegFormatError("SOS before SOF2")
-            scan_start = pos + 2 + length
-            end = scan_start
-            while end + 1 < len(blob):
-                if blob[end] == 0xFF and blob[end + 1] not in (0x00,):
-                    if 0xD0 <= blob[end + 1] <= 0xD7:
-                        # T.81 allows RSTn inside progressive scans but we
-                        # do not decode them — fail loudly instead of
-                        # misparsing the marker as a segment header
-                        raise JpegFormatError(
-                            "restart markers inside progressive scans "
-                            "unsupported"
-                        )
-                    break
-                end += 1
-            apply_scan(data, blob[scan_start:end])
-            pos = end
-            continue
-        pos += 2 + length
-    if not coefs or width is None:
-        raise JpegFormatError("missing SOF2/SOS")
+            if frame is None:
+                raise JpegFormatError("SOS before SOF")
+            _decode_scan(frame, data, htables, restart_interval)
+            scanned = True
+    if frame is None or not scanned:
+        raise JpegFormatError("missing SOF/SOS")
 
-    hmax = max(h for _, _, h, _ in comps)
-    vmax = max(v for _, _, _, v in comps)
-    plane_px: dict[int, list[int]] = {}
-    for cid, tq, h_i, v_i in comps:
+    planes = []
+    for cid, h, v, tq in frame.comps:
         qt = qtables.get(tq)
         if qt is None:
             raise JpegFormatError("missing quant table")
-        pbx, pby = grid[cid]
-        pw = pbx * 8
-        plane = [0] * (pw * pby * 8)
-        for bi, zz in enumerate(coefs[cid]):
-            block = _dequant_idct(zz, qt)
-            ox = (bi % pbx) * 8
-            oy = (bi // pbx) * 8
-            for yy in range(8):
-                row = (oy + yy) * pw + ox
-                for xx in range(8):
-                    v = block[yy * 8 + xx] + 128
-                    plane[row + xx] = 0 if v < 0 else (255 if v > 255 else v)
-        plane_px[cid] = plane
-
-    ordered = [cid for cid, *_ in comps]
-    factors = {cid: (h, v) for cid, _, h, v in comps}
-    rgb = _planes_to_rgb(
-        plane_px,
-        {cid: grid[cid][0] * 8 for cid in plane_px},
-        factors, ordered, width, height, hmax, vmax,
-    )
-    return width, height, rgb
+        pbx, pby = frame.mcus_x * h, frame.mcus_y * v
+        coef = np.zeros((pbx * pby, 64))
+        coef[:, _ZIGZAG_NP] = np.asarray(frame.coefs[cid], dtype=np.float64) * (
+            np.asarray(qt, dtype=np.float64)
+        )
+        spatial = 0.25 * (_M.T @ coef.reshape(-1, 8, 8) @ _M)
+        blocks = np.clip(np.rint(spatial).astype(np.int64) + 128, 0, 255)
+        plane = blocks.reshape(pby, pbx, 8, 8).swapaxes(1, 2).reshape(8 * pby, 8 * pbx)
+        xs = (np.arange(frame.width) * h) // frame.hmax
+        ys = (np.arange(frame.height) * v) // frame.vmax
+        planes.append(plane[ys[:, None], xs[None, :]])
+    return frame.width, frame.height, planes
 
 
-def decode_gray_auto(blob: bytes) -> tuple[int, int, list[int]]:
-    """Dispatch a grayscale JPEG to the baseline or progressive decoder by
-    its SOF marker — one entry point for the pixel operator."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-
-    if decode_jpeg_meta(blob).progressive:
-        return decode_progressive_gray(blob)
-    return decode_baseline_gray(blob)
+def decode_gray(blob: bytes) -> tuple[int, int, list[int]]:
+    """Decode a grayscale (1-component) JPEG, baseline or progressive, to
+    (width, height, row-major 8-bit pixels)."""
+    width, height, (y,) = _decode(blob, 1)
+    return width, height, y.ravel().tolist()
 
 
-def decode_color_auto(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
-    """Dispatch a 3-component JPEG to the baseline or progressive color
-    decoder by its SOF marker."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-
-    if decode_jpeg_meta(blob).progressive:
-        return decode_progressive_color(blob)
-    return decode_baseline_color(blob)
+def decode_color(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
+    """Decode a 3-component YCbCr JPEG, baseline or progressive, to
+    (width, height, row-major RGB tuples) through the inverse JFIF
+    transform (np.rint rounds half-to-even, like Python's round())."""
+    width, height, (y, cb, cr) = _decode(blob, 3)
+    r = y + 1.402 * (cr - 128)
+    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
+    b = y + 1.772 * (cb - 128)
+    out = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255)
+    rgb = out.astype(np.int64).reshape(-1, 3).tolist()
+    return width, height, [tuple(px) for px in rgb]

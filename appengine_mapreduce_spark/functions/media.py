@@ -4,8 +4,9 @@ Same design as ``functions/png.py`` / ``functions/jpeg.py``: parse the
 PUBLIC container formats with stdlib ``struct`` only, deep enough to
 answer the questions a training-data pipeline asks before routing a blob
 (sample rate, channel count, duration, track layout) — not to decode
-samples. Codec-level decode (PCM is trivial; compressed audio/video is
-not) stays behind ``operators/multimodal.DECODERS_AVAILABLE``.
+samples. The sample decoders below cover the formats whose codec is
+pure arithmetic from a public spec; MP3/AAC samples and H.264/VP9 frames
+do not decode (see ``operators/multimodal``).
 
 - WAV: RIFF chunk walk (RIFF/WAVE signature, ``fmt `` layout, ``data``
   size → duration) per the public RIFF/WAVE spec.
@@ -244,8 +245,8 @@ def encode_wav_pcm16(
 def decode_wav_samples(blob: bytes) -> "tuple[WavMeta, list[int]]":
     """REAL PCM sample decode (stdlib-only): RIFF walk + int16/uint8 frame
     unpack. PCM is uncompressed, so 'audio decode' needs no codec library
-    at all for WAV — only compressed formats (MP3/AAC/Opus) stay behind
-    DECODERS_AVAILABLE."""
+    at all for WAV. Perceptual codecs (MP3/AAC/Opus) do not decode: they
+    need ISO tables this project does not ship."""
     import array
 
     meta = decode_wav_meta(blob)
@@ -307,8 +308,8 @@ def decode_wav_samples(blob: bytes) -> "tuple[WavMeta, list[int]]":
 # 14/13-bit linear PCM. Pure bit arithmetic — REAL lossy-audio decode
 # with no codec library; the formulas below are the public G.711
 # segment/mantissa expansion. With these, only PERCEPTUAL codecs
-# (MP3/AAC DSP, which need the ISO filterbank tables absent from this
-# container) remain behind DECODERS_AVAILABLE.
+# (MP3/AAC DSP, which need ISO filterbank tables this project does not
+# ship) do not decode.
 
 WAVE_FORMAT_PCM = 1
 WAVE_FORMAT_ALAW = 6
@@ -426,9 +427,9 @@ def encode_wav_g711(
 # ``audioop`` ships its own copy of IMA ADPCM, so
 # tests/test_multimodal.py asserts byte-exact agreement of this decoder
 # with ``audioop.adpcm2lin`` over random streams. A transcription error
-# in either table cannot pass that test. (MP3/AAC stay stubbed for the
-# same reason inverted: their ISO tables have NO in-container source to
-# transcribe from or validate against — see operators/multimodal.py:34.)
+# in either table cannot pass that test. (MP3/AAC samples do not decode
+# for the same reason inverted: their ISO tables have no source here to
+# transcribe from or validate against.)
 
 WAVE_FORMAT_IMA_ADPCM = 0x11
 
@@ -785,7 +786,7 @@ def decode_mp4_track_samples(blob: bytes) -> Mp4TrackSamples:
     """Walk moov→trak→mdia→minf→stbl and decode stts (durations) + stsz
     (sizes) — REAL frame-level container metadata, stdlib-only: frame
     count, byte sizes, and track duration without touching any codec
-    (frame PIXELS stay behind DECODERS_AVAILABLE)."""
+    (frame PIXELS of these codecs do not decode)."""
     # Per-FILE aggregation, consistent across tracks: sample counts and
     # byte totals SUM over every track's stsz, duration is the MAX track
     # duration (the wall-clock length of the file) — never a mix of
@@ -846,8 +847,8 @@ def decode_mp4_track_samples(blob: bytes) -> Mp4TrackSamples:
 # padding. Walking frame-to-frame (each header gives its own frame length)
 # yields frame count, duration and CBR/VBR-ness without any DSP — the
 # routing metadata an audio corpus filters on. SAMPLE decode (the
-# polyphase filterbank / MDCT) genuinely needs a codec library and stays
-# behind operators/multimodal.DECODERS_AVAILABLE.
+# polyphase filterbank / MDCT) needs ISO tables this project does not
+# ship, so it does not decode.
 
 # bitrate tables in kbps, index 1..14 (0 = free format, 15 = invalid)
 _MP3_BITRATES_V1_L3 = (
@@ -1005,7 +1006,7 @@ def encode_minimal_mp3(
 # frames in self-describing headers: 12-bit sync, MPEG-4 audio object
 # type, sampling-frequency index, channel configuration, 13-bit frame
 # length. Like MP3, the header walk yields count/duration/bitrate without
-# any DSP; SAMPLE decode stays behind DECODERS_AVAILABLE.
+# any DSP; SAMPLES do not decode (same missing ISO tables as MP3).
 
 _ADTS_SAMPLERATES = (
     96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
@@ -1101,11 +1102,11 @@ def encode_minimal_adts(
 #
 # AVI is RIFF framing (same 4CC chunk walk as WAV): RIFF('AVI ' LIST(hdrl
 # avih ...) LIST(movi <00dc frame chunks>)). With the MJPG codec every
-# '##dc' chunk is a complete baseline JPEG — which functions/jpeg_pixels.py
+# '##dc' chunk is a complete JPEG — which functions/jpeg_pixels.py
 # decodes for real. That makes VIDEO FRAME PIXELS a real decode path for
 # the MJPEG profile (the classic capture/intermediate format), stdlib +
-# numpy only; modern inter-frame codecs (H.264/VP9) stay behind
-# operators/multimodal.DECODERS_AVAILABLE.
+# numpy only; modern inter-frame codecs (H.264/VP9) do not decode: they
+# need a codec library.
 
 
 @dataclass(frozen=True)
@@ -1522,8 +1523,8 @@ def encode_minimal_avi_raw(
 # an RLE8 stream applied ONTO the previous frame's canvas — end-of-line
 # and delta escapes SKIP pixels, leaving prior content visible. This is
 # genuine inter-frame video decode (temporal prediction via skip runs),
-# implementable from the public RLE8 escape semantics alone; what stays
-# stubbed is motion-compensated codecs (H.264/VP9), which need a full
+# implementable from the public RLE8 escape semantics alone; what does
+# not decode is motion-compensated codecs (H.264/VP9), which need a full
 # codec library.
 
 

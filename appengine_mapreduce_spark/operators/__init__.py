@@ -12,9 +12,11 @@
 ``joins``         — as-of join, salted skew join.
 ``sampling``      — deterministic samples, train/test split, profiling.
 ``text_analysis`` — language-ID, quality scoring, token stats, fingerprints.
-``multimodal``    — binary media columns: REAL stdlib decoders (PNG full,
-                    JPEG baseline gray/color + progressive gray, WAV PCM,
-                    MP4 metadata + frame tables) over Arrow batching.
+``multimodal``    — binary media columns: dependency-free decoders (PNG
+                    full; JPEG through one decoder for baseline and
+                    progressive, gray and colour; WAV/ADPCM/FLAC audio;
+                    GIF/TIFF/BMP pixels; MP4 metadata + frame tables; AVI
+                    MJPEG/raw/MS-RLE frames) over Arrow batching.
 ``merge``         — MERGE upsert / SCD2 dimension history.
 ``cdc``           — snapshot diff + incremental aggregate maintenance.
 ``compaction``    — small-file compaction (byte-targeted, atomic swap).

@@ -2,11 +2,14 @@
 
 Design: media lives in opaque ``binary`` columns with a typed metadata
 struct alongside (media_type, width/height or sample_rate/duration, codec).
-All Spark-side plumbing — schemas, Arrow batch shapes, partition widening,
-UDF signatures — is real and tested; the actual codec calls are STUBBED
-(``DECODERS_AVAILABLE = False``) because image/audio libraries are not in
-this container. Swapping a real decoder in changes exactly one function
-per operator, marked ``# STUB``.
+Every codec is dependency-free and written from its public spec
+(``functions/{png,jpeg,jpeg_pixels,media,flac}.py``). Two families have
+no decode path: perceptual-audio SAMPLES (MP3/AAC need the ISO
+filterbank and codebook tables, data this project does not ship; their
+frame headers do decode) and motion-compensated video (H.264/VP9 need a
+full codec library). The generic image/video operators marked ``# STUB``
+emit deterministic stand-in content over the real pipeline shape;
+swapping a real transform in changes only that inner function.
 
 Scale notes: decode/feature steps run per blob on
 ``core.adapters.map_rows``, the Arrow seam the MapReduce API uses. One
@@ -31,46 +34,6 @@ from appengine_mapreduce_spark.core.pickling import register_self
 register_self(__name__)
 
 
-DECODERS_AVAILABLE = False  # flip when librosa/pyav exist in the image —
-# now covers ONLY perceptual-audio SAMPLE decode (the MP3 polyphase
-# filterbank/IMDCT and AAC spectral decode need the ISO codebook/window
-# TABLES — data absent from this container, and inventing values would
-# be fake correctness; their FRAME/HEADER walks are real,
-# functions/media.decode_mp3_meta / decode_aac_adts_meta) and
-# MOTION-COMPENSATED video codecs (H.264/VP9 need a codec library;
-# run-length temporal video — MS-RLE delta frames — decodes for real,
-# decode_mrle_video_stats below). COMPANDED
-# lossy audio decodes for real: G.711 µ-law/A-law are pure bit formulas
-# (functions/media.mulaw_expand/alaw_expand, involution-tested over all
-# 256 byte values) and flow through audio_pcm_features via the WAV
-# format-code dispatch. PREDICTIVE lossy audio decodes for real: IMA
-# ADPCM (DVI4 / WAV format 0x11, functions/media.ima_adpcm_decode_nibbles)
-# — its step/index tables are cross-validated byte-exact against stdlib
-# audioop's independent implementation, the bar the ISO perceptual
-# tables cannot meet in this container. FLAC lossless-compressed audio
-# decodes for real (functions/flac.py: Rice residuals + fixed/LPC predictors +
-# stereo decorrelation + CRCs — fully algorithmic,
-# decode_flac_audio_features below). GIF pixels decode for real (LZW +
-# palette + interlace, decode_gif_pixel_stats below), TIFF strips
-# decode for real (uncompressed + PackBits, decode_tiff_pixel_stats
-# below), and BMP decodes for real (24-bit/palette/RLE8,
-# decode_bmp_pixel_stats below); raw BI_RGB AVI frames decode through
-# the same DIB path (decode_video_frame_pixels dispatch). Video frame
-# PIXELS decode for real for the MJPEG/AVI profile: the RIFF container
-# walk extracts per-frame JPEGs which the in-repo T.81 codec fully
-# decodes (decode_video_frame_pixels below). The ENTIRE
-# JPEG matrix decodes for real: baseline + progressive, grayscale +
-# color. Progressive decodes use the full T.81 Annex G scan script —
-# DC/AC first + successive-approximation refinement, interleaved DC MCU
-# order with per-component predictors for color
-# (functions/jpeg_pixels.decode_progressive_gray/_color). Baseline JPEG pixels decode for real — grayscale AND color at
-# 4:4:4/4:2:2/4:2:0 sampling (decode_jpeg_pixel_stats below;
-# functions/jpeg_pixels.py implements the full T.81 baseline entropy
-# decode + dequant + IDCT + JFIF color transform), PCM audio SAMPLES
-# decode for real (audio_pcm_features — WAV needs no codec), and the
-# metadata layer of every media family is REAL, stdlib-only.
-
-
 def _stub_decode_image(blob: bytes) -> tuple[int, int, bytes]:
     """Decode a blob to (width, height, pixel digest).
 
@@ -91,8 +54,6 @@ def _stub_decode_image(blob: bytes) -> tuple[int, int, bytes]:
     if blob[:2] == JPEG_SOI:
         meta = decode_jpeg_meta(blob)
         return meta.width, meta.height, hashlib.md5(blob).digest()
-    if DECODERS_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("wire the real decoder here")
     h = hashlib.md5(blob).digest()
     width = 16 + h[0] % 64
     height = 16 + h[1] % 64
@@ -297,8 +258,8 @@ def audio_pcm_features(
     (sum of squares), peak amplitude, zero-crossing count. These are the
     clip-level stats an audio corpus filter runs (silence/clipping/noise
     screens); integer arithmetic keeps them engine-portable for the
-    oracle. Compressed formats (MP3/AAC) remain behind DECODERS_AVAILABLE
-    — PCM does not."""
+    oracle. MP3/AAC samples do not decode (see the module docstring) —
+    PCM needs no codec."""
     from appengine_mapreduce_spark.functions.media import decode_wav_samples
 
     out_schema = (
@@ -344,15 +305,14 @@ def audio_pcm_features_per_channel(
 def decode_jpeg_pixel_stats(
     df: DataFrame, id_col: str = "id", content_col: str = "content"
 ) -> DataFrame:
-    """REAL JPEG PIXEL decode over a binary column: full baseline-grayscale
-    entropy decode + dequant + IDCT (functions/jpeg_pixels.py, stdlib-only
-    per the public T.81 spec), reduced to per-image pixel statistics
-    (sum/min/max — integer-exact, the shape an image-corpus filter uses
-    for exposure/blank-page screens). Handles baseline and progressive
-    grayscale; color streams go through decode_jpeg_color_pixel_stats."""
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_gray_auto,
-    )
+    """REAL JPEG PIXEL decode over a binary column: full grayscale
+    entropy decode + dequant + IDCT, baseline or progressive
+    (functions/jpeg_pixels.decode_gray, dependency-free per the public
+    T.81 spec), reduced to per-image pixel statistics (sum/min/max —
+    integer-exact, the shape an image-corpus filter uses for
+    exposure/blank-page screens). Color streams go through
+    decode_jpeg_color_pixel_stats."""
+    from appengine_mapreduce_spark.functions.jpeg_pixels import decode_gray
 
     out_schema = (
         f"{id_col} bigint, width int, height int, px_sum bigint, "
@@ -362,7 +322,7 @@ def decode_jpeg_pixel_stats(
 
     def decode(row):
         i, blob = row
-        w, h, px = decode_gray_auto(blob)
+        w, h, px = decode_gray(blob)
         yield i, w, h, sum(px), min(px), max(px)
 
     return map_rows(df, decode, out_schema)
@@ -375,9 +335,9 @@ def decode_mp3_frame_meta(
     (functions/media.decode_mp3_meta): walk every Layer III frame —
     sync + bitrate/samplerate tables, per-header frame length — for frame
     count, exact duration and CBR/VBR-ness, skipping a leading ID3v2 tag.
-    The compressed-SAMPLE decode (filterbank/MDCT) stays behind
-    DECODERS_AVAILABLE; the frame walk is the routing layer an audio
-    corpus filters on."""
+    The compressed SAMPLES do not decode (the filterbank/MDCT needs ISO
+    tables this project does not ship); the frame walk is the routing
+    layer an audio corpus filters on."""
     from appengine_mapreduce_spark.functions.media import decode_mp3_meta
 
     out_schema = (
@@ -486,12 +446,12 @@ def decode_video_frame_pixels(
     frames fully decode through the in-repo T.81 codec
     (functions/jpeg_pixels) and raw BI_RGB (DIB) frames decode from the
     bottom-up padded BGR layout — the two capture/intermediate formats
-    that need no codec library. Inter-frame codecs (H.264/VP9) remain
-    behind DECODERS_AVAILABLE."""
+    that need no codec library. Inter-frame codecs (H.264/VP9) do not
+    decode: they need a codec library."""
     from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_color_auto,
-        decode_gray_auto,
+        decode_color,
+        decode_gray,
     )
     from appengine_mapreduce_spark.functions.media import (
         decode_avi_video_frames,
@@ -512,10 +472,10 @@ def decode_video_frame_pixels(
             if codec == "DIB":
                 px = [v for p in fr for v in p]
             elif decode_jpeg_meta(fr).n_components == 3:
-                _w, _h, rgb = decode_color_auto(fr)
+                _w, _h, rgb = decode_color(fr)
                 px = [v for p in rgb for v in p]
             else:
-                _w, _h, px = decode_gray_auto(fr)
+                _w, _h, px = decode_gray(fr)
             total += sum(px)
             mn = min(mn, min(px))
             mx = max(mx, max(px))
@@ -533,7 +493,7 @@ def decode_aac_frame_meta(
     profile, sampling-frequency index, channel config, 13-bit frame
     length — for frame count, exact duration (1024 samples/frame) and
     payload bytes. Like MP3, the header walk is the routing layer; AAC
-    SAMPLE decode stays behind DECODERS_AVAILABLE."""
+    SAMPLES do not decode (same missing ISO tables)."""
     from appengine_mapreduce_spark.functions.media import decode_aac_adts_meta
 
     out_schema = (
@@ -556,16 +516,10 @@ def decode_jpeg_color_pixel_stats(
     df: DataFrame, id_col: str = "id", content_col: str = "content"
 ) -> DataFrame:
     """REAL COLOR JPEG pixel decode over a binary column — baseline OR
-    progressive streams (dispatched by SOF marker), full entropy decode +
-    dequant + IDCT + chroma upsampling + JFIF color transform
-    (functions/jpeg_pixels.decode_color_auto) — reduced to integer-exact
-    per-image RGB statistics. With this operator the whole JPEG
-    profile matrix (baseline/progressive × gray/color) is decoded for
-    real; only lossy audio and video pixels remain behind
-    DECODERS_AVAILABLE."""
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_color_auto,
-    )
+    progressive streams, full entropy decode + dequant + IDCT + chroma
+    upsampling + JFIF color transform (functions/jpeg_pixels.decode_color)
+    — reduced to integer-exact per-image RGB statistics."""
+    from appengine_mapreduce_spark.functions.jpeg_pixels import decode_color
 
     out_schema = (
         f"{id_col} bigint, width int, height int, px_sum bigint, "
@@ -575,7 +529,7 @@ def decode_jpeg_color_pixel_stats(
 
     def decode(row):
         i, blob = row
-        w, h, rgb = decode_color_auto(blob)
+        w, h, rgb = decode_color(blob)
         flat = [v for px in rgb for v in px]
         yield i, w, h, sum(flat), min(flat), max(flat)
 
@@ -590,8 +544,8 @@ def mp4_frame_stats(
     (functions/media.decode_mp4_track_samples, stdlib-only) — frame
     count, per-frame byte sizes, track duration. This is the routing
     information a video corpus filters on (drop sub-second clips, cap
-    bitrate, budget decode cost) WITHOUT any codec; frame pixels stay
-    behind DECODERS_AVAILABLE."""
+    bitrate, budget decode cost) WITHOUT any codec; H.264/VP9 frame
+    pixels do not decode (no codec library)."""
     from appengine_mapreduce_spark.functions.media import (
         decode_mp4_track_samples,
     )
@@ -739,8 +693,8 @@ def decode_mrle_video_stats(
     unchanged pixels (temporal prediction). The decode proves the
     compositing chain: per-frame statistics are over the RESOLVED
     frames, not the wire diffs (functions/media.decode_avi_mrle_frames).
-    Motion-compensated codecs (H.264/VP9) remain behind
-    DECODERS_AVAILABLE; run-length temporal video does not."""
+    Motion-compensated codecs (H.264/VP9) do not decode (they need a
+    codec library); run-length temporal video needs none."""
     from appengine_mapreduce_spark.functions.media import (
         decode_avi_mrle_frames,
     )

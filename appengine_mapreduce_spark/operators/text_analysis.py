@@ -376,13 +376,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Convenience single-expression n-grams of raw text — fine for tests
-    and small inputs; hot paths must project ``nonempty_tokens`` first and
-    call ``ngrams_from_tokens`` (see that function's CSE note)."""
-    return ngrams_from_tokens(nonempty_tokens(text), n)
-
-
 def ngram_contamination(
     train: DataFrame,
     eval_set: DataFrame,

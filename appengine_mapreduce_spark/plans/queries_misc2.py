@@ -149,9 +149,7 @@ def png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "document (dims/components/mode from table columns), then scan the "
     "marker segments to the SOFn frame header (functions/jpeg.py, "
     "stdlib-only T.81 segment layer) and emit the decoded fields, which "
-    "the oracle recomputes from the generating formula. Together with "
-    "png_decode_meta this narrows DECODERS_AVAILABLE to audio/video "
-    "only.",
+    "the oracle recomputes from the generating formula.",
     tags=("multimodal", "udf", "jpeg"),
 )
 def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,8 +196,7 @@ def jpeg_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synthesize a valid PCM WAV per document (channels/rate/frames from "
     "table columns), then walk the RIFF chunks (functions/media.py, "
     "stdlib-only) and emit the decoded fields, which the oracle recomputes "
-    "from the generating formula. Audio metadata is no longer a stub — "
-    "DECODERS_AVAILABLE now gates only compressed-sample decode.",
+    "from the generating formula.",
     tags=("multimodal", "udf", "audio"),
 )
 def wav_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,9 +381,8 @@ def mapreduce_api_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(functions/media.decode_wav_samples — PCM needs no codec library) "
     "and extract integer-exact clip features (energy, peak, "
     "zero-crossings); the oracle recomputes the same features from the "
-    "generating formula. Audio sample decode is no longer a stub; only "
-    "COMPRESSED codecs (MP3/AAC, JPEG pixels, video frames) remain "
-    "behind DECODERS_AVAILABLE.",
+    "generating formula. MP3/AAC samples do not decode: their "
+    "filterbanks need ISO tables this project does not ship.",
     tags=("multimodal", "udf", "audio"),
 )
 def wav_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,8 +661,8 @@ def jpeg_progressive_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     "samplerate tables, per-header frame length) and emit frame count, "
     "exact duration, bitrate and CBR flag, which the oracle recomputes "
     "from the same public tables. VBR detection and malformed-stream "
-    "rejection are pytest-covered; sample decode stays behind "
-    "DECODERS_AVAILABLE (needs a DSP stack).",
+    "rejection are pytest-covered. Samples do not decode: the "
+    "filterbank needs ISO tables this project does not ship.",
     tags=("multimodal", "udf", "audio", "mp3"),
 )
 def mp3_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,9 +727,7 @@ def mp3_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(functions/media.decode_aac_adts_meta — 12-bit sync, 13-bit frame "
     "length, public sampling-frequency table, 1024 samples/frame) and "
     "emit count/duration/payload bytes, which the oracle recomputes from "
-    "the same public tables. With MP3 + AAC framing decoded, "
-    "DECODERS_AVAILABLE now gates only lossy-audio SAMPLES and video "
-    "pixels.",
+    "the same public tables. Samples do not decode, as for MP3.",
     tags=("multimodal", "udf", "audio", "aac"),
 )
 def aac_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -799,9 +793,8 @@ def aac_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators/multimodal.decode_video_frame_pixels walks the container "
     "and FULLY decodes every frame through the in-repo T.81 codec, "
     "emitting per-video pixel statistics the oracle predicts exactly "
-    "(flat blocks survive Q[DC]=8 quantization losslessly). Video frame "
-    "pixels are no longer a stub for the MJPEG capture format; only "
-    "inter-frame codecs (H.264/VP9) remain behind DECODERS_AVAILABLE.",
+    "(flat blocks survive Q[DC]=8 quantization losslessly). Inter-frame "
+    "codecs (H.264/VP9) do not decode: they need a codec library.",
     tags=("multimodal", "udf", "video", "jpeg"),
 )
 def avi_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:

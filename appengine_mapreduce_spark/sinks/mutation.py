@@ -5,10 +5,11 @@ Reference: mappers yield ``op.db.Put(entity)`` / ``op.db.Delete(key)``
 ``MAX_ENTITY_COUNT = 20`` (context.py:54, _MutationPool context.py:216-341);
 java DatastoreOutput.java:22 + DatastoreMutationPool.java.
 
-Spark-native: ``foreachPartition`` with a user-supplied batch applier —
-the applier receives lists of (op, row) tuples sized ``batch_size``. The
-target system (a datastore client, an HTTP API, a JDBC connection) is
-opened once per partition, not per record. At-least-once semantics, same
+Spark-native: one ``mapPartitions`` pass with a user-supplied batch
+applier — the applier receives lists of (op, row) tuples sized
+``batch_size`` — that also counts the rows it applied, so the input runs
+once. The target system (a datastore client, an HTTP API, a JDBC
+connection) is opened once per partition, not per record. At-least-once semantics, same
 as the reference's writers (output_writers.py:669 'at-least-once').
 """
 
@@ -52,7 +53,7 @@ class MutationPoolOutput:
         op_col, connect = self.op_col, self.connect
         cols = df.columns
 
-        def handle_partition(rows: Iterable) -> None:
+        def handle_partition(rows: Iterable) -> Iterable[int]:
             client = connect() if connect is not None else None
             batch: list[Mutation] = []
 
@@ -66,12 +67,14 @@ class MutationPoolOutput:
                 batch.clear()
 
             op_idx = cols.index(op_col) if op_col else None
+            n = 0
             for row in rows:
                 op = row[op_idx] if op_idx is not None else PUT
                 batch.append(Mutation(op, row))
+                n += 1
                 if len(batch) >= batch_size:
                     flush()
             flush()
+            yield n
 
-        df.foreachPartition(handle_partition)
-        return df.count()
+        return df.rdd.mapPartitions(handle_partition).sum()

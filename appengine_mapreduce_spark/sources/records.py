@@ -163,29 +163,30 @@ def records_output(df, out_dir: str, record_col: str = "record") -> int:
     """Distributed write: one LevelDB record file per partition
     (≙ the reference's one-file-per-shard writers,
     outputs/GoogleCloudStorageLevelDbOutput.java:17). ``record_col`` must
-    be binary/string; returns the row count written."""
+    be binary/string; returns the row count written, counted in the same
+    single pass over ``df``."""
     import os
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_partition(rows) -> None:
+    def write_partition(rows):
         from pyspark import TaskContext
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc else 0
         path = os.path.join(out_dir, f"shard-{pid:05d}.rec")
-        wrote = False
+        n = 0
         with open(path, "wb") as fh:
             w = RecordWriter(fh)
             for row in rows:
                 data = row[record_col]
                 w.write(data if isinstance(data, bytes) else bytes(data))
-                wrote = True
-        if not wrote:
+                n += 1
+        if not n:
             os.remove(path)  # no empty shard files
+        yield n
 
-    df.select(record_col).foreachPartition(write_partition)
-    return df.count()
+    return df.select(record_col).rdd.mapPartitions(write_partition).sum()
 
 
 def records_input(spark, path: str):

@@ -34,14 +34,18 @@ _QT = [max(1, (q * 3) // 5) for q in jp.STD_QT_ZZ]
 
 # name -> (encode thunk, is colour)
 _CASES = {
-    "baseline_gray_13x11": (lambda: jp.encode_baseline_gray(_gray(13, 11), 13, 11), False),
+    "baseline_gray_13x11": (
+        lambda: jp.encode_baseline_gray(_gray(13, 11), 13, 11), False,
+    ),
     "baseline_gray_13x11_rst2": (
         lambda: jp.encode_baseline_gray(_gray(13, 11), 13, 11, restart_interval=2), False,
     ),
     "baseline_gray_20x9_qt": (
         lambda: jp.encode_baseline_gray(_gray(20, 9), 20, 9, qt_zz=_QT), False,
     ),
-    "baseline_color_13x11": (lambda: jp.encode_baseline_color(_rgb(13, 11), 13, 11), True),
+    "baseline_color_13x11": (
+        lambda: jp.encode_baseline_color(_rgb(13, 11), 13, 11), True,
+    ),
     "baseline_color_13x11_rst3_qt": (
         lambda: jp.encode_baseline_color(
             _rgb(13, 11), 13, 11, qt_zz=_QT, restart_interval=3
@@ -120,10 +124,10 @@ def test_jpeg_codec_golden_digests(name):
     encode, colour = _CASES[name]
     blob = encode()
     if colour:
-        _w, _h, px = jp.decode_color_auto(blob)
+        _w, _h, px = jp.decode_color(blob)
         raw = bytes(c for p in px for c in p)
     else:
-        _w, _h, px = jp.decode_gray_auto(blob)
+        _w, _h, px = jp.decode_gray(blob)
         raw = bytes(px)
     want_blob, want_px = _GOLDEN[name]
     assert hashlib.sha256(blob).hexdigest() == want_blob

@@ -160,9 +160,17 @@ def test_jpeg_malformed_rejected():
 
 def test_jpeg_fill_bytes_and_restart_markers_skipped():
     """T.81 allows 0xFF fill bytes before any marker and standalone
-    TEM/RSTn markers between segments — the scanner must skip both."""
+    TEM/RSTn markers between segments — the scanner must skip both, and
+    the pixel decoder reads the same walk, so fill before a segment, a
+    scan or an in-scan restart marker decodes like the plain stream."""
     from appengine_mapreduce_spark.functions.jpeg import (
         JPEG_SOI, decode_jpeg_meta, encode_minimal_jpeg,
+    )
+    from appengine_mapreduce_spark.functions.jpeg_pixels import (
+        decode_color,
+        decode_gray,
+        encode_baseline_gray,
+        encode_progressive_color,
     )
 
     blob = encode_minimal_jpeg(320, 200, n_components=3)
@@ -170,6 +178,27 @@ def test_jpeg_fill_bytes_and_restart_markers_skipped():
     padded = JPEG_SOI + b"\xff\xff" + b"\xff\x01" + b"\xff\xd0" + body
     m = decode_jpeg_meta(padded)
     assert (m.width, m.height) == (320, 200)
+
+    w, h = 20, 12
+    gray = encode_baseline_gray(
+        [(x * 9 + y * 4) % 256 for y in range(h) for x in range(w)], w, h,
+        restart_interval=2,
+    )
+    filled = JPEG_SOI + b"\xff\xff" + gray[2:].replace(
+        b"\xff\xd0", b"\xff\xff\xd0", 1
+    )
+    assert filled.count(b"\xff\xff") == 2
+    assert decode_gray(filled) == decode_gray(gray)
+
+    color = encode_progressive_color(
+        [(x * 12, y * 20, (x + y) * 5) for y in range(h) for x in range(w)],
+        w, h,
+    )
+    filled = color.replace(b"\xff\xda", b"\xff\xff\xda").replace(
+        b"\xff\xd9", b"\xff\xff\xff\xd9"
+    )
+    assert filled.count(b"\xff\xff\xda") == 8
+    assert decode_color(filled) == decode_color(color)
 
 
 def test_stub_decoder_takes_real_path_for_jpeg():
@@ -350,7 +379,7 @@ def test_wav_pcm16_roundtrip_and_8bit_decode():
 def test_jpeg_baseline_codec_roundtrip():
     """Full baseline-grayscale JPEG: solid colors survive encode->decode
     BIT-EXACTLY (Q[DC]=8 preserves the flat DC), gradients within
-    quantization tolerance, and unsupported profiles fail loudly."""
+    quantization tolerance, and a colour stream is not a gray one."""
     import pytest as _pytest
 
     from appengine_mapreduce_spark.functions.jpeg import (
@@ -359,7 +388,7 @@ def test_jpeg_baseline_codec_roundtrip():
         encode_minimal_jpeg,
     )
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_gray,
+        decode_gray,
         encode_baseline_gray,
     )
 
@@ -368,23 +397,20 @@ def test_jpeg_baseline_codec_roundtrip():
             blob = encode_baseline_gray([color] * (w * h), w, h)
             meta = decode_jpeg_meta(blob)  # header decoder agrees
             assert (meta.width, meta.height, meta.n_components) == (w, h, 1)
-            dw, dh, px = decode_baseline_gray(blob)
+            dw, dh, px = decode_gray(blob)
             assert (dw, dh) == (w, h) and set(px) == {color}
 
     w, h = 24, 16
     smooth = [min(255, x * 3 + y * 2) for y in range(h) for x in range(w)]
-    _, _, px = decode_baseline_gray(encode_baseline_gray(smooth, w, h))
+    _, _, px = decode_gray(encode_baseline_gray(smooth, w, h))
     assert max(abs(a - b) for a, b in zip(smooth, px)) <= 12
 
     sharp = [(x * 7 + y * 5) % 256 for y in range(h) for x in range(w)]
-    _, _, px = decode_baseline_gray(encode_baseline_gray(sharp, w, h))
+    _, _, px = decode_gray(encode_baseline_gray(sharp, w, h))
     assert max(abs(a - b) for a, b in zip(sharp, px)) <= 40
 
-    # progressive and multi-component stay behind DECODERS_AVAILABLE
     with _pytest.raises(JpegFormatError):
-        decode_baseline_gray(encode_minimal_jpeg(8, 8, progressive=True))
-    with _pytest.raises(JpegFormatError):
-        decode_baseline_gray(encode_minimal_jpeg(8, 8, n_components=3))
+        decode_gray(encode_minimal_jpeg(8, 8, n_components=3))
 
 
 def test_jpeg_color_444_codec_roundtrip():
@@ -395,13 +421,13 @@ def test_jpeg_color_444_codec_roundtrip():
 
     from appengine_mapreduce_spark.functions.jpeg import JpegFormatError
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_color,
+        decode_color,
         encode_baseline_color,
     )
 
     for rgb in [(255, 0, 0), (0, 255, 0), (0, 0, 255), (12, 200, 99)]:
         w, h = 16, 8
-        dw, dh, px = decode_baseline_color(
+        dw, dh, px = decode_color(
             encode_baseline_color([rgb] * (w * h), w, h)
         )
         assert (dw, dh) == (w, h)
@@ -413,7 +439,7 @@ def test_jpeg_color_444_codec_roundtrip():
         for y in range(h)
         for x in range(w)
     ]
-    _, _, px = decode_baseline_color(encode_baseline_color(grad, w, h))
+    _, _, px = decode_color(encode_baseline_color(grad, w, h))
     assert max(
         max(abs(a - b) for a, b in zip(p, q)) for p, q in zip(px, grad)
     ) <= 20
@@ -424,7 +450,7 @@ def test_jpeg_color_444_codec_roundtrip():
     )
 
     with _pytest.raises(JpegFormatError):
-        decode_baseline_color(encode_baseline_gray([0] * 64, 8, 8))
+        decode_color(encode_baseline_gray([0] * 64, 8, 8))
 
 
 def test_jpeg_420_subsampled_roundtrip():
@@ -432,13 +458,13 @@ def test_jpeg_420_subsampled_roundtrip():
     chroma per MCU. Solid colors within ±2, gradients within chroma-
     smoothing tolerance, odd (non-MCU-aligned) dims handled."""
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_color,
+        decode_color,
         encode_baseline_420,
     )
 
     for rgb in [(255, 0, 0), (12, 200, 99)]:
         for (w, h) in ((16, 16), (20, 12)):
-            dw, dh, px = decode_baseline_color(
+            dw, dh, px = decode_color(
                 encode_baseline_420([rgb] * (w * h), w, h)
             )
             assert (dw, dh) == (w, h)
@@ -452,7 +478,7 @@ def test_jpeg_420_subsampled_roundtrip():
         for y in range(h)
         for x in range(w)
     ]
-    _, _, px = decode_baseline_color(encode_baseline_420(grad, w, h))
+    _, _, px = decode_color(encode_baseline_420(grad, w, h))
     assert max(
         max(abs(a - b) for a, b in zip(p, q)) for p, q in zip(px, grad)
     ) <= 30
@@ -479,11 +505,11 @@ if _HYP:
         bit-exactly — edge-replication padding keeps every block flat and
         Q[DC]=8 preserves the flat DC."""
         from appengine_mapreduce_spark.functions.jpeg_pixels import (
-            decode_baseline_gray,
+            decode_gray,
             encode_baseline_gray,
         )
 
-        dw, dh, px = decode_baseline_gray(
+        dw, dh, px = decode_gray(
             encode_baseline_gray([color] * (w * h), w, h)
         )
         assert (dw, dh) == (w, h) and set(px) == {color}
@@ -744,7 +770,7 @@ def test_avi_mjpeg_container_roundtrip_and_frame_decode():
     import pytest
 
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_gray,
+        decode_gray,
         encode_baseline_gray,
     )
     from appengine_mapreduce_spark.functions.media import (
@@ -763,7 +789,7 @@ def test_avi_mjpeg_container_roundtrip_and_frame_decode():
     assert out == frames  # byte-exact frame extraction
     # solid frames decode exactly through the real codec
     for f, v in zip(out, (10, 100, 200)):
-        assert decode_baseline_gray(f)[2] == [v] * (16 * 8)
+        assert decode_gray(f)[2] == [v] * (16 * 8)
 
     with pytest.raises(MediaFormatError):
         decode_avi_mjpeg(b"RIFF\x00\x00\x00\x00WAVE")
@@ -779,9 +805,7 @@ def test_jpeg_progressive_codec_matches_baseline():
     reconstruct EXACTLY the coefficients the baseline stream carries, so
     decoding both encodings of the same source yields identical pixels."""
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_gray,
-        decode_gray_auto,
-        decode_progressive_gray,
+        decode_gray,
         encode_baseline_gray,
         encode_progressive_gray,
     )
@@ -792,15 +816,10 @@ def test_jpeg_progressive_codec_matches_baseline():
         [min(255, x * 3 + y * 2) for y in range(h) for x in range(w)],
         [(x * 7 + y * 5) % 256 for y in range(h) for x in range(w)],
     ]:
-        _, _, base = decode_baseline_gray(encode_baseline_gray(pat, w, h))
+        _, _, base = decode_gray(encode_baseline_gray(pat, w, h))
         blob = encode_progressive_gray(pat, w, h)
-        _, _, prog = decode_progressive_gray(blob)
+        _, _, prog = decode_gray(blob)
         assert prog == base
-        # the auto dispatcher picks the right path for both markers
-        assert decode_gray_auto(blob)[2] == prog
-        assert (
-            decode_gray_auto(encode_baseline_gray(pat, w, h))[2] == base
-        )
 
 
 def test_jpeg_progressive_color_matches_baseline_color():
@@ -810,9 +829,7 @@ def test_jpeg_progressive_color_matches_baseline_color():
     carries: decoding both encodings of the same RGB source yields
     identical pixels — including non-multiple-of-8 dimensions."""
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_color,
-        decode_color_auto,
-        decode_progressive_color,
+        decode_color,
         encode_baseline_color,
         encode_progressive_color,
     )
@@ -827,17 +844,11 @@ def test_jpeg_progressive_color_matches_baseline_color():
             ],
         ]
         for rgb in patterns:
-            base = decode_baseline_color(encode_baseline_color(rgb, w, h))
+            base = decode_color(encode_baseline_color(rgb, w, h))
             blob = encode_progressive_color(rgb, w, h)
-            prog = decode_progressive_color(blob)
+            prog = decode_color(blob)
             assert prog[:2] == (w, h)
             assert prog[2] == base[2], (w, h)
-            # auto dispatcher picks the right path for both markers
-            assert decode_color_auto(blob)[2] == prog[2]
-            assert (
-                decode_color_auto(encode_baseline_color(rgb, w, h))[2]
-                == base[2]
-            )
 
 
 def test_jpeg_progressive_color_solid_gray_exact():
@@ -846,13 +857,13 @@ def test_jpeg_progressive_color_solid_gray_exact():
     exactly 128, so the decode returns (v,v,v) bit-exactly — the property
     the jpeg_progressive_color_decode oracle relies on."""
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_progressive_color,
+        decode_color,
         encode_progressive_color,
     )
 
     for v in (0, 1, 13, 127, 128, 200, 254, 255):
         w, h = 16, 8
-        _, _, rgb = decode_progressive_color(
+        _, _, rgb = decode_color(
             encode_progressive_color([(v, v, v)] * (w * h), w, h)
         )
         assert rgb == [(v, v, v)] * (w * h), v
@@ -862,19 +873,24 @@ def test_jpeg_restart_markers_roundtrip():
     """DRI/RSTn support (camera/libjpeg-style streams): gray and 4:4:4
     color streams with restart intervals decode identically to their
     non-restart encodings — DC predictors reset and the bitstream
-    re-aligns at every marker."""
+    re-aligns at every marker. Progressive streams restart the same way
+    (EOB runs reset too); the public progressive encoders write none, so
+    those come from the writer behind them."""
+    import numpy as np
+
+    from appengine_mapreduce_spark.functions import jpeg_pixels as jp
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_baseline_color,
-        decode_baseline_gray,
+        decode_color,
+        decode_gray,
         encode_baseline_color,
         encode_baseline_gray,
     )
 
     w, h = 32, 24
     pat = [(x * 7 + y * 5) % 256 for y in range(h) for x in range(w)]
-    base = decode_baseline_gray(encode_baseline_gray(pat, w, h))[2]
+    base = decode_gray(encode_baseline_gray(pat, w, h))[2]
     for ri in (1, 2, 5):
-        got = decode_baseline_gray(
+        got = decode_gray(
             encode_baseline_gray(pat, w, h, restart_interval=ri)
         )[2]
         assert got == base, ri
@@ -885,12 +901,26 @@ def test_jpeg_restart_markers_roundtrip():
         for y in range(h)
         for x in range(w)
     ]
-    cbase = decode_baseline_color(encode_baseline_color(grad, w, h))[2]
+    cbase = decode_color(encode_baseline_color(grad, w, h))[2]
     for ri in (1, 3):
-        got = decode_baseline_color(
+        got = decode_color(
             encode_baseline_color(grad, w, h, restart_interval=ri)
         )[2]
         assert got == cbase, ri
+        prog = jp._encode(
+            jp._to_ycbcr(grad, w, h), [0x11] * 3, None,
+            ac_bands=((1, 63),), restart_interval=ri,
+        )
+        assert b"\xff\xd0" in prog
+        assert decode_color(prog)[2] == cbase, ri
+
+    w, h = 32, 24
+    for ri in (1, 5):
+        prog = jp._encode(
+            [np.asarray(pat).reshape(h, w)], [0x11], None,
+            ac_bands=((1, 5), (6, 63)), restart_interval=ri,
+        )
+        assert decode_gray(prog)[2] == base, ri
 
 if _HYP:
 
@@ -967,7 +997,7 @@ if _HYP:
         """PROPERTY: any MJPEG frame sequence survives the AVI container
         byte-exactly, and solid frames decode to their exact pixels."""
         from appengine_mapreduce_spark.functions.jpeg_pixels import (
-            decode_baseline_gray,
+            decode_gray,
             encode_baseline_gray,
         )
         from appengine_mapreduce_spark.functions.media import (
@@ -980,7 +1010,7 @@ if _HYP:
         assert out == frames
         assert meta.n_frames == len(vals)
         for f, v in zip(out, vals):
-            assert decode_baseline_gray(f)[2] == [v] * (w * h)
+            assert decode_gray(f)[2] == [v] * (w * h)
 
     @settings(max_examples=8, deadline=None)
     @given(
@@ -992,11 +1022,11 @@ if _HYP:
         """PROPERTY: solid gray survives the progressive color pipeline
         bit-exactly at any dimension (incl. non-multiple-of-8)."""
         from appengine_mapreduce_spark.functions.jpeg_pixels import (
-            decode_progressive_color,
+            decode_color,
             encode_progressive_color,
         )
 
-        _, _, rgb = decode_progressive_color(
+        _, _, rgb = decode_color(
             encode_progressive_color([(v, v, v)] * (w * h), w, h)
         )
         assert rgb == [(v, v, v)] * (w * h)

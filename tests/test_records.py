@@ -89,15 +89,24 @@ def test_records_input_distributed(spark, tmp_path):
 
 def test_records_distributed_roundtrip(spark, tmp_path):
     """Distributed write (one record file per partition) → distributed
-    read reproduces the dataset exactly."""
+    read reproduces the dataset exactly, and the write runs its input
+    once: the returned count comes from the same pass."""
     from appengine_mapreduce_spark.sources.records import records_output
 
-    df = spark.range(0, 500, 1, 6).selectExpr(
-        "CAST(concat('record-', id) AS BINARY) AS record"
+    made = spark.sparkContext.accumulator(0)
+
+    def record(i):
+        made.add(1)
+        return (f"record-{i}".encode(),)
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(range(500), 6).map(record),
+        "record binary",
     )
     out = str(tmp_path / "recs_out")
     n = records_output(df, out)
     assert n == 500
+    assert made.value == 500
     import glob as g
 
     files = g.glob(f"{out}/shard-*.rec")

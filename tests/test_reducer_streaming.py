@@ -43,6 +43,7 @@ from appengine_mapreduce_spark.core.job import (
 from appengine_mapreduce_spark.core.worker import Mapper, Reducer
 from appengine_mapreduce_spark.sinks.files import FileOutput
 from appengine_mapreduce_spark.sinks.inmemory import InMemoryOutput, NoOutput
+from appengine_mapreduce_spark.sinks.mutation import MutationPoolOutput
 from tests.conftest import SF_SMOKE
 from tests.test_api import SumReducer, WordCountMapper, _wc_spec
 
@@ -119,10 +120,14 @@ def _sink(name, tmp_path):
         "in_memory": InMemoryOutput(),
         "none": NoOutput(),
         "sorted_files": FileOutput(str(tmp_path / "out"), sort_by=["word"]),
+        "mutation_pool": MutationPoolOutput(apply_batch=lambda batch: None),
     }[name]
 
 
-@pytest.mark.parametrize("sink", ["in_memory", "none", "sorted_files"])
+_SINKS = ["in_memory", "none", "sorted_files", "mutation_pool"]
+
+
+@pytest.mark.parametrize("sink", _SINKS)
 def test_counters_exact_for_every_sink(spark, docs, tmp_path, job_counters, sink):
     """One reduce pass whatever the sink runs, and a re-collect of
     ``output_df`` does not re-run the job."""
@@ -139,7 +144,7 @@ def test_counters_exact_for_every_sink(spark, docs, tmp_path, job_counters, sink
     assert counters.to_dict() == result.counters
 
 
-@pytest.mark.parametrize("sink", ["in_memory", "none", "sorted_files"])
+@pytest.mark.parametrize("sink", _SINKS)
 def test_map_only_counters_exact_for_every_sink(spark, docs, tmp_path, job_counters, sink):
     """A map-only job also runs its mapper once whatever the sink runs.
     Its ``output_df`` is not materialized: a re-collect runs the mapper

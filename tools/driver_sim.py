@@ -39,12 +39,13 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from appengine_mapreduce_spark.plans import all_queries
+from appengine_mapreduce_spark.plans.tables import TABLES
 
 # default = the driver's gate SF; override to re-prove parity at scale
 # (e.g. SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1)
 SF = _os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
 conn = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+for t in TABLES:
     conn.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
 
