@@ -9,8 +9,9 @@ Spark-native: one ``mapPartitions`` pass with a user-supplied batch
 applier — the applier receives lists of (op, row) tuples sized
 ``batch_size`` — that also counts the rows it applied, so the input runs
 once. The target system (a datastore client, an HTTP API, a JDBC
-connection) is opened once per partition, not per record. At-least-once semantics, same
-as the reference's writers (output_writers.py:669 'at-least-once').
+connection) is opened once per partition, not per record. At-least-once
+semantics, same as the reference's writers (output_writers.py:669
+'at-least-once').
 """
 
 from __future__ import annotations
