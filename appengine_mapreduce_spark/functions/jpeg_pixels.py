@@ -326,52 +326,43 @@ def _intervals(mcus: list, restart_interval: int) -> list[list]:
 
 # --- scan encoders: each writes ONE restart interval of one scan ----------
 
-def _write_coef_block(
-    w: "_BitWriter", zz: list[int], dc_codes: dict, ac_codes: dict,
-    prev_dc: int,
-) -> int:
-    """Entropy-encode one sequential block (DC diff + AC run/size with ZRL
-    and EOB); returns the block's DC for the caller's predictor."""
-    diff = zz[0] - prev_dc
-    t = _category(diff)
-    length, code = dc_codes[t]
-    w.put(code, length)
-    if t:
-        w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    last_nz = 0
-    for i in range(1, 64):
-        if zz[i]:
-            last_nz = i
-    for i in range(1, last_nz + 1):
-        if zz[i] == 0:
-            run += 1
-            continue
-        while run > 15:
-            length, code = ac_codes[0xF0]
-            w.put(code, length)
-            run -= 16
-        size = _category(zz[i])
-        length, code = ac_codes[(run << 4) | size]
-        w.put(code, length)
-        v = zz[i]
-        w.put(v if v >= 0 else v + (1 << size) - 1, size)
-        run = 0
-    if last_nz < 63:
-        length, code = ac_codes[0x00]
-        w.put(code, length)
-    return zz[0]
-
-
 def _enc_sequential(
     seq: list[tuple[int, list[int]]], dc_codes: dict, ac_codes: dict
 ) -> bytes:
-    """Sequential scan: every coefficient of each block, one DC predictor
-    per component."""
+    """Sequential scan: each block's DC difference (one predictor per
+    component), then its AC run/size symbols with ZRL and EOB."""
     w = _BitWriter()
     prev: dict[int, int] = {}
     for ci, zz in seq:
-        prev[ci] = _write_coef_block(w, zz, dc_codes, ac_codes, prev.get(ci, 0))
+        diff = zz[0] - prev.get(ci, 0)
+        prev[ci] = zz[0]
+        t = _category(diff)
+        length, code = dc_codes[t]
+        w.put(code, length)
+        if t:
+            w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        run = 0
+        last_nz = 0
+        for i in range(1, 64):
+            if zz[i]:
+                last_nz = i
+        for i in range(1, last_nz + 1):
+            if zz[i] == 0:
+                run += 1
+                continue
+            while run > 15:
+                length, code = ac_codes[0xF0]
+                w.put(code, length)
+                run -= 16
+            size = _category(zz[i])
+            length, code = ac_codes[(run << 4) | size]
+            w.put(code, length)
+            v = zz[i]
+            w.put(v if v >= 0 else v + (1 << size) - 1, size)
+            run = 0
+        if last_nz < 63:
+            length, code = ac_codes[0x00]
+            w.put(code, length)
     return w.flush()
 
 
@@ -580,14 +571,15 @@ def _encode(
 
     cids = [c[0] for c in comps]
     dc_codes = _canonical_codes(DC_COUNTS, DC_SYMBOLS)
+    ac_counts, ac_symbols = (
+        (AC_COUNTS, AC_SYMBOLS) if ac_bands is None
+        else (PROG_AC_COUNTS, PROG_AC_SYMBOLS)
+    )
+    ac_codes = _canonical_codes(ac_counts, ac_symbols)
     if ac_bands is None:
-        ac_counts, ac_symbols = AC_COUNTS, AC_SYMBOLS
-        ac_codes = _canonical_codes(ac_counts, ac_symbols)
         script = [(cids, 0, 63, 0, 0, partial(
             _enc_sequential, dc_codes=dc_codes, ac_codes=ac_codes))]
     else:
-        ac_counts, ac_symbols = PROG_AC_COUNTS, PROG_AC_SYMBOLS
-        ac_codes = _canonical_codes(ac_counts, ac_symbols)
         script = [
             (cids, 0, 0, 0, 1, partial(_enc_dc_first, dc_codes=dc_codes, al=1)),
             (cids, 0, 0, 1, 0, partial(_enc_dc_refine, al=0)),
