@@ -4,9 +4,11 @@ built-in per-row operators → Arrow-batched Spark plans.
 This is the performance-critical seam the reference never had: its workers
 ran interpreted Python per record over task-queue slices
 (handlers.py:534-648 _process_inputs/_process_datum). Here every Python
-stage crosses the same way, through ``mapInArrow``: one reader turns
-each Arrow batch into rows with ``to_pylist()``, user generators run per
-row, and one emitter builds the output rows back into Arrow batches.
+stage crosses the same way, through ``mapInArrow``: one column reader,
+``_pylist``, turns each Arrow column into Python values (through numpy
+for strings, binaries and null-free numbers, which is where a seam
+spends its time), user generators run per row, and one emitter builds the
+output rows back into Arrow batches.
 Python touches each row exactly once, and everything before/after the
 adapter stays JVM-side. The reader and emitter have three users:
 
@@ -23,12 +25,14 @@ Scale notes:
   partition cannot OOM the worker.
 - the reducer is a streaming sort-merge: ``repartition(key)`` →
   ``sortWithinPartitions(key)`` → ``mapInArrow``. The worker walks the
-  sorted Arrow batches as one ``(key, value)`` stream and hands each run
-  of equal keys to the user generator as a lazy iterator (the
-  ``ReducerInput`` contract, java impl/MergingReader.java:89-138). A run
-  may span any number of batches, so a hot key costs one batch of memory,
-  not one group; values the reducer leaves unread are skipped. Spark's
-  sort spills to disk like the reference's merge.
+  sorted Arrow batches, finds where the key changes with one Arrow
+  comparison per batch, reads one key per run and the batch's values
+  once, and hands each run of equal keys to the user generator as a lazy
+  iterator over list slices (the ``ReducerInput`` contract, java
+  impl/MergingReader.java:89-138). A run may span any number of batches,
+  so a hot key costs one batch of memory, not one group; values the
+  reducer leaves unread are skipped. Spark's sort spills to disk like the
+  reference's merge.
 - rows are read straight from Arrow as Python values, so mapper and
   ``map_rows`` rows and reducer keys and values arrive exact: null is
   ``None``, a bigint stays an ``int`` at any size, NaN stays apart from
@@ -37,7 +41,7 @@ Scale notes:
   goes straight to Arrow: a NaN the user code yields stays NaN, and a
   value its column's type cannot hold fails the task, naming the stage
   and column. Reducer keys must be scalar types (string, numeric,
-  boolean, date, timestamp, binary): runs are split on Python ``==``.
+  boolean, date, timestamp, binary): runs are grouped on Python ``==``.
   NaN keys form one group, as in Spark's ``groupBy``.
 """
 
@@ -49,6 +53,7 @@ from collections.abc import Iterable, Iterator
 from operator import itemgetter
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_type
@@ -73,13 +78,38 @@ def _record_type(names: list[str]) -> type:
     return collections.namedtuple("Pandas", names, rename=True)
 
 
+def _pylist(col: pa.Array) -> list:
+    """``col.to_pylist()``, the same values of the same Python types, at
+    numpy's speed where numpy gives them: string and binary columns (a
+    null reads as ``None``) and null-free integer, float32/64 and boolean
+    columns. Every other column goes through ``to_pylist()``: a number
+    column with nulls (numpy would read its integers as floats), float16
+    (whose ``to_pylist`` values are numpy scalars) and every non-flat or
+    temporal type."""
+    t = col.type
+    if (
+        pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+        or col.null_count == 0 and (
+            pa.types.is_integer(t)
+            or pa.types.is_float32(t)
+            or pa.types.is_float64(t)
+            or pa.types.is_boolean(t)
+        )
+    ):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col.to_pylist()
+
+
 def _records(columns: list[pa.Array], record: type, num_rows: int) -> Iterator[tuple]:
     """The rows of ``columns`` as ``record`` namedtuples, each value as
-    ``to_pylist()`` reads it; an empty record per row when there are no
-    columns."""
+    ``_pylist`` (so ``to_pylist()``) reads it; an empty record per row
+    when there are no columns."""
     if not columns:
         return itertools.repeat(record(), num_rows)
-    return map(record._make, zip(*(c.to_pylist() for c in columns)))
+    return map(record._make, zip(*map(_pylist, columns)))
 
 
 def _emitter(stage: str, out_schema: StructType):
@@ -276,9 +306,19 @@ def run_reducer(
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
         record = _record_type(value_cols)
 
-        def stream() -> Iterator[tuple]:
+        def pieces() -> Iterator[tuple]:
+            """``(key, values)`` per run of Arrow-equal keys in a batch.
+            Arrow splits what Python groups as one key: a run at a batch
+            edge, each null (``not_equal`` with a null is null) and each
+            NaN; the caller merges adjacent pieces of one key."""
             for batch in batches:
-                keys = batch.column(0).to_pylist()
+                n = batch.num_rows
+                if n == 0:
+                    continue
+                col = batch.column(0)
+                changed = pc.fill_null(pc.not_equal(col[1:], col[:-1]), True)
+                starts = [0, *(i + 1 for i in _pylist(pc.indices_nonzero(changed)))]
+                keys = _pylist(col.take(starts))
                 if float_key:
                     # Spark's sort puts every NaN in one run and -0.0 with
                     # 0.0; ``itertools.groupby`` compares with
@@ -286,18 +326,20 @@ def run_reducer(
                     # as equal to itself, so all NaNs become ``_NAN``
                     keys = [k if k is None else (_NAN if k != k else k + 0.0) for k in keys]
                 if len(value_cols) == 1:
-                    values = batch.column(1).to_pylist()
+                    values = _pylist(batch.column(1))
                 else:
-                    values = _records(batch.columns[1:], record, batch.num_rows)
-                yield from zip(keys, values)
+                    values = list(_records(batch.columns[1:], record, n))
+                for key, a, b in zip(keys, starts, [*starts[1:], n]):
+                    yield key, values[a:b]
 
         def outputs() -> Iterator[Iterable[tuple]]:
             reducer.begin_shard(ctx)
             n_calls = 0
-            value_of = itemgetter(1)
-            for key, run in itertools.groupby(stream(), itemgetter(0)):
+            values_of = itemgetter(1)
+            for key, run in itertools.groupby(pieces(), itemgetter(0)):
                 n_calls += 1
-                yield map(tuple, reducer(ctx, key, map(value_of, run)) or ())
+                values = itertools.chain.from_iterable(map(values_of, run))
+                yield map(tuple, reducer(ctx, key, values) or ())
             reducer.end_shard(ctx)
             ctx.increment(C.REDUCER_CALLS, n_calls)
 

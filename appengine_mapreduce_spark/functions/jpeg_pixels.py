@@ -432,6 +432,11 @@ def _enc_ac_first(
                 w.put(code, length)
                 run -= 16
             size = _category(v)
+            if (run << 4) | size not in ac_codes:
+                raise ValueError(
+                    f"AC coefficient {v} needs {size} bits; the progressive AC "
+                    f"table codes at most {max(s & 0x0F for s in ac_codes)}"
+                )
             length, code = ac_codes[(run << 4) | size]
             w.put(code, length)
             w.put(v if v >= 0 else v + (1 << size) - 1, size)

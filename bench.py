@@ -11,8 +11,10 @@ record: a query's time is the median of its runs' ``wall_s``, and its
 ``layers`` entry is the record of its median run (jobs, shuffle bytes,
 spill, peak execution memory, executor time, host steal and io stall).
 At sf0.1 the suite runs again at sf1 ($SPARK_GRAFT_SF1_DIR, generated by
-tools/gen_sf.py when absent) and each query gets a scaling exponent. The
-full payload goes to BENCH_LOCAL.json; stdout is ONE JSON line (metric,
+tools/gen_sf.py when absent) and each query gets a scaling exponent. Each
+scale's suite runs in a Python process of its own, so each gets its own
+py4j gateway JVM rather than one the other scale has warmed and churned.
+The full payload goes to BENCH_LOCAL.json; stdout is ONE JSON line (metric,
 value, unit, queries, runs, sf, sf1_total, sf1_worst_exponent,
 detail_file), the last thing printed, with all progress on stderr.
 """
@@ -24,7 +26,9 @@ import json
 import math
 import os
 import statistics
+import subprocess
 import sys
+import tempfile
 import traceback
 from dataclasses import asdict
 
@@ -80,10 +84,10 @@ def _measure(spark, ordered, sf_dir: str, n_rounds: int,
             timed(name, spec)
 
 
-def _run_suite(sf_dir: str, n_rounds: int, label: str) -> dict:
-    """Measure the headline suite at ``sf_dir``: JVM-only queries in one
-    SparkContext, then ``udf`` queries in a fresh one."""
-    specs = bench_queries()
+def _run_suite(sf_dir: str, n_rounds: int, label: str, names: list[str]) -> dict:
+    """Measure the headline queries ``names`` at ``sf_dir``: JVM-only
+    queries in one SparkContext, then ``udf`` queries in a fresh one."""
+    specs = {n: s for n, s in bench_queries().items() if n in names}
     by_name = sorted(specs.items(), key=lambda kv: kv[0])
     phases = [
         ("jvm", [(n, s) for n, s in by_name if "udf" not in s.tags]),
@@ -129,6 +133,21 @@ def _run_suite(sf_dir: str, n_rounds: int, label: str) -> dict:
     }
 
 
+def _suite_in_child(sf_dir: str, n_rounds: int, label: str) -> dict:
+    """``_run_suite`` over ``bench_queries()`` in a child Python process.
+    The child's stdout goes to our stderr (stdout is the one contract
+    line); its result comes back through a file."""
+    with tempfile.TemporaryDirectory() as tmp:
+        out = os.path.join(tmp, "suite.json")
+        subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--suite", sf_dir, str(n_rounds),
+             label, out, *sorted(bench_queries())],
+            check=True, stdout=sys.stderr,
+        )
+        with open(out) as fh:
+            return json.load(fh)
+
+
 def _ensure_sf1(sf1_dir: str) -> bool:
     """Materialize the tiled sf1 fixture if absent (tools/gen_sf.py is
     deterministic, so a regenerated fixture is byte-identical)."""
@@ -137,8 +156,6 @@ def _ensure_sf1(sf1_dir: str) -> bool:
     ):
         return True
     try:
-        import subprocess
-
         gen = os.path.join(_REPO, "tools", "gen_sf.py")
         # Child stdout goes to OUR stderr: bench's stdout contract is ONE
         # JSON line, and gen_sf.py prints per-table progress lines.
@@ -156,7 +173,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    out = _run_suite(sf_dir, N_ROUNDS, f"sf{sf:g}")
+    out = _suite_in_child(sf_dir, N_ROUNDS, f"sf{sf:g}")
     detail: dict = {"sf": sf, **out}
     result = {
         "metric": "headline_queries_total",
@@ -173,7 +190,7 @@ def main() -> None:
         sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(_REPO, "testdata", "sf1"))
         try:
             if _ensure_sf1(sf1_dir):
-                sf1 = _run_suite(sf1_dir, SF1_ROUNDS, "sf1")
+                sf1 = _suite_in_child(sf1_dir, SF1_ROUNDS, "sf1")
                 exponents = {
                     n: round(math.log10(max(sf1["queries"][n], 1e-4) / max(t, 1e-4)), 2)
                     for n, t in out["queries"].items()
@@ -197,4 +214,10 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--suite"]:  # one scale, from _suite_in_child
+        sf_dir, n_rounds, label, out_path, *names = sys.argv[2:]
+        result = _run_suite(sf_dir, int(n_rounds), label, names)
+        with open(out_path, "w") as fh:
+            json.dump(result, fh)
+    else:
+        main()

@@ -869,6 +869,29 @@ def test_jpeg_progressive_color_solid_gray_exact():
         assert rgb == [(v, v, v)] * (w * h), v
 
 
+def test_jpeg_progressive_ac_past_table_is_rejected():
+    """The progressive AC table codes sizes 1-8. With every quantization
+    entry 1, a noisy checkerboard's point-transformed AC coefficients
+    need 9 bits; both progressive encoders name the size and the limit
+    instead of failing on a missing Huffman code."""
+    import random
+
+    from appengine_mapreduce_spark.functions.jpeg_pixels import (
+        encode_progressive_color,
+        encode_progressive_gray,
+    )
+
+    rnd = random.Random(5)
+    w, h = 16, 16
+    gray = [255 * ((x + y + (rnd.random() < 0.1)) % 2) for y in range(h) for x in range(w)]
+    rgb = [(p, p, p) for p in gray]
+    match = r"needs (9|10) bits; the progressive AC table codes at most 8"
+    with pytest.raises(ValueError, match=match):
+        encode_progressive_gray(gray, w, h, qt_zz=[1] * 64)
+    with pytest.raises(ValueError, match=match):
+        encode_progressive_color(rgb, w, h, qt_zz=[1] * 64)
+
+
 def test_jpeg_restart_markers_roundtrip():
     """DRI/RSTn support (camera/libjpeg-style streams): gray and 4:4:4
     color streams with restart intervals decode identically to their

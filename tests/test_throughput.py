@@ -9,13 +9,15 @@ because this VM shows ~8% CPU steal with multi-second bursts.
 from __future__ import annotations
 
 import time
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from appengine_mapreduce_spark.core.adapters import run_mapper
+from appengine_mapreduce_spark.core.adapters import run_mapper, run_reducer
 from appengine_mapreduce_spark.core.counters import Counters
-from appengine_mapreduce_spark.core.worker import MapOnlyMapper
+from appengine_mapreduce_spark.core.worker import MapOnlyMapper, Reducer
+from tests.test_reducer_streaming import _Frame
 
 N = 2_000_000
 FLOOR_RECORDS_PER_SEC = 250_000
@@ -44,6 +46,68 @@ def test_generator_path_throughput(spark):
     assert n_out == N * 9 // 10
     rate = N / best
     assert rate >= FLOOR_RECORDS_PER_SEC, f"only {rate:,.0f} rec/s"
+
+
+def _schema(**types) -> StructType:
+    """A ``StructType`` built without a session (``fromDDL`` parses in the
+    JVM)."""
+    return StructType([StructField(name, t) for name, t in types.items()])
+
+
+class _IndexReducer(Reducer):
+    """``(word, lines containing it, first offset)``, as the Index demo."""
+
+    def __call__(self, ctx, key, values):
+        n = 0
+        first = None
+        for v in values:
+            n += 1
+            if first is None or v < first:
+                first = v
+        yield (key, n, first)
+
+
+def test_reducer_seam_throughput():
+    """Reduce-seam guardrail, no Spark: ~344k (word, offset) values over a
+    1,000-word zipf vocabulary, sorted and cut into 10k-row Arrow batches
+    as the shuffle hands them over, through ``run_reducer``'s partition
+    function with an Index-demo reducer. The run-boundary reader moves
+    6.6-11.7M values/s on a 4-core box; a reader that builds one Python
+    tuple per value (``to_pylist`` on both columns, then ``groupby``)
+    moves 0.5-0.8M/s there and fails the 2M/s floor."""
+    import random
+    from collections import Counter
+
+    import pyarrow as pa
+
+    rnd = random.Random(7)
+    vocab = [f"w{i:04d}" for i in range(1000)]
+    weights = [1 / (i + 1) ** 1.2 for i in range(1000)]
+    words = sorted(rnd.choices(vocab, weights, k=344_000))
+    offsets = [rnd.randrange(1 << 40) for _ in words]
+    batches = [
+        pa.record_batch([pa.array(words[i:i + 10_000]), pa.array(offsets[i:i + 10_000])],
+                        names=["word", "offset"])
+        for i in range(0, len(words), 10_000)
+    ]
+    counts: Counter = Counter()
+    run = run_reducer(
+        _Frame(["word", "offset"], _schema(word=StringType(), offset=LongType())),
+        _IndexReducer(),
+        _schema(word=StringType(), n=LongType(), first=LongType()),
+        SimpleNamespace(add=counts.update), key_col="word", value_cols=["offset"],
+    )
+    best = None
+    for _ in range(3):
+        t0 = time.perf_counter()
+        out = [r for b in run(iter(batches)) for r in zip(*b.to_pydict().values())]
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    n_keys = len(set(words))
+    assert len(out) == n_keys and sum(n for _, n, _ in out) == len(words)
+    assert counts["reducer-calls"] == 3 * n_keys
+    rate = len(words) / best
+    assert rate >= 2_000_000, f"only {rate:,.0f} values/s"
 
 
 def test_codec_path_throughput():
