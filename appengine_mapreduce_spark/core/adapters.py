@@ -307,17 +307,20 @@ def run_reducer(
         record = _record_type(value_cols)
 
         def pieces() -> Iterator[tuple]:
-            """``(key, values)`` per run of Arrow-equal keys in a batch.
-            Arrow splits what Python groups as one key: a run at a batch
-            edge, each null (``not_equal`` with a null is null) and each
-            NaN; the caller merges adjacent pieces of one key."""
+            """``(key, values)`` per run of equal keys in a batch, where
+            two nulls are equal and, for float keys, two NaNs (Arrow's
+            ``equal`` gives null and false there). A key that spans a
+            batch edge comes in two pieces; the caller merges them."""
             for batch in batches:
                 n = batch.num_rows
                 if n == 0:
                     continue
                 col = batch.column(0)
-                changed = pc.fill_null(pc.not_equal(col[1:], col[:-1]), True)
-                starts = [0, *(i + 1 for i in _pylist(pc.indices_nonzero(changed)))]
+                a, b = col[1:], col[:-1]
+                same = pc.fill_null(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b)))
+                if float_key:
+                    same = pc.or_(same, pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+                starts = [0, *(i + 1 for i in _pylist(pc.indices_nonzero(pc.invert(same))))]
                 keys = _pylist(col.take(starts))
                 if float_key:
                     # Spark's sort puts every NaN in one run and -0.0 with

@@ -221,25 +221,6 @@ class DataFrameInput:
 
 
 @dataclass
-class ParquetInput:
-    """Entity-table scan input (≙ DatastoreInput over a parquet table),
-    with the reference's filter/projection surface (sources/entity.py)."""
-
-    path: str
-    filters: list[tuple] | None = None
-    projection: list[str] | None = None
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        from appengine_mapreduce_spark.sources.entity import entity_scan
-
-        return entity_scan(
-            spark.read.parquet(self.path),
-            filters=self.filters,
-            projection=self.projection,
-        )
-
-
-@dataclass
 class TextLinesInput:
     """≙ BlobstoreLineInputReader / GoogleCloudStorageLineInput
     (sources/text.py): rows of (offset, line) or just (line)."""

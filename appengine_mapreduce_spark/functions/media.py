@@ -1,27 +1,67 @@
-"""Dependency-free audio/video container metadata codecs.
+"""Dependency-free audio, video and image container codecs.
 
 Same design as ``functions/png.py`` / ``functions/jpeg.py``: parse the
-PUBLIC container formats with stdlib ``struct`` only, deep enough to
-answer the questions a training-data pipeline asks before routing a blob
-(sample rate, channel count, duration, track layout) — not to decode
-samples. The sample decoders below cover the formats whose codec is
-pure arithmetic from a public spec; MP3/AAC samples and H.264/VP9 frames
-do not decode (see ``operators/multimodal``).
+PUBLIC formats with stdlib ``struct`` only. Every format answers the
+routing questions a training-data pipeline asks (sample rate, channel
+count, duration, dimensions, track and frame layout); where the codec is
+pure arithmetic from a public spec, samples and pixels decode too, and
+each decoder has a fixture encoder twin. MP3/AAC samples and H.264/VP9
+frames do not decode (see ``operators/multimodal``).
 
-- WAV: RIFF chunk walk (RIFF/WAVE signature, ``fmt `` layout, ``data``
-  size → duration) per the public RIFF/WAVE spec.
-- MP4/ISO BMFF: box walk to ``moov/mvhd`` (version 0 and 1 layouts) for
-  timescale + duration, counting ``trak`` boxes, per ISO/IEC 14496-12.
+- RIFF family, on one chunk walker (``_riff_chunks``) and one chunk
+  writer (``_chunk``):
+  - WAV: ``fmt ``/``fact``/``data`` parsed once (``_parse_wav``); PCM,
+    G.711 µ-law/A-law and IMA ADPCM (mono and word-interleaved
+    multi-channel) samples decode.
+  - AVI: one header parse (``_parse_avi``: ``avih``, the ``strl`` list,
+    ``movi`` chunks by stream id) feeds the MJPEG, raw DIB and MS-RLE
+    video decoders and the PCM audio track; one packer writes them.
+  - WebP: dimensions and variant from the VP8/VP8L/VP8X header.
+- MP4/ISO BMFF: box walks to ``moov/mvhd`` (v0 and v1) and the
+  ``trak`` count, and to the ``stbl`` sample tables (``stts``/``stsz``),
+  per ISO/IEC 14496-12.
+- MP3 and AAC (ADTS): frame-header walks for rate, channels, duration.
+- BMP: 24-bit and 8-bit palette pixels, BI_RGB and BI_RLE8.
+- GIF: screen, frame count, and LZW pixel decode with interlacing.
+- TIFF: IFD walk for page metadata; uncompressed and PackBits strips.
 """
 
 from __future__ import annotations
 
 import struct
 from dataclasses import dataclass
+from typing import NamedTuple
 
 
 class MediaFormatError(ValueError):
     pass
+
+
+# --- RIFF framing (WAV, AVI, WebP) ------------------------------------------
+
+def _riff_chunks(blob: bytes, start: int, end: int):
+    """Yield (fourcc, payload_start, payload_end) for each chunk of
+    ``blob[start:end]``; chunks pad to even. A chunk that runs past
+    ``end`` is capped to it in a WAVE file, so a cut recording still
+    yields the samples it holds, and rejected in every other RIFF form."""
+    pos = start
+    while pos + 8 <= end:
+        tag = blob[pos : pos + 4]
+        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
+        body = pos + 8
+        if body + size > end:
+            if blob[8:12] != b"WAVE":
+                raise MediaFormatError(f"truncated RIFF chunk {tag!r} at {pos}")
+            size = end - body
+        yield tag, body, body + size
+        pos = body + size + (size & 1)
+
+
+def _chunk(tag: bytes, *parts: bytes) -> bytes:
+    """One RIFF chunk holding ``parts``, padded to even. The first part
+    of a LIST or RIFF chunk is its list type."""
+    body = b"".join(parts)
+    return tag + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
 
 
 # --- WAV (RIFF) -------------------------------------------------------------
@@ -36,43 +76,35 @@ class WavMeta:
     audio_format: int = 1  # 1=PCM, 6=A-law, 7=µ-law (G.711)
 
 
-def decode_wav_meta(blob: bytes) -> WavMeta:
-    """Walk the RIFF chunks of a WAV blob; no sample decoding."""
+def _parse_wav(blob: bytes) -> "tuple[WavMeta, int, int | None, bytes]":
+    """Walk a WAV blob's chunks once: (meta, block_align, fact frame
+    count or None, the first data chunk's payload). RIFF does not fix
+    the chunk order, so ``fact`` may follow ``data``."""
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         raise MediaFormatError("bad RIFF/WAVE signature")
-    pos = 12
-    fmt = None
-    data_size = None
-    fact_frames = None
-    samples_per_block = None
-    while pos + 8 <= len(blob):
-        tag = blob[pos : pos + 4]
-        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
-        body = blob[pos + 8 : pos + 8 + size]
+    fmt = payload = fact_frames = samples_per_block = None
+    for tag, b, e in _riff_chunks(blob, 12, len(blob)):
         if tag == b"fmt ":
-            if len(body) < 16:
+            if e - b < 16:
                 raise MediaFormatError("truncated fmt chunk")
-            (audio_format, n_channels, sample_rate, _byte_rate,
-             block_align, bits) = struct.unpack("<HHIIHH", body[:16])
-            fmt = (n_channels, sample_rate, bits, block_align, audio_format)
-            if audio_format == WAVE_FORMAT_IMA_ADPCM and len(body) >= 20:
-                (samples_per_block,) = struct.unpack("<H", body[18:20])
-        elif tag == b"fact" and len(body) >= 4:
+            fmt = struct.unpack("<HHIIHH", blob[b : b + 16])
+            if fmt[0] == WAVE_FORMAT_IMA_ADPCM and e - b >= 20:
+                (samples_per_block,) = struct.unpack("<H", blob[b + 18 : b + 20])
+        elif tag == b"fact" and e - b >= 4:
             # dwSampleLength: the TRUE per-channel frame count — the WAV
             # spec's answer to compressed formats whose data-chunk size
             # no longer implies it (block padding, variable rate)
-            (fact_frames,) = struct.unpack("<I", body[:4])
-        elif tag == b"data" and data_size is None:
-            # FIRST data chunk (the one decode_wav_samples reads), with
-            # the declared size capped to the bytes actually present so a
-            # truncated blob reports frames that exist, not frames claimed
-            data_size = min(size, max(0, len(blob) - pos - 8))
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data_size is None:
+            (fact_frames,) = struct.unpack("<I", blob[b : b + 4])
+        elif tag == b"data" and payload is None:
+            # the FIRST data chunk, capped by the walk to the bytes
+            # present, so a truncated blob reports frames that exist
+            payload = blob[b:e]
+    if fmt is None or payload is None:
         raise MediaFormatError("missing fmt/data chunk")
-    n_channels, sample_rate, bits, block_align, audio_format = fmt
+    audio_format, n_channels, sample_rate, _byte_rate, block_align, bits = fmt
     if block_align == 0 or sample_rate == 0:
         raise MediaFormatError("zero block_align/sample_rate")
+    data_size = len(payload)
     n_frames = data_size // block_align
     if audio_format == WAVE_FORMAT_IMA_ADPCM and samples_per_block:
         # fact-less compressed files: whole blocks at samples_per_block
@@ -100,7 +132,7 @@ def decode_wav_meta(blob: bytes) -> WavMeta:
         elif audio_format == WAVE_FORMAT_IMA_ADPCM and samples_per_block:
             cap = n_frames  # the payload-derived estimate above
         n_frames = fact_frames if cap is None else min(fact_frames, cap)
-    return WavMeta(
+    meta = WavMeta(
         n_channels=n_channels,
         sample_rate=sample_rate,
         bits_per_sample=bits,
@@ -108,6 +140,38 @@ def decode_wav_meta(blob: bytes) -> WavMeta:
         duration_ms=n_frames * 1000 // sample_rate,
         audio_format=audio_format,
     )
+    return meta, block_align, fact_frames, payload
+
+
+def decode_wav_meta(blob: bytes) -> WavMeta:
+    """Walk the RIFF chunks of a WAV blob; no sample decoding."""
+    return _parse_wav(blob)[0]
+
+
+def _wav_fmt(
+    audio_format: int, n_channels: int, sample_rate: int, block_align: int,
+    bits: int, samples_per_block: int = 0,
+) -> bytes:
+    """A WAVEFORMATEX ``fmt `` body. IMA ADPCM (``samples_per_block``
+    set) appends cbSize=2 and samplesPerBlock, per the public Microsoft
+    WAVE registry entry, and its byte rate counts whole blocks."""
+    fmt = struct.pack(
+        "<HHIIHH", audio_format, n_channels, sample_rate,
+        sample_rate * block_align // max(1, samples_per_block), block_align, bits,
+    )
+    return fmt + struct.pack("<HH", 2, samples_per_block) if samples_per_block else fmt
+
+
+def _wav(fmt: bytes, data: bytes, fact_frames: "int | None" = None) -> bytes:
+    """RIFF/WAVE holding ``fmt ``, an optional ``fact`` frame count and
+    ``data``. Unlike :func:`_chunk`, an odd-length data chunk and the
+    RIFF chunk around it get no pad byte: readers tolerate a missing
+    final pad, and tests/test_media_golden.py pins these bytes."""
+    body = b"WAVE" + _chunk(b"fmt ", fmt)
+    if fact_frames is not None:
+        body += _chunk(b"fact", struct.pack("<I", fact_frames))
+    body += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def encode_wav(
@@ -120,14 +184,8 @@ def encode_wav(
     """Emit a valid PCM WAV blob (silence/constant fill) for fixtures."""
     block_align = n_channels * bits_per_sample // 8
     data = bytes([fill & 0xFF]) * (n_frames * block_align)
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate,
-        sample_rate * block_align, block_align, bits_per_sample,
-    )
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    fmt = _wav_fmt(WAVE_FORMAT_PCM, n_channels, sample_rate, block_align, bits_per_sample)
+    return _wav(fmt, data)
 
 
 # --- MP4 / ISO BMFF ---------------------------------------------------------
@@ -230,16 +288,8 @@ def encode_wav_pcm16(
     if multi-channel) — the fixture twin of :func:`decode_wav_samples`."""
     import array
 
-    data = array.array("h", samples).tobytes()
-    block_align = n_channels * 2
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate,
-        sample_rate * block_align, block_align, 16,
-    )
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    fmt = _wav_fmt(WAVE_FORMAT_PCM, n_channels, sample_rate, 2 * n_channels, 16)
+    return _wav(fmt, array.array("h", samples).tobytes())
 
 
 def decode_wav_samples(blob: bytes) -> "tuple[WavMeta, list[int]]":
@@ -249,28 +299,7 @@ def decode_wav_samples(blob: bytes) -> "tuple[WavMeta, list[int]]":
     need ISO tables this project does not ship."""
     import array
 
-    meta = decode_wav_meta(blob)
-    # locate the data chunk again (decode_wav_meta validated structure);
-    # keep fmt's block_align on the way (the ADPCM block size)
-    pos = 12
-    payload = None
-    block_align = 0
-    fact_frames = None
-    # full walk — RIFF does not mandate chunk order, so fact may follow
-    # data; keep the FIRST data chunk (decode_wav_meta's convention)
-    while pos + 8 <= len(blob):
-        tag = blob[pos : pos + 4]
-        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
-        if tag == b"fmt " and size >= 16:
-            (block_align,) = struct.unpack(
-                "<H", blob[pos + 8 + 12 : pos + 8 + 14])
-        if tag == b"fact" and size >= 4:
-            (fact_frames,) = struct.unpack(
-                "<I", blob[pos + 8 : pos + 12])
-        if tag == b"data" and payload is None:
-            payload = blob[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    payload = payload or b""
+    meta, block_align, fact_frames, payload = _parse_wav(blob)
     if meta.audio_format == WAVE_FORMAT_IMA_ADPCM:
         samples = _decode_wav_adpcm_payload(
             payload, block_align, meta.n_channels)
@@ -384,15 +413,7 @@ def encode_wav_companded(
     container (format code 7 for µ-law, 6 for A-law; 8 bits/sample) —
     lets an oracle pin the exact byte stream without the compressor."""
     fmt_code = WAVE_FORMAT_MULAW if law == "mu" else WAVE_FORMAT_ALAW
-    block_align = n_channels
-    fmt = struct.pack(
-        "<HHIIHH", fmt_code, n_channels, sample_rate,
-        sample_rate * block_align, block_align, 8,
-    )
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    return _wav(_wav_fmt(fmt_code, n_channels, sample_rate, n_channels, 8), data)
 
 
 def encode_wav_g711(
@@ -402,17 +423,8 @@ def encode_wav_g711(
     """Fixture encoder: compress linear samples to a G.711 WAV (format
     code 7 for µ-law, 6 for A-law; 8 bits/sample)."""
     comp = mulaw_compress if law == "mu" else alaw_compress
-    fmt_code = WAVE_FORMAT_MULAW if law == "mu" else WAVE_FORMAT_ALAW
     data = bytes(comp(int(s)) for s in samples)
-    block_align = n_channels
-    fmt = struct.pack(
-        "<HHIIHH", fmt_code, n_channels, sample_rate,
-        sample_rate * block_align, block_align, 8,
-    )
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    return encode_wav_companded(data, law, n_channels, sample_rate)
 
 
 # --- IMA ADPCM (DVI4; WAV format 0x11) --------------------------------------
@@ -513,17 +525,40 @@ def ima_adpcm_encode_nibbles(
     return nibbles, predictor, index
 
 
-def _ima_wav_header(
-    sample_rate: int, block_align: int, samples_per_block: int,
-    n_channels: int = 1,
-) -> bytes:
-    """fmt chunk for a format-0x11 WAV (cbSize=2 extension carries
-    samplesPerBlock, per the public Microsoft WAVE registry entry)."""
-    byte_rate = sample_rate * block_align // max(1, samples_per_block)
-    return struct.pack(
-        "<HHIIHHHH", WAVE_FORMAT_IMA_ADPCM, n_channels, sample_rate,
-        byte_rate, block_align, 4, 2, samples_per_block,
+def _ima_block(headers, nibbles, n_nibbles: int) -> bytes:
+    """One IMA ADPCM block in the registered WAVE layout: a (first
+    sample, step index) header per channel, then each channel's nibbles,
+    zero-padded to ``n_nibbles``, packed low nibble first and interleaved
+    in 4-byte words (ch0 word, ch1 word, ..., repeat)."""
+    packed = []
+    for nibs in nibbles:
+        nibs = list(nibs) + [0] * (n_nibbles - len(nibs))
+        packed.append(bytes(
+            (lo & 0x0F) | ((hi & 0x0F) << 4) for lo, hi in zip(nibs[0::2], nibs[1::2])))
+    return b"".join(
+        [struct.pack("<hBB", first, index, 0) for first, index in headers]
+        + [p[w : w + 4] for w in range(0, n_nibbles // 2, 4) for p in packed]
     )
+
+
+def _ima_encode(channels: "list[list[int]]", samples_per_block: int) -> bytes:
+    """Closed-loop encode equal-length channels into IMA ADPCM blocks of
+    ``samples_per_block`` frames. Each block header stores the channel's
+    first sample VERBATIM plus the running step index (so blocks are
+    independently seekable — the format's design point); the rest are
+    nibbles, and a short last block zero-pads them."""
+    data = bytearray()
+    indices = [0] * len(channels)
+    for pos in range(0, len(channels[0]), samples_per_block):
+        headers, nibbles = [], []
+        for ch, samples in enumerate(channels):
+            part = samples[pos : pos + samples_per_block]
+            headers.append((int(part[0]), indices[ch]))
+            nibs, _pred, indices[ch] = ima_adpcm_encode_nibbles(
+                part[1:], predictor=int(part[0]), index=indices[ch])
+            nibbles.append(nibs)
+        data += _ima_block(headers, nibbles, samples_per_block - 1)
+    return bytes(data)
 
 
 def encode_wav_adpcm_nibbles(
@@ -539,18 +574,11 @@ def encode_wav_adpcm_nibbles(
     the WAV spec's compressed-format contract."""
     if not 0 <= index <= 88:
         raise MediaFormatError(f"ADPCM step index {index} out of range")
-    body = bytearray(struct.pack("<hBB", predictor, index, 0))
-    padded = list(nibbles) + ([0] if len(nibbles) % 2 else [])
-    for lo, hi in zip(padded[0::2], padded[1::2]):
-        body.append((lo & 0x0F) | ((hi & 0x0F) << 4))
-    block_align = len(body)
-    samples_per_block = (block_align - 4) * 2 + 1
-    fmt = _ima_wav_header(sample_rate, block_align, samples_per_block)
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"fact" + struct.pack("<II", 4, 1 + len(nibbles))
-    chunks += b"data" + struct.pack("<I", len(body)) + bytes(body)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    block = _ima_block([(predictor, index)], [nibbles], len(nibbles) + len(nibbles) % 2)
+    samples_per_block = (len(block) - 4) * 2 + 1
+    fmt = _wav_fmt(
+        WAVE_FORMAT_IMA_ADPCM, 1, sample_rate, len(block), 4, samples_per_block)
+    return _wav(fmt, block, 1 + len(nibbles))
 
 
 def encode_wav_adpcm(
@@ -558,34 +586,14 @@ def encode_wav_adpcm(
     samples_per_block: int = 505,
 ) -> bytes:
     """Compress linear int16 samples into a mono multi-block IMA ADPCM
-    WAV: each block header stores the block's first sample VERBATIM plus
-    the running step index (so blocks are independently seekable — the
-    format's design point); the remaining samples_per_block-1 samples
-    are closed-loop-encoded nibbles, low nibble first."""
+    WAV: each block holds its first sample verbatim, then
+    samples_per_block-1 closed-loop-encoded nibbles, low nibble first."""
     if samples_per_block < 2 or samples_per_block % 2 == 0:
         raise MediaFormatError("samples_per_block must be odd and >= 3")
     block_align = 4 + (samples_per_block - 1) // 2
-    data = bytearray()
-    index = 0
-    pos = 0
-    while pos < len(samples):
-        chunk = samples[pos : pos + samples_per_block]
-        first = int(chunk[0])
-        nibs, _pred, index_out = ima_adpcm_encode_nibbles(
-            chunk[1:], predictor=first, index=index)
-        body = bytearray(struct.pack("<hBB", first, index, 0))
-        padded = nibs + [0] * ((samples_per_block - 1) - len(nibs))
-        for lo, hi in zip(padded[0::2], padded[1::2]):
-            body.append((lo & 0x0F) | ((hi & 0x0F) << 4))
-        data += body
-        index = index_out
-        pos += samples_per_block
-    fmt = _ima_wav_header(sample_rate, block_align, samples_per_block)
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"fact" + struct.pack("<II", 4, len(samples))
-    chunks += b"data" + struct.pack("<I", len(data)) + bytes(data)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    fmt = _wav_fmt(
+        WAVE_FORMAT_IMA_ADPCM, 1, sample_rate, block_align, 4, samples_per_block)
+    return _wav(fmt, _ima_encode([samples], samples_per_block), len(samples))
 
 
 def encode_wav_adpcm_nibbles_multi(
@@ -612,28 +620,9 @@ def encode_wav_adpcm_nibbles_multi(
     for idx in indices:
         if not 0 <= idx <= 88:
             raise MediaFormatError(f"ADPCM step index {idx} out of range")
-    body = bytearray()
-    for ch in range(n_ch):
-        body += struct.pack("<hBB", predictors[ch], indices[ch], 0)
-    packed = [
-        [
-            (lo & 0x0F) | ((hi & 0x0F) << 4)
-            for lo, hi in zip(nibbles[ch][0::2], nibbles[ch][1::2])
-        ]
-        for ch in range(n_ch)
-    ]
-    for w in range(n // 8):
-        for ch in range(n_ch):
-            body += bytes(packed[ch][w * 4 : w * 4 + 4])
-    block_align = len(body)
-    samples_per_block = 1 + n
-    fmt = _ima_wav_header(
-        sample_rate, block_align, samples_per_block, n_ch)
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"fact" + struct.pack("<II", 4, samples_per_block)
-    chunks += b"data" + struct.pack("<I", len(body)) + bytes(body)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    block = _ima_block(zip(predictors, indices), nibbles, n)
+    fmt = _wav_fmt(WAVE_FORMAT_IMA_ADPCM, n_ch, sample_rate, len(block), 4, 1 + n)
+    return _wav(fmt, block, 1 + n)
 
 
 def encode_wav_adpcm_multi(
@@ -659,40 +648,10 @@ def encode_wav_adpcm_multi(
         raise MediaFormatError(
             "samples_per_block must be 1 mod 8 and >= 9 for "
             "word-interleaved multi-channel blocks")
-    words_per_ch = (samples_per_block - 1) // 8
-    block_align = 4 * n_ch + words_per_ch * 4 * n_ch
-    data = bytearray()
-    indices = [0] * n_ch
-    pos = 0
-    while pos < n_frames:
-        take = min(samples_per_block, n_frames - pos)
-        headers = bytearray()
-        words: "list[list[int]]" = []  # per channel: packed bytes
-        for ch in range(n_ch):
-            chunk = channels[ch][pos : pos + take]
-            first = int(chunk[0])
-            nibs, _pred, idx_out = ima_adpcm_encode_nibbles(
-                chunk[1:], predictor=first, index=indices[ch])
-            headers += struct.pack("<hBB", first, indices[ch], 0)
-            indices[ch] = idx_out
-            padded = nibs + [0] * ((samples_per_block - 1) - len(nibs))
-            packed = [
-                (lo & 0x0F) | ((hi & 0x0F) << 4)
-                for lo, hi in zip(padded[0::2], padded[1::2])
-            ]
-            words.append(packed)
-        data += headers
-        for w in range(words_per_ch):
-            for ch in range(n_ch):
-                data += bytes(words[ch][w * 4 : w * 4 + 4])
-        pos += take
-    fmt = _ima_wav_header(
-        sample_rate, block_align, samples_per_block, n_ch)
-    chunks = b"WAVE"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"fact" + struct.pack("<II", 4, n_frames)
-    chunks += b"data" + struct.pack("<I", len(data)) + bytes(data)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    block_align = 4 * n_ch * (1 + (samples_per_block - 1) // 8)
+    fmt = _wav_fmt(
+        WAVE_FORMAT_IMA_ADPCM, n_ch, sample_rate, block_align, 4, samples_per_block)
+    return _wav(fmt, _ima_encode(channels, samples_per_block), n_frames)
 
 
 def _decode_wav_adpcm_payload(
@@ -782,6 +741,15 @@ def encode_mp4_with_samples(
     return _box(b"ftyp", b"isom" + b"\x00\x00\x02\x00isom") + _box(b"moov", moov)
 
 
+def _stbl_boxes(blob: bytes, start: int, end: int):
+    """Yield (start, end) of every stbl box under moov/trak/mdia/minf."""
+    for tag, b, e in _iter_boxes(blob, start, end):
+        if tag in (b"moov", b"trak", b"mdia", b"minf"):
+            yield from _stbl_boxes(blob, b, e)
+        elif tag == b"stbl":
+            yield b, e
+
+
 def decode_mp4_track_samples(blob: bytes) -> Mp4TrackSamples:
     """Walk moov→trak→mdia→minf→stbl and decode stts (durations) + stsz
     (sizes) — REAL frame-level container metadata, stdlib-only: frame
@@ -793,9 +761,7 @@ def decode_mp4_track_samples(blob: bytes) -> Mp4TrackSamples:
     # last-track sizes with summed durations.
     n_samples = total = mx = dur = 0
     found = False
-
-    def walk_stbl(start: int, end: int) -> None:
-        nonlocal n_samples, total, mx, dur, found
+    for start, end in _stbl_boxes(blob, 0, len(blob)):
         track_dur = 0
         for tag, b, e in _iter_boxes(blob, start, end):
             if tag == b"stts":
@@ -821,15 +787,6 @@ def decode_mp4_track_samples(blob: bytes) -> Mp4TrackSamples:
                     mx = max(mx, max(sizes) if sizes else 0)
                 found = True
         dur = max(dur, track_dur)
-
-    def walk(start: int, end: int, path: tuple) -> None:
-        for tag, b, e in _iter_boxes(blob, start, end):
-            if tag in (b"moov", b"trak", b"mdia", b"minf"):
-                walk(b, e, path + (tag,))
-            elif tag == b"stbl":
-                walk_stbl(b, e)
-
-    walk(0, len(blob), ())
     if not found:
         raise MediaFormatError("no sample table (stbl) in stream")
     return Mp4TrackSamples(
@@ -1100,7 +1057,7 @@ def encode_minimal_adts(
 
 # --- AVI (RIFF) container with MJPEG video frames ----------------------------
 #
-# AVI is RIFF framing (same 4CC chunk walk as WAV): RIFF('AVI ' LIST(hdrl
+# AVI is RIFF framing (the same chunk walk as WAV): RIFF('AVI ' LIST(hdrl
 # avih ...) LIST(movi <00dc frame chunks>)). With the MJPG codec every
 # '##dc' chunk is a complete JPEG — which functions/jpeg_pixels.py
 # decodes for real. That makes VIDEO FRAME PIXELS a real decode path for
@@ -1118,64 +1075,116 @@ class AviMeta:
     codec: str
 
 
-def _riff_chunks(blob: bytes, start: int, end: int):
-    """Yield (fourcc, payload_start, payload_end); chunks pad to even."""
-    pos = start
-    while pos + 8 <= end:
-        tag = blob[pos : pos + 4]
-        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
-        body = pos + 8
-        if body + size > end:
-            raise MediaFormatError(f"truncated RIFF chunk {tag!r} at {pos}")
-        yield tag, body, body + size
-        pos = body + size + (size & 1)
+class _Avi(NamedTuple):
+    """An AVI file's chunks, in file order."""
+    avih: list  # (µs per frame, width, height) per avih chunk
+    strf: list  # (stream index, strh fccType or None, body) per strf chunk
+    movi: list  # (fourcc, payload) per 'NNdc' video / 'NNwb' audio chunk
+
+    def frames(self) -> "list[bytes]":
+        return [p for tag, p in self.movi if tag[2:] == b"dc"]
+
+
+def _parse_avi(blob: bytes) -> _Avi:
+    """Walk RIFF → LIST hdrl (avih; one LIST strl per stream, whose strh
+    names the stream type and strf holds its format) and LIST movi (data
+    chunks named by two-digit stream id + type)."""
+    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
+        raise MediaFormatError("bad RIFF/AVI signature")
+    avi = _Avi([], [], [])
+    n_streams = 0
+
+    def walk(start: int, end: int, in_strl: bool) -> None:
+        nonlocal n_streams
+        kind = None
+        for tag, b, e in _riff_chunks(blob, start, end):
+            if tag == b"LIST":  # the list type, then its chunks
+                walk(b + 4, e, blob[b : b + 4] == b"strl")
+            elif tag == b"avih":
+                (us,) = struct.unpack("<I", blob[b : b + 4])
+                avi.avih.append((us, *struct.unpack("<II", blob[b + 32 : b + 40])))
+            elif tag == b"strh" and in_strl:
+                kind = blob[b : b + 4]
+                n_streams += 1
+            elif tag == b"strf":
+                avi.strf.append((n_streams - 1, kind, blob[b:e]))
+            elif tag[2:] in (b"dc", b"wb"):
+                avi.movi.append((tag, blob[b:e]))
+
+    walk(12, len(blob), False)
+    return avi
 
 
 def decode_avi_mjpeg(blob: bytes) -> "tuple[AviMeta, list[bytes]]":
-    """Parse an AVI container and return (meta, [frame JPEG bytes]).
-
-    Walks RIFF → LIST hdrl (avih for dimensions/frame timing, strf for
-    the codec 4CC) and LIST movi (each ``..dc`` chunk is one compressed
-    frame). Rejects non-MJPG streams — their frames would not be JPEGs.
-    """
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise MediaFormatError("bad RIFF/AVI signature")
-    width = height = 0
-    us_per_frame = 0
-    codec = ""
-    frames: list[bytes] = []
-
-    def walk(start: int, end: int) -> None:
-        nonlocal width, height, us_per_frame, codec
-        for tag, b, e in _riff_chunks(blob, start, end):
-            if tag == b"LIST":
-                walk(b + 4, e)  # skip the list-type 4CC
-            elif tag == b"avih":
-                us_per_frame, = struct.unpack("<I", blob[b : b + 4])
-                width, height = struct.unpack("<II", blob[b + 32 : b + 40])
-            elif tag == b"strf" and e - b >= 40:
-                # BITMAPINFOHEADER: biCompression 4CC at offset 16
-                codec = blob[b + 16 : b + 20].decode("ascii", "replace")
-            elif tag[2:4] == b"dc":
-                frames.append(blob[b:e])
-
-    walk(12, len(blob))
+    """Parse an AVI container and return (meta, [frame JPEG bytes]):
+    dimensions and frame time from the last avih, the codec 4CC from the
+    last strf, one frame per ``..dc`` chunk. Rejects non-MJPG streams —
+    their frames would not be JPEGs."""
+    avi = _parse_avi(blob)
+    us_per_frame, width, height = avi.avih[-1] if avi.avih else (0, 0, 0)
     if not width or not height:
         raise MediaFormatError("missing avih header")
+    # BITMAPINFOHEADER: biCompression 4CC at offset 16
+    codec = next((s[16:20].decode("ascii", "replace")
+                  for _, _, s in reversed(avi.strf) if len(s) >= 40), "")
     if codec not in ("MJPG", "mjpg"):
         raise MediaFormatError(
             f"codec {codec!r} is not MJPG — frame decode unsupported"
         )
-    return (
-        AviMeta(
-            width=width,
-            height=height,
-            n_frames=len(frames),
-            us_per_frame=us_per_frame,
-            codec=codec,
-        ),
-        frames,
+    frames = avi.frames()
+    return AviMeta(width, height, len(frames), us_per_frame, codec), frames
+
+
+def _avi_video(blob: bytes) -> "tuple[int, int, int, bytes | None, list[bytes]]":
+    """(width, height, µs per frame, first BITMAPINFOHEADER strf or
+    None, ``..dc`` frames): the frame size from the last avih, the frame
+    time from the last non-zero one."""
+    avi = _parse_avi(blob)
+    _us, width, height = avi.avih[-1] if avi.avih else (0, 0, 0)
+    if not width or not height:
+        raise MediaFormatError("missing avih header")
+    us_per_frame = next((us for us, _, _ in reversed(avi.avih) if us), 0)
+    strf = next((s for _, _, s in avi.strf if len(s) >= 40), None)
+    return width, height, us_per_frame, strf, avi.frames()
+
+
+def _bitmapinfo(
+    width: int, height: int, bpp: int, compression: bytes, image_size: int,
+    palette: "list[tuple[int, int, int]]" = (),
+) -> bytes:
+    """A video strf body: BITMAPINFOHEADER, then the palette as BGRX."""
+    return struct.pack(
+        "<IiiHH4sIiiII", 40, width, height, 1, bpp, compression, image_size,
+        0, 0, len(palette), 0,
+    ) + b"".join(bytes((b, g, r, 0)) for r, g, b in palette)
+
+
+def _avi(
+    width: int, height: int, fps: int, handler: bytes, strf: bytes,
+    frames: "list[bytes]", audio: "tuple | None" = None,
+) -> bytes:
+    """RIFF/AVI: LIST hdrl (avih, one LIST strl per stream) and LIST
+    movi. Stream 00 is the video, one '00dc' chunk per frame; ``audio``,
+    a (WAVEFORMATEX, sample rate, sample count, PCM bytes) tuple, adds
+    stream 01 with one '01wb' chunk."""
+    streams = [(b"vids", handler, fps, len(frames), strf)]
+    movi = [_chunk(b"00dc", f) for f in frames]
+    if audio:
+        fmt, rate, n_samples, pcm = audio
+        streams.append((b"auds", bytes(4), rate, n_samples, fmt))
+        movi.append(_chunk(b"01wb", pcm))
+    avih = struct.pack(
+        "<14I", 1_000_000 // max(1, fps), 0, 0, 0x10, len(frames), 0,
+        len(streams), 0, width, height, 0, 0, 0, 0,
     )
+    strls = [
+        _chunk(b"LIST", b"strl", _chunk(b"strh", kind, handler, struct.pack(
+            "<IHHIIIIIIIII", 0, 0, 0, 0, 1, rate, 0, length, 0, 0, 0, 0,
+        )), _chunk(b"strf", fmt))
+        for kind, handler, rate, length, fmt in streams
+    ]
+    hdrl = _chunk(b"LIST", b"hdrl", _chunk(b"avih", avih), *strls)
+    return _chunk(b"RIFF", b"AVI ", hdrl, _chunk(b"LIST", b"movi", *movi))
 
 
 def encode_minimal_avi(
@@ -1183,34 +1192,8 @@ def encode_minimal_avi(
 ) -> bytes:
     """Fixture encoder: a structurally valid AVI wrapping pre-encoded
     MJPEG (JPEG) frames."""
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    us_per_frame = 1_000_000 // max(1, fps)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        us_per_frame, 0, 0, 0x10, len(frames), 0, 1, 0,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG" + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps,
-                                        0, len(frames), 0, 0, 0, 0)
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+    strf = _bitmapinfo(width, height, 24, b"MJPG", width * height * 3)
+    return _avi(width, height, fps, b"MJPG", strf, frames)
 
 
 # --- DIB / BMP pixel decode --------------------------------------------------
@@ -1285,21 +1268,35 @@ def bmp_rle8_decode(
     return b"".join(bytes(r) for r in rows)
 
 
+def _rle8_runs(row: bytes) -> bytes:
+    """One row as greedy RLE8 (count, value) runs of at most 255."""
+    out = bytearray()
+    x = 0
+    while x < len(row):
+        run = 1
+        while x + run < len(row) and run < 255 and row[x + run] == row[x]:
+            run += 1
+        out += bytes((run, row[x]))
+        x += run
+    return bytes(out)
+
+
 def bmp_rle8_encode(indices_bottom_up: bytes, width: int, height: int) -> bytes:
     """Fixture RLE8 encoder: greedy runs + end-of-line/end-of-bitmap."""
-    out = bytearray()
-    for y in range(height):
-        row = indices_bottom_up[y * width : (y + 1) * width]
-        x = 0
-        while x < width:
-            run = 1
-            while x + run < width and run < 255 and row[x + run] == row[x]:
-                run += 1
-            out += bytes((run, row[x]))
-            x += run
-        out += bytes((0, 0))  # end of line
-    out += bytes((0, 1))  # end of bitmap
-    return bytes(out)
+    return b"".join(
+        _rle8_runs(indices_bottom_up[y * width : (y + 1) * width]) + bytes((0, 0))
+        for y in range(height)
+    ) + bytes((0, 1))
+
+
+def _dib24(pixels: "list[tuple[int, int, int]]", width: int, height: int) -> bytes:
+    """Top-down RGB tuples -> bottom-up BGR rows padded to 4 bytes."""
+    stride = (width * 3 + 3) & ~3
+    return b"".join(
+        bytes(c for x in range(width) for c in pixels[y * width + x][::-1]).ljust(
+            stride, b"\x00")
+        for y in range(height - 1, -1, -1)
+    )
 
 
 @dataclass(frozen=True)
@@ -1366,15 +1363,7 @@ def encode_bmp(
     if len(pixels) != width * height:
         raise MediaFormatError("pixel count mismatch")
     if bpp == 24:
-        stride = (width * 3 + 3) & ~3
-        rows = []
-        for y in range(height - 1, -1, -1):
-            row = bytearray()
-            for x in range(width):
-                r, g, b = pixels[y * width + x]
-                row += bytes((b, g, r))
-            rows.append(bytes(row).ljust(stride, b"\x00"))
-        data = b"".join(rows)
+        data = _dib24(pixels, width, height)
         pal_bytes = b""
         n_colors = 0
         compression = _BI_RGB
@@ -1419,52 +1408,18 @@ def decode_avi_video_frames(
     via functions/jpeg_pixels) or 'DIB' (frames = top-down RGB tuple
     lists, decoded here from the raw bottom-up BGR layout). Inter-frame
     codecs (H.264/VP9) raise — they need a codec library."""
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise MediaFormatError("bad RIFF/AVI signature")
-    width = height = 0
-    us_per_frame = 0
-    compression_raw: bytes | None = None
-    bpp = 24
-    raw_frames: list[bytes] = []
-
-    def walk(start: int, end: int) -> None:
-        nonlocal width, height, us_per_frame, compression_raw, bpp
-        for tag, b, e in _riff_chunks(blob, start, end):
-            if tag == b"LIST":
-                walk(b + 4, e)
-            elif tag == b"avih":
-                nonlocal_us, = struct.unpack("<I", blob[b : b + 4])
-                if nonlocal_us:
-                    us_per_frame = nonlocal_us
-                width_, height_ = struct.unpack("<II", blob[b + 32 : b + 40])
-                width, height = width_, height_
-            elif tag == b"strf" and e - b >= 40 and compression_raw is None:
-                bpp, = struct.unpack("<H", blob[b + 14 : b + 16])
-                compression_raw = blob[b + 16 : b + 20]
-            elif tag[2:4] == b"dc":
-                raw_frames.append(blob[b:e])
-
-    walk(12, len(blob))
-    if not width or not height:
-        raise MediaFormatError("missing avih header")
-    if compression_raw in (b"MJPG", b"mjpg"):
-        meta = AviMeta(width=width, height=height,
-                       n_frames=len(raw_frames),
-                       us_per_frame=us_per_frame, codec="MJPG")
-        return meta, "MJPG", raw_frames
-    if compression_raw == b"\x00\x00\x00\x00":  # BI_RGB
+    width, height, us_per_frame, strf, frames = _avi_video(blob)
+    compression = strf and strf[16:20]
+    if compression in (b"MJPG", b"mjpg"):
+        return AviMeta(width, height, len(frames), us_per_frame, "MJPG"), "MJPG", frames
+    if compression == bytes(4):  # BI_RGB
+        (bpp,) = struct.unpack("<H", strf[14:16])
         if bpp != 24:
             raise MediaFormatError(f"raw AVI bpp {bpp} unsupported")
-        meta = AviMeta(width=width, height=height,
-                       n_frames=len(raw_frames),
-                       us_per_frame=us_per_frame, codec="DIB")
-        decoded = [
-            _dib_rows_to_rgb(f, width, height, 24, None)
-            for f in raw_frames
-        ]
-        return meta, "DIB", decoded
+        decoded = [_dib_rows_to_rgb(f, width, height, 24, None) for f in frames]
+        return AviMeta(width, height, len(frames), us_per_frame, "DIB"), "DIB", decoded
     raise MediaFormatError(
-        f"codec {compression_raw!r} needs a codec library"
+        f"codec {compression!r} needs a codec library"
     )
 
 
@@ -1475,46 +1430,9 @@ def encode_minimal_avi_raw(
     """Fixture encoder: AVI with an UNCOMPRESSED (BI_RGB) 24-bit video
     stream — bottom-up BGR rows padded to 4 bytes, the raw capture
     layout."""
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    stride = (width * 3 + 3) & ~3
-    dib_frames = []
-    for px in frames_rgb:
-        rows = []
-        for y in range(height - 1, -1, -1):
-            row = bytearray()
-            for x in range(width):
-                r, g, b = px[y * width + x]
-                row += bytes((b, g, r))
-            rows.append(bytes(row).ljust(stride, b"\x00"))
-        dib_frames.append(b"".join(rows))
-    us_per_frame = 1_000_000 // max(1, fps)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        us_per_frame, 0, 0, 0x10, len(dib_frames), 0, 1, 0,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"DIB " + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps,
-                                        0, len(dib_frames), 0, 0, 0, 0)
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 24, _BI_RGB, stride * height, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in dib_frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+    dib_frames = [_dib24(px, width, height) for px in frames_rgb]
+    strf = _bitmapinfo(width, height, 24, bytes(4), ((width * 3 + 3) & ~3) * height)
+    return _avi(width, height, fps, b"DIB ", strf, dib_frames)
 
 
 # --- MS-RLE (BI_RLE8) INTER-FRAME video -------------------------------------
@@ -1570,42 +1488,12 @@ def decode_avi_mrle_frames(
     """Decode an MS-RLE AVI: returns (meta, palette, frames) where each
     frame is the COMPOSITED top-down palette-index list (delta frames
     resolved against the running canvas)."""
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise MediaFormatError("bad RIFF/AVI signature")
-    width = height = 0
-    us_per_frame = 0
-    compression_raw: bytes | None = None
-    palette: list = []
-    raw_frames: list[bytes] = []
-
-    def walk(start: int, end: int) -> None:
-        nonlocal width, height, us_per_frame, compression_raw, palette
-        for tag, b, e in _riff_chunks(blob, start, end):
-            if tag == b"LIST":
-                walk(b + 4, e)
-            elif tag == b"avih":
-                upf, = struct.unpack("<I", blob[b : b + 4])
-                if upf:
-                    us_per_frame = upf
-                width, height = struct.unpack("<II", blob[b + 32 : b + 40])
-            elif tag == b"strf" and e - b >= 40 and compression_raw is None:
-                compression_raw = blob[b + 16 : b + 20]
-                # palette follows BITMAPINFOHEADER (BGRX quads)
-                pal_data = blob[b + 40 : e]
-                palette = [
-                    (pal_data[4 * i + 2], pal_data[4 * i + 1],
-                     pal_data[4 * i])
-                    for i in range(len(pal_data) // 4)
-                ]
-            elif tag[2:4] == b"dc":
-                raw_frames.append(blob[b:e])
-
-    walk(12, len(blob))
-    if not width or not height:
-        raise MediaFormatError("missing avih header")
-    (comp_int,) = struct.unpack("<I", compression_raw or b"\xff\xff\xff\xff")
-    if comp_int != _BI_RLE8:
-        raise MediaFormatError(f"not an MS-RLE stream ({compression_raw!r})")
+    width, height, us_per_frame, strf, raw_frames = _avi_video(blob)
+    compression = strf and strf[16:20]
+    if compression != struct.pack("<I", _BI_RLE8):
+        raise MediaFormatError(f"not an MS-RLE stream ({compression!r})")
+    # palette follows BITMAPINFOHEADER (BGRX quads)
+    palette = [(strf[i + 2], strf[i + 1], strf[i]) for i in range(40, len(strf) - 3, 4)]
     if not palette:
         raise MediaFormatError("MRLE stream has no palette")
     canvas = bytearray(width * height)  # bottom-up indices
@@ -1638,30 +1526,12 @@ def encode_minimal_avi_mrle(
     using end-of-line escapes to skip unchanged rows — real temporal
     delta frames."""
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
     def to_bottom_up(px: "list[int]") -> bytes:
         return bytes(
             px[y * width + x]
             for y in range(height - 1, -1, -1)
             for x in range(width)
         )
-
-    def rle_row(row: bytes) -> bytes:
-        out = bytearray()
-        x = 0
-        while x < len(row):
-            run = 1
-            while x + run < len(row) and run < 255 and row[x + run] == row[x]:
-                run += 1
-            out += bytes((run, row[x]))
-            x += run
-        return bytes(out)
 
     encoded = []
     prev: bytes | None = None
@@ -1679,80 +1549,34 @@ def encode_minimal_avi_mrle(
                 dy = min(pending_skips, 255)
                 body += bytes((0, 2, 0, dy))
                 pending_skips -= dy
-            body += rle_row(row)
+            body += _rle8_runs(row)
             body += bytes((0, 0))  # end of line
             pending_skips = 0
         body += bytes((0, 1))  # end of bitmap
         encoded.append(bytes(body))
         prev = cur
 
-    us_per_frame = 1_000_000 // max(1, fps)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        us_per_frame, 0, 0, 0x10, len(encoded), 0, 1, 0,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MRLE" + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps,
-                                        0, len(encoded), 0, 0, 0, 0)
-    )
-    pal = bytearray()
-    for r, g, b in palette:
-        pal += bytes((b, g, r, 0))
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 8, _BI_RLE8, width * height, 0, 0,
-        len(palette), 0,
-    ) + bytes(pal)
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in encoded))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+    strf = _bitmapinfo(width, height, 8, struct.pack("<I", _BI_RLE8), width * height, palette)
+    return _avi(width, height, fps, b"MRLE", strf, encoded)
 
 
 def decode_avi_pcm_audio(blob: bytes) -> "tuple[WavMeta, list[int]]":
-    """Extract the PCM16 audio track from an AVI container: walk each
-    LIST strl, remember which stream index is the ``auds`` stream and its
-    WAVEFORMATEX (strf), then concatenate that stream's ``NNwb`` movi
-    chunks and unpack samples — the audio half of a video file, decoded
-    with the same zero-codec PCM path as WAV."""
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise MediaFormatError("bad RIFF/AVI signature")
-    stream_types: list[bytes] = []
-    fmt: tuple[int, int, int] | None = None  # (channels, rate, bits)
-    audio = bytearray()
-    audio_idx: int | None = None
-
-    def walk(start: int, end: int, in_strl: bool) -> None:
-        nonlocal fmt, audio_idx
-        cur_type: bytes | None = None
-        for tag, b, e in _riff_chunks(blob, start, end):
-            if tag == b"LIST":
-                walk(b + 4, e, blob[b : b + 4] == b"strl")
-            elif tag == b"strh" and in_strl:
-                cur_type = blob[b : b + 4]
-                stream_types.append(cur_type)
-            elif tag == b"strf" and in_strl and cur_type == b"auds":
-                n_ch, rate = struct.unpack("<HI", blob[b + 2 : b + 8])
-                (bits,) = struct.unpack("<H", blob[b + 14 : b + 16])
-                fmt = (n_ch, rate, bits)
-                audio_idx = len(stream_types) - 1
-            elif len(tag) == 4 and tag[2:4] == b"wb":
-                idx = int(tag[:2])
-                if audio_idx is not None and idx == audio_idx:
-                    audio.extend(blob[b:e])
-
-    walk(12, len(blob), False)
-    if fmt is None:
+    """Extract the PCM16 audio track from an AVI container: the last
+    ``auds`` stream's WAVEFORMATEX (strf), then that stream's ``NNwb``
+    movi chunks concatenated and unpacked — the audio half of a video
+    file, decoded with the same zero-codec PCM path as WAV."""
+    avi = _parse_avi(blob)
+    audio = [(idx, s) for idx, kind, s in avi.strf if kind == b"auds"]
+    if not audio:
         raise MediaFormatError("no auds (audio) stream in AVI")
-    n_ch, rate, bits = fmt
+    idx, strf = audio[-1]
+    n_ch, rate = struct.unpack("<HI", strf[2:8])
+    (bits,) = struct.unpack("<H", strf[14:16])
     if bits != 16:
         raise MediaFormatError("only PCM16 AVI audio supported")
-    n = len(audio) // 2
-    samples = list(struct.unpack(f"<{n}h", bytes(audio[: 2 * n])))
+    pcm = b"".join(p for tag, p in avi.movi if tag == b"%02dwb" % idx)
+    n = len(pcm) // 2
+    samples = list(struct.unpack(f"<{n}h", pcm[: 2 * n]))
     return (
         WavMeta(
             n_channels=n_ch,
@@ -1775,50 +1599,11 @@ def encode_minimal_avi_with_audio(
 ) -> bytes:
     """Fixture encoder: AVI with an MJPEG video stream (index 0) AND a
     PCM16 mono audio stream (index 1, one 01wb chunk)."""
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    us_per_frame = 1_000_000 // max(1, fps)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        us_per_frame, 0, 0, 0x10, len(frames), 0, 2, 0,
-        width, height, 0, 0, 0, 0,
-    )
-    strh_v = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
-                      len(frames), 0, 0, 0, 0)
-    )
-    strf_v = struct.pack(
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0,
-    )
-    strh_a = (
-        b"auds" + b"\x00\x00\x00\x00"
-        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, sample_rate, 0,
-                      len(audio_samples), 0, 0, 0, 0)
-    )
-    # WAVEFORMATEX: PCM(1), mono, rate, byterate, blockalign 2, 16 bits
-    strf_a = struct.pack(
-        "<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh_v) + chunk(b"strf", strf_v))
-        + lst(b"strl", chunk(b"strh", strh_a) + chunk(b"strf", strf_a)),
-    )
+    strf = _bitmapinfo(width, height, 24, b"MJPG", width * height * 3)
+    fmt = _wav_fmt(WAVE_FORMAT_PCM, 1, sample_rate, 2, 16)
     pcm = struct.pack(f"<{len(audio_samples)}h", *audio_samples)
-    movi = lst(
-        b"movi",
-        b"".join(chunk(b"00dc", f) for f in frames) + chunk(b"01wb", pcm),
-    )
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+    return _avi(width, height, fps, b"MJPG", strf, frames,
+                (fmt, sample_rate, len(audio_samples), pcm))
 
 
 # --- WebP (RIFF) and GIF image metadata --------------------------------------
@@ -1828,9 +1613,8 @@ def encode_minimal_avi_with_audio(
 # no entropy decode needed. GIF (89a/87a) dimensions come from the
 # logical screen descriptor, and walking the block structure (image
 # descriptors, extensions, sub-block chains) yields the frame count —
-# the metadata an image corpus routes on; LZW pixel decode stays out of
-# scope (GIF pixels are rarely training-relevant; the frame COUNT is the
-# animation screen).
+# the metadata an image corpus routes on; the LZW pixel decode follows
+# in its own section.
 
 
 @dataclass(frozen=True)
@@ -1881,31 +1665,20 @@ def encode_minimal_webp(
     alpha: bool = False, animation: bool = False,
 ) -> bytes:
     """Fixture encoder: structurally valid WebP headers (no pixel data)."""
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
     if variant == "lossy":
-        body = (
-            b"\x00\x00\x00" + b"\x9d\x01\x2a"
-            + struct.pack("<HH", width & 0x3FFF, height & 0x3FFF)
-        )
-        inner = chunk(b"VP8 ", body)
+        inner = _chunk(b"VP8 ", b"\x00\x00\x00\x9d\x01\x2a",
+                       struct.pack("<HH", width & 0x3FFF, height & 0x3FFF))
     elif variant == "lossless":
         bits = (width - 1) | ((height - 1) << 14) | ((1 if alpha else 0) << 28)
-        inner = chunk(b"VP8L", bytes((0x2F,)) + struct.pack("<I", bits))
+        inner = _chunk(b"VP8L", b"\x2f", struct.pack("<I", bits))
     elif variant == "extended":
         flags = (0x10 if alpha else 0) | (0x02 if animation else 0)
-        body = (
-            bytes((flags,)) + b"\x00\x00\x00"
-            + (width - 1).to_bytes(3, "little")
-            + (height - 1).to_bytes(3, "little")
-        )
-        inner = chunk(b"VP8X", body)
+        inner = _chunk(b"VP8X", bytes((flags, 0, 0, 0)),
+                       (width - 1).to_bytes(3, "little"),
+                       (height - 1).to_bytes(3, "little"))
     else:
         raise ValueError(variant)
-    return chunk(b"RIFF", b"WEBP" + inner)
+    return _chunk(b"RIFF", b"WEBP", inner)
 
 
 @dataclass(frozen=True)

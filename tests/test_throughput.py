@@ -12,7 +12,7 @@ import time
 from types import SimpleNamespace
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from appengine_mapreduce_spark.core.adapters import run_mapper, run_reducer
 from appengine_mapreduce_spark.core.counters import Counters
@@ -68,13 +68,18 @@ class _IndexReducer(Reducer):
 
 
 def test_reducer_seam_throughput():
-    """Reduce-seam guardrail, no Spark: ~344k (word, offset) values over a
-    1,000-word zipf vocabulary, sorted and cut into 10k-row Arrow batches
-    as the shuffle hands them over, through ``run_reducer``'s partition
-    function with an Index-demo reducer. The run-boundary reader moves
-    6.6-11.7M values/s on a 4-core box; a reader that builds one Python
-    tuple per value (``to_pylist`` on both columns, then ``groupby``)
-    moves 0.5-0.8M/s there and fails the 2M/s floor."""
+    """Reduce-seam guardrail, no Spark: ~344k (key, offset) values, sorted
+    and cut into 10k-row Arrow batches as the shuffle hands them over,
+    through ``run_reducer``'s partition function with an Index-demo
+    reducer. Three key columns: words over a 1,000-word zipf vocabulary;
+    the same with 90% null keys; and doubles with 90% NaN keys. The
+    run-boundary reader moves 6.6-16M values/s on each on a 4-core box. A
+    reader that builds one Python tuple per value (``to_pylist`` on both
+    columns, then ``groupby``) moves 0.5-0.8M/s on the words and fails the
+    2M/s floor. One that cuts a run at every null or NaN key moves 1-2.5M/s
+    on those inputs, under a sixth of its rate on the words, and fails the
+    check that they run at least half as fast as the words."""
+    import math
     import random
     from collections import Counter
 
@@ -85,29 +90,43 @@ def test_reducer_seam_throughput():
     weights = [1 / (i + 1) ** 1.2 for i in range(1000)]
     words = sorted(rnd.choices(vocab, weights, k=344_000))
     offsets = [rnd.randrange(1 << 40) for _ in words]
-    batches = [
-        pa.record_batch([pa.array(words[i:i + 10_000]), pa.array(offsets[i:i + 10_000])],
-                        names=["word", "offset"])
-        for i in range(0, len(words), 10_000)
-    ]
-    counts: Counter = Counter()
-    run = run_reducer(
-        _Frame(["word", "offset"], _schema(word=StringType(), offset=LongType())),
-        _IndexReducer(),
-        _schema(word=StringType(), n=LongType(), first=LongType()),
-        SimpleNamespace(add=counts.update), key_col="word", value_cols=["offset"],
-    )
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        out = [r for b in run(iter(batches)) for r in zip(*b.to_pydict().values())]
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    n_keys = len(set(words))
-    assert len(out) == n_keys and sum(n for _, n, _ in out) == len(words)
-    assert counts["reducer-calls"] == 3 * n_keys
-    rate = len(words) / best
-    assert rate >= 2_000_000, f"only {rate:,.0f} values/s"
+    tail = len(words) // 10  # Spark sorts nulls first and NaNs last
+    inputs = {
+        "words": (words, StringType(), pa.string()),
+        "null words": ([None] * (len(words) - tail) + words[-tail:], StringType(), pa.string()),
+        "NaN doubles": (
+            [float(w[1:]) for w in words[:tail]] + [math.nan] * (len(words) - tail),
+            DoubleType(),
+            pa.float64(),
+        ),
+    }
+    rates = {}
+    for name, (keys, key_type, arrow_type) in inputs.items():
+        batches = [
+            pa.record_batch([pa.array(keys[i:i + 10_000], arrow_type),
+                             pa.array(offsets[i:i + 10_000])], names=["word", "offset"])
+            for i in range(0, len(keys), 10_000)
+        ]
+        counts: Counter = Counter()
+        run = run_reducer(
+            _Frame(["word", "offset"], _schema(word=key_type, offset=LongType())),
+            _IndexReducer(),
+            _schema(word=key_type, n=LongType(), first=LongType()),
+            SimpleNamespace(add=counts.update), key_col="word", value_cols=["offset"],
+        )
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            out = [r for b in run(iter(batches)) for r in zip(*b.to_pydict().values())]
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        n_keys = len(set(keys))  # one None and one ``math.nan`` object
+        assert len(out) == n_keys and sum(n for _, n, _ in out) == len(keys), name
+        assert counts["reducer-calls"] == 3 * n_keys, name
+        rates[name] = len(keys) / best
+        assert rates[name] >= 2_000_000, f"{name}: only {rates[name]:,.0f} values/s"
+    for name in ("null words", "NaN doubles"):
+        assert rates[name] >= rates["words"] / 2, rates
 
 
 def test_codec_path_throughput():
