@@ -1178,10 +1178,10 @@ def _avi(
         len(streams), 0, width, height, 0, 0, 0, 0,
     )
     strls = [
-        _chunk(b"LIST", b"strl", _chunk(b"strh", kind, handler, struct.pack(
+        _chunk(b"LIST", b"strl", _chunk(b"strh", kind, fcc, struct.pack(
             "<IHHIIIIIIIII", 0, 0, 0, 0, 1, rate, 0, length, 0, 0, 0, 0,
-        )), _chunk(b"strf", fmt))
-        for kind, handler, rate, length, fmt in streams
+        )), _chunk(b"strf", body))
+        for kind, fcc, rate, length, body in streams
     ]
     hdrl = _chunk(b"LIST", b"hdrl", _chunk(b"avih", avih), *strls)
     return _chunk(b"RIFF", b"AVI ", hdrl, _chunk(b"LIST", b"movi", *movi))

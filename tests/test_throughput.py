@@ -77,7 +77,7 @@ def test_reducer_seam_throughput():
     reader that builds one Python tuple per value (``to_pylist`` on both
     columns, then ``groupby``) moves 0.5-0.8M/s on the words and fails the
     2M/s floor. One that cuts a run at every null or NaN key moves 1-2.5M/s
-    on those inputs, under a sixth of its rate on the words, and fails the
+    on those inputs, under a fifth of its rate on the words, and fails the
     check that they run at least half as fast as the words."""
     import math
     import random
