@@ -19,6 +19,10 @@ adapter stays JVM-side. The reader and emitter have three users:
   of the built-in per-blob operators (media decoders, zip and record
   sources, parquet footer stats).
 
+Every worker body, here and in the sinks, sources and pandas operators,
+first calls ``drop_zip_finders``, so a reused worker does not re-read
+pyspark.zip and the Spark jar before each task.
+
 Scale notes:
 - map-side combine buffers per partition with a bounded flush
   (``_COMBINE_FLUSH_KEYS``), mirroring Hadoop's combiner spill — a hot
@@ -49,6 +53,9 @@ from __future__ import annotations
 
 import collections
 import itertools
+import sys
+import time
+import zipimport
 from collections.abc import Iterable, Iterator
 from operator import itemgetter
 
@@ -71,6 +78,25 @@ for _module in (C.__name__, Mapper.__module__, __name__):
 
 _EMIT_BATCH_ROWS = 10_000
 _COMBINE_FLUSH_KEYS = 100_000
+
+
+def drop_zip_finders() -> None:
+    """Remove the ``zipimport.zipimporter`` finders from this Python
+    worker's ``sys.path_importer_cache``; every engine worker body calls
+    it first.
+
+    A reused Spark Python worker calls ``importlib.invalidate_caches()``
+    before each task, and on CPython 3.11 every cached zipimporter then
+    re-reads its archive's whole directory in pure Python. Spark puts
+    pyspark.zip, the py4j zip and the spark-core jar on each worker's
+    path, so that re-read cost 145 ms of CPU per task on an idle core
+    (145-420 ms under 4-way load). Entries of the cache may be removed to
+    force re-discovery: a later import makes a new finder from
+    ``zipimport._zip_directory_cache`` without reading the archive.
+    """
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)
 
 
 def _record_type(names: list[str]) -> type:
@@ -158,6 +184,24 @@ def _blocks(outputs: Iterator[Iterable[tuple]], emit) -> Iterator[pa.RecordBatch
         yield emit(buf)
 
 
+def _shard(
+    ctx: CounterContext, walltime: str, counts: dict[str, int], outputs, emit
+) -> Iterator[pa.RecordBatch]:
+    """The Arrow blocks of one shard's ``outputs`` (see ``_blocks``), then,
+    once the last block is out, the shard's counters: ``counts`` (which
+    ``outputs`` fills as it ends), the rows written and the shard's wall
+    time in ms under ``walltime``."""
+    t0 = time.monotonic()
+    written = 0
+    for block in _blocks(outputs, emit):
+        written += block.num_rows
+        yield block
+    counts[C.IO_RECORDS_WRITTEN] = written
+    counts[walltime] = round((time.monotonic() - t0) * 1000)
+    for name, n in counts.items():
+        ctx.increment(name, n)
+
+
 def map_rows(df: DataFrame, fn, out_schema: str | StructType) -> DataFrame:
     """Run the generator ``fn(row)`` over each row of ``df`` and return
     the rows it yields as a DataFrame of ``out_schema`` (a DDL string or
@@ -175,6 +219,7 @@ def map_rows(df: DataFrame, fn, out_schema: str | StructType) -> DataFrame:
     emit = _emitter(fn.__qualname__, out_schema)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         record = _record_type(columns)
         rows = (r for b in batches for r in _records(b.columns, record, b.num_rows))
         return _blocks(map(fn, rows), emit)
@@ -217,14 +262,14 @@ def run_mapper(
     emit = _emitter("mapper", out_schema)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import time as _time
-
+        drop_zip_finders()
         tc = TaskContext.get()
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
         record = _record_type(columns)
         pending: dict = {}  # key -> [values] for map-side combine
+        counts: dict[str, int] = {}
         n_calls = 0
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
 
         def flush_combine() -> Iterator[tuple]:
             for k, vals in pending.items():
@@ -234,9 +279,9 @@ def run_mapper(
 
         def throttle() -> None:
             if per_part_rate is not None and n_calls > 0:
-                ahead = n_calls / per_part_rate - (_time.monotonic() - t0)
+                ahead = n_calls / per_part_rate - (time.monotonic() - t0)
                 if ahead > 0:
-                    _time.sleep(ahead)
+                    time.sleep(ahead)
 
         def outputs() -> Iterator[Iterable[tuple]]:
             nonlocal n_calls
@@ -259,9 +304,9 @@ def run_mapper(
                 yield flush_combine()
             throttle()  # settle the rate budget before finishing the shard
             mapper.end_shard(ctx)
-            ctx.increment(C.MAPPER_CALLS, n_calls)
+            counts[C.MAPPER_CALLS] = counts[C.IO_RECORDS_READ] = n_calls
 
-        return _blocks(outputs(), emit)
+        return _shard(ctx, C.MAPPER_WALLTIME_MS, counts, outputs(), emit)
 
     return df.mapInArrow(fn, schema=out_schema)
 
@@ -302,9 +347,11 @@ def run_reducer(
     emit = _emitter("reducer", out_schema)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         tc = TaskContext.get()
         ctx = CounterContext(acc, shard_id=tc.partitionId() if tc else -1)
         record = _record_type(value_cols)
+        counts: dict[str, int] = {C.IO_RECORDS_READ: 0}
 
         def pieces() -> Iterator[tuple]:
             """``(key, values)`` per run of equal keys in a batch, where
@@ -315,6 +362,7 @@ def run_reducer(
                 n = batch.num_rows
                 if n == 0:
                     continue
+                counts[C.IO_RECORDS_READ] += n
                 col = batch.column(0)
                 a, b = col[1:], col[:-1]
                 same = pc.fill_null(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b)))
@@ -344,8 +392,8 @@ def run_reducer(
                 values = itertools.chain.from_iterable(map(values_of, run))
                 yield map(tuple, reducer(ctx, key, values) or ())
             reducer.end_shard(ctx)
-            ctx.increment(C.REDUCER_CALLS, n_calls)
+            counts[C.REDUCER_CALLS] = n_calls
 
-        return _blocks(outputs(), emit)
+        return _shard(ctx, C.REDUCER_WALLTIME_MS, counts, outputs(), emit)
 
     return shuffled.mapInArrow(fn, schema=out_schema)

@@ -36,7 +36,19 @@ class _DictSumParam(AccumulatorParam):
 
 
 class Counters:
-    """Driver-side handle over the job's counter accumulator."""
+    """Driver-side handle over the job's counter accumulator.
+
+    Besides user ``ctx.increment`` calls, each map and reduce shard adds
+    the reference's built-in counters once, when it has run to its end:
+    ``mapper-calls``/``reducer-calls``, ``io-records-read`` (input rows
+    on the map side, values on the reduce side), ``io-records-written``
+    (rows the stage emits) and ``mapper-walltime-ms``/
+    ``reducer-walltime-ms`` (the shard's wall time). A job's counters sum
+    both sides. Every counter adds again when Spark re-runs a partition
+    that already succeeded, for example a re-collect of a map-only
+    ``output_df``; a shard that stops early adds none of the built-in
+    ones.
+    """
 
     def __init__(self, sc: SparkContext):
         self._acc = sc.accumulator({}, _DictSumParam())

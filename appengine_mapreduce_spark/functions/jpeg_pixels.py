@@ -21,7 +21,8 @@ Restart intervals (DRI/RSTn) work in both: predictors and EOB runs reset
 and the bitstream re-aligns at each marker. The blocks are dequantized
 and inverse-transformed once. ``decode_gray`` returns the one
 component's plane; ``decode_color`` upsamples Y/Cb/Cr (4:4:4, 4:2:2,
-4:2:0) and applies the JFIF colour transform.
+4:2:0) and applies the JFIF colour transform; ``decode_pixels`` does
+either, as the frame header's component count says.
 
 Not supported, each raising ``JpegFormatError``: sampling factors above
 2, 12-bit samples and 16-bit quantization tables, and the lossless,
@@ -927,8 +928,11 @@ def _decode_scan(
         read(reader, seq)
 
 
-def _decode(blob: bytes, n_components: int) -> tuple[int, int, list[np.ndarray]]:
-    """Decode every scan of ``blob`` into coefficient blocks, then
+def _decode(
+    blob: bytes, n_components: tuple[int, ...]
+) -> tuple[int, int, list[np.ndarray]]:
+    """Decode every scan of ``blob``, whose frame must have one of the
+    component counts ``n_components``, into coefficient blocks, then
     dequantize + IDCT each component once -> (width, height, one
     full-resolution int plane per component, upsampled by nearest sample:
     the x*h//hmax index map)."""
@@ -951,9 +955,10 @@ def _decode(blob: bytes, n_components: int) -> tuple[int, int, list[np.ndarray]]
             precision, height, width, n = struct.unpack(">BHHB", data[:6])
             if precision != 8:
                 raise JpegFormatError(f"{precision}-bit samples unsupported")
-            if n != n_components:
+            if n not in n_components:
                 raise JpegFormatError(
-                    f"{n}-component stream, expected {n_components}"
+                    f"{n}-component stream, expected "
+                    + " or ".join(map(str, n_components))
                 )
             comps = [
                 (data[6 + 3 * c], data[7 + 3 * c] >> 4, data[7 + 3 * c] & 0x0F,
@@ -992,10 +997,21 @@ def _decode(blob: bytes, n_components: int) -> tuple[int, int, list[np.ndarray]]
     return frame.width, frame.height, planes
 
 
+def _rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> list[tuple[int, int, int]]:
+    """Row-major RGB tuples of Y/Cb/Cr planes through the inverse JFIF
+    transform (np.rint rounds half-to-even, like Python's round())."""
+    r = y + 1.402 * (cr - 128)
+    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
+    b = y + 1.772 * (cb - 128)
+    out = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255)
+    rgb = out.astype(np.int64).reshape(-1, 3).tolist()
+    return [tuple(px) for px in rgb]
+
+
 def decode_gray(blob: bytes) -> tuple[int, int, list[int]]:
     """Decode a grayscale (1-component) JPEG, baseline or progressive, to
     (width, height, row-major 8-bit pixels)."""
-    width, height, (y,) = _decode(blob, 1)
+    width, height, (y,) = _decode(blob, (1,))
     return width, height, y.ravel().tolist()
 
 
@@ -1003,10 +1019,17 @@ def decode_color(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     """Decode a 3-component YCbCr JPEG, baseline or progressive, to
     (width, height, row-major RGB tuples) through the inverse JFIF
     transform (np.rint rounds half-to-even, like Python's round())."""
-    width, height, (y, cb, cr) = _decode(blob, 3)
-    r = y + 1.402 * (cr - 128)
-    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-    b = y + 1.772 * (cb - 128)
-    out = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, 255)
-    rgb = out.astype(np.int64).reshape(-1, 3).tolist()
-    return width, height, [tuple(px) for px in rgb]
+    width, height, planes = _decode(blob, (3,))
+    return width, height, _rgb(*planes)
+
+
+def decode_pixels(
+    blob: bytes,
+) -> tuple[int, int, list[int] | list[tuple[int, int, int]]]:
+    """Decode a JPEG of either kind in one pass: a 1-component frame as
+    ``decode_gray`` returns it, a 3-component frame as ``decode_color``
+    does."""
+    width, height, planes = _decode(blob, (1, 3))
+    if len(planes) == 1:
+        return width, height, planes[0].ravel().tolist()
+    return width, height, _rgb(*planes)

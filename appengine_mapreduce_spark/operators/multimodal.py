@@ -448,11 +448,7 @@ def decode_video_frame_pixels(
     bottom-up padded BGR layout — the two capture/intermediate formats
     that need no codec library. Inter-frame codecs (H.264/VP9) do not
     decode: they need a codec library."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_color,
-        decode_gray,
-    )
+    from appengine_mapreduce_spark.functions.jpeg_pixels import decode_pixels
     from appengine_mapreduce_spark.functions.media import (
         decode_avi_video_frames,
     )
@@ -471,11 +467,10 @@ def decode_video_frame_pixels(
         for fr in frames:
             if codec == "DIB":
                 px = [v for p in fr for v in p]
-            elif decode_jpeg_meta(fr).n_components == 3:
-                _w, _h, rgb = decode_color(fr)
-                px = [v for p in rgb for v in p]
             else:
-                _w, _h, px = decode_gray(fr)
+                _w, _h, px = decode_pixels(fr)
+                if isinstance(px[0], tuple):  # colour: R, G, B per pixel
+                    px = [v for p in px for v in p]
             total += sum(px)
             mn = min(mn, min(px))
             mx = max(mx, max(px))

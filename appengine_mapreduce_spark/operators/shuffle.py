@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from appengine_mapreduce_spark.core.adapters import drop_zip_finders
+
 
 def group_values(
     df: DataFrame,
@@ -84,8 +86,13 @@ def cogroup_apply(
     (per-key reconciliation, asymmetric dedup, windowless merges).
     """
     keys = [key] if isinstance(key, str) else list(key)
+
+    def apply(key_tuple, left_pdf, right_pdf):
+        drop_zip_finders()
+        return fn(key_tuple, left_pdf, right_pdf)
+
     return (
         left.groupBy(*keys)
         .cogroup(right.groupBy(*keys))
-        .applyInPandas(fn, schema=schema)
+        .applyInPandas(apply, schema=schema)
     )

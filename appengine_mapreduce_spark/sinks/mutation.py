@@ -22,6 +22,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from appengine_mapreduce_spark.core.adapters import drop_zip_finders
+
 PUT = "put"
 DELETE = "delete"
 
@@ -55,6 +57,7 @@ class MutationPoolOutput:
         cols = df.columns
 
         def handle_partition(rows: Iterable) -> Iterable[int]:
+            drop_zip_finders()
             client = connect() if connect is not None else None
             batch: list[Mutation] = []
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 import io
 import struct
 from collections.abc import Iterator
+
+from appengine_mapreduce_spark.core.adapters import drop_zip_finders
 from appengine_mapreduce_spark.core.pickling import register_self
 
 register_self(__name__)
@@ -172,6 +174,7 @@ def records_output(df, out_dir: str, record_col: str = "record") -> int:
     def write_partition(rows):
         from pyspark import TaskContext
 
+        drop_zip_finders()
         tc = TaskContext.get()
         pid = tc.partitionId() if tc else 0
         path = os.path.join(out_dir, f"shard-{pid:05d}.rec")

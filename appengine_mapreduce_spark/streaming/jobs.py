@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from appengine_mapreduce_spark.core.adapters import drop_zip_finders
+
 
 def hourly_event_counts(
     events: DataFrame, watermark: str | None = "2 hours"
@@ -156,6 +158,7 @@ def _session_fn(
     timeout (when enabled) flushes the open session when the stream goes
     quiet.
     """
+    drop_zip_finders()
     (user_id,) = key
     if use_timeout and state.hasTimedOut:
         start, last, n = state.get

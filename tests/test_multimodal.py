@@ -638,9 +638,11 @@ def test_aac_adts_frame_walk_metadata():
 def test_decode_video_frame_pixels_color_frames(spark):
     """The video-frame operator must route 3-component frames through the
     color decoder: an AVI of solid-RGB-gray MJPEG frames yields exact
-    per-video stats (3 channels x pixels x value)."""
+    per-video stats (3 channels x pixels x value), and an AVI of
+    1-component frames one value per pixel."""
     from appengine_mapreduce_spark.functions.jpeg_pixels import (
         encode_baseline_color,
+        encode_baseline_gray,
     )
     from appengine_mapreduce_spark.functions.media import encode_minimal_avi
     from appengine_mapreduce_spark.operators.multimodal import (
@@ -653,11 +655,17 @@ def test_decode_video_frame_pixels_color_frames(spark):
         encode_baseline_color([(v, v, v)] * (w * h), w, h) for v in vals
     ]
     blob = encode_minimal_avi(frames, w, h, fps=10)
-    df = spark.createDataFrame([(1, bytearray(blob))], "id long, content binary")
-    [row] = decode_video_frame_pixels(df).collect()
-    assert (row.n_frames, row.width, row.height) == (3, w, h)
-    assert row.px_sum == 3 * w * h * sum(vals)
-    assert (row.px_min, row.px_max) == (min(vals), max(vals))
+    gray = encode_minimal_avi(
+        [encode_baseline_gray([v] * (w * h), w, h) for v in vals], w, h, fps=10
+    )
+    df = spark.createDataFrame(
+        [(1, bytearray(blob)), (2, bytearray(gray))], "id long, content binary"
+    )
+    color_row, gray_row = sorted(decode_video_frame_pixels(df).collect())
+    for row, channels in ((color_row, 3), (gray_row, 1)):
+        assert (row.n_frames, row.width, row.height) == (3, w, h)
+        assert row.px_sum == channels * w * h * sum(vals)
+        assert (row.px_min, row.px_max) == (min(vals), max(vals))
 
 
 def test_tiff_ifd_chain_walk():
@@ -762,6 +770,25 @@ def test_avi_audio_track_extraction():
     )
     with pytest.raises(MediaFormatError):
         decode_avi_pcm_audio(encode_minimal_avi([frame], 8, 8))
+
+
+def test_decode_pixels_takes_gray_or_color_from_the_frame():
+    """``decode_pixels`` decodes one pass and returns what
+    ``decode_gray`` (1 component) or ``decode_color`` (3 components)
+    returns for the same stream, baseline and progressive."""
+    from appengine_mapreduce_spark.functions import jpeg_pixels as jp
+
+    w, h = 13, 11
+    gray = [(x * 7 + y * 5) % 256 for y in range(h) for x in range(w)]
+    rgb = [((x * 19) % 256, (y * 23) % 256, (x * y) % 256)
+           for y in range(h) for x in range(w)]
+    for blob in (jp.encode_baseline_gray(gray, w, h),
+                 jp.encode_progressive_gray(gray, w, h)):
+        assert jp.decode_pixels(blob) == jp.decode_gray(blob)
+    for blob in (jp.encode_baseline_color(rgb, w, h),
+                 jp.encode_baseline_420(rgb, w, h),
+                 jp.encode_progressive_color(rgb, w, h)):
+        assert jp.decode_pixels(blob) == jp.decode_color(blob)
 
 
 def test_avi_mjpeg_container_roundtrip_and_frame_decode():

@@ -574,7 +574,12 @@ def test_mapper_and_reducer_one_input_spans_output_blocks():
         blocks = list(run(iter([batch])))
         assert [b.num_rows for b in blocks] == [_EMIT_BATCH_ROWS, _EMIT_BATCH_ROWS, 3]
         assert [j for b in blocks for j in b.column("j").to_pylist()] == list(range(n))
-    assert counts == {"mapper-calls": 1, "reducer-calls": 1}
+    walltime = [counts.pop(k) for k in ("mapper-walltime-ms", "reducer-walltime-ms")]
+    assert min(walltime) >= 0
+    assert counts == {
+        "mapper-calls": 1, "reducer-calls": 1,
+        "io-records-read": 2, "io-records-written": 2 * n,
+    }
 
 
 def test_map_rows_value_its_column_cannot_hold_is_rejected(spark):
